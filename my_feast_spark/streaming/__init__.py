@@ -3,6 +3,7 @@ from my_feast_spark.streaming.scd2 import read_scd2_table, scd2_maintain_stream
 from my_feast_spark.streaming.ingest import (
     capture_to_parquet,
     dedup_ingest_stream,
+    embedding_dedup_ingest_stream,
     near_dedup_ingest_stream,
     read_event_stream,
     run_to_memory_table,
@@ -28,6 +29,7 @@ from my_feast_spark.streaming.sketches import (
 __all__ = [
     "capture_to_parquet",
     "dedup_ingest_stream",
+    "embedding_dedup_ingest_stream",
     "near_dedup_ingest_stream",
     "materialize_stream",
     "read_event_stream",

@@ -23,7 +23,9 @@ Scale notes (1000-executor / 100 TB target):
 
 from __future__ import annotations
 
+import functools
 import itertools
+import operator
 import os
 import tempfile
 from typing import Callable, Iterable, Mapping, Sequence
@@ -42,25 +44,41 @@ _memory_table_ids = itertools.count()
 #: layout-contract marker each dedup index carries at its root
 _INDEX_META = "_mfs_index_meta.json"
 
+#: the datasets under ``index_path`` per index kind, in write and
+#: compaction order: (payload, key rows) for the near-dup kinds; the
+#: exact ingest's index is ``index_path`` itself
+_INDEX_DATASETS = {
+    "exact_fingerprint": (),
+    "neardup_minhash": ("sigs", "bands"),
+    "embedding_lsh": ("vecs", "buckets"),
+}
+
+
+def _index_datasets(fs, root) -> list:
+    """Hadoop paths of the known index datasets present under the index
+    root ``root`` — empty for an exact-ingest index or a missing root."""
+    if not fs.exists(root):
+        return []
+    known = {d for ds in _INDEX_DATASETS.values() for d in ds}
+    return [
+        st.getPath()
+        for st in fs.listStatus(root)
+        if st.isDirectory() and st.getPath().getName() in known
+    ]
+
 
 def _legacy_index_layout(fs, jvm, index_path: str):
     """Inspect a pre-marker index's actual on-disk layout. Returns
     ``(has_data, bucketed, max_pbucket)`` aggregated over the index's
-    datasets — the known sub-datasets (``bands``/``sigs``,
-    ``buckets``/``vecs``) when present, else the root itself (exact
-    ingest). Driver-side directory listing only, two levels deep
-    (generation dirs + their immediate ``pbucket=`` children) — never
-    reads data files."""
+    datasets (:data:`_INDEX_DATASETS`) when present, else the root
+    itself (exact ingest). Driver-side directory listing only, two
+    levels deep (generation dirs + their immediate ``pbucket=``
+    children) — never reads data files."""
     root = jvm.org.apache.hadoop.fs.Path(index_path)
     if not fs.exists(root):
         return False, False, -1
-    subs = []
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if name in ("bands", "sigs", "buckets", "vecs") and st.isDirectory():
-            subs.append(st.getPath())
     has_data, bucketed, max_pb = False, False, -1
-    for d in subs or [root]:
+    for d in _index_datasets(fs, root) or [root]:
         for st in fs.listStatus(d):
             if not st.getPath().getName().startswith("batch_id="):
                 continue
@@ -78,11 +96,11 @@ def _ensure_index_meta(spark: SparkSession, index_path: str, meta: dict):
     banding config, pbucket count) in a root marker and validate them
     on every stream (re)start. The choices are invisible in the stored
     rows themselves, so without the marker a resumed stream with a
-    different config appends incompatible state SILENTLY — e.g. the
-    round-15 xxhash64 bit-pattern change, or an ``index_buckets`` flip:
-    new signatures simply never collide with old ones and every
-    cross-era duplicate is missed with no error (review-caught). A
-    mismatch now fails the stream START, loudly, naming the key.
+    different config would append incompatible state SILENTLY: after a
+    hash-family bit-pattern change or an ``index_buckets`` flip, new
+    signatures never collide with old ones and every cross-era
+    duplicate is missed with no error. A mismatch fails the stream
+    START, loudly, naming the key.
 
     Written atomically (hidden temp + rename) BEFORE the first batch;
     idempotent across restarts. Pre-marker indexes (built before this
@@ -93,8 +111,7 @@ def _ensure_index_meta(spark: SparkSession, index_path: str, meta: dict):
     fails loudly instead of silently never pruning/colliding. Only the
     hash-family/banding axes stay unverifiable for that one legacy
     generation — the adoption warns, names them, and records
-    ``legacy_adopted`` in the marker it stamps (round-16; closes the
-    r15 "one unverifiable generation" nit as far as the data allows)."""
+    ``legacy_adopted`` in the marker it stamps."""
     import json as _json
 
     sc = spark.sparkContext
@@ -446,6 +463,257 @@ def run_to_memory_table(
     return spark.table(name)
 
 
+def _start_foreach_batch(
+    sdf: DataFrame,
+    batch_fn: Callable[[DataFrame, int], None],
+    checkpoint: str,
+    *,
+    available_now: bool,
+    trigger_interval: str | None,
+    output_mode: str = "update",
+):
+    """Start ``sdf`` through ``foreachBatch(batch_fn)``: drained and
+    stopped under ``available_now``, else on a ``trigger_interval``
+    processing-time trigger (Spark's default trigger when both are
+    unset). Returns the started StreamingQuery."""
+    writer = (
+        sdf.writeStream.foreachBatch(batch_fn)
+        .option("checkpointLocation", checkpoint)
+        .outputMode(output_mode)
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    elif trigger_interval:
+        writer = writer.trigger(processingTime=trigger_interval)
+    return writer.start()
+
+
+def compaction_due(batch_id: int, compact_every: int | None) -> bool:
+    """True after every ``compact_every``-th micro-batch, never when
+    ``compact_every`` is unset: the in-stream maintenance cadence."""
+    return bool(compact_every) and (
+        batch_id % compact_every == compact_every - 1
+    )
+
+
+class _IndexBatch:
+    """One micro-batch's reads and writes of its ingest's output and
+    index datasets (``dirs``, in write and compaction order)."""
+
+    def __init__(self, spark, out_path, dirs, batch_id, index_buckets):
+        self.spark = spark
+        self.out_path = out_path
+        self.dirs = dirs
+        self.batch_id = batch_id
+        self.index_buckets = index_buckets
+        self.live: list[DataFrame] = []
+
+    def _own(self, root: str) -> str:
+        return os.path.join(root, f"batch_id={self.batch_id}")
+
+    def _pbucket(self, *cols: str) -> Column:
+        return F.pmod(F.xxhash64(*cols), F.lit(self.index_buckets))
+
+    def pin(self, df: DataFrame) -> DataFrame:
+        """``localCheckpoint`` ``df`` until the batch ends."""
+        df = df.localCheckpoint()
+        self.live.append(df)
+        return df
+
+    def seen(self, path: str, probe: DataFrame, *cols: str) -> DataFrame:
+        """The index dataset at ``path`` without this batch's own
+        generation; bucketed, pruned to the pbuckets that ``probe``'s
+        ``cols`` hash into (one small job)."""
+        seen = self.spark.read.parquet(path).filter(
+            F.col("batch_id") != self.batch_id
+        )
+        if self.index_buckets:
+            pbs = [
+                r.pb
+                for r in probe.select(self._pbucket(*cols).alias("pb"))
+                .distinct()
+                .collect()
+            ]
+            seen = seen.filter(F.col("pbucket").isin(pbs))
+        return seen
+
+    def write_output(self, accepted: DataFrame) -> DataFrame:
+        """Overwrite this batch's output directory; returns it read back."""
+        out = self._own(self.out_path)
+        accepted.write.mode("overwrite").parquet(out)
+        return self.spark.read.parquet(out)
+
+    def write_index(self, path: str, rows: DataFrame, *cols: str) -> None:
+        """Overwrite this batch's generation of the index dataset at
+        ``path``; bucketed, partitioned by the pbucket of ``cols``."""
+        writer = rows.write.mode("overwrite")
+        if self.index_buckets:
+            writer = rows.withColumn(
+                "pbucket", self._pbucket(*cols)
+            ).repartition("pbucket").write.mode("overwrite").partitionBy(
+                "pbucket"
+            )
+        writer.parquet(self._own(path))
+
+
+def _start_dedup_ingest(
+    sdf: DataFrame,
+    accept: Callable[[DataFrame, _IndexBatch], None],
+    *,
+    meta: dict,
+    out_path: str,
+    index_path: str,
+    checkpoint: str,
+    index_buckets: int | None,
+    compact_every: int | None,
+    available_now: bool,
+    trigger_interval: str | None,
+):
+    """The per-batch driver of the three dedup ingests
+    (:func:`dedup_ingest_stream`, :func:`near_dedup_ingest_stream`,
+    :func:`embedding_dedup_ingest_stream`). ``accept(batch_df, ix)`` is
+    the per-kind rule: it decides the batch's accepted rows and writes
+    them, and their index rows, through ``ix`` (an :class:`_IndexBatch`).
+    Returns the started StreamingQuery.
+
+    Start: ``index_buckets`` and ``compact_every`` must each be None or
+    an int >= 1, else ValueError. ``meta`` plus ``index_buckets`` is then
+    pinned in the index root's marker (:func:`_ensure_index_meta`), so a
+    restart with another layout fails at start, before any batch runs.
+
+    Crash replay: ``foreachBatch`` is at-least-once, so a crash between
+    the sink writes and the streaming commit replays the batch under the
+    same batch id. Three rules make the replay exactly-once:
+
+      * every write overwrites the batch's own ``batch_id=N`` directory
+        (the output and each index dataset), so a replay rewrites
+        instead of appending;
+      * every index read excludes generation ``N`` itself
+        (``batch_id != N``), so a replay never dedups against its own
+        earlier rows and overwrites its output with nothing; compacted
+        generations have negative ids and never match the guard;
+      * index rows derive from the WRITTEN output, so a replay
+        regenerates identical index partitions.
+
+    ``index_buckets``: unset, every batch reads the full accumulated
+    index, so per-batch cost grows with the corpus. With
+    ``index_buckets=B`` each index dataset is laid out as
+    ``pbucket=pmod(xxhash64(cols), B)`` directories and each read lists
+    only the pbuckets the batch's own probe rows hash into, at most
+    ``min(b, B)/B`` of the index for ``b`` probe rows whatever the corpus
+    size. Size B so one bucket stays a few hundred MB. The probe join
+    broadcasts the small batch side under AQE either way, so the index
+    side never shuffles. The layout is fixed for the index's lifetime:
+    the meta pin rejects a flip.
+
+    ``compact_every=k`` runs :func:`compact_index` on each index dataset
+    after every k-th batch, on the foreachBatch thread (so no compactor
+    races a batch), folding every generation BEFORE the current one,
+    whose directory must stay separate for the replay guard. Listing
+    cost and small-file count then stay bounded over the stream's life.
+    Checkpoints ``accept`` pins are released when the batch ends, also
+    when it fails.
+    """
+    for name, value in (
+        ("index_buckets", index_buckets), ("compact_every", compact_every)
+    ):
+        if value is not None and not (isinstance(value, int) and value >= 1):
+            raise ValueError(f"{name} must be None or >= 1, got {value!r}")
+    spark = sdf.sparkSession
+    _ensure_index_meta(
+        spark, index_path, {**meta, "index_buckets": index_buckets}
+    )
+    dirs = [
+        os.path.join(index_path, d) for d in _INDEX_DATASETS[meta["kind"]]
+    ] or [index_path]
+
+    def ingest_batch(batch_df: DataFrame, batch_id: int) -> None:
+        from my_feast_spark.operators.graph import release_checkpoint
+
+        ix = _IndexBatch(spark, out_path, dirs, batch_id, index_buckets)
+        try:
+            accept(batch_df, ix)
+            if compaction_due(batch_id, compact_every):
+                for d in dirs:
+                    compact_index(spark, d, exclude_from=batch_id)
+        finally:
+            for frame in ix.live:
+                release_checkpoint(frame)
+
+    return _start_foreach_batch(
+        sdf, ingest_batch, checkpoint,
+        available_now=available_now, trigger_interval=trigger_interval,
+    )
+
+
+def _candidate_verify(
+    *,
+    id_col: str,
+    sign: Callable[[DataFrame], DataFrame],
+    key_rows: Callable[[DataFrame], DataFrame],
+    keys: Sequence[str],
+    payload: str,
+    similar: Callable[[Column, Column], Column],
+):
+    """The ``accept`` rule of the near-dup ingests, from a per-kind spec:
+    ``sign`` turns a batch into ``(doc, payload, ...)`` rows (pinned for
+    the batch), ``key_rows`` turns those into ``(doc, *keys)`` collision
+    rows, and ``similar(dominator payload, doc payload)`` is the verify
+    predicate. A doc drops when it verifies against an accepted doc
+    sharing a key, or against a lower-id doc of its own batch. The index
+    datasets are (payload, key rows), each pbucketed by its ``doc`` /
+    ``keys`` columns."""
+    keys = list(keys)
+    a_p, b_p = f"a_{payload}", f"b_{payload}"
+
+    def accept(batch_df: DataFrame, ix: _IndexBatch) -> None:
+        payload_dir, keys_dir = ix.dirs
+        signed = ix.pin(sign(batch_df))
+        rows = key_rows(signed)
+        # in-batch candidates: same key, lower id dominates
+        a, b = rows.alias("a"), rows.alias("b")
+        cand = a.join(
+            b,
+            functools.reduce(operator.and_, [
+                *(F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys),
+                F.col("a.doc") < F.col("b.doc"),
+            ]),
+        ).select(F.col("a.doc").alias("dom"), F.col("b.doc").alias("doc"))
+        own = payloads = signed.select("doc", payload)
+        if _fs_nonempty(ix.spark, keys_dir):
+            cand = cand.union(
+                ix.seen(keys_dir, rows, *keys)
+                .select(F.col("doc").alias("dom"), *keys)
+                .join(rows, keys)
+                .select("dom", "doc")
+            ).distinct()
+            if ix.index_buckets:
+                # only the dominators' payloads are read: pin the
+                # (batch-sized) candidates and prune to their pbuckets
+                cand = ix.pin(cand)
+            payloads = payloads.union(
+                ix.seen(payload_dir, cand, "dom").select("doc", payload)
+            )
+        else:
+            cand = cand.distinct()
+        dominated = (
+            cand
+            .join(payloads.select(F.col("doc").alias("dom"),
+                                  F.col(payload).alias(a_p)), "dom")
+            .join(signed.select("doc", F.col(payload).alias(b_p)), "doc")
+            .filter(similar(F.col(a_p), F.col(b_p)))
+            .select(F.col("doc").alias(id_col))
+            .distinct()
+        )
+        acc = ix.write_output(
+            batch_df.join(dominated, id_col, "left_anti")
+        ).select(F.col(id_col).alias("doc"))
+        ix.write_index(payload_dir, own.join(acc, "doc", "left_semi"), "doc")
+        ix.write_index(keys_dir, rows.join(acc, "doc", "left_semi"), *keys)
+
+    return accept
+
+
 def dedup_ingest_stream(
     sdf: DataFrame,
     *,
@@ -463,51 +731,22 @@ def dedup_ingest_stream(
     already accepted — the streaming form of the incremental-ingest
     anti-join (workload.q_incremental_dedup): each micro-batch keeps the
     min-id document per content fingerprint, drops fingerprints the
-    accumulated index has seen, appends survivors to ``out_path`` and
-    their fingerprints to ``index_path``.
+    accumulated index has seen, appends survivors to
+    ``out_path/batch_id=N`` and their fingerprints to
+    ``index_path/batch_id=N``.
 
-    Crash safety: ``foreachBatch`` replays a batch after failure
-    (at-least-once), so both sinks write to a ``batch_id=N``
-    subdirectory with ``overwrite`` — a replay rewrites the same
-    partition instead of appending duplicates, making the ingest
-    effectively exactly-once.
-
-    Scale shape — ``index_buckets``. Unset, every micro-batch scans the
-    FULL accumulated fingerprint index: per-batch cost grows linearly
-    with the corpus, O(N²) over the stream's life. With
-    ``index_buckets=B`` each batch's index partition is additionally
-    laid out as ``pbucket=pmod(xxhash64(fingerprint), B)`` partition
-    directories, and the probe reads ONLY the pbuckets its own
-    fingerprints hash into (a directory-level partition-pruned scan —
-    the listing never touches the other buckets). A batch of ``b``
-    distinct fingerprints therefore reads at most ``min(b, B)/B`` of
-    the index regardless of corpus size; size B so a single bucket
-    stays a few hundred MB at the target corpus. The anti-join itself
-    broadcasts the (small) batch side under AQE either way, so there is
-    never an Exchange on the index side.
-
-    The layout choice is PER STREAM LIFETIME: flipping ``index_buckets``
-    between runs over the same ``index_path`` mixes partitioned and
-    flat batch directories and breaks partition-column inference —
-    pick it at first start (or rewrite the index).
-
-    ``compact_every=k`` runs :func:`compact_index` on the foreachBatch
-    thread after every k-th batch, consolidating all generations BEFORE
-    the current batch — the per-batch directory-listing cost and
-    small-file count stay bounded over the stream's lifetime instead of
-    growing one directory per batch. Returns the started StreamingQuery.
+    ``index_buckets=B`` lays each index generation out as
+    ``pbucket=pmod(xxhash64(fingerprint), B)`` directories; each batch
+    then reads only the pbuckets its own fingerprints hash into.
+    ``compact_every=k`` compacts the index after every k-th batch. The
+    crash-replay, ``index_buckets`` and ``compact_every`` contract is
+    the shared ingest driver's (``_start_dedup_ingest``). Returns the
+    started StreamingQuery.
     """
     from my_feast_spark.functions.text import doc_fingerprint
 
-    spark = sdf.sparkSession
-    _ensure_index_meta(spark, index_path, {
-        "kind": "exact_fingerprint",
-        "index_buckets": index_buckets,
-    })
-
-    def ingest_batch(batch_df: DataFrame, batch_id: int) -> None:
-        import os
-
+    def accept(batch_df: DataFrame, ix: _IndexBatch) -> None:
+        (index_dir,) = ix.dirs
         fp = batch_df.select(
             F.col(id_col), F.col(text_col),
             doc_fingerprint(F.col(text_col)).alias("fingerprint"),
@@ -519,64 +758,20 @@ def dedup_ingest_stream(
             .filter(F.col("__rn") == 1)
             .drop("__rn")
         )
-        pbucket = F.pmod(F.xxhash64("fingerprint"), F.lit(index_buckets or 1))
-        if _fs_nonempty(spark, index_path):
-            # EXCLUDE this batch's own partition: after a crash between
-            # the sink writes and the streaming commit, foreachBatch
-            # replays the batch — anti-joining it against its own
-            # already-written fingerprints would empty `fresh` and the
-            # overwrite below would destroy the batch's good output
-            seen = (
-                spark.read.parquet(index_path)
-                .filter(F.col("batch_id") != batch_id)
-            )
-            if index_buckets:
-                # one tiny job: the batch's own pbucket set (≤ min(b, B)
-                # values) becomes a partition filter — the index scan
-                # lists/reads ONLY those directories
-                pbs = [
-                    r.pb
-                    for r in fresh.select(pbucket.alias("pb"))
-                    .distinct()
-                    .collect()
-                ]
-                seen = seen.filter(F.col("pbucket").isin(pbs))
+        if _fs_nonempty(ix.spark, index_dir):
+            seen = ix.seen(index_dir, fresh, "fingerprint")
             fresh = fresh.join(
                 seen.select("fingerprint"), "fingerprint", "left_anti"
             )
-        # idempotent per-batch partition: a replayed batch overwrites
-        # its own directory instead of double-appending
-        fresh.write.mode("overwrite").parquet(
-            os.path.join(out_path, f"batch_id={batch_id}")
-        )
-        index_rows = spark.read.parquet(
-            os.path.join(out_path, f"batch_id={batch_id}")
-        ).select("fingerprint")
-        index_writer = index_rows.write.mode("overwrite")
-        if index_buckets:
-            index_writer = index_rows.withColumn(
-                "pbucket", pbucket
-            ).repartition("pbucket").write.mode("overwrite").partitionBy(
-                "pbucket"
-            )
-        index_writer.parquet(os.path.join(index_path, f"batch_id={batch_id}"))
-        # in-stream index maintenance: consolidate everything BEFORE
-        # this batch (never the batch itself — its own partition must
-        # survive separately for the crash-replay guard above); runs on
-        # the foreachBatch thread, so no compactor ever races a batch
-        if compact_every and batch_id % compact_every == compact_every - 1:
-            compact_index(spark, index_path, exclude_from=batch_id)
+        written = ix.write_output(fresh)
+        ix.write_index(index_dir, written.select("fingerprint"), "fingerprint")
 
-    writer = (
-        sdf.writeStream.foreachBatch(ingest_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
+    return _start_dedup_ingest(
+        sdf, accept, meta={"kind": "exact_fingerprint"},
+        out_path=out_path, index_path=index_path, checkpoint=checkpoint,
+        index_buckets=index_buckets, compact_every=compact_every,
+        available_now=available_now, trigger_interval=trigger_interval,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_interval:
-        writer = writer.trigger(processingTime=trigger_interval)
-    return writer.start()
 
 
 def near_dedup_ingest_stream(
@@ -607,223 +802,86 @@ def near_dedup_ingest_stream(
     ``threshold``. In-batch policy is pairwise-greedy like
     ``similarity.semdedup`` — a doc dominated only by an itself-dropped
     doc still drops, the conservative (over-drop, never under) direction
-    for dedup.
+    for dedup. Short docs (< n tokens) have no shingles, can't collide,
+    and are accepted unconditionally.
 
     Index layout under ``index_path``: ``bands/batch_id=N`` holds
     (doc, band, bsig) collision rows, ``sigs/batch_id=N`` the (doc, sig
-    array) signatures — both derive from the WRITTEN accepted output of
-    their batch, so a crash replay regenerates identical partitions
-    (same idempotent ``batch_id=N`` overwrite contract as the exact
-    ingest; the probe goes through the Hadoop FileSystem so cloud paths
-    work). Short docs (< n tokens) have no shingles, can't collide, and
-    are accepted unconditionally.
+    array) signatures of the batch's accepted docs. ``index_buckets=B``
+    partitions them by ``pbucket`` — ``pmod(xxhash64(band, bsig), B)``
+    for band rows, ``pmod(xxhash64(doc), B)`` for signatures — and each
+    batch reads only the band pbuckets its own band rows hash into and
+    the signature pbuckets of its candidate dominators. Docs per batch x
+    bands rows shuffle, never the text. ``compact_every=k`` compacts
+    both datasets after every k-th batch. The crash-replay,
+    ``index_buckets`` and ``compact_every`` contract is the shared
+    ingest driver's (``_start_dedup_ingest``).
 
-    Scale shape — ``index_buckets``. Unset, each micro-batch scans the
-    FULL accumulated band index (and the signatures of every candidate
-    dominator): per-batch cost grows linearly with the corpus. With
-    ``index_buckets=B`` both index relations gain a partition directory
-    ``pbucket`` — ``pmod(xxhash64(band, bsig), B)`` for band rows,
-    ``pmod(xxhash64(doc), B)`` for signatures — and each batch reads
-    ONLY the pbuckets its own band rows / candidate dominators hash
-    into, a directory-level partition-pruned scan bounded by
-    ``min(batch collisions, B)/B`` of the index regardless of corpus
-    size. The collision join itself broadcasts the batch side under AQE
-    either way (no Exchange on the index side); like the exact ingest,
-    the layout choice is per stream lifetime — don't flip
-    ``index_buckets`` over an existing index. Docs per batch x bands
-    rows shuffle, never the text. Band signatures are xxhash64 over the
-    band's minhashes regardless of ``hash_fn`` (the index is
-    engine-internal; pick hash_fn="portable" only if the SIGNATURES
-    must replay elsewhere). The stored signatures are hash_fn-family-
-    specific: ``hash_fn`` is a per-stream-lifetime choice like
-    ``index_buckets``, and the round-15 reroute of "xxhash64" through
-    the Arrow fan-out changed that family's bit patterns — an index
-    persisted by a pre-round-15 build must be rebuilt (or the stream
-    pinned to hash_fn="xxhash64_expr") before appending to it.
+    Band signatures are xxhash64 over the band's minhashes regardless of
+    ``hash_fn`` (the index is engine-internal; pick hash_fn="portable"
+    only if the SIGNATURES must replay elsewhere). The stored signatures
+    are specific to the ``hash_fn`` family, so ``hash_fn`` is pinned per
+    index like ``index_buckets``. The "xxhash64" family's bit patterns
+    changed when it moved onto the Arrow fan-out: an index persisted
+    before that move must be rebuilt (or the stream pinned to
+    hash_fn="xxhash64_expr") before appending to it.
     Returns the started StreamingQuery.
     """
     if num_hashes % bands:
         raise ValueError("num_hashes must be divisible by bands")
     r = num_hashes // bands
     from my_feast_spark.operators.dedup import minhash_signature_array
-    from my_feast_spark.operators.graph import release_checkpoint
 
-    spark = sdf.sparkSession
-    _ensure_index_meta(spark, index_path, {
-        "kind": "neardup_minhash",
-        # "numpy" is an alias of "xxhash64" (same fan-out family)
-        "hash_fn": "xxhash64" if hash_fn == "numpy" else hash_fn,
-        "num_hashes": num_hashes,
-        "bands": bands,
-        "n": n,
-        "index_buckets": index_buckets,
-    })
-    bands_dir = os.path.join(index_path, "bands")
-    sigs_dir = os.path.join(index_path, "sigs")
-
-    def ingest_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # one signature pass, pinned for its many consumers (band build,
-        # both verify sides, the index write), released before returning;
-        # `live` tracks every checkpoint the batch pins (the candidate
-        # relation joins it under index_buckets) so an exception can't
-        # leak blocks for the stream's lifetime
-        # array-native signatures (r16): the index stores the array
-        # anyway — consuming it directly drops the 64-column fan-out +
-        # re-assembly from every per-batch plan (values bit-identical,
-        # so existing persisted indexes stay valid)
-        sig = minhash_signature_array(
+    def sign(batch_df: DataFrame) -> DataFrame:
+        # array-native signatures: the index stores the array as-is
+        return minhash_signature_array(
             batch_df, id_col, text_col, n=n, num_hashes=num_hashes,
             hash_fn=hash_fn,
-        ).select("doc", F.col("__sig").alias("sig")).localCheckpoint()
-        live = [sig]
-        try:
-            band_rows = sig.select(
-                "doc",
-                F.explode(F.array(*[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(*[
-                            F.element_at(F.col("sig"), b * r + j + 1)
-                            for j in range(r)
-                        ]).alias("bsig"),
-                    )
-                    for b in range(bands)
-                ])).alias("bs"),
-            ).select("doc", "bs.band", "bs.bsig")
+        ).select("doc", F.col("__sig").alias("sig"))
 
-            band_pb = F.pmod(
-                F.xxhash64("band", "bsig"), F.lit(index_buckets or 1)
-            )
-            doc_pb = F.pmod(F.xxhash64("doc"), F.lit(index_buckets or 1))
+    def band_rows(sig: DataFrame) -> DataFrame:
+        return sig.select(
+            "doc",
+            F.explode(F.array(*[
+                F.struct(
+                    F.lit(b).alias("band"),
+                    F.xxhash64(*[
+                        F.element_at(F.col("sig"), b * r + j + 1)
+                        for j in range(r)
+                    ]).alias("bsig"),
+                )
+                for b in range(bands)
+            ])).alias("bs"),
+        ).select("doc", "bs.band", "bs.bsig")
 
-            # in-batch candidates: same bucket, lower id dominates
-            a, b2 = band_rows.alias("a"), band_rows.alias("b")
-            cand = (
-                a.join(
-                    b2,
-                    (F.col("a.band") == F.col("b.band"))
-                    & (F.col("a.bsig") == F.col("b.bsig"))
-                    & (F.col("a.doc") < F.col("b.doc")),
-                )
-                .select(F.col("a.doc").alias("dom"), F.col("b.doc").alias("doc"))
-            )
-            all_sigs = sig
-            # cross-batch candidates: collide against the accumulated
-            # index, EXCLUDING this batch's own partitions (crash-replay
-            # safety — see dedup_ingest_stream)
-            if _fs_nonempty(spark, bands_dir):
-                old_bands = spark.read.parquet(bands_dir).filter(
-                    F.col("batch_id") != batch_id
-                )
-                if index_buckets:
-                    # partition-prune the band index to the buckets this
-                    # batch's own band rows hash into (one tiny job over
-                    # the checkpointed signatures)
-                    pbs = [
-                        r.pb
-                        for r in band_rows.select(band_pb.alias("pb"))
-                        .distinct()
-                        .collect()
-                    ]
-                    old_bands = old_bands.filter(F.col("pbucket").isin(pbs))
-                cand = cand.union(
-                    old_bands.select(F.col("doc").alias("dom"), "band", "bsig")
-                    .join(band_rows, ["band", "bsig"])
-                    .select("dom", "doc")
-                )
-                old_sigs = spark.read.parquet(sigs_dir).filter(
-                    F.col("batch_id") != batch_id
-                )
-                cand = cand.distinct()
-                if index_buckets:
-                    # the signature store only needs the DOMINATOR rows:
-                    # pin the (batch-collision-sized) candidate relation
-                    # and prune sig partitions to the dominators' buckets
-                    cand = cand.localCheckpoint()
-                    live.append(cand)
-                    dom_pbs = [
-                        r.pb
-                        for r in cand.select(
-                            F.pmod(
-                                F.xxhash64("dom"), F.lit(index_buckets)
-                            ).alias("pb")
-                        )
-                        .distinct()
-                        .collect()
-                    ]
-                    old_sigs = old_sigs.filter(F.col("pbucket").isin(dom_pbs))
-                all_sigs = sig.union(old_sigs.select("doc", "sig"))
-            else:
-                cand = cand.distinct()
-            # HOF fold, deliberately: the 64-term unroll measured ~5x
-            # SLOWER (0.70s fold vs 3.43s unrolled on 400k pairs — see
-            # similarity._dot_fixed's r17 contrast note; the fold's
-            # single ArrayData traversal beats 64 GetArrayItem nodes)
-            est_j = F.aggregate(
-                F.zip_with(
-                    F.col("a_sig"), F.col("b_sig"),
-                    lambda x, y: (x == y).cast("int"),
-                ),
-                F.lit(0),
-                lambda acc, x: acc + x,
-            ) / F.lit(num_hashes)
-            dominated = (
-                cand
-                .join(all_sigs.select(F.col("doc").alias("dom"),
-                                      F.col("sig").alias("a_sig")), "dom")
-                .join(sig.select("doc", F.col("sig").alias("b_sig")), "doc")
-                .filter(est_j >= threshold)
-                .select(F.col("doc").alias(id_col))
-                .distinct()
-            )
-            accepted = batch_df.join(dominated, id_col, "left_anti")
-            accepted.write.mode("overwrite").parquet(
-                os.path.join(out_path, f"batch_id={batch_id}")
-            )
-            # index entries derive from the WRITTEN output (replay-safe)
-            acc_ids = spark.read.parquet(
-                os.path.join(out_path, f"batch_id={batch_id}")
-            ).select(F.col(id_col).alias("doc"))
-            new_sigs = sig.join(acc_ids, "doc", "left_semi")
-            new_bands = band_rows.join(acc_ids, "doc", "left_semi")
-            if index_buckets:
-                new_sigs.withColumn("pbucket", doc_pb).repartition(
-                    "pbucket"
-                ).write.mode("overwrite").partitionBy("pbucket").parquet(
-                    os.path.join(sigs_dir, f"batch_id={batch_id}")
-                )
-                new_bands.withColumn("pbucket", band_pb).repartition(
-                    "pbucket"
-                ).write.mode("overwrite").partitionBy("pbucket").parquet(
-                    os.path.join(bands_dir, f"batch_id={batch_id}")
-                )
-            else:
-                new_sigs.write.mode("overwrite").parquet(
-                    os.path.join(sigs_dir, f"batch_id={batch_id}")
-                )
-                new_bands.write.mode("overwrite").parquet(
-                    os.path.join(bands_dir, f"batch_id={batch_id}")
-                )
-            # in-stream maintenance: consolidate generations BEFORE
-            # this batch (its own partitions must survive separately
-            # for the crash-replay guard)
-            if compact_every and batch_id % compact_every == compact_every - 1:
-                compact_index(spark, sigs_dir, exclude_from=batch_id)
-                compact_index(spark, bands_dir, exclude_from=batch_id)
-        finally:
-            for frame in live:
-                release_checkpoint(frame)
+    def similar(a_sig: Column, b_sig: Column) -> Column:
+        # one higher-order fold over the pair on purpose: a single
+        # array traversal, where an unrolled per-element sum measured
+        # several times slower
+        return F.aggregate(
+            F.zip_with(a_sig, b_sig, lambda x, y: (x == y).cast("int")),
+            F.lit(0),
+            lambda acc, x: acc + x,
+        ) / F.lit(num_hashes) >= threshold
 
-    writer = (
-        sdf.writeStream.foreachBatch(ingest_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
+    return _start_dedup_ingest(
+        sdf,
+        _candidate_verify(
+            id_col=id_col, sign=sign, key_rows=band_rows,
+            keys=("band", "bsig"), payload="sig", similar=similar,
+        ),
+        meta={
+            "kind": "neardup_minhash",
+            # "numpy" is an alias of "xxhash64" (same fan-out family)
+            "hash_fn": "xxhash64" if hash_fn == "numpy" else hash_fn,
+            "num_hashes": num_hashes,
+            "bands": bands,
+            "n": n,
+        },
+        out_path=out_path, index_path=index_path, checkpoint=checkpoint,
+        index_buckets=index_buckets, compact_every=compact_every,
+        available_now=available_now, trigger_interval=trigger_interval,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_interval:
-        writer = writer.trigger(processingTime=trigger_interval)
-    return writer.start()
 
 
 def embedding_dedup_ingest_stream(
@@ -849,22 +907,22 @@ def embedding_dedup_ingest_stream(
     buckets its (normalized) embeddings across ``num_tables``
     independent ``num_planes``-bit sign tables, collides them against
     the accumulated bucket index, and drops every doc whose exact
-    cosine against an already-accepted doc, or a lower-id doc of its
-    own batch, reaches ``threshold`` (precision 1 — LSH only generates
-    candidates; the verify is the true cosine over the stored vectors).
-    In-batch policy is pairwise-greedy like the MinHash ingest.
+    cosine (floored to 6 decimals) against an already-accepted doc, or
+    a lower-id doc of its own batch, reaches ``threshold`` (precision 1
+    — LSH only generates candidates; the verify is the true cosine over
+    the stored vectors). In-batch policy is pairwise-greedy like the
+    MinHash ingest.
 
     Index layout under ``index_path``: ``buckets/batch_id=N`` holds the
     (doc, table, bucket) collision rows, ``vecs/batch_id=N`` the
-    accepted (doc, v) normalized vectors the verify reads — both
-    derived from the WRITTEN accepted output of their batch (same
-    idempotent ``batch_id=N`` overwrite / crash-replay contract as the
-    exact and MinHash ingests). ``index_buckets=B`` adds the pbucket
-    partition layout — ``pmod(xxhash64(table, bucket), B)`` for bucket
-    rows, ``pmod(xxhash64(doc), B)`` for vectors — so each batch reads
-    only the directories its own collisions hash into (a per-stream-
-    lifetime layout choice, as with the other ingests). Returns the
-    started StreamingQuery.
+    accepted (doc, v) normalized vectors the verify reads.
+    ``index_buckets=B`` partitions them by ``pbucket`` —
+    ``pmod(xxhash64(table, bucket), B)`` for bucket rows,
+    ``pmod(xxhash64(doc), B)`` for vectors. ``compact_every=k`` compacts
+    both datasets after every k-th batch. The crash-replay,
+    ``index_buckets`` and ``compact_every`` contract is the shared
+    ingest driver's (``_start_dedup_ingest``). Returns the started
+    StreamingQuery.
     """
     from my_feast_spark.operators.similarity import (
         _dot,
@@ -872,163 +930,49 @@ def embedding_dedup_ingest_stream(
         _lsh_buckets_udf,
     )
 
-    spark = sdf.sparkSession
-    _ensure_index_meta(spark, index_path, {
-        "kind": "embedding_lsh",
-        "num_planes": num_planes,
-        "num_tables": num_tables,
-        "dim": dim,
-        "seed": seed,
-        "index_buckets": index_buckets,
-    })
-    buckets_dir = os.path.join(index_path, "buckets")
-    vecs_dir = os.path.join(index_path, "vecs")
     planes = [
         _hyperplanes(dim, num_planes, seed + t) for t in range(num_tables)
     ]
 
-    def ingest_batch(batch_df: DataFrame, batch_id: int) -> None:
-        bucket_udf = _lsh_buckets_udf(planes)
-        # one normalize+bucket pass, pinned for its many consumers
-        # (collision build, both verify sides, both index writes)
+    def sign(batch_df: DataFrame) -> DataFrame:
         v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
         norm = F.sqrt(F.aggregate(
             F.transform(v, lambda x: x * x), F.lit(0.0),
             lambda acc, x: acc + x,
         ))
-        base = batch_df.select(
+        return batch_df.select(
             F.col(id_col).alias("doc"),
             F.transform(v, lambda x: x / F.greatest(norm, F.lit(1e-12)))
             .alias("v"),
-        ).withColumn(
-            "bks", bucket_udf(F.col("v"))
-        ).localCheckpoint()
-        live = [base]
-        try:
-            bucket_rows = base.select(
-                "doc", F.posexplode(F.col("bks")).alias("table", "bucket")
-            )
-            bpb = F.pmod(
-                F.xxhash64("table", "bucket"), F.lit(index_buckets or 1)
-            )
-            dpb = F.pmod(F.xxhash64("doc"), F.lit(index_buckets or 1))
+        ).withColumn("bks", _lsh_buckets_udf(planes)(F.col("v")))
 
-            a, b2 = bucket_rows.alias("a"), bucket_rows.alias("b")
-            cand = (
-                a.join(
-                    b2,
-                    (F.col("a.table") == F.col("b.table"))
-                    & (F.col("a.bucket") == F.col("b.bucket"))
-                    & (F.col("a.doc") < F.col("b.doc")),
-                )
-                .select(F.col("a.doc").alias("dom"), F.col("b.doc").alias("doc"))
-            )
-            all_vecs = base.select("doc", "v")
-            if _fs_nonempty(spark, buckets_dir):
-                old_buckets = spark.read.parquet(buckets_dir).filter(
-                    F.col("batch_id") != batch_id
-                )
-                if index_buckets:
-                    pbs = [
-                        r.pb
-                        for r in bucket_rows.select(bpb.alias("pb"))
-                        .distinct()
-                        .collect()
-                    ]
-                    old_buckets = old_buckets.filter(
-                        F.col("pbucket").isin(pbs)
-                    )
-                cand = cand.union(
-                    old_buckets.select(
-                        F.col("doc").alias("dom"), "table", "bucket"
-                    )
-                    .join(bucket_rows, ["table", "bucket"])
-                    .select("dom", "doc")
-                )
-                old_vecs = spark.read.parquet(vecs_dir).filter(
-                    F.col("batch_id") != batch_id
-                )
-                cand = cand.distinct()
-                if index_buckets:
-                    cand = cand.localCheckpoint()
-                    live.append(cand)
-                    dom_pbs = [
-                        r.pb
-                        for r in cand.select(
-                            F.pmod(
-                                F.xxhash64("dom"), F.lit(index_buckets)
-                            ).alias("pb")
-                        )
-                        .distinct()
-                        .collect()
-                    ]
-                    old_vecs = old_vecs.filter(F.col("pbucket").isin(dom_pbs))
-                all_vecs = all_vecs.union(old_vecs.select("doc", "v"))
-            else:
-                cand = cand.distinct()
-            dominated = (
-                cand
-                .join(all_vecs.select(F.col("doc").alias("dom"),
-                                      F.col("v").alias("a_v")), "dom")
-                .join(base.select("doc", F.col("v").alias("b_v")), "doc")
-                .filter(
-                    # HOF fold, deliberately: the dim=64 unroll measured
-                    # 3x SLOWER per pair (similarity._dot_fixed's r17
-                    # contrast note)
-                    floor_round(_dot(F.col("a_v"), F.col("b_v")), 6)
-                    >= F.lit(threshold)
-                )
-                .select(F.col("doc").alias(id_col))
-                .distinct()
-            )
-            accepted = batch_df.join(dominated, id_col, "left_anti")
-            accepted.write.mode("overwrite").parquet(
-                os.path.join(out_path, f"batch_id={batch_id}")
-            )
-            # index entries derive from the WRITTEN output (replay-safe)
-            acc_ids = spark.read.parquet(
-                os.path.join(out_path, f"batch_id={batch_id}")
-            ).select(F.col(id_col).alias("doc"))
-            new_vecs = base.select("doc", "v").join(acc_ids, "doc", "left_semi")
-            new_buckets = bucket_rows.join(acc_ids, "doc", "left_semi")
-            if index_buckets:
-                new_vecs.withColumn("pbucket", dpb).repartition(
-                    "pbucket"
-                ).write.mode("overwrite").partitionBy("pbucket").parquet(
-                    os.path.join(vecs_dir, f"batch_id={batch_id}")
-                )
-                new_buckets.withColumn("pbucket", bpb).repartition(
-                    "pbucket"
-                ).write.mode("overwrite").partitionBy("pbucket").parquet(
-                    os.path.join(buckets_dir, f"batch_id={batch_id}")
-                )
-            else:
-                new_vecs.write.mode("overwrite").parquet(
-                    os.path.join(vecs_dir, f"batch_id={batch_id}")
-                )
-                new_buckets.write.mode("overwrite").parquet(
-                    os.path.join(buckets_dir, f"batch_id={batch_id}")
-                )
-            # in-stream maintenance (see dedup_ingest_stream)
-            if compact_every and batch_id % compact_every == compact_every - 1:
-                compact_index(spark, vecs_dir, exclude_from=batch_id)
-                compact_index(spark, buckets_dir, exclude_from=batch_id)
-        finally:
-            from my_feast_spark.operators.graph import release_checkpoint
+    def bucket_rows(base: DataFrame) -> DataFrame:
+        return base.select(
+            "doc", F.posexplode(F.col("bks")).alias("table", "bucket")
+        )
 
-            for frame in live:
-                release_checkpoint(frame)
+    def similar(a_v: Column, b_v: Column) -> Column:
+        # _dot is a higher-order fold on purpose: a dim-term unrolled
+        # sum measured several times slower per pair
+        return floor_round(_dot(a_v, b_v), 6) >= F.lit(threshold)
 
-    writer = (
-        sdf.writeStream.foreachBatch(ingest_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
+    return _start_dedup_ingest(
+        sdf,
+        _candidate_verify(
+            id_col=id_col, sign=sign, key_rows=bucket_rows,
+            keys=("table", "bucket"), payload="v", similar=similar,
+        ),
+        meta={
+            "kind": "embedding_lsh",
+            "num_planes": num_planes,
+            "num_tables": num_tables,
+            "dim": dim,
+            "seed": seed,
+        },
+        out_path=out_path, index_path=index_path, checkpoint=checkpoint,
+        index_buckets=index_buckets, compact_every=compact_every,
+        available_now=available_now, trigger_interval=trigger_interval,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_interval:
-        writer = writer.trigger(processingTime=trigger_interval)
-    return writer.start()
 
 
 def compact_index(
@@ -1056,10 +1000,10 @@ def compact_index(
         an overwrite of a directory it also reads — and, crucially, the
         merge input always INCLUDES every earlier compacted generation,
         so no interruption point can strand rows in a directory the
-        next run replaces without reading (the round-10 data-loss
-        corner: a crash after deleting all live sources left only
-        negative generations, and the old ``target = min(mergeable)``
-        scheme overwrote the newest superset with its older subset);
+        next run replaces without reading (were the target an existing
+        generation, a crash after deleting every live source would
+        leave only negative generations, and the next run would
+        overwrite the newest superset with an older subset);
       * a crash ANYWHERE between the consolidated write and the last
         source delete leaves rows duplicated across generations —
         harmless to the dedup semantics (anti-joins and candidate
@@ -1169,15 +1113,9 @@ def compact_ingest_indexes(spark: SparkSession, index_path: str) -> dict:
     path itself (exact ingest). Returns {dataset: compact_index stats}.
     """
     sc = spark.sparkContext
-    jvm = sc._jvm
-    root = jvm.org.apache.hadoop.fs.Path(index_path)
+    root = sc._jvm.org.apache.hadoop.fs.Path(index_path)
     fs = root.getFileSystem(sc._jsc.hadoopConfiguration())
-    subs = []
-    if fs.exists(root):
-        for st in fs.listStatus(root):
-            name = st.getPath().getName()
-            if name in ("bands", "sigs", "buckets", "vecs"):
-                subs.append(name)
+    subs = [p.getName() for p in _index_datasets(fs, root)]
     if not subs:
         return {".": compact_index(spark, index_path)}
     return {

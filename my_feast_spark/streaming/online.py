@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from my_feast_spark.core.store import FeatureStore
 from my_feast_spark.operators.aggregations import latest_per_key
+from my_feast_spark.streaming.ingest import _start_foreach_batch
 
 
 def materialize_stream(
@@ -168,13 +169,7 @@ def materialize_stream(
             fs._write_online_meta(tmp, buckets)
         swap_snapshot(tmp, path)
 
-    writer = (
-        stream_df.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
+    return _start_foreach_batch(
+        stream_df, merge_batch, checkpoint,
+        available_now=available_now, trigger_interval=trigger_interval,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_interval:
-        writer = writer.trigger(processingTime=trigger_interval)
-    return writer.start()

@@ -38,6 +38,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from my_feast_spark.operators.aggregations import scd2_intervals
+from my_feast_spark.streaming.ingest import (
+    _start_foreach_batch,
+    compact_index,
+    compaction_due,
+)
 
 #: partition column for key buckets in both the log and the table
 BUCKET_COL = "__kb"
@@ -101,21 +106,13 @@ def scd2_maintain_stream(
         # this batch (never the batch itself — its directory must stay
         # separately replayable); same cadence contract as the dedup
         # ingests' compact_every
-        if compact_every and batch_id % compact_every == compact_every - 1:
-            from my_feast_spark.streaming.ingest import compact_index
-
+        if compaction_due(batch_id, compact_every):
             compact_index(spark, events_path, exclude_from=batch_id)
 
-    writer = (
-        sdf.writeStream.foreachBatch(maintain)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
+    return _start_foreach_batch(
+        sdf, maintain, checkpoint,
+        available_now=available_now, trigger_interval=trigger_interval,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_interval:
-        writer = writer.trigger(processingTime=trigger_interval)
-    return writer.start()
 
 
 def read_scd2_table(spark, intervals_path: str) -> DataFrame:

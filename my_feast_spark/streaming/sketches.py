@@ -41,7 +41,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from my_feast_spark.operators.sketches import hll_estimate, hll_registers
-from my_feast_spark.streaming.ingest import _fs_nonempty, compact_index
+from my_feast_spark.streaming.ingest import (
+    _fs_nonempty,
+    _start_foreach_batch,
+    compact_index,
+    compaction_due,
+)
 
 
 def hll_ingest_stream(
@@ -74,21 +79,15 @@ def hll_ingest_stream(
         regs.write.mode("overwrite").parquet(
             os.path.join(sketch_path, f"batch_id={batch_id}")
         )
-        if compact_every and batch_id % compact_every == compact_every - 1:
+        if compaction_due(batch_id, compact_every):
             compact_index(
                 batch_df.sparkSession, sketch_path, exclude_from=batch_id
             )
 
-    writer = (
-        sdf.writeStream.foreachBatch(ingest_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
+    return _start_foreach_batch(
+        sdf, ingest_batch, checkpoint,
+        available_now=available_now, trigger_interval=trigger_interval,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_interval:
-        writer = writer.trigger(processingTime=trigger_interval)
-    return writer.start()
 
 
 def read_hll_sketch(
@@ -146,21 +145,15 @@ def kmv_ingest_stream(
         sk.write.mode("overwrite").parquet(
             os.path.join(sketch_path, f"batch_id={batch_id}")
         )
-        if compact_every and batch_id % compact_every == compact_every - 1:
+        if compaction_due(batch_id, compact_every):
             compact_index(
                 batch_df.sparkSession, sketch_path, exclude_from=batch_id
             )
 
-    writer = (
-        sdf.writeStream.foreachBatch(ingest_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
+    return _start_foreach_batch(
+        sdf, ingest_batch, checkpoint,
+        available_now=available_now, trigger_interval=trigger_interval,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_interval:
-        writer = writer.trigger(processingTime=trigger_interval)
-    return writer.start()
 
 
 def read_kmv_sketch(
@@ -219,21 +212,15 @@ def cms_ingest_stream(
         cms.write.mode("overwrite").parquet(
             os.path.join(sketch_path, f"batch_id={batch_id}")
         )
-        if compact_every and batch_id % compact_every == compact_every - 1:
+        if compaction_due(batch_id, compact_every):
             compact_cms(
                 batch_df.sparkSession, sketch_path, exclude_from=batch_id
             )
 
-    writer = (
-        sdf.writeStream.foreachBatch(ingest_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
+    return _start_foreach_batch(
+        sdf, ingest_batch, checkpoint,
+        available_now=available_now, trigger_interval=trigger_interval,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_interval:
-        writer = writer.trigger(processingTime=trigger_interval)
-    return writer.start()
 
 
 def _cms_generations(spark: SparkSession, sketch_path: str):

@@ -45,6 +45,7 @@ from my_feast_spark.sources.versioned import (
     checkpoint_if_due,
     write_version,
 )
+from my_feast_spark.streaming.ingest import _start_foreach_batch
 
 
 def versioned_ingest_stream(
@@ -130,16 +131,10 @@ def versioned_ingest_stream(
                     stacklevel=2,
                 )
 
-    writer = (
-        stream_df.writeStream.foreachBatch(commit_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
+    return _start_foreach_batch(
+        stream_df, commit_batch, checkpoint, available_now=available_now,
+        trigger_interval=trigger_interval, output_mode="append",
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_interval:
-        writer = writer.trigger(processingTime=trigger_interval)
-    return writer.start()
 
 
 def mirror_changes_stream(
@@ -256,13 +251,7 @@ def mirror_changes_stream(
     sdf = read_changes_stream(
         spark, source_path, starting_version=starting_version
     )
-    writer = (
-        sdf.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
+    return _start_foreach_batch(
+        sdf, apply_batch, checkpoint, available_now=available_now,
+        trigger_interval=trigger_interval, output_mode="append",
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_interval:
-        writer = writer.trigger(processingTime=trigger_interval)
-    return writer.start()
