@@ -13,13 +13,18 @@ Parity surface with the reference's notebook usage:
 The online store is a latest-per-key Parquet snapshot per feature view
 (replacing the reference's Redis, fs_online/feature_store.yaml:6-8):
 materialize = window top-1 over the interval + dynamic overwrite;
-get_online_features = filtered read of that small snapshot. Swappable for
-a real KV store without touching callers.
+get_online_features = per view, one scan of the snapshot filtered by the
+requested keys, folded into the plan as literals of the snapshot's key
+types (and pruned to their hash buckets on a bucketed snapshot), one
+``collect``, and the rows assembled on the driver. Swappable for a real
+KV store without touching callers.
 """
 
 from __future__ import annotations
 
+import operator
 import os
+from functools import reduce
 from typing import Iterable, Mapping, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -221,7 +226,7 @@ class FeatureStore:
         ``__pbucket=hash(keys) % N`` partition directories and every
         lookup prunes to the requested keys' buckets — at 100M+
         entities a point lookup then reads a handful of directories
-        instead of scanning (and broadcasting) the whole snapshot."""
+        instead of scanning the whole snapshot."""
         if not self.config:
             return 0
         return int(self.config.online_store.get("buckets", 0) or 0)
@@ -326,13 +331,22 @@ class FeatureStore:
     ) -> dict[str, list]:
         """Key-value lookup of the latest feature vectors (M7,
         explore_features.ipynb:608-616). Returns dict-of-lists like the
-        reference's ``.to_dict()``."""
+        reference's ``.to_dict()``, one entry per entity row in request
+        order. Columns: the view's join keys, the entity rows' other
+        columns sorted, then each view's features (a later view's join
+        keys move to the front); ``None`` where a row lacks a key or the
+        snapshot has no row for it.
+
+        Each view costs one filtered snapshot scan and one ``collect``.
+        The request's distinct keys are folded into the plan as literals
+        cast to the snapshot's key types: ``key IN (...)``, an OR of ANDs
+        for composite keys, and on a bucketed snapshot ``__pbucket IN
+        (pmod(xxhash64(<key literals>), n), ...)``, the hash
+        ``materialize`` wrote, which constant folding turns into a
+        partition filter. The hits are assembled into rows on the driver.
+        An empty request runs no Spark job."""
         refs = parse_feature_refs(features)
-        spark = self.spark
-        keys_df = spark.createDataFrame(
-            [{**dict(r), "__row_order": i} for i, r in enumerate(entity_rows)]
-        )
-        out = keys_df
+        views = []
         for view_name, feat_names in refs.items():
             fv = self.get_feature_view(view_name)
             join_keys = []
@@ -345,31 +359,70 @@ class FeatureStore:
                     f"feature view {view_name!r} has no online snapshot — "
                     "call materialize(start, end, [view]) first"
                 )
+            views.append((view_name, join_keys, feat_names, path))
+        rows = [dict(r) for r in entity_rows]
+        cols = sorted({c for r in rows for c in r})
+        out = {c: [r.get(c) for r in rows] for c in cols}
+        for view_name, join_keys, feat_names, path in views:
+            cols = join_keys + [c for c in cols if c not in join_keys] + feat_names
+            for k in join_keys:
+                out.setdefault(k, [None] * len(rows))
+            keys = [tuple(r.get(k) for k in join_keys) for r in rows]
+            hits = self._online_hits(view_name, path, join_keys, feat_names, keys)
+            for i, f in enumerate(feat_names):
+                # a name already taken by an entity column or an earlier
+                # view's feature keeps its first value
+                out.setdefault(f, [None if h is None else h[i] for h in hits])
+        return {c: out[c] for c in cols}
+
+    def _online_hits(
+        self, view_name: str, path: str, join_keys: list[str],
+        feat_names: list[str], keys: list[tuple],
+    ) -> list:
+        """The feature tuple for each key tuple of ``keys`` (``None`` for
+        a miss or a key with a ``None`` part), from one pruned scan of the
+        view's snapshot run under the job description
+        ``get_online_features:<view>``. Hits match their keys by Python
+        equality, so a key value must have the Python type the key
+        column collects as (``str`` for STRING, ``int`` for INT64)."""
+        wanted = list(dict.fromkeys(t for t in keys if None not in t))
+        if not wanted:
+            return [None] * len(keys)
+        spark = self.spark
+        sc = spark.sparkContext
+        prev = sc.getLocalProperty("spark.job.description")
+        sc.setJobDescription(f"get_online_features:{view_name}")
+        try:
             snap = spark.read.parquet(path)
-            n_buckets = self._read_online_buckets(path)
+            types = [snap.schema[k].dataType for k in join_keys]
+            lits = [
+                [F.lit(v).try_cast(t) for v, t in zip(key, types)]
+                for key in wanted
+            ]
+            if len(join_keys) == 1:
+                pred = F.col(join_keys[0]).isin([lit for lit, in lits])
+            else:
+                pred = reduce(operator.or_, (
+                    reduce(operator.and_, (
+                        F.col(k) == lit for k, lit in zip(join_keys, key)))
+                    for key in lits
+                ))
             if "__pbucket" in snap.columns:
+                n_buckets = self._read_online_buckets(path)
                 if not n_buckets:
                     raise RuntimeError(
                         f"online snapshot at {path!r} is bucketed but its "
                         f"{self._ONLINE_META} sidecar is missing — "
                         "re-materialize the view"
                     )
-                # bucketed layout: the requested keys' bucket set (≤
-                # |entity_rows| values, collected from the literal keys
-                # relation) becomes a partition filter — the snapshot
-                # scan lists and reads ONLY those directories, and the
-                # broadcast below carries one bucket's entities per
-                # requested key at most, not the whole store
-                pbs = sorted(
-                    r.pb
-                    for r in keys_df.select(
-                        self._pbucket(join_keys, n_buckets).alias("pb")
-                    ).distinct().collect()
+                pred &= F.col("__pbucket").isin(
+                    [self._pbucket(key, n_buckets) for key in lits]
                 )
-                snap = snap.filter(F.col("__pbucket").isin(pbs))
-            snap = snap.select(*join_keys, *feat_names)
-            # pruned (or small by construction) -> broadcastable lookup
-            out = out.join(F.broadcast(snap), on=join_keys, how="left")
-        rows = out.orderBy("__row_order").drop("__row_order").collect()
-        cols = [c for c in out.columns if c != "__row_order"]
-        return {c: [r[c] for r in rows] for c in cols}
+            n = len(join_keys)
+            found = {
+                tuple(r[:n]): tuple(r[n:])
+                for r in snap.filter(pred).select(*join_keys, *feat_names).collect()
+            }
+        finally:
+            sc.setJobDescription(prev)
+        return [found.get(key) for key in keys]

@@ -459,8 +459,8 @@ FROM r WHERE rn = 1
 
 def q_online_lookup(spark, sf_dir):
     """J6 online point lookup (explore_features.ipynb:608-616): broadcast
-    a small key set against the latest-per-entity snapshot — the
-    get_online_features serving path as a query. The keys side is tiny by
+    a small key set against the latest-per-entity snapshot, a batch
+    point lookup over a derived key relation. The keys side is tiny by
     construction, so the plan is a BroadcastHashJoin over the snapshot
     with no shuffle of the big side."""
     events = _t(spark, sf_dir, "events")
