@@ -158,12 +158,8 @@ def main() -> None:
          lambda: counted(workload.q_bloom_prefilter_dedup(spark, sf_dir, hash_fn="xxhash64"))),
         ("cms_heavy_hitters_xxhash64",
          lambda: counted(workload.q_cms_heavy_hitters(spark, sf_dir, hash_fn="xxhash64"))),
-        # chunk_dedup retired from the driver registry in round 16
-        # (successor cdc_chunk_dedup; pinned-anchor budget) — keep the
-        # portable-family base timing here so the family-inversion pair
-        # below still has data. corpus_vocab (retired same round) has
-        # no scale variant and simply leaves the timing set; its count
-        # shape stays timed inside vocab_encode_join / top_terms_tfidf.
+        # chunk_dedup is a retired query: its portable-family base
+        # timing stays here so the family-inversion pair below has data
         ("chunk_dedup",
          lambda: counted(workload.q_chunk_dedup(spark, sf_dir))),
         ("chunk_dedup_xxhash64",
@@ -251,9 +247,8 @@ def main() -> None:
     # the bench records what computing the features actually costs.
     from pyspark.sql import functions as F
 
-    # quality_score retired from the driver registry in round 8 but
-    # keeps its bench slot for round-over-round comparability (the
-    # retired dict still carries the query); gopher joins the tier
+    # quality_score and doc_fingerprints are retired queries that keep
+    # their bench slots for comparability across runs
     registry = {**workload.QUERIES, **workload.RETIRED_QUERIES}
     for name in ("repetition_filter", "quality_score", "lang_id",
                  "pii_redaction", "doc_fingerprints",

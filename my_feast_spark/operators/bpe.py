@@ -1,7 +1,7 @@
 """BPE tokenizer training — the full iterative merge loop.
 
-`workload.q_bpe_pair_counts` is ONE round's count table; this module
-runs the actual training loop (Sennrich et al., "Neural Machine
+One round of BPE is an adjacent-pair count table; this module runs
+the actual training loop (Sennrich et al., "Neural Machine
 Translation of Rare Words with Subword Units"): start from characters,
 repeatedly promote the most frequent adjacent symbol pair to a new
 merged symbol, emit the ordered merge list a tokenizer replays at

@@ -13,8 +13,10 @@ Two paths:
     candidates. Sub-linear candidate volume at corpus scale; recall
     depends on H and probes.
 
-Embedding-cosine near-dup detection composes cosine_topk with a
-threshold filter (see workload.q_embedding_near_dupes).
+Embedding-cosine near-dup detection (``embedding_dup_pairs``) verifies
+all pairs, or LSH-blocked candidate pairs, by exact cosine against a
+threshold; ``workload.q_embedding_near_dupes_lsh`` is its oracle-checked
+query.
 """
 
 from __future__ import annotations
@@ -33,36 +35,14 @@ _MIN_SAMPLE_PER_CELL = 8
 
 
 def _dot(a, b):
+    """Left-to-right dot product as a higher-order-function fold (seed
+    0.0). 64-term verify dots keep this HOF fold because an unrolled
+    ``GetArrayItem`` chain measured slower."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y),
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
-
-
-def _dot_fixed(a, b, dim: int):
-    """``_dot`` unrolled for arrays of KNOWN length ``dim`` — the same
-    left-to-right fold over the same ``lit(0.0)`` seed as the HOF
-    aggregate (bit-identical doubles, NULL poisoning and sign-of-zero
-    included; pinned by ``test_dot_fixed_bit_identical_to_hof_fold``).
-
-    MEASURED NEGATIVE at dim=64 (r17, kept as the contrast note): on
-    400k pairs the unrolled ``F.get`` chain ran 2.9s vs the HOF fold's
-    0.96s (int variant 3.4s vs 0.70s) — per-element ``GetArrayItem``
-    null/bounds checks across a 64-term flat tree lose to the fold's
-    single ``ArrayData`` traversal even though ``ArrayAggregate`` is
-    CodegenFallback. Every 64-dim verify site therefore keeps ``_dot``.
-    The SAME unroll at m=8 wins 3.3x (``pq._adc_dist``, 1.13s -> 0.34s
-    on 3M rows): the crossover sits between ~8 and ~64 terms — measure
-    before switching any new site.
-
-    ONLY for fixed-dim columns: on a ragged array the fold walks the
-    true length while this walks ``dim`` — results diverge on
-    longer-than-dim inputs."""
-    acc = F.lit(0.0)
-    for i in range(dim):
-        acc = acc + F.get(a, i) * F.get(b, i)
-    return acc
 
 
 def _norm(a):
@@ -298,8 +278,6 @@ def embedding_dup_pairs(
             )
             .select(
                 F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
-                # HOF fold, deliberately: the dim=64 unroll measured
-                # 3x SLOWER (see _dot_fixed's contrast note, r17)
                 F.round(
                     _dot(F.col("a.v"), F.col("b.v"))
                     / (F.col("a.n") * F.col("b.n")),
@@ -474,8 +452,6 @@ def ivf_topk(
         joined = joined.filter(F.col("neighbor_id") != F.col("query_id"))
     sims = joined.select(
         "query_id", "neighbor_id",
-        # HOF fold, deliberately: the dim=64 unroll measured 3x
-        # SLOWER (see _dot_fixed's contrast note, r17)
         F.round(
             _dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")),
             sim_decimals,
@@ -609,8 +585,6 @@ def semdedup(
         )
         .select(
             F.col("b.id").alias("id"),
-            # HOF fold, deliberately: the dim=64 unroll measured 3x
-            # SLOWER (see _dot_fixed's contrast note, r17)
             F.round(
                 _dot(F.col("a.v"), F.col("b.v")) / (F.col("a.n") * F.col("b.n")),
                 sim_decimals,
@@ -766,8 +740,6 @@ def ann_lsh_topk(
         joined = joined.filter(F.col("neighbor_id") != F.col("query_id"))
     sims = joined.select(
         "query_id", "neighbor_id",
-        # HOF fold, deliberately: the dim=64 unroll measured 3x
-        # SLOWER (see _dot_fixed's contrast note, r17)
         F.round(
             _dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")),
             sim_decimals,

@@ -368,41 +368,6 @@ GROUP BY l_returnflag, l_linestatus
 """
 
 
-def q_filtered_agg(spark, sf_dir):
-    """A4: filter-then-aggregate (get_hist_feat.ipynb:311-313)."""
-    events = _t(spark, sf_dir, "events")
-    return (
-        events.where(F.col("value") > 100.0)
-        .groupBy("event_type")
-        .agg(
-            _stable_round_avg("value", 4).alias("avg_high_value"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
-
-
-SQL_FILTERED_AGG = f"""
-SELECT event_type, {_sql_stable_round_avg("value", 4)} AS avg_high_value,
-       CAST(count(*) AS BIGINT) AS cnt
-FROM events WHERE value > 100.0 GROUP BY 1
-"""
-
-
-def q_dedup_entity_rows(spark, sf_dir):
-    """A5: duplicate-row elimination of the entity dataframe
-    (CASE.MD:365-375) — dropDuplicates on (entity, hour)."""
-    events = _t(spark, sf_dir, "events")
-    return events.select(
-        "user_id", F.date_trunc("hour", F.col("ts")).alias("bucket_ts")
-    ).dropDuplicates()
-
-
-SQL_DEDUP_ENTITY_ROWS = """
-SELECT DISTINCT user_id, date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket_ts
-FROM events
-"""
-
-
 def q_latest_event_per_user(spark, sf_dir):
     """A6+W1: latest-version-per-key via ROW_NUMBER top-1
     (CASE.MD:445-464)."""
@@ -424,35 +389,6 @@ WITH r AS (
 )
 SELECT user_id, last_ts, event_type AS last_event_type,
        round(value, 2) AS last_value
-FROM r WHERE rn = 1
-"""
-
-
-def q_online_snapshot(spark, sf_dir):
-    """M6 materialize semantics: latest row per entity within an interval
-    (chicago_taxi_trips_hourly_gold.ipynb:473-479)."""
-    events = _t(spark, sf_dir, "events")
-    windowed = events.where(
-        (F.col("ts") >= F.lit(dt.datetime(2024, 1, 10)))
-        & (F.col("ts") < F.lit(dt.datetime(2024, 1, 20)))
-    )
-    out = latest_per_key(windowed, ["user_id"], ["ts"], tie_breakers=["event_id"])
-    return out.select(
-        "user_id", F.col("ts").alias("snapshot_ts"), "event_type",
-        F.round("value", 2).alias("value"),
-    )
-
-
-SQL_ONLINE_SNAPSHOT = """
-WITH r AS (
-  SELECT user_id, CAST(ts AS TIMESTAMP) AS snapshot_ts, event_type, value,
-         row_number() OVER (PARTITION BY user_id
-                            ORDER BY ts DESC, event_id DESC) AS rn
-  FROM events
-  WHERE CAST(ts AS TIMESTAMP) >= TIMESTAMP '2024-01-10'
-    AND CAST(ts AS TIMESTAMP) < TIMESTAMP '2024-01-20'
-)
-SELECT user_id, snapshot_ts, event_type, round(value, 2) AS value
 FROM r WHERE rn = 1
 """
 
@@ -486,50 +422,6 @@ WITH r AS (
 )
 SELECT user_id, feature_ts, event_type, round(value, 2) AS value
 FROM r WHERE rn = 1 AND user_id % 13 = 0
-"""
-
-
-# =========================================================================
-# Projections / scalar functions (SURVEY §2.2, §2.8)
-# =========================================================================
-
-def q_json_props_extract(spark, sf_dir):
-    """F6/P3: JSON payload field extraction to typed column
-    (chicago_weather_bronze.py:43; silver map-pivot idiom)."""
-    events = _t(spark, sf_dir, "events")
-    return events.select(
-        "event_id",
-        F.get_json_object("props", "$.k").cast("int").alias("k_val"),
-    )
-
-
-SQL_JSON_PROPS_EXTRACT = """
-SELECT event_id, CAST(json_extract_string(props, '$.k') AS INTEGER) AS k_val
-FROM events
-"""
-
-
-def q_case_decode_coalesce(spark, sf_dir):
-    """P9+P10: chained CASE WHEN decode + NULL coalesce
-    (chicago_weather_silver.py:23-27; chicago_weather_hourly_fs.py:36-37)."""
-    events = _t(spark, sf_dir, "events")
-    return events.select(
-        "event_id",
-        F.when(F.col("event_type") == "purchase", "buy")
-        .when(F.col("event_type") == "view", "look")
-        .otherwise("other")
-        .alias("decoded"),
-        F.round(F.coalesce(F.col("value"), F.lit(0.0)), 2).alias("value_filled"),
-    )
-
-
-SQL_CASE_DECODE_COALESCE = """
-SELECT event_id,
-       CASE WHEN event_type = 'purchase' THEN 'buy'
-            WHEN event_type = 'view' THEN 'look'
-            ELSE 'other' END AS decoded,
-       round(coalesce(value, 0.0), 2) AS value_filled
-FROM events
 """
 
 
@@ -695,38 +587,6 @@ WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)
 """
 
 
-def q_promo_revenue(spark, sf_dir):
-    """Conditional aggregation over a fact-dim join (TPC-H Q14 shape):
-    CASE-WHEN inside SUM, date range pushed to the lineitem scan."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
-    disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    promo = F.when(F.col("p_type").startswith("PROMO"), disc_price).otherwise(0.0)
-    return (
-        li.where(
-            (F.col("l_shipdate") >= F.lit(dt.datetime(1995, 9, 1)))
-            & (F.col("l_shipdate") < F.lit(dt.datetime(1996, 9, 1)))
-        )
-        .join(part, li.l_partkey == part.p_partkey)
-        .agg(
-            F.round(100.0 * F.sum(promo) / F.sum(disc_price), 4).alias("promo_pct"),
-            F.round(F.sum(disc_price), 2).alias("total_revenue"),
-        )
-    )
-
-
-SQL_PROMO_REVENUE = """
-SELECT round(100.0 * sum(CASE WHEN p_type LIKE 'PROMO%'
-                              THEN l_extendedprice * (1 - l_discount)
-                              ELSE 0.0 END)
-             / sum(l_extendedprice * (1 - l_discount)), 4) AS promo_pct,
-       round(sum(l_extendedprice * (1 - l_discount)), 2) AS total_revenue
-FROM lineitem JOIN part ON l_partkey = p_partkey
-WHERE l_shipdate >= TIMESTAMP '1995-09-01'
-  AND l_shipdate < TIMESTAMP '1996-09-01'
-"""
-
-
 def q_part_brand_stats(spark, sf_dir):
     """A3: min/max/avg/count multi-aggregate (trip_stats_fv.ipynb:297-306)."""
     part = _t(spark, sf_dir, "part")
@@ -852,99 +712,6 @@ SELECT coalesce(l_returnflag, 'ALL') AS returnflag,
        CAST(count(*) AS BIGINT) AS n_rows
 FROM lineitem
 GROUP BY CUBE (l_returnflag, l_linestatus)
-"""
-
-
-def q_post_signup_activity(spark, sf_dir):
-    """Banded interval join: for each signup, count the same user's events
-    in the following 24h. The equi conjunct (user_id) keys the shuffle, so
-    Catalyst plans a hash/sort-merge join with the time band as a
-    post-join filter — never a nested-loop; per-user history length bounds
-    the fan-out."""
-    events = _t(spark, sf_dir, "events")
-    signups = events.where(F.col("event_type") == "signup").select(
-        F.col("event_id").alias("signup_id"),
-        "user_id",
-        F.col("ts").alias("signup_ts"),
-    )
-    acts = events.select("user_id", F.col("ts").alias("act_ts"))
-    return (
-        signups.join(
-            acts,
-            (signups.user_id == acts.user_id)
-            & (F.col("act_ts") > F.col("signup_ts"))
-            & (F.col("act_ts") <= F.col("signup_ts") + F.expr("INTERVAL 24 HOURS")),
-        )
-        .groupBy("signup_id")
-        .agg(F.count(F.lit(1)).alias("n_follow"))
-    )
-
-
-SQL_POST_SIGNUP_ACTIVITY = """
-WITH s AS (
-  SELECT event_id AS signup_id, user_id, CAST(ts AS TIMESTAMP) AS signup_ts
-  FROM events WHERE event_type = 'signup'
-)
-SELECT s.signup_id, CAST(count(*) AS BIGINT) AS n_follow
-FROM s JOIN events e
-  ON e.user_id = s.user_id
- AND CAST(e.ts AS TIMESTAMP) > s.signup_ts
- AND CAST(e.ts AS TIMESTAMP) <= s.signup_ts + INTERVAL 24 HOUR
-GROUP BY s.signup_id
-"""
-
-
-def q_batch_sessions(spark, sf_dir):
-    """Batch gap-based sessionization (30-min idle gap): lag-over-user
-    marks session starts, a running sum numbers them, then one aggregate
-    per session. Two window passes over the SAME (user_id, ts) sort order
-    — Catalyst reuses the sort/shuffle — followed by the session-grain
-    aggregate. The batch twin of streaming_sessionize."""
-    events = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    marked = events.select(
-        "user_id", "ts", "event_id",
-        F.when(
-            F.unix_micros(F.col("ts").cast("timestamp"))
-            - F.lag(F.unix_micros(F.col("ts").cast("timestamp"))).over(w) > 1800 * 1_000_000,
-            1,
-        ).otherwise(0).alias("is_new"),
-    )
-    sessions = marked.withColumn(
-        "session_no", F.sum("is_new").over(
-            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-    )
-    return (
-        sessions.groupBy("user_id", "session_no")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.min("ts").alias("session_start"),
-            F.max("ts").alias("session_end"),
-        )
-    )
-
-
-SQL_BATCH_SESSIONS = """
-WITH marked AS (
-  SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_id,
-         CASE WHEN epoch_us(CAST(ts AS TIMESTAMP))
-                   - epoch_us(lag(CAST(ts AS TIMESTAMP)) OVER
-                       (PARTITION BY user_id ORDER BY ts, event_id))
-                   > 1800 * 1000000
-              THEN 1 ELSE 0 END AS is_new
-  FROM events
-), numbered AS (
-  SELECT user_id, ts, event_id,
-         CAST(sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-           AS session_no
-  FROM marked
-)
-SELECT user_id, session_no,
-       CAST(count(*) AS BIGINT) AS n_events,
-       min(ts) AS session_start, max(ts) AS session_end
-FROM numbered GROUP BY user_id, session_no
 """
 
 
@@ -1084,68 +851,8 @@ FROM d GROUP BY decile
 
 
 # =========================================================================
-# Registry of (spark_fn, oracle_sql)
-# =========================================================================
-
-# QUERIES is assembled ONCE at the end of the module (after every q_* is
-# defined) so registration order is an explicit, auditable list — the
-# driver adjudicates entries in order, so the ordering is part of the
-# correctness-coverage design.
-
-
-# =========================================================================
 # Extensions: text analysis (north-star operators over `documents`)
 # =========================================================================
-
-def q_doc_chunks(spark, sf_dir):
-    """Token-window chunking (size 50, stride 25): one row per chunk with
-    its start offset, token count, and content digest. Map-only explode —
-    the shape of a context-length splitter over a 100 TB corpus."""
-    from my_feast_spark.functions.text import chunk_tokens
-
-    docs = _t(spark, sf_dir, "documents")
-    # explode_outer: plain explode's inferred size>0 predicate re-evaluates
-    # the chunk_tokens expression inside the scan filter (see
-    # operators/decontamination.py); chunk arrays are never empty, so the
-    # null-guard keeps semantics identical. (The r3 0.63->1.68s drift on
-    # this query was NOT the explode variant: chunk_tokens used to embed
-    # the tokenization inside its transform lambda, re-splitting the text
-    # once per chunk on the interpreted path — functions/text.py `let`
-    # now binds the token array once per row, and a pinned-order
-    # interleaved A/B shows both explode variants warm at ~0.4s at sf0.1.)
-    return (
-        docs.select(
-            "doc_id",
-            F.explode_outer(chunk_tokens(F.col("text"), size=50, stride=25)).alias("c"),
-        )
-        .filter(F.col("c").isNotNull())
-        .select(
-            "doc_id",
-            F.col("c.start").alias("start"),
-            F.md5(F.encode(F.col("c.chunk_text"), "UTF-8")).alias("chunk_md5"),
-            F.col("c.n_tokens").alias("n_tokens"),
-        )
-    )
-
-
-SQL_DOC_CHUNKS = """
-WITH t AS (
-  SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS toks
-  FROM documents
-), s AS (
-  SELECT doc_id, toks,
-         unnest(range(0,
-                      CASE WHEN len(toks) <= 50 THEN 1
-                           ELSE ((len(toks) - 50 + 24) // 25) * 25 + 1 END,
-                      25)) AS start
-  FROM t
-)
-SELECT doc_id, CAST(start AS INTEGER) AS start,
-       md5(array_to_string(toks[start + 1:start + 50], ' ')) AS chunk_md5,
-       CAST(least(50, len(toks) - start) AS INTEGER) AS n_tokens
-FROM s
-"""
-
 
 def q_hash_sampled_docs(spark, sf_dir):
     """Deterministic ~10% hash-bucket sample of the corpus, summarized per
@@ -1170,66 +877,6 @@ SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
 FROM documents
 WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) < '1a'
 GROUP BY lang
-"""
-
-
-def q_regex_mentions(spark, sf_dir):
-    """Regex extraction (SURVEY §2.8 lists regex as built-in/unused):
-    per-doc count of keyword mentions via regexp_extract_all."""
-    docs = _t(spark, sf_dir, "documents")
-    pat = r"\b(spark|query|vector)\b"
-    return (
-        docs.select(
-            "doc_id",
-            F.size(F.regexp_extract_all(F.col("text"), F.lit(pat), 1)).alias("n_mentions"),
-        )
-        .where(F.col("n_mentions") > 0)
-    )
-
-
-SQL_REGEX_MENTIONS = """
-SELECT doc_id,
-       CAST(len(regexp_extract_all(text, '\\b(spark|query|vector)\\b', 1)) AS INTEGER)
-         AS n_mentions
-FROM documents
-WHERE len(regexp_extract_all(text, '\\b(spark|query|vector)\\b', 1)) > 0
-"""
-
-
-def q_corpus_vocab(spark, sf_dir):
-    """Corpus-wide vocabulary: top-50 tokens by total occurrences with
-    document frequency — the vocabulary/stopword-discovery pass of a
-    training-data pipeline. Scale shape: tokenize+explode is map-only;
-    occurrence counting is a two-phase hash aggregate (map-side partials
-    absorb the power-law head before the token-keyed shuffle); document
-    frequency is countDistinct (Expand + re-aggregate, still keyed on
-    token); the top-k lowers to TakeOrderedAndProject, never a global
-    sort."""
-    from my_feast_spark.functions.text import tokens
-
-    docs = _t(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id",
-        F.explode_outer(tokens(F.lower(F.col("text")))).alias("token"),
-    ).filter(F.col("token").isNotNull())
-    agg = toks.groupBy("token").agg(
-        F.count(F.lit(1)).alias("n_occurrences"),
-        F.countDistinct("doc_id").alias("n_docs"),
-    )
-    return agg.orderBy(
-        F.col("n_occurrences").desc(), F.col("token").asc()
-    ).limit(50)
-
-
-SQL_CORPUS_VOCAB = """
-WITH tok AS (
-  SELECT doc_id, unnest(string_split_regex(trim(lower(text)), '\\s+')) AS token
-  FROM documents
-)
-SELECT token, CAST(count(*) AS BIGINT) AS n_occurrences,
-       CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs
-FROM tok GROUP BY token
-ORDER BY n_occurrences DESC, token ASC LIMIT 50
 """
 
 
@@ -1400,46 +1047,6 @@ WITH tok AS (
   FROM scored
 )
 SELECT doc_id, term, tf, tfidf FROM ranked WHERE rn <= 3
-"""
-
-
-def q_token_stats(spark, sf_dir):
-    """Token counting + length stats per document — pure projections,
-    no shuffle (scales linearly with corpus size)."""
-    from my_feast_spark.functions.text import tokens
-
-    docs = _t(spark, sf_dir, "documents")
-    # shared token-array projection: one tokenization feeds every stat
-    docs = docs.select(
-        "doc_id", "text", tokens(F.col("text")).alias("__toks")
-    )
-    toks = F.col("__toks")
-    n = F.size(toks)
-    return docs.select(
-        "doc_id",
-        F.length("text").alias("n_chars_text"),
-        n.alias("n_tokens"),
-        F.size(F.array_distinct(toks)).alias("n_distinct_tokens"),
-        F.round(
-            (F.length(F.trim(F.col("text"))) - (n - F.lit(1)))
-            / F.greatest(n, F.lit(1)).cast("double"),
-            4,
-        ).alias("mean_token_len"),
-    )
-
-
-SQL_TOKEN_STATS = """
-WITH t AS (
-  SELECT doc_id, text, string_split_regex(trim(text), '\\s+') AS toks
-  FROM documents
-)
-SELECT doc_id,
-       CAST(length(text) AS INTEGER) AS n_chars_text,
-       CAST(len(toks) AS INTEGER) AS n_tokens,
-       CAST(len(list_distinct(toks)) AS INTEGER) AS n_distinct_tokens,
-       round((length(trim(text)) - (len(toks) - 1)) / greatest(len(toks), 1), 4)
-         AS mean_token_len
-FROM t
 """
 
 
@@ -2366,72 +1973,6 @@ FROM events GROUP BY user_id
 """
 
 
-def q_length_outlier_filter(spark, sf_dir):
-    """Corpus-quantile outlier filter — the doc-curation gate that drops
-    too-short/too-long documents by GLOBAL P1/P99 length thresholds. The
-    thresholds are a 1-row aggregate broadcast into the filter (no second
-    scan-side shuffle). ``exact=True`` only for DuckDB quantile_cont
-    parity at oracle SF — functions.scalar.percentile_agg defaults to the
-    mergeable ``percentile_approx`` sketch, the 100 TB path (the exact
-    single-group percentile buffers the whole corpus on one executor)."""
-    from my_feast_spark.functions.scalar import percentile_agg
-
-    docs = _t(spark, sf_dir, "documents")
-    bounds = docs.agg(
-        percentile_agg("n_chars", 0.01, exact=True).alias("lo"),
-        percentile_agg("n_chars", 0.99, exact=True).alias("hi"),
-    )
-    return (
-        docs.crossJoin(F.broadcast(bounds))
-        .where((F.col("n_chars") >= F.col("lo")) & (F.col("n_chars") <= F.col("hi")))
-        .groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_kept"),
-            F.sum("n_chars").alias("sum_chars"),
-        )
-    )
-
-
-SQL_LENGTH_OUTLIER_FILTER = """
-WITH bounds AS (
-  SELECT quantile_cont(n_chars, 0.01) AS lo,
-         quantile_cont(n_chars, 0.99) AS hi
-  FROM documents
-)
-SELECT source, CAST(count(*) AS BIGINT) AS n_kept,
-       CAST(sum(n_chars) AS BIGINT) AS sum_chars
-FROM documents, bounds
-WHERE n_chars >= lo AND n_chars <= hi
-GROUP BY source
-"""
-
-
-def q_value_percentiles(spark, sf_dir):
-    """Exact percentiles per group (linear interpolation) — the
-    distribution-profiling agg of a data-quality pipeline. Spark
-    ``percentile`` and DuckDB ``quantile_cont`` share interpolation
-    semantics, so ``exact=True`` is oracle-exact; the library default
-    (functions.scalar.percentile_agg) is the mergeable
-    ``percentile_approx`` sketch for scale runs."""
-    from my_feast_spark.functions.scalar import percentile_agg
-
-    events = _t(spark, sf_dir, "events")
-    return events.groupBy("event_type").agg(
-        F.round(percentile_agg("value", 0.5, exact=True), 4).alias("p50"),
-        F.round(percentile_agg("value", 0.9, exact=True), 4).alias("p90"),
-        F.round(percentile_agg("value", 0.99, exact=True), 4).alias("p99"),
-    )
-
-
-SQL_VALUE_PERCENTILES = """
-SELECT event_type,
-       round(quantile_cont(value, 0.5), 4) AS p50,
-       round(quantile_cont(value, 0.9), 4) AS p90,
-       round(quantile_cont(value, 0.99), 4) AS p99
-FROM events GROUP BY 1
-"""
-
-
 def q_datetime_functions(spark, sf_dir):
     """F1-F5: to_date / date_format hour-bucket string / unix_timestamp /
     from_unixtime round-trip — the reference's timestamp idioms
@@ -2668,30 +2209,6 @@ FROM events
 """
 
 
-def q_embedding_near_dupes(spark, sf_dir):
-    """Embedding-cosine near-dup pairs (exact all-pairs verify; the
-    LSH-blocked scale path is embedding_near_dupes_lsh)."""
-    from my_feast_spark.operators.similarity import embedding_dup_pairs
-
-    emb = _t(spark, sf_dir, "embeddings")
-    return embedding_dup_pairs(emb, "vec_id", "embedding", threshold=0.4)
-
-
-SQL_EMBEDDING_NEAR_DUPES = """
-WITH e AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-)
-SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-       round(list_inner_product(a.v, b.v)
-             / (sqrt(list_inner_product(a.v, a.v))
-                * sqrt(list_inner_product(b.v, b.v))), 6) AS sim
-FROM e a JOIN e b ON a.vec_id < b.vec_id
-WHERE round(list_inner_product(a.v, b.v)
-            / (sqrt(list_inner_product(a.v, a.v))
-               * sqrt(list_inner_product(b.v, b.v))), 6) >= 0.4
-"""
-
-
 def q_embedding_near_dupes_lsh(spark, sf_dir, *, deterministic=True):
     """LSH-blocked embedding near-dup (the corpus-scale path: sign-bucket
     equi-join replaces the N² self-join; precision 1, recall additionally
@@ -2915,117 +2432,6 @@ FROM aug
 """
 
 
-def q_stratified_sample_docs(spark, sf_dir):
-    """Deterministic stratified sampling for corpus mixing: down-weight
-    the dominant language to 30%, keep the rest at 50% — the keep
-    decision is a pure function of (doc_id, salt), so the oracle replays
-    it bit-for-bit and re-runs never reshuffle the sample."""
-    from my_feast_spark.operators.sampling import sample_bucket, stratified_sample
-
-    docs = _t(spark, sf_dir, "documents")
-    rates = {"en": 0.3, "de": 0.5, "es": 0.5, "fr": 0.5, "zh": 0.5}
-    sampled = stratified_sample(docs, "lang", rates, "doc_id", salt="mix")
-    return sampled.select(
-        "doc_id", "lang", sample_bucket(F.col("doc_id"), salt="mix").alias("bucket")
-    )
-
-
-SQL_STRATIFIED_SAMPLE_DOCS = """
-WITH b AS (
-  SELECT doc_id, lang,
-         CAST((md5_number_lower(CAST(doc_id AS VARCHAR) || ':mix')
-               & 9223372036854775807) % 1000000 AS BIGINT) AS bucket
-  FROM documents
-)
-SELECT doc_id, lang, bucket FROM b
-WHERE bucket < CASE lang WHEN 'en' THEN 300000
-                         WHEN 'de' THEN 500000 WHEN 'es' THEN 500000
-                         WHEN 'fr' THEN 500000 WHEN 'zh' THEN 500000
-                         ELSE 0 END
-"""
-
-
-def q_corpus_mixture(spark, sf_dir):
-    """Token-budget mixture report: docs, tokens, and token share per
-    language — what a mixing step consumes to pick stratified rates.
-    The share window runs over the POST-aggregation relation (one row
-    per stratum), so the single-partition exchange is a few rows at any
-    corpus size."""
-    from my_feast_spark.functions.text import token_count
-
-    docs = _t(spark, sf_dir, "documents")
-    agg = docs.groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(token_count(F.col("text"))).alias("n_tokens"),
-    )
-    from pyspark.sql import Window
-
-    total = F.sum("n_tokens").over(Window.partitionBy())
-    return agg.select(
-        "lang",
-        "n_docs",
-        "n_tokens",
-        F.round(F.col("n_tokens") / total, 4).alias("token_share"),
-    )
-
-
-def q_token_rarity(spark, sf_dir):
-    """Per-document unigram-rarity quality signal: each token's
-    corpus-frequency "commonness bucket" is its count's binary digit
-    length (EXACT integer arithmetic — no float log whose engine ulps
-    could flip an oracle digit), and a doc scores its tokens' average
-    and minimum bucket — the mean-word-rarity / rarest-word features a
-    quality classifier consumes. Scale shape: two corpus passes (the
-    unigram aggregate, then explode + join back on the token key — the
-    corpus vocabulary does NOT broadcast at web scale, so the join
-    strategy is left to Catalyst/AQE size logic) and one per-doc
-    re-aggregation; the only float op is one avg division, identical
-    IEEE in both engines."""
-    from my_feast_spark.functions.text import tokens
-
-    docs = _t(spark, sf_dir, "documents")
-    tok = docs.select(
-        "doc_id",
-        F.explode_outer(tokens(F.lower(F.col("text")))).alias("token"),
-    ).filter(F.col("token").isNotNull())
-    freq = tok.groupBy("token").agg(F.count(F.lit(1)).alias("cnt"))
-    bucket = F.length(F.conv(F.col("cnt").cast("string"), 10, 2)).cast("int")
-    freqb = freq.select("token", bucket.alias("bucket"))
-    return (
-        tok.join(freqb, "token")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_tokens"),
-            # bucket is a small int: the sum is exact on both engines,
-            # so only the quotient's rounding needs the stable floor form
-            (
-                F.floor(
-                    F.sum("bucket").cast("double") / F.count(F.lit(1))
-                    * F.lit(1e4) + F.lit(0.5)
-                ) / F.lit(1e4)
-            ).alias("avg_commonness"),
-            F.min("bucket").alias("min_commonness"),
-        )
-    )
-
-
-SQL_TOKEN_RARITY = """
-WITH tok AS (
-  SELECT doc_id, unnest(string_split_regex(trim(lower(text)), '\\s+')) AS token
-  FROM documents
-), freq AS (
-  SELECT token, CAST(length(bin(count(*))) AS INT) AS bucket
-  FROM tok GROUP BY token
-)
-SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-       floor(CAST(sum(bucket) AS DOUBLE) / count(*) * 1e4 + 0.5e0) / 1e4
-           AS avg_commonness,
-       CAST(min(bucket) AS INT) AS min_commonness
-FROM tok JOIN freq USING (token)
-GROUP BY doc_id
-"""
-
-
 def q_mixture_temperature(spark, sf_dir):
     """Temperature-based multilingual sampling weights (the mT5 / XLM-R
     recipe): raw token share p_l per language is flattened to
@@ -3034,9 +2440,9 @@ def q_mixture_temperature(spark, sf_dir):
     mixing plan. alpha is pinned to 0.5 so the exponent is ``sqrt`` —
     IEEE-exactly-rounded in BOTH engines, unlike general ``pow`` whose
     last-ulp differences could flip a rounded digit in the oracle
-    compare. Same scale shape as corpus_mixture: corpus-wide map +
-    one per-stratum aggregate; the share window runs over the
-    few-row post-aggregation relation."""
+    compare. Scale shape: corpus-wide map + one per-stratum
+    aggregate; the share window runs over the few-row
+    post-aggregation relation."""
     from my_feast_spark.functions.text import token_count
 
     docs = _t(spark, sf_dir, "documents")
@@ -3075,121 +2481,6 @@ SELECT lang, n_docs, n_tokens, token_share,
        round(w / sum(w) OVER (), 6) AS sample_share,
        CAST(round(w / sum(w) OVER () * 1000000, 0) AS BIGINT) AS expected_tokens
 FROM flat
-"""
-
-
-def q_length_bucket_batches(spark, sf_dir):
-    """Sequence-length bucketed batching: docs binned into power-of-two
-    token-length buckets (bucket = binary digit count of n_tokens —
-    EXACT integer arithmetic via base-2 string length, immune to the
-    float-log2 boundary errors at exact powers of two), then per-bucket
-    batch accounting at a fixed 8192-token batch budget padded to the
-    bucket cap — the standard length-bucketing prep that keeps padding
-    waste bounded. Map-only binning + one small aggregate."""
-    from my_feast_spark.functions.text import token_count
-
-    budget = 8192
-    docs = _t(spark, sf_dir, "documents")
-    # bucket derives from the PROJECTED count — building it from a
-    # second token_count expression would tokenize every row twice
-    binned = docs.select(token_count(F.col("text")).alias("__nt")).select(
-        "__nt",
-        F.length(F.conv(F.col("__nt").cast("string"), 10, 2))
-        .cast("int").alias("bucket"),
-    )
-    # 2^bucket as a column: double pow is exact for any bucket <= 53
-    cap = F.pow(F.lit(2.0), F.col("bucket").cast("double")).cast("long")
-    per_batch = F.greatest(F.floor(F.lit(budget) / cap), F.lit(1))
-    return (
-        binned.groupBy("bucket")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("__nt").alias("n_tokens"),
-        )
-        .select(
-            "bucket",
-            cap.cast("long").alias("max_len"),
-            "n_docs",
-            "n_tokens",
-            F.ceil(F.col("n_docs") / per_batch).cast("long").alias("n_batches"),
-        )
-    )
-
-
-SQL_LENGTH_BUCKET_BATCHES = """
-WITH binned AS (
-  SELECT len(string_split_regex(trim(text), '\\s+')) AS nt,
-         CAST(length(bin(len(string_split_regex(trim(text), '\\s+')))) AS INT) AS bucket
-  FROM documents
-), agg AS (
-  SELECT bucket, CAST(count(*) AS BIGINT) AS n_docs,
-         CAST(sum(nt) AS BIGINT) AS n_tokens
-  FROM binned GROUP BY bucket
-)
-SELECT bucket, CAST(2 ** bucket AS BIGINT) AS max_len, n_docs, n_tokens,
-       CAST(ceil(n_docs / greatest(8192 // (2 ** bucket), 1)) AS BIGINT) AS n_batches
-FROM agg
-"""
-
-
-SQL_CORPUS_MIXTURE = """
-WITH agg AS (
-  SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-         CAST(sum(len(string_split_regex(trim(text), '\\s+'))) AS BIGINT) AS n_tokens
-  FROM documents GROUP BY lang
-)
-SELECT lang, n_docs, n_tokens,
-       round(n_tokens / CAST(sum(n_tokens) OVER () AS DOUBLE), 4) AS token_share
-FROM agg
-"""
-
-
-def q_bpe_pair_counts(spark, sf_dir):
-    """Adjacent-token-pair frequencies, top-40 — the inner loop of BPE
-    tokenizer training (each merge round promotes the most frequent
-    adjacent pair; this is one round's count table over the corpus).
-    Scale shape: pair rendering is a per-row zip of the token array
-    with its own 1-shifted slice (map-only, one tokenization per doc),
-    then the same two-phase hash aggregate + TakeOrderedAndProject as
-    the vocabulary pass — the power-law head collapses map-side, the
-    top-k never sorts globally."""
-    from my_feast_spark.functions.text import let, tokens
-
-    docs = _t(spark, sf_dir, "documents")
-    pairs = docs.select(
-        F.explode_outer(
-            let(
-                tokens(F.lower(F.col("text"))),
-                lambda t: F.when(
-                    F.size(t) >= 2,
-                    F.zip_with(
-                        F.slice(t, 1, F.size(t) - 1),
-                        F.slice(t, 2, F.size(t) - 1),
-                        lambda a, b: F.concat(a, F.lit(" "), b),
-                    ),
-                ).otherwise(F.array().cast("array<string>")),
-            )
-        ).alias("pair")
-    ).filter(F.col("pair").isNotNull())
-    return (
-        pairs.groupBy("pair")
-        .agg(F.count(F.lit(1)).alias("n_occurrences"))
-        .orderBy(F.col("n_occurrences").desc(), F.col("pair").asc())
-        .limit(40)
-    )
-
-
-SQL_BPE_PAIR_COUNTS = """
-WITH tok AS (
-  SELECT string_split_regex(trim(lower(text)), '\\s+') AS t FROM documents
-), pr AS (
-  SELECT unnest(list_transform(range(1, greatest(len(t) - 1, 0) + 1),
-         i -> t[i] || ' ' || t[i+1])) AS pair
-  FROM tok WHERE len(t) >= 2
-)
-SELECT pair, CAST(count(*) AS BIGINT) AS n_occurrences
-FROM pr GROUP BY pair
-ORDER BY n_occurrences DESC, pair ASC LIMIT 40
 """
 
 
@@ -3444,62 +2735,6 @@ SELECT pa.col AS "column",
        CAST(pb.nd AS BIGINT) AS n_distinct_b,
        CAST(pb.nd - pa.nd AS BIGINT) AS n_distinct_delta
 FROM pa JOIN pb ON pa.col = pb.col
-"""
-
-
-def q_curation_pipeline(spark, sf_dir):
-    """The training-data curation path END-TO-END as one plan: exact
-    dedup (keep the min-id doc per fingerprint) -> repetition filter ->
-    deterministic stratified sample -> per-doc token/chunk accounting.
-    Delegates to the library operator (``operators/curation.py``) so the
-    composition users import is exactly what the oracle adjudicates.
-    Plan shape: ONE shuffle total (the fingerprint window for dedup),
-    ONE tokenization per document (projected before the window, carried
-    through the shuffle in place of the text); every other stage is a
-    per-row projection/filter (map-only)."""
-    from my_feast_spark.operators.curation import CurationConfig, curate
-
-    docs = _t(spark, sf_dir, "documents")
-    rates = {"en": 0.3, "de": 0.5, "es": 0.5, "fr": 0.5, "zh": 0.5}
-    return curate(docs, CurationConfig(sample_rates=rates))
-
-
-SQL_CURATION_PIPELINE = """
-WITH fp AS (
-  SELECT doc_id, lang, text,
-         md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))) AS f
-  FROM documents
-), dedup AS (
-  SELECT doc_id, lang, text FROM fp
-  QUALIFY row_number() OVER (PARTITION BY f ORDER BY doc_id) = 1
-), toks AS (
-  SELECT doc_id, lang, text,
-         string_split_regex(trim(lower(text)), '\\s+') AS t,
-         len(string_split_regex(trim(text), '\\s+')) AS n_tokens
-  FROM dedup
-), clean AS (
-  SELECT doc_id, lang, text, n_tokens FROM toks
-  WHERE round(list_max(list_transform(list_distinct(t),
-            x -> len(list_filter(t, y -> y = x)))) / greatest(len(t), 1), 4)
-        <= 0.12
-    AND (CASE WHEN len(t) < 2 THEN 0.0 ELSE
-          round((len(t) - 1 - len(list_distinct(list_transform(range(1, len(t)),
-                i -> t[i] || ' ' || t[i+1])))) / (len(t) - 1.0), 4)
-         END) <= 0.05
-), sampled AS (
-  SELECT doc_id, lang, n_tokens FROM clean
-  WHERE CAST((md5_number_lower(CAST(doc_id AS VARCHAR) || ':mix')
-              & 9223372036854775807) % 1000000 AS BIGINT)
-        < CASE lang WHEN 'en' THEN 300000
-                    WHEN 'de' THEN 500000 WHEN 'es' THEN 500000
-                    WHEN 'fr' THEN 500000 WHEN 'zh' THEN 500000
-                    ELSE 0 END
-)
-SELECT doc_id, lang, CAST(n_tokens AS INT) AS n_tokens,
-       CAST(CASE WHEN n_tokens <= 50 THEN 1
-                 ELSE CAST(floor((n_tokens - 50 + 24) / 25) AS BIGINT) + 1
-            END AS INT) AS n_chunks
-FROM sampled
 """
 
 
@@ -4149,54 +3384,6 @@ SELECT t.doc_id,
        coalesce(n.n_cut_tokens, 0) AS n_cut_tokens,
        coalesce(a.clean_text, '') AS clean_text
 FROM t LEFT JOIN agg a USING (doc_id) LEFT JOIN ncut n USING (doc_id)
-"""
-
-
-def q_lm_perplexity(spark, sf_dir):
-    """CCNet-style bigram-LM quality scoring (operators/lm.py): train
-    the two count tables in one corpus pass, score every document with
-    its add-k-smoothed mean log2 probability. Scale shape: the model IS
-    two vocab-sized aggregates; scoring joins the exploded bigram
-    events against them (AQE broadcasts below threshold), one hash agg
-    per doc. The bigram count relation is persisted by the trainer and
-    handed to the caller via ``_owned_caches``. Self-scoring the
-    training corpus keeps the oracle self-contained; avg log2 rounds
-    to 4 (partial-agg order differs between engines)."""
-    from my_feast_spark.operators.lm import score_docs, train_bigram_lm
-
-    docs = _t(spark, sf_dir, "documents")
-    model = train_bigram_lm(docs, "text")
-    out = score_docs(docs, "doc_id", "text", model)
-    out._owned_caches = [model.bigrams]
-    return out
-
-
-SQL_LM_PERPLEXITY = r"""
-WITH t AS (
-  SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS lt
-  FROM documents
-),
-ev AS (
-  SELECT doc_id,
-         CASE WHEN CAST(u.pos AS INTEGER) = 1 THEN '<s>'
-              ELSE lt[CAST(u.pos AS INTEGER) - 1] END AS h,
-         lt[CAST(u.pos AS INTEGER)] AS w
-  FROM t, UNNEST(generate_series(1, len(lt))) AS u(pos)
-  WHERE len(lt) >= 1
-),
-big AS (SELECT h, w, count(*) AS c_hw FROM ev GROUP BY h, w),
-uni AS (SELECT h, CAST(sum(c_hw) AS BIGINT) AS c_h FROM big GROUP BY h),
-v AS (SELECT count(DISTINCT w) AS vs FROM big)
-SELECT e.doc_id,
-       floor(avg(log2((b.c_hw + 0.5) / (u.c_h + 0.5 * (v.vs + 1))))
-             * 1e4 + 0.5e0) / 1e4
-         AS avg_logprob,
-       CAST(count(*) AS BIGINT) AS n_tokens
-FROM ev e
-JOIN big b USING (h, w)
-JOIN uni u USING (h)
-CROSS JOIN v
-GROUP BY e.doc_id
 """
 
 
@@ -5782,8 +4969,8 @@ def q_ccnet_buckets(spark, sf_dir, *, exact_quantiles=True):
     PER LANGUAGE as in the paper (each language's corpus splits into
     its own terciles — a global cut would let a high-perplexity
     language's whole corpus land in "tail"): score every doc with the
-    bigram-LM mean log2 probability (operators/lm.py, the lm_perplexity
-    pipeline; self-scoring with one shared LM stands in for CCNet's
+    bigram-LM mean log2 probability (operators/lm.py train_bigram_lm +
+    score_docs; self-scoring with one shared LM stands in for CCNet's
     per-language KenLM — the KN variant is adjudicated separately),
     compute each language's tercile CUTOFF VALUES with one tiny grouped
     aggregate (|langs| rows), broadcast-join them back on lang, and
@@ -6122,7 +5309,7 @@ def q_lm_perplexity_kn(spark, sf_dir):
     perplexity filters actually run (CCNet's KenLM is modified KN):
     discounted bigram mass interpolates with the CONTINUATION
     probability N1+(*,w)/N1+(*,*) instead of raw unigram frequency.
-    Same scale shape as lm_perplexity: one corpus pass builds the
+    Same scale shape as the add-k model: one corpus pass builds the
     bigram counts, every other statistic aggregates the vocab-sized
     relation, scoring is explode + broadcastable count joins + one
     hash agg per doc. Self-scoring keeps the oracle self-contained;
@@ -8414,107 +7601,39 @@ GROUP BY 1
 # =========================================================================
 # Query registry.
 #
-# The driver adjudicates queries() entries IN ORDER and evaluates a window
-# of ADJUDICATION_WINDOW=50: entries past that get no CORRECTNESS row at
-# all. Ordering policy, so the strongest signal lands inside any window:
-#   1. flagship PIT retrieval + the reference's aggregation surface;
-#   2. the LLM-pipeline extension tier (dedup / similarity / multimodal /
-#      text) — first-class per the project brief;
-#   3. the rest of the reference-parity surface (scans, functions,
-#      feature-store API, streaming);
-#   4. ROTATION TAIL: with >50 oracle-backed queries, the last few are
-#      unadjudicated each round. Queries rotate between the tail and the
-#      window every round so nothing goes two consecutive rounds without
-#      a fresh CORRECTNESS row, and a query that is NEW this round or
-#      whose BEHAVIOR changed (any change that can alter its output at
-#      any sf) is always in-window. Round 12 executes the rotation
-#      round 11 promised at its tail block: the r11 tail (last
-#      adjudicated round 10) is back in-window in full — 42 queries —
-#      next to the flagship five and the THREE round-12 NEW queries
-#      (compact_table_replay, scd2_stream_maintain, audio_vad — the
-#      round-11 verdict's crash-protocol / state-maintenance /
-#      multimodal adjudication asks). The r11-adjudicated window
-#      queries sit the tail out and return round 13. The deferred
-#      round-12 behavior change lands WITH this rotation exactly as
-#      documented: registered_domain (functions/urls.py) now consumes
-#      the full checked-in public-suffix ruleset by default, and its
-#      consumer url_domain_curation is in the rotated-in window so the
-#      change gets a fresh CORRECTNESS row.
-#      The round-12 window shares only the five flagship queries with
-#      round 11's.
-#      Round 13 (two sessions) executes the promised rotation — the r12
-#      tail back in-window — and funds SEVEN never-adjudicated window
-#      slots (zorder_scan, materialize_stream from session 1; the
-#      sketch tier's hll_group_distinct/kmv_corpus_overlap, the bloom
-#      containment row, bm25_topk, orc_scan plus the promoted
-#      wordpiece_tokenize/warc_text_extract from the continuation) with
-#      eight one-round deferrals and five retirements (rationales at
-#      the tail/RETIRED blocks).
-#      ROUND-14 CONTRACT: the r13 tail MUST rotate back in-window —
-#      FIRST the twelve deferral-debt queries (jaccard_dup_pairs,
-#      audio_dedup, video_dedup, semdedup — deferred twice now —
-#      priority_collapse_types, part_brand_stats, idle_customers_anti,
-#      user_value_deltas) and the three never-adjudicated tail rows
-#      (cms_heavy_hitters, streaming_sketch_ingest, versioned_replay),
-#      then the r12-adjudicated remainder as slots allow; the
-#      r13-adjudicated window queries sit the tail out and return
-#      round 15.
-#      ROUND-15 CONTRACT (executed below): with the registry at exactly
-#      100 and both halves at 50, the rotation is a clean swap — the
-#      entire r13-adjudicated tail rotates back in-window (nothing goes
-#      two consecutive rounds without a fresh row), led by the two
-#      queries that have NEVER had a driver row
-#      (streaming_versioned_ingest, versioned_restore_diff — the
-#      round-15 claims the r14 verdict holds us to) and the three
-#      returning tier-1 anchors. Window overlap with CORRECTNESS_r14 is
-#      ZERO: the r14-adjudicated 50 (every one green, re-value-checked
-#      by test_oracle_parity.py each pytest run) sit the tail out and
-#      return round 16 — that is the ROUND-16 CONTRACT.
-#      ROUND-16 (executed below) adds the PINNED-ANCHOR CONTRACT (the
-#      r15 verdict's ask #2): the two tier-1 anchors — pit_user_features
-#      and hourly_user_agg, the flagship gold-build + PIT retrieval
-#      path — hold window slots EVERY round from now on, so the r15
-#      situation (a perfect-complement rotation leaving the flagship
-#      path without a driver row for a round) cannot recur. With the
-#      window driver-fixed at 50, pinning 2 slots means the rotating
-#      halves must be 48, so two near-duplicate r15-window queries
-#      retire (corpus_vocab, chunk_dedup — successors in the RETIRED
-#      block) and the registry settles at 98 = 2 + 48 + 48. The r16
-#      window is the anchors + the full r14 block (per the r15
-#      contract); ROUND-17 CONTRACT: anchors + the r15-adjudicated
-#      tail, exactly 50.
-#   5. RETIRED: the registry budget is ~100 driver-adjudicated queries;
-#      retired entries are near-duplicates of in-registry coverage
-#      (their operators stay covered by other queries) that keep their
-#      oracle and stay value-checked by tests/test_oracle_parity.py but
-#      are no longer submitted to the driver.
-#      Everything in the tail stays oracle-backed and covered by
-#      tests/test_oracle_parity.py, which checks ALL queries regardless
-#      of window position. tests/test_workload_registry.py pins the
-#      window contents so rotation is explicit, never accidental.
+# queries() entries are adjudicated IN ORDER, and only the first
+# ADJUDICATION_WINDOW of them get a CORRECTNESS row, so QUERIES is laid
+# out as three blocks:
+#   1. PINNED ANCHORS: the flagship gold-build + point-in-time retrieval
+#      path. They lead every window, so no registry growth can push them
+#      past the cut.
+#   2. WINDOW HALF: 48 rotating queries inside the current window.
+#   3. TAIL HALF: the other 48 rotating queries, outside it.
+# A rotation swaps the two halves whole (the tail moves in behind the
+# anchors), so no query sits out two windows in a row. A query that is
+# new, or whose output can change at any scale factor, is in-window when
+# it changes. The registry holds 2 + 48 + 48 = 98 entries, inside the
+# adjudication budget of ~100.
+#
+# RETIRED_QUERIES are never submitted for adjudication. An entry stays there
+# only while bench.py times it, a test uses its q_* function as the
+# reference side of an equality, or it is the only DuckDB value check of
+# a public my_feast_spark function or a COVERAGE.md capability row.
+#
+# tests/test_oracle_parity.py value-checks every QUERIES and
+# RETIRED_QUERIES entry against its oracle on every run, whatever its
+# window position; tests/test_workload_registry.py pins the anchors, the
+# window, the tail and the retired set, so membership changes are
+# explicit.
 # =========================================================================
 
 ADJUDICATION_WINDOW = 50
 
 QUERIES: dict[str, tuple] = {
-    # ================== PINNED ANCHORS (every window, every round) ========
-    # The flagship gold-build + point-in-time retrieval path (the r15
-    # verdict's ask #2): these two occupy window slots EVERY round so
-    # the tier-1 path never goes a single round without a fresh driver
-    # row. The rest of the registry rotates around them in halves of 48
-    # (registry = 98 = 2 anchors + 48 + 48 after the two round-16
-    # retirements below), so the steady-state rotation stays a clean
-    # half-swap with nothing older than two windows.
-    # ======================= ROUND-16 WINDOW ===============================
-    # The r15 contract executed: the entire r14-adjudicated block is
-    # back in-window (every row green in CORRECTNESS_r14, nothing goes
-    # two consecutive rounds without a fresh row). This window also
-    # re-adjudicates the three versioned-log queries whose write path
-    # gained per-commit change sidecars this round (versioned_replay,
-    # pit_versioned_asof, compact_table_replay — the upsert/delete
-    # committers; see CHANGED_OR_NEW in tests/test_workload_registry).
+    # ---- pinned anchors: lead every window ----
     "pit_user_features": (q_pit_user_features, SQL_PIT_USER_FEATURES),
     "hourly_user_agg": (q_hourly_user_agg, SQL_HOURLY_USER_AGG),
+    # ---- window half: inside the current window ----
     "versioned_replay": (q_versioned_replay, SQL_VERSIONED_REPLAY),
     "cms_heavy_hitters": (q_cms_heavy_hitters, SQL_CMS_HEAVY_HITTERS),
     "streaming_sketch_ingest": (
@@ -8573,17 +7692,7 @@ QUERIES: dict[str, tuple] = {
     "top_terms_tfidf": (q_top_terms_tfidf, SQL_TOP_TERMS_TFIDF),
     "cosine_topk": (q_cosine_topk, SQL_COSINE_TOPK),
     "ann_lsh_topk": (q_ann_lsh_topk, SQL_ANN_LSH_TOPK),
-    # ======================= TAIL (not in this round's window) ============
-    # The ROUND-15 window minus the two retirements: every row green in
-    # CORRECTNESS_r15, value-checked at three scale factors by every
-    # pytest run (test_oracle_parity.py). ROUND-17 CONTRACT: this block
-    # rotates back in-window next round alongside the pinned anchors
-    # (2 + 48 = 50 exactly). versioned_restore_diff sits the tail out
-    # with its behavior UNCHANGED by the round-16 sidecar work (its
-    # registered chain diffs a pure-append prefix, which still takes
-    # the r15 manifest-arithmetic path); when it rotates in r17, extend
-    # its chain with an upsert leg so the sidecar-composed diff gets a
-    # driver row the same round the change enters its window.
+    # ---- tail half: next rotation's window ----
     "pit_late_arrival": (q_pit_late_arrival, SQL_PIT_LATE_ARRIVAL),
     "hourly_global_agg": (q_hourly_global_agg, SQL_HOURLY_GLOBAL_AGG),
     "event_types_salted": (q_event_types_salted, SQL_EVENT_TYPES_SALTED),
@@ -8650,265 +7759,37 @@ QUERIES: dict[str, tuple] = {
     "top_spenders": (q_top_spenders, SQL_TOP_SPENDERS),
 }
 
-#: Retired from the driver registry (budget: ~100 adjudicated queries).
-#: Each is a near-duplicate of in-registry coverage — their SURVEY §2 /
-#: extension-tier operators stay oracle-checked elsewhere:
-#: round 6:
-#:   filtered_agg (A4/P5)      -> pricing_summary / small_quantity_revenue
-#:                                (filter-then-agg with range predicates)
-#:   json_props_extract (F6)   -> map_pivot_props (same from_json path)
-#:   struct_flatten (P2/F6)    -> map_pivot_props + multimodal_decode
-#:                                (nested-field projection)
-#: round 7:
-#:   vocab_encode              -> vocab_encode_join (same vocab build +
-#:                                encode, plus the join-back check)
-#:   embedding_near_dupes      -> embedding_near_dupes_lsh (the scale
-#:                                path) + cosine_topk (exact baseline)
-#:   sequence_packing          -> packed_sequences (same shard/offset
-#:                                layout PLUS the order-sensitive
-#:                                packed-id digest)
-#:   hash_sampled_docs         -> stratified_sample_docs /
-#:                                train_val_split (same salted-hash
-#:                                bucketing primitive)
-#: round 8:
-#:   corpus_mixture            -> mixture_temperature (the same
-#:                                per-stratum mixture-weight sampling,
-#:                                plus the temperature exponent)
-#:   token_stats               -> gopher_quality_filter (word counts +
-#:                                mean word length as rule measures) +
-#:                                quality_score (the remaining
-#:                                token-length composites)
-#:   doc_chunks                -> chunk_dedup (the same fixed-window
-#:                                chunk projection, plus the
-#:                                corpus-wide first-occurrence dedup) +
-#:                                packed_sequences (offset layouts)
-#:   value_percentiles         -> ccnet_buckets (the same exact/approx
-#:                                percentile_agg, now deciding bucket
-#:                                assignment) + customer_balance_deciles
-#:                                (the rank-based ntile family) +
-#:                                length_outlier_filter (quantile
-#:                                thresholds as a filter)
-#:   stratified_sample_docs    -> stratum_ksample + train_val_split +
-#:                                score_weighted_sample (the same
-#:                                portable-hash keep-rule family;
-#:                                per-stratum rates stay covered by
-#:                                mixture_temperature)
-#:   quality_score             -> score_weighted_sample (computes the
-#:                                identical length/diversity/stopword
-#:                                composite in-window) +
-#:                                gopher_quality_filter (the rule-based
-#:                                measure tier)
-#:   length_outlier_filter     -> ccnet_buckets (the same exact/approx
-#:                                percentile_agg thresholds driving a
-#:                                decision) + gopher_quality_filter
-#:                                (length bounds as a filter)
-#:   promo_revenue             -> regional_revenue (fact-dim join agg
-#:                                with the date range pushed to the
-#:                                fact scan) + event_type_pivot
-#:                                (CASE-WHEN-inside-SUM conditional
-#:                                aggregation); retired to fund the
-#:                                round-8 cdc_chunk_dedup window slot
-#: round 9 (funding the dsir_resample + url_domain_curation slots and
-#: the five behavior-changed queries staying in-window):
-#:   doc_fingerprints          -> exact_dedup_docs (the same md5
-#:                                fingerprint projection, now driving
-#:                                the dedup decision) +
-#:                                incremental_dedup (the fingerprint
-#:                                index)
-#:   regex_mentions            -> pii_redaction (the same
-#:                                regexp_extract_all machinery, plus
-#:                                replacement) + lang_id (regex-driven
-#:                                classification)
-#:   bpe_pair_counts           -> bpe_merge_replay (round 0 of the
-#:                                replay IS this pair-count table) +
-#:                                corpus_vocab (the two-phase top-k
-#:                                count shape)
-#:   returnflag_cube           -> revenue_rollup (grouping sets +
-#:                                grouping_id, the same Expand-based
-#:                                plan) + event_type_pivot (fixed
-#:                                breakout conditional aggregation)
-#:   small_quantity_revenue    -> pricing_summary (lineitem
-#:                                filter-then-agg with decimal sums) +
-#:                                token_rarity / top_terms_tfidf (the
-#:                                decorrelated pre-agg + join-back
-#:                                shape)
-#:   batch_sessions            -> streaming_sessionize (the identical
-#:                                30-min-gap sessionization, stateful
-#:                                path) + user_value_deltas /
-#:                                post_signup_activity (lag window +
-#:                                banded-join machinery)
-#:   length_bucket_batches     -> packed_sequences (the same
-#:                                chunk/offset batching layout plus the
-#:                                order-sensitive digest) +
-#:                                customer_balance_deciles (rank-bucket
-#:                                assignment)
-#:   multimodal_decode         -> image_dedup (the same mapInPandas
-#:                                header-decode path now drives its
-#:                                fingerprints) + multimodal_frames
-#:                                (the Arrow batch-shape plumbing);
-#:                                retired to fund the round-9
-#:                                domain_pagerank window slot
-#: round 11 (funding the compaction_replay / jsonl_scan / pack_bfd
-#: window slots next to the six floor-round behavior changes):
-#:   pq_topk                   -> ivfpq_topk (the same PQ codebook
-#:                                train / encode / ADC scan machinery,
-#:                                plus IVF residual quantization and
-#:                                partition-pruned probing — the scale
-#:                                path) + cosine_topk (the exact
-#:                                brute-force baseline)
-#: round 12 (funding the scd2_lookup + unigram_tokenize window slots):
-#:   lm_perplexity             -> lm_perplexity_kn (the identical
-#:                                bigram-LM train + per-doc perplexity
-#:                                scan, PLUS Kneser-Ney smoothing — the
-#:                                strict superset pipeline) +
-#:                                ccnet_buckets (perplexity driving the
-#:                                per-language tercile decision)
-#:   curation_pipeline         -> curation_pipeline_full (the same
-#:                                curate() code path with the base
-#:                                stages PLUS decontamination, LSH
-#:                                near-dup, and NB filtering — a strict
-#:                                superset replay) + exact_dedup_docs /
-#:                                repetition_filter / stratum_ksample
-#:                                (each base stage adjudicated
-#:                                standalone)
-#: round 16 (funding the pinned-anchor contract — the window is
-#: driver-fixed at 50 and two slots are now permanently the tier-1
-#: anchors, so the rotating halves shrink to 48):
-#:   corpus_vocab              -> vocab_encode_join (its vocabulary IS
-#:                                this query's token_vocabulary build —
-#:                                same tokenize/explode/two-phase count
-#:                                /top-k, adjudicated as the encode
-#:                                input every other round) +
-#:                                top_terms_tfidf (corpus-wide term
-#:                                statistics with document frequency) +
-#:                                train_val_split / corpus splits (the
-#:                                P12 distinct shape)
-#:   chunk_dedup               -> cdc_chunk_dedup (the identical
-#:                                chunk-hash first-occurrence keep +
-#:                                doc rebuild — same window shuffle,
-#:                                same regroup — plus content-defined
-#:                                boundaries; the strict-superset
-#:                                pipeline) + packed_sequences (the
-#:                                fixed-window chunk/offset layout);
-#:                                the portable-vs-xxhash64 family
-#:                                timing stays recorded by bench.py's
-#:                                chunk_dedup base-variant row
-#: Still value-checked against DuckDB every pytest run via
-#: tests/test_oracle_parity.py.
+#: Not submitted for adjudication; each group names the rule that keeps
+#: its entries (see the registry comment above).
 RETIRED_QUERIES: dict[str, tuple] = {
-    "filtered_agg": (q_filtered_agg, SQL_FILTERED_AGG),
-    "corpus_mixture": (q_corpus_mixture, SQL_CORPUS_MIXTURE),
-    "token_stats": (q_token_stats, SQL_TOKEN_STATS),
-    "doc_chunks": (q_doc_chunks, SQL_DOC_CHUNKS),
-    "value_percentiles": (q_value_percentiles, SQL_VALUE_PERCENTILES),
-    "stratified_sample_docs": (
-        q_stratified_sample_docs, SQL_STRATIFIED_SAMPLE_DOCS,
-    ),
+    # timed by bench.py
+    "chunk_dedup": (q_chunk_dedup, SQL_CHUNK_DEDUP),
     "quality_score": (q_quality_score, SQL_QUALITY_SCORE),
-    "length_outlier_filter": (
-        q_length_outlier_filter, SQL_LENGTH_OUTLIER_FILTER,
-    ),
-    "json_props_extract": (q_json_props_extract, SQL_JSON_PROPS_EXTRACT),
-    "struct_flatten": (q_struct_flatten, SQL_STRUCT_FLATTEN),
-    "vocab_encode": (q_vocab_encode, SQL_VOCAB_ENCODE),
-    "embedding_near_dupes": (q_embedding_near_dupes, SQL_EMBEDDING_NEAR_DUPES),
-    "sequence_packing": (q_sequence_packing, SQL_SEQUENCE_PACKING),
-    "hash_sampled_docs": (q_hash_sampled_docs, SQL_HASH_SAMPLED_DOCS),
-    "promo_revenue": (q_promo_revenue, SQL_PROMO_REVENUE),
     "doc_fingerprints": (q_doc_fingerprints, SQL_DOC_FINGERPRINTS),
-    "regex_mentions": (q_regex_mentions, SQL_REGEX_MENTIONS),
-    "bpe_pair_counts": (q_bpe_pair_counts, SQL_BPE_PAIR_COUNTS),
-    "returnflag_cube": (q_returnflag_cube, SQL_RETURNFLAG_CUBE),
+    "pq_topk": (q_pq_topk, SQL_PQ_TOPK),
+    # reference side of an equality in tests/test_extensions.py
+    "vocab_encode": (q_vocab_encode, SQL_VOCAB_ENCODE),
+    "sequence_packing": (q_sequence_packing, SQL_SEQUENCE_PACKING),
+    # only DuckDB check of a public function: sources.readers.flatten_struct,
+    # functions.text.hash_sample, multimodal.decode_assets,
+    # operators.dedup.exact_dedup
+    "struct_flatten": (q_struct_flatten, SQL_STRUCT_FLATTEN),
+    "hash_sampled_docs": (q_hash_sampled_docs, SQL_HASH_SAMPLED_DOCS),
+    "multimodal_decode": (q_multimodal_decode, SQL_MULTIMODAL_DECODE),
+    "exact_dedup_docs": (q_exact_dedup_docs, SQL_EXACT_DEDUP_DOCS),
+    # only DuckDB check of a COVERAGE.md row: unix_timestamp/from_unixtime,
+    # DataFrame.unpivot, the Q17 decorrelated subquery, EXCEPT/INTERSECT,
+    # CUBE, a sliding rowsBetween frame, ntile, PIVOT
+    "datetime_functions": (q_datetime_functions, SQL_DATETIME_FUNCTIONS),
+    "lineitem_unpivot": (q_lineitem_unpivot, SQL_LINEITEM_UNPIVOT),
     "small_quantity_revenue": (
         q_small_quantity_revenue, SQL_SMALL_QUANTITY_REVENUE,
     ),
-    "batch_sessions": (q_batch_sessions, SQL_BATCH_SESSIONS),
-    "length_bucket_batches": (
-        q_length_bucket_batches, SQL_LENGTH_BUCKET_BATCHES,
-    ),
-    "multimodal_decode": (q_multimodal_decode, SQL_MULTIMODAL_DECODE),
-    "pq_topk": (q_pq_topk, SQL_PQ_TOPK),
-    "lm_perplexity": (q_lm_perplexity, SQL_LM_PERPLEXITY),
-    "curation_pipeline": (q_curation_pipeline, SQL_CURATION_PIPELINE),
-    # round 13 (registry budget for the five new components; each a
-    # near-duplicate of in-registry coverage):
-    #   dedup_entity_rows (A5)    -> exact_dedup_docs (same
-    #                                distinct-by-key groupBy shape)
-    #   case_decode_coalesce (P9/P10) -> priority_collapse_types (the
-    #                                when/otherwise+coalesce rewrite)
-    #   datetime_functions (F1-F5) -> hourly_user_agg / scd2_user_state
-    #                                (to_timestamp/date_trunc/format in
-    #                                anger, adjudicated every round)
-    #   user_cohort_sets (§2.6 extension) -> event_type_pivot +
-    #                                idle_customers_anti (set semantics)
-    "dedup_entity_rows": (q_dedup_entity_rows, SQL_DEDUP_ENTITY_ROWS),
-    "case_decode_coalesce": (q_case_decode_coalesce, SQL_CASE_DECODE_COALESCE),
-    "datetime_functions": (q_datetime_functions, SQL_DATETIME_FUNCTIONS),
     "user_cohort_sets": (q_user_cohort_sets, SQL_USER_COHORT_SETS),
-    #   moving_avg_revenue (rolling window) -> user_value_deltas
-    #                                (lag/window arithmetic) +
-    #                                customer_balance_deciles (ntile) +
-    #                                latest_event_per_user (row_number)
-    #   lineitem_unpivot (stack reshape) -> event_type_pivot (the
-    #                                inverse reshape) + column_profile
-    #                                (the same stack expression in anger)
+    "returnflag_cube": (q_returnflag_cube, SQL_RETURNFLAG_CUBE),
     "moving_avg_revenue": (q_moving_avg_revenue, SQL_MOVING_AVG_REVENUE),
-    "lineitem_unpivot": (q_lineitem_unpivot, SQL_LINEITEM_UNPIVOT),
-    #   post_signup_activity (event-sequence join+window) ->
-    #                                latest_event_per_user (the same
-    #                                per-entity chronology window) +
-    #                                scd2_lookup (range predicates over
-    #                                entity timelines)
-    "post_signup_activity": (q_post_signup_activity, SQL_POST_SIGNUP_ACTIVITY),
-    # round 14 (registry budget for the three new rows —
-    # pit_versioned_asof / hll_time_rollup / skew_report — keeping the
-    # registry at <= 100 adjudicated queries):
-    #   exact_dedup_docs (md5-fingerprint groupBy dedup) ->
-    #                                incremental_dedup (the same
-    #                                fingerprint index, plus the
-    #                                partitioned ingest protocol) +
-    #                                chunk_dedup (first-occurrence
-    #                                keep rule)
-    #   event_type_pivot (CASE-WHEN-inside-SUM breakout) ->
-    #                                part_brand_stats + revenue_rollup
-    #                                (the Expand-based grouping family) +
-    #                                column_profile (the stack/unstack
-    #                                reshape machinery)
-    #   customer_balance_deciles (rank-bucket ntile family) ->
-    #                                ccnet_buckets (percentile bucketing
-    #                                driving a decision) +
-    #                                user_value_deltas (the rank/lag
-    #                                window family)
-    "exact_dedup_docs": (q_exact_dedup_docs, SQL_EXACT_DEDUP_DOCS),
-    "event_type_pivot": (q_event_type_pivot, SQL_EVENT_TYPE_PIVOT),
-    #   token_rarity (rare-token share via df join-back) ->
-    #                                top_terms_tfidf (the same tf/df
-    #                                pre-agg + join-back with idf
-    #                                weighting on top) + token_pmi
-    #                                (the pairwise-statistics sibling) +
-    #                                inverted_index (the posting-list
-    #                                form of the same relation); retired
-    #                                to fund versioned_restore_diff's
-    #                                registry slot
-    "token_rarity": (q_token_rarity, SQL_TOKEN_RARITY),
     "customer_balance_deciles": (
         q_customer_balance_deciles, SQL_CUSTOMER_BALANCE_DECILES,
     ),
-    #   online_snapshot (latest row per entity in an interval — M6's
-    #   batch semantics) -> latest_event_per_user (the identical
-    #                                latest_per_key window shape) +
-    #                                materialize_stream (the SAME
-    #                                latest-per-key merge, adjudicated
-    #                                through the full online-store
-    #                                path) + online_lookup (reading the
-    #                                materialized snapshot); retired to
-    #                                fund streaming_versioned_ingest's
-    #                                registry slot
-    "online_snapshot": (q_online_snapshot, SQL_ONLINE_SNAPSHOT),
-    # round 16 (funding the pinned-anchor contract: with the window
-    # driver-fixed at 50 and two slots now permanently held by the
-    # tier-1 anchors, the rotating halves must be 48 — successors in
-    # the RETIRED block narrative above):
-    "corpus_vocab": (q_corpus_vocab, SQL_CORPUS_VOCAB),
-    "chunk_dedup": (q_chunk_dedup, SQL_CHUNK_DEDUP),
+    "event_type_pivot": (q_event_type_pivot, SQL_EVENT_TYPE_PIVOT),
 }

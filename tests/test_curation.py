@@ -1,9 +1,9 @@
 """curate() — the assembled curation pipeline operator.
 
-The base composition (dedup -> repetition -> sample -> accounting) is
-oracle-adjudicated via workload.q_curation_pipeline; here the optional
-stages (benchmark decontamination, near-dup cluster pruning) are
-exercised on planted data, plus the end-to-end shape on real docs.
+The full composition (the base stages plus decontamination, near-dup
+and NB filtering) is oracle-adjudicated via
+workload.q_curation_pipeline_full; here each stage is exercised on
+planted data, plus the end-to-end shape on real docs.
 """
 
 from __future__ import annotations

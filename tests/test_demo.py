@@ -33,8 +33,8 @@ def test_training_pipeline_demo_runs(spark):
     assert out["url_front_door_survivors"] == 475
     assert out["ranked_domains"] == 16
     # 62 with the gopher_rules gate on over the 475 front-door
-    # survivors (was 73 over the full 500); the oracle-row config
-    # (gate off, full corpus, q_curation_pipeline) keeps 118
+    # survivors (73 over the full 500); the base config (gate off,
+    # full corpus, sample_rates only) keeps 118
     assert out["curate_operator_survivors"] == 62
     assert out["lm_scored_docs"] == out["after_exact_dedup"]
     assert out["lm_scored_docs_kn"] == out["lm_scored_docs"]

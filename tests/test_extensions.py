@@ -978,47 +978,3 @@ def test_simhash_null_text_drops_doc_in_every_family(spark):
         got = {r.doc for r in simhash(df, "doc_id", "text",
                                       hash_fn=fam).collect()}
         assert got == {1}, fam
-
-
-def test_dot_fixed_bit_identical_to_hof_fold(spark):
-    """_dot_fixed (the unrolled codegen verify dot, r17) must produce
-    BIT-identical doubles to the HOF aggregate fold on fixed-dim
-    arrays — including sign-of-zero (the lit(0.0) seed), NULL arrays
-    and NULL elements. Compared unrounded via double bit patterns."""
-    import random
-
-    from pyspark.sql import Row
-
-    from my_feast_spark.operators.similarity import _dot, _dot_fixed
-
-    rng = random.Random(7)
-    dim = 64
-    rows = []
-    for i in range(200):
-        a = [rng.uniform(-1, 1) for _ in range(dim)]
-        b = [rng.uniform(-1, 1) for _ in range(dim)]
-        rows.append(Row(a=a, b=b))
-    # sign-of-zero edge: all-zero products with a negative-zero term
-    rows.append(Row(a=[-0.0] * dim, b=[0.0] * dim))
-    rows.append(Row(a=[0.0] * dim, b=[-0.0] * dim))
-    # NULL array and NULL element must poison both forms identically
-    rows.append(Row(a=None, b=[1.0] * dim))
-    na = [1.0] * dim
-    na[17] = None
-    rows.append(Row(a=na, b=[1.0] * dim))
-    df = spark.createDataFrame(
-        rows, schema="a array<double>, b array<double>"
-    )
-    import struct
-
-    def bits(x):
-        if x is None:
-            return None
-        return struct.pack("<d", x)
-
-    got = df.select(
-        _dot(F.col("a"), F.col("b")).alias("fold"),
-        _dot_fixed(F.col("a"), F.col("b"), dim).alias("unrolled"),
-    ).collect()
-    for r in got:
-        assert bits(r.fold) == bits(r.unrolled), (r.fold, r.unrolled)

@@ -6,13 +6,113 @@ from __future__ import annotations
 
 import pytest
 
+from pyspark.sql import functions as F
+
 from my_feast_spark import workload
+from my_feast_spark.sources.readers import load_table
 from tests.conftest import SF_DIR_ORACLE
 
 
 def _formatted(df) -> str:
     return df._jdf.queryExecution().explainString(
         df._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    )
+
+
+# Operator compositions pinned below that have no registry query of
+# their own: each builds the DataFrame the pinned plan property is about.
+
+def _doc_chunks(spark, sf_dir):
+    """``chunk_tokens`` windows (size 50, stride 25), one row per chunk."""
+    from my_feast_spark.functions.text import chunk_tokens
+
+    docs = load_table(spark, sf_dir, "documents")
+    return (
+        docs.select(
+            "doc_id",
+            F.explode_outer(chunk_tokens(F.col("text"), size=50, stride=25)).alias("c"),
+        )
+        .filter(F.col("c").isNotNull())
+        .select(
+            "doc_id", "c.start",
+            F.md5(F.encode(F.col("c.chunk_text"), "UTF-8")).alias("chunk_md5"),
+            "c.n_tokens",
+        )
+    )
+
+
+def _curation_base(spark, sf_dir):
+    """``curate`` with the base stages only: dedup -> repetition filter
+    -> stratified sample -> accounting."""
+    from my_feast_spark.operators.curation import CurationConfig, curate
+
+    rates = {"en": 0.3, "de": 0.5, "es": 0.5, "fr": 0.5, "zh": 0.5}
+    docs = load_table(spark, sf_dir, "documents")
+    return curate(docs, CurationConfig(sample_rates=rates))
+
+
+def _length_bucket_batches(spark, sf_dir):
+    """``token_count`` binned into power-of-two buckets (base-2 digit
+    count) with per-bucket batch accounting at an 8192-token budget."""
+    from my_feast_spark.functions.text import token_count
+
+    docs = load_table(spark, sf_dir, "documents")
+    binned = docs.select(token_count(F.col("text")).alias("__nt")).select(
+        "__nt",
+        F.length(F.conv(F.col("__nt").cast("string"), 10, 2)).cast("int").alias("bucket"),
+    )
+    cap = F.pow(F.lit(2.0), F.col("bucket").cast("double")).cast("long")
+    per_batch = F.greatest(F.floor(F.lit(8192) / cap), F.lit(1))
+    return (
+        binned.groupBy("bucket")
+        .agg(F.count(F.lit(1)).alias("n_docs"), F.sum("__nt").alias("n_tokens"))
+        .select(
+            "bucket", cap.alias("max_len"), "n_docs", "n_tokens",
+            F.ceil(F.col("n_docs") / per_batch).cast("long").alias("n_batches"),
+        )
+    )
+
+
+def _corpus_vocab(spark, sf_dir):
+    """Top-50 lowercased tokens by occurrences, with document frequency."""
+    from my_feast_spark.functions.text import tokens
+
+    docs = load_table(spark, sf_dir, "documents")
+    toks = docs.select(
+        "doc_id", F.explode_outer(tokens(F.lower(F.col("text")))).alias("token"),
+    ).filter(F.col("token").isNotNull())
+    return (
+        toks.groupBy("token")
+        .agg(F.count(F.lit(1)).alias("n_occurrences"),
+             F.countDistinct("doc_id").alias("n_docs"))
+        .orderBy(F.col("n_occurrences").desc(), F.col("token").asc())
+        .limit(50)
+    )
+
+
+def _bpe_pair_counts(spark, sf_dir):
+    """Top-40 adjacent-token pairs: the ``let``-bound token array zipped
+    with its 1-shifted slice (one BPE round's count table)."""
+    from my_feast_spark.functions.text import let, tokens
+
+    def adjacent_pairs(t):
+        return F.when(
+            F.size(t) >= 2,
+            F.zip_with(
+                F.slice(t, 1, F.size(t) - 1), F.slice(t, 2, F.size(t) - 1),
+                lambda a, b: F.concat(a, F.lit(" "), b),
+            ),
+        ).otherwise(F.array().cast("array<string>"))
+
+    docs = load_table(spark, sf_dir, "documents")
+    pairs = docs.select(
+        F.explode_outer(let(tokens(F.lower(F.col("text"))), adjacent_pairs)).alias("pair")
+    ).filter(F.col("pair").isNotNull())
+    return (
+        pairs.groupBy("pair")
+        .agg(F.count(F.lit(1)).alias("n_occurrences"))
+        .orderBy(F.col("n_occurrences").desc(), F.col("pair").asc())
+        .limit(40)
     )
 
 
@@ -145,7 +245,7 @@ def test_ccnet_buckets_broadcasts_cutoffs_no_global_sort(spark):
 def test_doc_chunks_is_map_only(spark):
     """Chunking must stay a pure map stage: scan -> generate -> project,
     no Exchange — a 100 TB corpus chunks without any shuffle."""
-    plan = _formatted(workload.q_doc_chunks(spark, SF_DIR_ORACLE))
+    plan = _formatted(_doc_chunks(spark, SF_DIR_ORACLE))
     assert "Exchange" not in plan
     assert "Generate" in plan
 
@@ -231,7 +331,7 @@ def test_curation_pipeline_is_single_shuffle(spark):
     a second corpus-sized shuffle and a join."""
     import re
 
-    plan = _formatted(workload.q_curation_pipeline(spark, SF_DIR_ORACLE))
+    plan = _formatted(_curation_base(spark, SF_DIR_ORACLE))
     n_exchanges = len(re.findall(r"\(\d+\) Exchange", plan))
     assert n_exchanges == 1, plan
     assert "Join" not in plan
@@ -245,7 +345,15 @@ def test_text_queries_tokenize_once(spark):
     (see functions/text.py::let)."""
     # vocab_encode_join's 2 = one per job side (vocab-build scan +
     # encode scan), the inherent minimum for a two-pass encode
-    registry = {**workload.QUERIES, **workload.RETIRED_QUERIES}
+    make_df = {
+        name: fn
+        for name, (fn, _sql) in {**workload.QUERIES,
+                                 **workload.RETIRED_QUERIES}.items()
+    }
+    make_df.update(curation_pipeline=_curation_base,
+                   length_bucket_batches=_length_bucket_batches,
+                   corpus_vocab=_corpus_vocab,
+                   bpe_pair_counts=_bpe_pair_counts)
     for name, expected in (("repetition_filter", 1), ("lang_id", 1),
                            ("quality_score", 1), ("curation_pipeline", 1),
                            ("packed_sequences", 1), ("mixture_temperature", 1),
@@ -259,7 +367,7 @@ def test_text_queries_tokenize_once(spark):
                            ("score_weighted_sample", 2),
                            ("vocab_encode_join", 2)):
         plan = (
-            registry[name][0](spark, SF_DIR_ORACLE)
+            make_df[name](spark, SF_DIR_ORACLE)
             ._jdf.queryExecution().optimizedPlan().toString()
         )
         assert plan.count("split(") == expected, (

@@ -11,28 +11,18 @@ from __future__ import annotations
 
 from my_feast_spark import workload
 
-#: PINNED-ANCHOR CONTRACT (round 16, the r15 verdict's ask #2): the
-#: flagship gold-build + point-in-time retrieval path holds window
-#: slots EVERY round — a perfect-complement rotation must never again
-#: leave the tier-1 path without a fresh driver row for a round. The
-#: rest of the registry rotates around them in halves of 48.
+#: The flagship gold-build + point-in-time retrieval path: leads every
+#: window, so no rotation leaves it without a CORRECTNESS row. The rest
+#: of the registry rotates around it in halves of 48.
 PINNED_ANCHORS = {
     "pit_user_features",
     "hourly_user_agg",
 }
 
-# Round-16 rotation: the r15 contract executed — the entire
-# r14-adjudicated block is back in-window (its first two entries are
-# the anchors, now pinned), and the r15-adjudicated window sits the
-# tail out minus the two round-16 retirements. Nothing goes two
-# consecutive rounds without a fresh CORRECTNESS row. ROUND-17
-# CONTRACT: this tail rotates back in-window next round alongside the
-# pinned anchors (2 + 48 = 50 exactly); extend versioned_restore_diff's
-# chain with an upsert leg that round so the sidecar-composed diff is
-# driver-adjudicated the same round it enters the window.
+#: The tail half: outside the current window, and the next rotation's
+#: window (behind the anchors, 2 + 48 = 50). A rotation swaps the halves
+#: whole, so no query sits out two windows in a row.
 ROTATION_TAIL = {
-    # the round-15 window minus {corpus_vocab, chunk_dedup} (retired),
-    # all 50/50 green in CORRECTNESS_r15
     "pit_late_arrival",
     "hourly_global_agg",
     "event_types_salted",
@@ -83,14 +73,11 @@ ROTATION_TAIL = {
     "top_spenders",
 }
 
-#: last adjudicated in round 14 — round 16 MUST give them fresh rows
-#: (the rotation invariant: nothing sits out two consecutive rounds)
+#: The window: the pinned anchors plus the window half, which sat out
+#: the previous window and so must be adjudicated in this one.
 ROTATED_IN = {
-    # the pinned anchors (13 consecutive green rows, then r14, now
-    # every round)
     "pit_user_features",
     "hourly_user_agg",
-    # the r14-adjudicated remainder
     "versioned_replay",
     "cms_heavy_hitters",
     "streaming_sketch_ingest",
@@ -141,77 +128,43 @@ ROTATED_IN = {
     "ann_lsh_topk",
 }
 
-#: behavior touched this round: upsert_version/delete_version now
-#: persist per-commit change sidecars (sources/versioned.py), so the
-#: registered queries that COMMIT through those paths must be
-#: re-adjudicated in the window that ships the change. (The streaming
-#: dedup-index marker hardening only affects legacy pre-marker resumes,
-#: which no registered query exercises; versioned_restore_diff's
-#: registered chain diffs a pure-append prefix, unchanged — see the
-#: TAIL block note in workload.py.)
+#: Queries whose output-affecting code changed since their last
+#: CORRECTNESS row: they must be in the window that ships the change.
+#: These commit through upsert_version/delete_version
+#: (sources/versioned.py).
 CHANGED_OR_NEW_THIS_ROUND = {
     "versioned_replay",
     "pit_versioned_asof",
     "compact_table_replay",
 }
 
-#: retired from the driver registry — near-duplicates of in-registry
-#: coverage, still oracle-checked by test_oracle_parity.py
+#: Retired: never submitted for adjudication, still value-checked by
+#: test_oracle_parity.py. An entry stays only while bench.py times it, a
+#: test uses its q_* function as a reference, or it is the only DuckDB
+#: check of a public function or a COVERAGE.md row.
 RETIRED_THIS_ROUND = {
-    # round 6
-    "filtered_agg",
-    "json_props_extract",
-    "struct_flatten",
-    # round 7
-    "vocab_encode",
-    "embedding_near_dupes",
-    "sequence_packing",
-    "hash_sampled_docs",
-    # round 8
-    "corpus_mixture",
-    "token_stats",
-    "doc_chunks",
-    "value_percentiles",
-    "stratified_sample_docs",
-    "quality_score",
-    "length_outlier_filter",
-    "promo_revenue",
-    # round 9 (successor rationale in workload.py's RETIRED block)
-    "doc_fingerprints",
-    "regex_mentions",
-    "bpe_pair_counts",
-    "returnflag_cube",
-    "small_quantity_revenue",
-    "batch_sessions",
-    "length_bucket_batches",
-    "multimodal_decode",
-    # round 11
-    "pq_topk",
-    # round 12 (successors: lm_perplexity_kn / curation_pipeline_full,
-    # both strict supersets)
-    "lm_perplexity",
-    "curation_pipeline",
-    # round 13 continuation (registry budget for the five new
-    # components; successors named in workload.py's RETIRED block)
-    "dedup_entity_rows",
-    "case_decode_coalesce",
-    "datetime_functions",
-    "user_cohort_sets",
-    "moving_avg_revenue",
-    "lineitem_unpivot",
-    "post_signup_activity",
-    # round 14 (registry budget for pit_versioned_asof /
-    # hll_time_rollup / skew_report / streaming_versioned_ingest;
-    # successors in workload.py)
-    "exact_dedup_docs",
-    "event_type_pivot",
-    "customer_balance_deciles",
-    "online_snapshot",
-    "token_rarity",
-    # round 16 (funding the pinned-anchor contract; successors:
-    # vocab_encode_join/top_terms_tfidf and cdc_chunk_dedup)
-    "corpus_vocab",
+    # timed by bench.py
     "chunk_dedup",
+    "quality_score",
+    "doc_fingerprints",
+    "pq_topk",
+    # reference side of a test equality
+    "vocab_encode",
+    "sequence_packing",
+    # only DuckDB check of a public function
+    "struct_flatten",
+    "hash_sampled_docs",
+    "multimodal_decode",
+    "exact_dedup_docs",
+    # only DuckDB check of a COVERAGE.md row
+    "datetime_functions",
+    "lineitem_unpivot",
+    "small_quantity_revenue",
+    "user_cohort_sets",
+    "returnflag_cube",
+    "moving_avg_revenue",
+    "customer_balance_deciles",
+    "event_type_pivot",
 }
 
 

@@ -38,6 +38,12 @@ def main() -> None:
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     args = ap.parse_args()
 
+    registry = {**workload.QUERIES, **workload.RETIRED_QUERIES}
+    unknown = [name for name in args.queries if name not in registry]
+    if unknown:
+        # checked before the session starts: a typo costs no JVM start-up
+        sys.exit(f"unknown queries: {', '.join(unknown)}")
+
     spark = get_session(app_name="mfs-profile")
 
     from my_feast_spark.operators.graph import release_checkpoint
@@ -60,7 +66,6 @@ def main() -> None:
         for c in getattr(df, "_owned_checkpoints", ()):
             release_checkpoint(c)
 
-    registry = {**workload.QUERIES, **workload.RETIRED_QUERIES}
     for name in args.queries:
         fn = registry[name][0]
         if args.explain_tag:
