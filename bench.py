@@ -133,14 +133,8 @@ def main() -> None:
     for name, thunk in (
         ("minhash_dup_pairs_xxhash64",
          lambda: counted(workload.q_minhash_dup_pairs(spark, sf_dir, hash_fn="xxhash64"))),
-        # (the former minhash_dup_pairs_numpy slot: "numpy" became an
-        # alias of "xxhash64" when the xxhash64 family was routed
-        # through the Arrow fan-out in round 15 — one timing covers both)
         ("simhash_dup_pairs_xxhash64",
          lambda: counted(workload.q_simhash_dup_pairs(spark, sf_dir, hash_fn="xxhash64"))),
-        # (the former simhash_dup_pairs_numpy slot: "xxhash64" routes
-        # through the bit-identical Arrow fingerprint path since round
-        # 15 — one timing covers both)
         # the chunkers' per-word/per-chunk hash at scale cost: the
         # registry rows pay the md5-derived portable hash for oracle
         # replay; production pays one xxhash64 intrinsic instead — the
@@ -170,8 +164,10 @@ def main() -> None:
          lambda: counted(workload.q_ivf_topk(spark, sf_dir, deterministic=False))),
         ("embedding_near_dupes_lsh_blas",
          lambda: counted(workload.q_embedding_near_dupes_lsh(spark, sf_dir, deterministic=False))),
+        # the "_numpy" row name predates the xxhash64 family name; kept
+        # so BENCH_FULL.json history lines up
         ("curation_pipeline_full_numpy",
-         lambda: counted(workload.q_curation_pipeline_full(spark, sf_dir, hash_fn="numpy"))),
+         lambda: counted(workload.q_curation_pipeline_full(spark, sf_dir, hash_fn="xxhash64"))),
         # exhaustive-ADC vs IVFADC at a 10x query batch: the probe path's
         # candidate volume is nprobe/num_cells (= 1/4 here) of the
         # exhaustive scan's — the gap that grows with corpus x queries

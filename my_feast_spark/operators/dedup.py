@@ -27,6 +27,7 @@ layouts.
 from __future__ import annotations
 
 import random as _random
+from typing import Callable
 
 import pandas as pd  # module-level: pandas_udf type hints resolve here
 
@@ -530,35 +531,25 @@ def minhash_signatures(
     textbook explode+groupBy which shuffles |doc|×|shingles| rows to
     re-group what was already grouped.
 
-    ``hash_fn``: "xxhash64" (default, alias "numpy"; ONE JVM xxhash64
-    pass per shingle + an Arrow-batched seeded-splitmix64 fan-out to
-    all ``num_hashes`` minima — the measured-fastest path, see
-    _signatures_numpy), "portable" (one md5-derived base hash + the
-    Carter-Wegman family ``(A_i*base + B_i) % MINHASH_P`` — exactly
-    reproducible in DuckDB, so the whole LSH pipeline is
-    oracle-checkable), or "xxhash64_expr" (the legacy pure-expression
-    form: num_hashes seeded ``array_min(transform(xxhash64(i, s)))``
-    passes — interpreted HOFs, benched ~1.5x slower than even the
-    portable family; kept ONLY for bit-compatibility with indexes
-    persisted by pre-round-15 builds).
+    ``hash_fn``: "xxhash64" (default; ONE JVM xxhash64 pass per
+    shingle + an Arrow-batched seeded-splitmix64 fan-out to all
+    ``num_hashes`` minima, see _signatures_numpy) or "portable" (one
+    md5-derived base hash + the Carter-Wegman family
+    ``(A_i*base + B_i) % MINHASH_P`` — exactly reproducible in DuckDB,
+    so the whole LSH pipeline is oracle-checkable; at most 64 hashes).
+    Any other value raises ValueError. Signatures are engine-internal:
+    only persisted signature artifacts (the streaming near-dup index)
+    depend on the family's bit patterns, so that index pins it.
 
-    NOTE (round 15): "xxhash64" previously meant the expression form;
-    its bit patterns changed when it was routed through the Arrow
-    fan-out (judge-caught inversion — the 'scale default' was the
-    slowest family two committed benches running). Signatures are
-    engine-internal, so only PERSISTED signature artifacts (the
-    streaming near-dup index) need a rebuild across that boundary.
-
-    MEASURED (round 16, COVERAGE probe 11): at sf0.1 the two Arrow
-    fan-outs TIE within run spread (N=5 alternating, min 2.451s
-    xxhash64 vs 2.478s portable; warm ranges fully overlap) — the
-    pipeline is dominated by the shared shingling/banding/join stages,
-    not the hash family. The structural difference that matters at
-    scale is the BASE hash: one xxhash64 intrinsic per shingle vs
-    md5 + hex-substring parsing, plus the splitmix remix being ~3x
-    cheaper per element than CW's multiply-mod (numpy microbench,
-    same probe). Below bench noise at sf0.1; favors xxhash64 as
-    corpus size grows."""
+    Measured at sf0.1 (COVERAGE probe 11): the two Arrow fan-outs tie
+    within run spread (N=5 alternating, min 2.451s xxhash64 vs 2.478s
+    portable) — the pipeline is dominated by the shared
+    shingling/banding/join stages, not the hash family. The structural
+    difference that matters at scale is the BASE hash: one xxhash64
+    intrinsic per shingle vs md5 + hex-substring parsing, plus the
+    splitmix remix being ~3x cheaper per element than CW's
+    multiply-mod (numpy microbench, same probe). Below bench noise at
+    sf0.1; favors xxhash64 as corpus size grows."""
     return _signatures_from_shingles(
         _with_shingles(df, id_col, text_col, n), num_hashes, hash_fn
     )
@@ -575,7 +566,7 @@ def minhash_signature_array(
     tokens_col: str | None = None,
 ) -> DataFrame:
     """``(doc, __sig array<long>)`` — the array-native core of
-    :func:`minhash_signatures` (r16 optimization): element ``i`` of
+    :func:`minhash_signatures`: element ``i`` of
     ``__sig`` is bit-identical to column ``mh_i``. Internal consumers
     (the LSH pair generator, the streaming near-dup ingest) band via
     ``element_at`` on this single array column instead of fanning out
@@ -608,66 +599,37 @@ def _signatures_from_shingles(
     )
 
 
+def _check_minhash_family(hash_fn: str, num_hashes: int) -> None:
+    """Raise ValueError unless ``hash_fn`` is a MinHash family
+    ("xxhash64" or "portable") that yields ``num_hashes`` minima."""
+    if hash_fn not in ("xxhash64", "portable"):
+        raise ValueError(f"unknown hash_fn {hash_fn!r}")
+    if hash_fn == "portable" and num_hashes > len(MINHASH_A):
+        raise ValueError(f"portable family has {len(MINHASH_A)} hashes")
+
+
 def _signature_array_from_shingles(
     sh: DataFrame, num_hashes: int, hash_fn: str = "xxhash64"
 ) -> DataFrame:
     """``(doc, __sig)`` with ``__sig[i]`` bit-identical to ``mh_i``."""
-    if hash_fn == "portable":
-        if num_hashes > len(MINHASH_A):
-            raise ValueError(f"portable family has {len(MINHASH_A)} hashes")
-        # one md5 per shingle (JVM, bit-exact vs the oracle), then the
-        # Carter-Wegman fan-out vectorized in ONE Arrow batch: numpy
-        # int64 arithmetic is exact for (a*x + b) % P (products < 2^62),
-        # so the signatures are IDENTICAL to the expression form below —
-        # which paid num_hashes interpreted HOF passes per row (the
-        # dominant minhash cost, ~3.5x the whole pipeline at sf0.1).
-        based = sh.select(
-            "doc", F.transform(F.col("sh"), _portable_base).alias("__base")
-        )
-        try:
-            return _cw_signatures_numpy(based, num_hashes)
-        except ImportError:  # pragma: no cover - numpy is baked in
-            pass
-        cols = [
-            F.array_min(
-                F.transform(F.col("__base"), _cw_hasher(MINHASH_A[i], MINHASH_B[i]))
-            )
-            for i in range(num_hashes)
-        ]
-        return based.select("doc", F.array(*cols).alias("__sig"))
-
-    if hash_fn in ("xxhash64", "numpy"):
-        # the xxhash64-family scale path: one JVM xxhash64 per shingle,
-        # then ALL num_hashes seeded minima in one Arrow batch. Routed
-        # here in round 15 (judge-caught): the expression form below
-        # pays num_hashes interpreted array_min(transform(...)) HOF
-        # passes per row — the exact cost the portable family's
-        # _cw_signatures_numpy fan-out was built to remove — and
-        # benched ~1.5x SLOWER than portable in two consecutive
-        # committed rounds while the docstring called it cheapest.
+    _check_minhash_family(hash_fn, num_hashes)
+    if hash_fn == "xxhash64":
         return _signatures_numpy(sh, num_hashes)
-
-    if hash_fn != "xxhash64_expr":
-        raise ValueError(f"unknown hash_fn {hash_fn!r}")
-
-    def hasher(i):
-        # NB: must be a 1-arg lambda — transform() treats a second lambda
-        # parameter as the array index and would shadow a default arg
-        return lambda s: F.xxhash64(F.lit(i), s)
-
-    cols = [
-        F.array_min(F.transform(F.col("sh"), hasher(i)))
-        for i in range(num_hashes)
-    ]
-    return sh.select("doc", F.array(*cols).alias("__sig"))
+    # one md5 per shingle (JVM, bit-exact vs the oracle), then the
+    # Carter-Wegman fan-out in one Arrow batch
+    based = sh.select(
+        "doc", F.transform(F.col("sh"), _portable_base).alias("__base")
+    )
+    return _cw_signatures_numpy(based, num_hashes)
 
 
 def _cw_signatures_numpy(based: DataFrame, num_hashes: int) -> DataFrame:
     """Vectorized Carter-Wegman minima over the pre-hashed ``__base``
-    arrays — bit-identical to the expression form (exact int64 ops:
-    a, x < MINHASH_P = 2^31 - 1, so a*x + b < 2^62 + 2^31 never
-    overflows a signed 64-bit int), one Arrow batch instead of
-    ``num_hashes`` interpreted ``array_min(transform(...))`` passes.
+    arrays — bit-identical to the SQL oracle's ``(A_i*base + B_i) %
+    MINHASH_P`` (exact int64 ops: a, x < MINHASH_P = 2^31 - 1, so
+    a*x + b < 2^62 + 2^31 never overflows a signed 64-bit int), one
+    Arrow batch instead of ``num_hashes`` interpreted
+    ``array_min(transform(...))`` passes.
     Self-contained closure: executors never import this package."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
@@ -691,13 +653,12 @@ def _signatures_numpy(sh: DataFrame, num_hashes: int) -> DataFrame:
     """Arrow-batched signature fan-out: ONE JVM pass hashes each shingle
     to int64 (xxhash64), then a vectorized pandas UDF derives all
     ``num_hashes`` minima per row with a seeded splitmix64 finalizer
-    over the base array. The expression-tree forms pay num_hashes ×
-    num_shingles interpreted lambda evaluations per row (the per-column
-    ``array_min(transform(...))`` is a CodegenFallback HOF) — at 64
-    hashes that is the dominant minhash cost; the numpy fan-out is a
-    handful of uint64 vector ops per row. Same LSH quality family,
-    different bit patterns — so it pairs with the xxhash64 band-sig path
-    and is NOT oracle-replayable (use ``hash_fn="portable"`` for that).
+    over the base array. A per-hash expression form would pay
+    num_hashes × num_shingles interpreted lambda evaluations per row
+    (``array_min(transform(...))`` is a CodegenFallback HOF); the numpy
+    fan-out is a handful of uint64 vector ops per row. It pairs with the
+    xxhash64 band-sig path and is NOT oracle-replayable (use
+    ``hash_fn="portable"`` for that).
     Self-contained closure: executors never import this package."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
@@ -758,7 +719,7 @@ def minhash_lsh_dup_pairs(
     Carter-Wegman family and band signatures to the joined-decimal string
     of the band's minhashes — every stage then replays bit-identically in
     DuckDB (see workload.SQL_MINHASH_DUP_PAIRS). xxhash64 stays the
-    default and (since round 15) the measured-fastest: one JVM hash per
+    default and the measured-fastest: one JVM hash per
     shingle + the Arrow fan-out for all minima (see
     :func:`minhash_signatures`), and band sigs shuffle as 8-byte longs
     instead of ~40-byte strings.
@@ -789,8 +750,8 @@ def minhash_lsh_dup_pairs(
     # dominant LSH cost). It is also the SMALLEST relation in the
     # pipeline: n_docs x (id + num_hashes longs) ~ 0.5 KB/doc, orders
     # of magnitude under the corpus, so caching it is the scale move.
-    # Array-native (r16): banding reads element_at(__sig, i) — values
-    # bit-identical to the former mh_i columns, minus the 64-column
+    # Array-native: banding reads element_at(__sig, i) — values
+    # bit-identical to the mh_i columns, minus the 64-column
     # projection fan-out in every downstream plan.
     sig = _signature_array_from_shingles(sh, num_hashes, hash_fn).persist()
 
@@ -894,30 +855,38 @@ def simhash(
     hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """64-bit SimHash per doc: bit b of the fingerprint = majority vote of
-    bit b over hash(token) of all tokens. Explode + single groupBy
-    with ``bits`` small sums (partial agg keeps it cheap).
+    bit b over hash(token) of all tokens.
 
     ``hash_fn="portable"`` uses the md5-derived 64-bit hash whose bit
     pattern DuckDB reproduces (md5_number_lower) — same fingerprints, so
-    hamming distances are oracle-checkable. ``hash_fn="xxhash64"``
-    (default, alias "numpy") is the map-only Arrow path: one JVM
-    tokenize+hash projection, then a vectorized bit-vote per row — no
-    explode, no aggregate, no row blow-up in the map stage. It computes
-    fingerprints BIT-IDENTICAL to the explode + 64-sum aggregate shape
-    (same token hash, same majority rule — pinned in
-    tests/test_extensions.py), which remains available as
-    ``hash_fn="xxhash64_expr"``; the aggregate shape benched ~2.4x
-    slower at sf0.1 (1.91s vs 0.81s), so since round 15 the default
-    routes through the Arrow path — the same judge-caught fan-out
-    lesson as minhash, applied before this one inverted too."""
-    if hash_fn in ("xxhash64", "numpy"):
+    hamming distances are oracle-checkable; it runs explode + one
+    groupBy of ``bits`` small sums (partial agg keeps it cheap).
+    ``hash_fn="xxhash64"`` (default) is the map-only Arrow path: one
+    JVM tokenize+hash projection, then a vectorized bit-vote per row —
+    no explode, no aggregate, no row blow-up in the map stage. Its
+    fingerprints are
+    BIT-IDENTICAL to the explode + ``bits``-sum aggregate shape over
+    xxhash64 token hashes (same token hash, same majority rule — pinned
+    in tests/test_extensions.py against :func:`_simhash_aggregate`),
+    which benched ~2.4x slower at sf0.1 (1.91s vs 0.81s). Any other
+    ``hash_fn`` raises ValueError."""
+    if hash_fn == "xxhash64":
         return _simhash_numpy(df, id_col, text_col, bits)
-    if hash_fn not in ("portable", "xxhash64_expr"):
+    if hash_fn != "portable":
         raise ValueError(f"unknown hash_fn {hash_fn!r}")
-    token_hash = (
-        portable_hash64(F.col("token")) if hash_fn == "portable"
-        else F.xxhash64("token")
-    )
+    return _simhash_aggregate(df, id_col, text_col, bits, portable_hash64)
+
+
+def _simhash_aggregate(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    bits: int,
+    token_hash: Callable[[Column], Column],
+) -> DataFrame:
+    """SimHash as explode + one groupBy of ``bits`` vote sums, with
+    ``token_hash`` the 64-bit hash of each token. NULL text drops the
+    doc."""
     tok = (
         spread_partitions(df)
         .select(F.col(id_col).alias("doc"), tokens(F.lower(F.col(text_col))).alias("t"))
@@ -925,7 +894,7 @@ def simhash(
         # the tokenizer in the scan filter (tokens are never empty)
         .select("doc", F.explode_outer("t").alias("token"))
         .filter(F.col("token").isNotNull())
-        .withColumn("h", token_hash)
+        .withColumn("h", token_hash(F.col("token")))
     )
     votes = [
         F.sum(
@@ -946,11 +915,12 @@ def simhash(
 def _simhash_numpy(df, id_col, text_col, bits) -> DataFrame:
     """Map-only SimHash: per-row token hashes (one JVM pass) -> Arrow
     batch -> vectorized bit votes -> packed fingerprint. Produces
-    bit-identical fingerprints to ``hash_fn="xxhash64"`` (same token
-    hash, same majority rule) without the explode + 64-sum aggregate:
-    the classic shape pays a |tokens|-row blow-up in the map stage and a
-    per-doc hash aggregate; this is one projection. Self-contained
-    closure — executors never import this package."""
+    fingerprints bit-identical to :func:`_simhash_aggregate` over
+    ``F.xxhash64`` (same token hash, same majority rule) without the
+    explode + ``bits``-sum aggregate: that shape pays a |tokens|-row
+    blow-up in the map stage and a per-doc hash aggregate; this is one
+    projection. Self-contained closure — executors never import this
+    package."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
@@ -959,10 +929,9 @@ def _simhash_numpy(df, id_col, text_col, bits) -> DataFrame:
         F.transform(
             tokens(F.lower(F.col(text_col))), lambda t: F.xxhash64(t)
         ).alias("__h"),
-        # NULL text -> NULL token array: drop the doc like the
-        # explode_outer + isNotNull expression path does (review-caught:
-        # np.asarray(None) would otherwise crash the whole job on one
-        # NULL row, where the legacy default silently dropped it)
+        # NULL text -> NULL token array: drop the doc as the aggregate
+        # shape does (np.asarray(None) would otherwise fail the whole
+        # job on one NULL row)
     ).filter(F.col("__h").isNotNull())
 
     @pandas_udf("long")

@@ -338,7 +338,7 @@ def read_dsir_model(spark, path: str) -> DSIRModel:
         default_lr=float(meta["default_lr"]),
         k=float(meta["k"]),
         num_buckets=int(meta["num_buckets"]),
-        hash_fn=str(meta.get("hash_fn", "portable")),
+        hash_fn=str(meta["hash_fn"]),
     )
 
 

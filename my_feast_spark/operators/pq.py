@@ -516,8 +516,9 @@ def write_ivfpq_index(enc: DataFrame, model: dict, path: str) -> None:
     generation axis: ``path/cells`` holds the (corpus_id, codes) rows
     under ``append_id=N/cell=K`` partition directories (the initial
     build is generation 0; :func:`ivfpq_append` adds generations — the
-    ingest-family idempotent-overwrite protocol), and ``path/model``
-    the quantizer state as a single JSON row. The cell layout is the
+    ingest-family idempotent-overwrite protocol), and
+    ``path/cells/_model`` the quantizer state as a single JSON row, so
+    codes and quantizers move together. The cell layout is the
     point: a probe batch touching ``p`` distinct cells reads
     ``p/num_cells`` of the index via directory-level partition pruning
     REGARDLESS of how many generations exist (the cell filter prunes
@@ -535,8 +536,8 @@ def write_ivfpq_index(enc: DataFrame, model: dict, path: str) -> None:
     # ivfpq_append generations, encoded with the OLD quantizers, to be
     # unioned against the new model — silent result corruption). And it
     # must not DESTROY the serving index before the replacement exists
-    # (review-caught: a delete-then-write rebuild that crashes mid-write
-    # leaves nothing to serve). So: stage the complete new layout —
+    # (a delete-then-write rebuild that crashes mid-write would leave
+    # nothing to serve). So: stage the complete new layout —
     # codes AND the quantizer state, under one root so they can never
     # be observed mismatched — then swap with delete+rename; the
     # no-index window is two metadata ops, and a crash inside it is
@@ -566,24 +567,16 @@ def write_ivfpq_index(enc: DataFrame, model: dict, path: str) -> None:
         # _heal_staged_index can legitimately win this rename inside
         # the delete->rename window (it saw no cells root and renamed
         # OUR completed staging into place). The index landed either
-        # way — only fail when no cells root exists afterwards
-        # (advice-caught: the spurious RuntimeError also skipped the
-        # legacy model write below).
+        # way — only fail when no cells root exists afterwards.
         if not fs.exists(hp):
             raise RuntimeError(
                 f"failed to swap staged index {staging!r} into "
                 f"{cells_root!r}"
             )
-    # legacy-layout model copy (pre-staging readers look at path/model);
-    # written AFTER the swap so old readers never see a new model over
-    # old codes
-    spark.createDataFrame(
-        [(json.dumps(model),)], ["model_json"]
-    ).coalesce(1).write.mode("overwrite").json(os.path.join(path, "model"))
     # best-effort cleanup of crashed stagings — scoped to directories
     # older than the grace window, so a concurrent build's in-flight
-    # staging can never be deleted out from under it (advice-caught;
-    # the same guard vacuum() uses for in-flight commits)
+    # staging can never be deleted out from under it (the same guard
+    # vacuum() uses for in-flight commits)
     import time as _time
 
     cutoff_ms = (_time.time() - _STAGING_GRACE_SECONDS) * 1000.0
@@ -591,7 +584,7 @@ def write_ivfpq_index(enc: DataFrame, model: dict, path: str) -> None:
     for st in fs.listStatus(pp):
         name = st.getPath().getName()
         if (
-            name.startswith(("cells.staging-", ".model.tmp-"))
+            name.startswith("cells.staging-")
             and st.getModificationTime() < cutoff_ms
         ):
             fs.delete(st.getPath(), True)
@@ -644,52 +637,16 @@ def _heal_staged_index(jvm, fs, path: str) -> bool:
     if best is None:
         return fs.exists(dest)
     # a concurrent healer may win the rename — either way the root exists
-    healed = fs.rename(best.getPath(), dest) or fs.exists(dest)
-    if healed:
-        # the crashed writer never reached its legacy path/model write,
-        # so a pre-staging-layout reader would pair the OLD quantizer
-        # with the healed NEW codes — silently wrong distances
-        # (advice-caught; in-repo readers use _read_model, inner-first,
-        # and are unaffected). Refresh the legacy copy from the healed
-        # cells/_model so both layouts agree.
-        inner = jvm.org.apache.hadoop.fs.Path(dest, "_model")
-        legacy = jvm.org.apache.hadoop.fs.Path(
-            os.path.join(path, "model")
-        )
-        if fs.exists(inner):
-            # copy to a temp name FIRST, then delete+rename: the
-            # no-legacy-model window is two metadata ops, not the whole
-            # copy (review-caught — a crash mid-copy after an eager
-            # delete would leave legacy readers with nothing)
-            import uuid as _uuid
-
-            tmp = jvm.org.apache.hadoop.fs.Path(
-                os.path.join(path, f".model.tmp-{_uuid.uuid4().hex[:8]}")
-            )
-            jvm.org.apache.hadoop.fs.FileUtil.copy(
-                fs, inner, fs, tmp, False, fs.getConf()
-            )
-            if fs.exists(legacy):
-                fs.delete(legacy, True)
-            if not fs.rename(tmp, legacy):
-                fs.delete(tmp, True)  # a concurrent healer won
-    return healed
+    return fs.rename(best.getPath(), dest) or fs.exists(dest)
 
 
-def _read_model(spark, jvm, fs, path: str) -> dict:
-    """Quantizer state: from inside the cells root (staged-swap layout,
-    moves atomically with the codes) when present, else the legacy
-    sibling ``path/model``."""
+def _read_model(spark, path: str) -> dict:
+    """Quantizer state from ``path/cells/_model``, inside the cells root
+    so it moves atomically with the codes."""
     import json
     import os
 
-    inner = os.path.join(path, "cells", "_model")
-    target = (
-        inner
-        if fs.exists(jvm.org.apache.hadoop.fs.Path(inner))
-        else os.path.join(path, "model")
-    )
-    row = spark.read.json(target).collect()[0]
+    row = spark.read.json(os.path.join(path, "cells", "_model")).collect()[0]
     return json.loads(row.model_json)
 
 
@@ -697,13 +654,12 @@ def read_ivfpq_index(spark, path: str):
     """Load ``(enc, model)`` written by :func:`write_ivfpq_index` (+ any
     :func:`ivfpq_append` generations) — ``enc`` scans the partitioned
     layout, so downstream probe filters prune cell directories."""
-    import json
     import os
 
     import numpy as np
 
     # committed generations only: a torn append (crash mid-write, no
-    # _SUCCESS) must not serve half its vectors
+    # _GEN_COMMITTED marker) must not serve half its vectors
     sc = spark.sparkContext
     jvm = sc._jvm
     cells_root = os.path.join(path, "cells")
@@ -714,47 +670,27 @@ def read_ivfpq_index(spark, path: str):
         # complete staged build next door — finish its swap
         if not _heal_staged_index(jvm, fs, path):
             raise FileNotFoundError(f"no index at {path}")
-    gen_dirs = []
-    flat_legacy = False
-    torn_gens = 0
-    for st in fs.listStatus(hp):
-        name = st.getPath().getName()
-        if name.startswith("append_id="):
-            marker = jvm.org.apache.hadoop.fs.Path(
-                st.getPath(), _GEN_MARKER
-            )
-            if fs.exists(marker):
-                gen_dirs.append(os.path.join(cells_root, name))
-            else:
-                torn_gens += 1
-        elif name.startswith("cell="):
-            flat_legacy = True
-    if flat_legacy:
-        # pre-generation layout (cell=K at the root): read as-is —
-        # torn-generation filtering only applies to indexes written by
-        # the marker-aware code
-        enc_raw = spark.read.parquet(cells_root)
-    elif gen_dirs:
-        enc_raw = spark.read.option("basePath", cells_root).parquet(
-            *gen_dirs
+    gen_dirs = [
+        os.path.join(cells_root, st.getPath().getName())
+        for st in fs.listStatus(hp)
+        if st.getPath().getName().startswith("append_id=")
+        and fs.exists(
+            jvm.org.apache.hadoop.fs.Path(st.getPath(), _GEN_MARKER)
         )
-    elif torn_gens:
-        # generation layout with ZERO committed generations can only be
-        # a build that crashed before _GEN_COMMITTED — serving it would
-        # expose half-written parquet (review-caught: the old
-        # `not gen_dirs -> read root` fallback defeated the torn guard
-        # for exactly this initial-build crash)
+    ]
+    if not gen_dirs:
+        # a build that crashed before _GEN_COMMITTED, or a root this
+        # writer did not lay out: serving it would expose parquet no
+        # commit marker vouches for
         raise FileNotFoundError(
-            f"no committed generations under {cells_root} — torn build; "
-            "rerun write_ivfpq_index"
+            f"no committed generations under {cells_root} — torn build "
+            "or unknown layout; rerun write_ivfpq_index"
         )
-    else:
-        # no partition dirs at all: pre-marker flat-parquet layout
-        enc_raw = spark.read.parquet(cells_root)
+    enc_raw = spark.read.option("basePath", cells_root).parquet(*gen_dirs)
     enc = enc_raw.select(
         "corpus_id", F.col("cell").cast("int").alias("cell"), "codes"
     )
-    model = _read_model(spark, jvm, fs, path)
+    model = _read_model(spark, path)
     model["centroids"] = np.asarray(model["centroids"], dtype=np.float64)
     model["codebooks"] = np.asarray(model["codebooks"], dtype=np.float64)
     return enc, model
@@ -787,18 +723,18 @@ def ivfpq_append(
     rebuild trigger (rebuild = ivfpq_build + write_ivfpq_index, which
     replaces every generation).
 
-    Idempotent replay needs a STABLE generation id (review-caught): the
+    Idempotent replay needs a STABLE generation id: the
     auto-assigned id is derived from a directory listing, so a retry
     after a crash-between-commit-and-ack would land a SECOND generation
     with the same vectors. Orchestrated callers (foreachBatch, workflow
     retries) must pass ``append_id`` — the write then overwrites its own
     generation exactly like the dedup ingests' ``batch_id=N`` protocol.
-    Torn generations (no ``_SUCCESS``) are ignored by
+    Torn generations (no ``_GEN_COMMITTED`` marker: the session's
+    dynamic partition-overwrite mode skips ``_SUCCESS``) are ignored by
     :func:`read_ivfpq_index` and reclaimed by the next same-id retry.
 
     Returns ``{"append_id", "rows", "cells_touched", "max_cell_rows"}``.
     """
-    import json
     import os
 
     import numpy as np
@@ -825,7 +761,7 @@ def ivfpq_append(
             default=0,
         )
 
-    model = _read_model(spark, jvm, fs, path)
+    model = _read_model(spark, path)
     centroids = np.asarray(model["centroids"], dtype=np.float64)
     cb = np.asarray(model["codebooks"], dtype=np.float64)
 
@@ -835,7 +771,7 @@ def ivfpq_append(
     )
     enc = _encode_with_quantizers(
         c, centroids, cb,
-        residual=bool(model.get("residual", True)),
+        residual=bool(model["residual"]),
         deterministic=deterministic,
     )
     gen_dir = os.path.join(cells_root, f"append_id={next_id}")

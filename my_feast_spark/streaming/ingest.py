@@ -67,30 +67,6 @@ def _index_datasets(fs, root) -> list:
     ]
 
 
-def _legacy_index_layout(fs, jvm, index_path: str):
-    """Inspect a pre-marker index's actual on-disk layout. Returns
-    ``(has_data, bucketed, max_pbucket)`` aggregated over the index's
-    datasets (:data:`_INDEX_DATASETS`) when present, else the root
-    itself (exact ingest). Driver-side directory listing only, two
-    levels deep (generation dirs + their immediate ``pbucket=``
-    children) — never reads data files."""
-    root = jvm.org.apache.hadoop.fs.Path(index_path)
-    if not fs.exists(root):
-        return False, False, -1
-    has_data, bucketed, max_pb = False, False, -1
-    for d in _index_datasets(fs, root) or [root]:
-        for st in fs.listStatus(d):
-            if not st.getPath().getName().startswith("batch_id="):
-                continue
-            has_data = True
-            for sub in fs.listStatus(st.getPath()):
-                sname = sub.getPath().getName()
-                if sname.startswith("pbucket="):
-                    bucketed = True
-                    max_pb = max(max_pb, int(sname.split("=", 1)[1]))
-    return has_data, bucketed, max_pb
-
-
 def _ensure_index_meta(spark: SparkSession, index_path: str, meta: dict):
     """Pin an index's per-stream-lifetime layout choices (hash family,
     banding config, pbucket count) in a root marker and validate them
@@ -103,15 +79,10 @@ def _ensure_index_meta(spark: SparkSession, index_path: str, meta: dict):
     START, loudly, naming the key.
 
     Written atomically (hidden temp + rename) BEFORE the first batch;
-    idempotent across restarts. Pre-marker indexes (built before this
-    existed) are LAYOUT-CHECKED against their actual on-disk shape
-    before adoption: the bucketed-vs-flat axis and the bucket-count
-    lower bound are inferrable from the ``pbucket=`` directory
-    structure, so a resume whose ``index_buckets`` contradicts the data
-    fails loudly instead of silently never pruning/colliding. Only the
-    hash-family/banding axes stay unverifiable for that one legacy
-    generation — the adoption warns, names them, and records
-    ``legacy_adopted`` in the marker it stamps."""
+    idempotent across restarts. Because the marker precedes all data,
+    an index root that holds data but no marker was not laid out by
+    this driver: its layout is unknown, so the start raises ValueError
+    and writes no marker."""
     import json as _json
 
     sc = spark.sparkContext
@@ -139,44 +110,11 @@ def _ensure_index_meta(spark: SparkSession, index_path: str, meta: dict):
                 "match the stored config"
             )
         return
-    has_data, bucketed, max_pb = _legacy_index_layout(fs, jvm, index_path)
-    if has_data:
-        # pre-marker index: verify what the directory structure proves
-        req = meta.get("index_buckets")
-        if bucketed and not req:
-            raise ValueError(
-                f"index at {index_path!r} (pre-marker) is laid out as "
-                "pbucket= partition directories but the resuming stream "
-                "requested index_buckets=None — a flat probe against a "
-                "bucketed index breaks partition-column inference; pass "
-                "the original index_buckets or rebuild the index"
-            )
-        if req and not bucketed:
-            raise ValueError(
-                f"index at {index_path!r} (pre-marker) is FLAT but the "
-                f"resuming stream requested index_buckets={req} — a "
-                "bucketed probe would prune against partition "
-                "directories that do not exist and silently miss every "
-                "stored row; resume flat or rebuild the index"
-            )
-        if req and bucketed and max_pb >= req:
-            raise ValueError(
-                f"index at {index_path!r} (pre-marker) holds "
-                f"pbucket={max_pb} but the resuming stream requested "
-                f"index_buckets={req} (pbuckets must be < B) — the "
-                "bucket counts differ; match the original or rebuild"
-            )
-        import warnings as _warnings
-
-        _warnings.warn(
-            f"adopting pre-marker index at {index_path!r}: the "
-            "bucketed-vs-flat layout matches the on-disk structure, "
-            "but the hash-family/banding axes of its legacy generation "
-            "cannot be verified — a config change across that "
-            "generation would not be caught",
-            stacklevel=2,
+    if _fs_nonempty(spark, index_path):
+        raise ValueError(
+            f"index at {index_path!r} holds data but no {_INDEX_META} "
+            "marker, so its layout is unknown; rebuild the index"
         )
-        meta = {**meta, "legacy_adopted": True}
     fs.mkdirs(jvm.org.apache.hadoop.fs.Path(index_path))
     tmp = jvm.org.apache.hadoop.fs.Path(
         f"{index_path}/.{_INDEX_META}.tmp"
@@ -821,16 +759,20 @@ def near_dedup_ingest_stream(
     ``hash_fn`` (the index is engine-internal; pick hash_fn="portable"
     only if the SIGNATURES must replay elsewhere). The stored signatures
     are specific to the ``hash_fn`` family, so ``hash_fn`` is pinned per
-    index like ``index_buckets``. The "xxhash64" family's bit patterns
-    changed when it moved onto the Arrow fan-out: an index persisted
-    before that move must be rebuilt (or the stream pinned to
-    hash_fn="xxhash64_expr") before appending to it.
+    index like ``index_buckets``. ``hash_fn`` must be "xxhash64" or
+    "portable" (at most 64 hashes), else the start raises ValueError
+    before the index is pinned.
     Returns the started StreamingQuery.
     """
+    from my_feast_spark.operators.dedup import (
+        _check_minhash_family,
+        minhash_signature_array,
+    )
+
     if num_hashes % bands:
         raise ValueError("num_hashes must be divisible by bands")
+    _check_minhash_family(hash_fn, num_hashes)
     r = num_hashes // bands
-    from my_feast_spark.operators.dedup import minhash_signature_array
 
     def sign(batch_df: DataFrame) -> DataFrame:
         # array-native signatures: the index stores the array as-is
@@ -872,8 +814,7 @@ def near_dedup_ingest_stream(
         ),
         meta={
             "kind": "neardup_minhash",
-            # "numpy" is an alias of "xxhash64" (same fan-out family)
-            "hash_fn": "xxhash64" if hash_fn == "numpy" else hash_fn,
+            "hash_fn": hash_fn,
             "num_hashes": num_hashes,
             "bands": bands,
             "n": n,

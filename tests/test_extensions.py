@@ -516,31 +516,26 @@ def test_ivf_topk_blas_query_runs(spark):
 
 
 def test_minhash_numpy_signature_path_matches_xxhash64_pairs(spark, docs):
-    """The vectorized fan-out (the round-15 "xxhash64" default, alias
-    "numpy") and the legacy expression family ("xxhash64_expr") are
-    different hash families but the same LSH quality: on the planted
-    near-dup corpus (jaccard >= 0.9, capture probability ~1) both must
-    find exactly the same pairs — the exact-Jaccard verify keeps
+    """The two MinHash families ("xxhash64", the Arrow splitmix64
+    fan-out, and "portable", the Carter-Wegman family) have different
+    bit patterns but the same LSH quality: on the planted near-dup
+    corpus (jaccard >= 0.9, capture probability ~1) both must find
+    exactly the same 25 pairs — the exact-Jaccard verify keeps
     precision 1 in both."""
     a = {(r.doc_a, r.doc_b) for r in minhash_lsh_dup_pairs(
         docs, "doc_id", "text", n=3, threshold=0.5, hash_fn="xxhash64").collect()}
     b = {(r.doc_a, r.doc_b) for r in minhash_lsh_dup_pairs(
-        docs, "doc_id", "text", n=3, threshold=0.5, hash_fn="xxhash64_expr").collect()}
+        docs, "doc_id", "text", n=3, threshold=0.5, hash_fn="portable").collect()}
     assert a == b and len(a) == 25
 
-    # "xxhash64" and "numpy" are now the SAME path — signatures must be
-    # bit-identical, and a typo'd family name is loud
-    from my_feast_spark.operators.dedup import minhash_signatures
+    # any other family name is loud, for MinHash and SimHash alike
+    from my_feast_spark.operators.dedup import minhash_signatures, simhash
 
-    sa = sorted(map(tuple, minhash_signatures(
-        docs, "doc_id", "text", n=3, num_hashes=8, hash_fn="xxhash64"
-    ).collect()))
-    sb = sorted(map(tuple, minhash_signatures(
-        docs, "doc_id", "text", n=3, num_hashes=8, hash_fn="numpy"
-    ).collect()))
-    assert sa == sb
-    with pytest.raises(ValueError, match="unknown hash_fn"):
-        minhash_signatures(docs, "doc_id", "text", hash_fn="sha1").collect()
+    for bad in ("sha1", "numpy", "xxhash64_expr"):
+        with pytest.raises(ValueError, match="unknown hash_fn"):
+            minhash_signatures(docs, "doc_id", "text", hash_fn=bad).collect()
+        with pytest.raises(ValueError, match="unknown hash_fn"):
+            simhash(docs, "doc_id", "text", hash_fn=bad).collect()
 
 
 def test_minhash_signature_array_matches_column_view(spark, docs):
@@ -554,7 +549,7 @@ def test_minhash_signature_array_matches_column_view(spark, docs):
         minhash_signatures,
     )
 
-    for fam in ("xxhash64", "portable", "xxhash64_expr"):
+    for fam in ("xxhash64", "portable"):
         arr = {
             r.doc: tuple(r.__getitem__("__sig"))
             for r in minhash_signature_array(
@@ -571,15 +566,15 @@ def test_minhash_signature_array_matches_column_view(spark, docs):
 
 
 def test_simhash_numpy_fingerprints_bit_identical_to_xxhash64(spark, docs):
-    """The map-only Arrow SimHash (the "xxhash64" default since round
-    15) uses the same token hash and majority rule as the legacy
-    explode+aggregate shape ("xxhash64_expr") — fingerprints must be
-    bit-identical, not just similar, so the default flip changed no
-    output anywhere."""
-    from my_feast_spark.operators.dedup import simhash
+    """The map-only Arrow SimHash (the "xxhash64" family) uses the same
+    token hash and majority rule as the explode+aggregate shape over
+    xxhash64 token hashes — fingerprints must be bit-identical, not
+    just similar."""
+    from my_feast_spark.operators.dedup import _simhash_aggregate, simhash
 
     a = {r.doc: r.simhash for r in simhash(docs, "doc_id", "text", hash_fn="xxhash64").collect()}
-    b = {r.doc: r.simhash for r in simhash(docs, "doc_id", "text", hash_fn="xxhash64_expr").collect()}
+    b = {r.doc: r.simhash for r in _simhash_aggregate(
+        docs, "doc_id", "text", 64, F.xxhash64).collect()}
     assert a == b
 
 
@@ -964,17 +959,20 @@ WHERE (CAST((md5_number_lower(CAST(doc_id AS VARCHAR) || ':pareto')
 
 
 def test_simhash_null_text_drops_doc_in_every_family(spark):
-    """Review-caught regression guard: a NULL text row must be DROPPED
-    (the explode path's semantics) in every hash family — the Arrow
-    default must not crash the job on it."""
-    from my_feast_spark.operators.dedup import simhash
+    """A NULL text row must be DROPPED in every hash family and in the
+    explode+aggregate shape — the Arrow default must not crash the job
+    on it."""
+    from my_feast_spark.operators.dedup import _simhash_aggregate, simhash
 
     df = spark.createDataFrame(
         [Row(doc_id=1, text="alpha beta gamma"),
          Row(doc_id=2, text=None)],
         schema="doc_id long, text string",
     )
-    for fam in ("xxhash64", "xxhash64_expr", "portable"):
+    for fam in ("xxhash64", "portable"):
         got = {r.doc for r in simhash(df, "doc_id", "text",
                                       hash_fn=fam).collect()}
         assert got == {1}, fam
+    got = {r.doc for r in _simhash_aggregate(
+        df, "doc_id", "text", 64, F.xxhash64).collect()}
+    assert got == {1}

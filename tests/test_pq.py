@@ -634,35 +634,25 @@ def test_rebuild_stages_then_swaps_and_heals(spark, emb, tmp_path):
     assert ivfpq_search(enc2, model2, q, nprobe=4, k=3).count() > 0
 
     # (b) crash between delete and rename: cells root gone, a complete
-    # staging next door — the read path heals it into place. The
-    # crashed writer also never reached its legacy path/model write, so
-    # plant a STALE legacy copy: the heal must refresh it from the
-    # healed cells/_model (advice-caught — a pre-staging-layout reader
-    # must never pair an old quantizer with the healed codes).
-    import json as _json
-    import shutil as _shutil
-
+    # staging next door — the read path heals it into place
     os.rename(
         os.path.join(path, "cells"),
         os.path.join(path, "cells.staging-deadbeef"),
     )
-    legacy = os.path.join(path, "model")
-    _shutil.rmtree(legacy)
-    os.makedirs(legacy)
-    with open(os.path.join(legacy, "part-stale.json"), "w") as fh:
-        fh.write(_json.dumps({"model_json": _json.dumps({"stale": 1})}))
     enc3, model3 = read_ivfpq_index(spark, path)
     assert enc3.count() == n
     assert os.path.isdir(os.path.join(path, "cells"))
     assert model3["centroids"].shape[0] == 4
 
-    # the legacy copy was refreshed: a legacy-layout reader now sees
-    # the same quantizer the healed index carries
-    legacy_model = _json.loads(
-        spark.read.json(legacy).collect()[0].model_json
-    )
-    assert "stale" not in legacy_model
-    assert len(legacy_model["centroids"]) == 4
-
     # (c) quantizer state rides INSIDE the swapped root
     assert os.path.isdir(os.path.join(path, "cells", "_model"))
+
+    # (d) a cells root holding only cell=K directories (no committed
+    # append_id= generation) is not a layout the writer produces: the
+    # reader refuses it instead of serving unmarked parquet
+    flat = str(tmp_path / "flat_idx")
+    enc.repartition("cell").write.partitionBy("cell").parquet(
+        os.path.join(flat, "cells")
+    )
+    with pytest.raises(FileNotFoundError, match="no committed generations"):
+        read_ivfpq_index(spark, flat)

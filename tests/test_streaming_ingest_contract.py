@@ -1,7 +1,7 @@
 """The contract all three dedup ingests (exact, MinHash, embedding) share
-through one per-batch driver: start-time checks of ``index_buckets`` and
-``compact_every``, and exactly-once replay of a LATER batch while an
-older index generation exists."""
+through one per-batch driver: start-time checks of ``index_buckets``,
+``compact_every`` and the MinHash family, and exactly-once replay of a
+LATER batch while an older index generation exists."""
 
 from __future__ import annotations
 
@@ -78,6 +78,43 @@ def test_bad_index_buckets_and_compact_every_fail_at_start(
                 **kwargs, **{arg: value},
             )
         assert not os.path.exists(idx), "a rejected start pinned the index"
+
+
+@pytest.mark.parametrize(
+    "hash_fn, num_hashes",
+    [("sha1", 64), ("numpy", 64), ("portable", 128)],
+)
+def test_bad_minhash_family_fails_at_start(
+    spark, tmp_path, hash_fn, num_hashes
+):
+    """An unknown MinHash family, or more hashes than the "portable"
+    family has, raises at start, before the index is pinned: no index
+    root exists afterwards, so a corrected start on the same paths
+    ingests."""
+    in_dir = str(tmp_path / "incoming")
+    out = str(tmp_path / "out")
+    idx = str(tmp_path / "index")
+    ckpt = str(tmp_path / "ck")
+    os.makedirs(in_dir)
+    spark.createDataFrame(
+        [(1, BASE), (2, OTHER), (3, NEAR)], TEXT_SCHEMA
+    ).coalesce(1).write.parquet(in_dir, mode="append")
+    sdf = spark.readStream.schema(TEXT_SCHEMA).parquet(in_dir)
+    with pytest.raises(ValueError, match="hash_fn|portable family"):
+        near_dedup_ingest_stream(
+            sdf, out_path=out, index_path=idx, checkpoint=ckpt,
+            hash_fn=hash_fn, num_hashes=num_hashes, threshold=0.5,
+            available_now=True,
+        )
+    assert not os.path.exists(idx), "a rejected start pinned the index"
+
+    q = near_dedup_ingest_stream(
+        sdf, out_path=out, index_path=idx, checkpoint=ckpt,
+        hash_fn="xxhash64", threshold=0.5, available_now=True,
+    )
+    assert q.awaitTermination(300)
+    got = sorted(r.doc_id for r in spark.read.parquet(out).collect())
+    assert got == [1, 2]
 
 
 @pytest.mark.parametrize("index_buckets", [None, 8])

@@ -172,82 +172,13 @@ def test_bucketed_index_matches_flat_and_prunes(spark, tmp_path):
     assert pruned and pruned < every
 
 
-def test_legacy_index_adoption_is_layout_checked(spark, tmp_path):
-    """Pre-marker indexes (built before _mfs_index_meta.json existed)
-    used to adopt the resuming stream's config silently — the r15
-    verdict's "one unverifiable generation". The bucketed-vs-flat axis
-    IS verifiable from the pbucket= directory structure, so a resume
-    that contradicts it must fail loudly, including AFTER a standalone
-    compaction has rewritten the generations (the verdict's ask-5
-    scenario)."""
-    import pytest as _pytest
-
-    from my_feast_spark.streaming.ingest import compact_ingest_indexes
-
-    in_dir = str(tmp_path / "incoming")
-    out = str(tmp_path / "corpus")
-    idx = str(tmp_path / "fp_index")
-    os.makedirs(in_dir)
-    spark.createDataFrame([
-        Row(doc_id=1, text="alpha beta"),
-        Row(doc_id=2, text="gamma delta"),
-        Row(doc_id=3, text="epsilon zeta"),
-    ]).coalesce(1).write.mode("append").parquet(in_dir)
-
-    # build a FLAT index, then simulate a pre-marker generation by
-    # deleting the marker, and age it through a standalone compaction
-    _run_available(spark, in_dir, out, idx, str(tmp_path / "ck1"))
-    marker = os.path.join(idx, "_mfs_index_meta.json")
-    os.remove(marker)
-    spark.createDataFrame(
-        [Row(doc_id=4, text="eta theta")]
-    ).coalesce(1).write.mode("append").parquet(in_dir)
-    _run_available(spark, in_dir, out, idx, str(tmp_path / "ck1"))
-    os.remove(marker)
-    compact_ingest_indexes(spark, idx)
-    assert not os.path.exists(marker)
-
-    # resuming the legacy FLAT index with a bucketed config is loud
-    sdf = spark.readStream.schema("doc_id long, text string").parquet(
-        in_dir
-    )
-    with _pytest.raises(ValueError, match="FLAT"):
-        dedup_ingest_stream(
-            sdf, out_path=out, index_path=idx,
-            checkpoint=str(tmp_path / "ck2"),
-            index_buckets=8, available_now=True,
-        )
-    assert not os.path.exists(marker), "failed start must not stamp"
-
-    # a layout-consistent resume adopts — with a warning and a stamped
-    # marker recording the adoption
-    import json as _json
-    import warnings as _warnings
-
-    with _warnings.catch_warnings(record=True) as caught:
-        _warnings.simplefilter("always")
-        _run_available(spark, in_dir, out, idx, str(tmp_path / "ck3"))
-    assert any("pre-marker" in str(w.message) for w in caught)
-    stamped = _json.load(open(marker))
-    assert stamped["legacy_adopted"] is True
-    assert stamped["index_buckets"] is None
-
-    # ... and from now on the marker governs: a later bucketed resume
-    # fails on the stored contract, not the inference
-    with _pytest.raises(ValueError, match="different layout"):
-        dedup_ingest_stream(
-            sdf, out_path=out, index_path=idx,
-            checkpoint=str(tmp_path / "ck4"),
-            index_buckets=8, available_now=True,
-        )
-
-
-def test_legacy_bucketed_index_rejects_flat_and_wrong_B(spark, tmp_path):
-    """The other direction of the layout check: a pre-marker BUCKETED
-    index must reject a flat resume and a bucket count the observed
-    pbucket= values already exceed."""
-    import pytest as _pytest
-
+@pytest.mark.parametrize("index_buckets", [None, 4], ids=["flat", "buckets4"])
+def test_index_without_marker_fails_at_start(spark, tmp_path, index_buckets):
+    """The ingest driver writes _mfs_index_meta.json before batch 0, so
+    an index root that holds data without it was not laid out by the
+    driver and its layout is unknown. A start on it, with either
+    layout, raises; it stamps no marker and leaves the data as it
+    was."""
     in_dir = str(tmp_path / "incoming")
     out = str(tmp_path / "corpus")
     idx = str(tmp_path / "fp_index")
@@ -262,31 +193,27 @@ def test_legacy_bucketed_index_rejects_flat_and_wrong_B(spark, tmp_path):
     q = dedup_ingest_stream(
         sdf, out_path=out, index_path=idx,
         checkpoint=str(tmp_path / "ck1"),
-        index_buckets=4, available_now=True,
+        index_buckets=index_buckets, available_now=True,
     )
     assert q.awaitTermination(120)
     marker = os.path.join(idx, "_mfs_index_meta.json")
     os.remove(marker)
 
-    with _pytest.raises(ValueError, match="pbucket= partition"):
-        dedup_ingest_stream(
-            sdf, out_path=out, index_path=idx,
-            checkpoint=str(tmp_path / "ck2"), available_now=True,
+    def files():
+        return sorted(
+            (os.path.relpath(os.path.join(d, f), idx),
+             os.path.getsize(os.path.join(d, f)))
+            for d, _, fs in os.walk(idx) for f in fs
         )
-    # 8 docs over 4 buckets: some pbucket >= 2 exists with near
-    # certainty; compute the bound from the directory names to keep the
-    # assertion deterministic
-    pbs = [
-        int(d.split("=", 1)[1])
-        for bd in os.listdir(idx) if bd.startswith("batch_id=")
-        for d in os.listdir(os.path.join(idx, bd))
-        if d.startswith("pbucket=")
-    ]
-    too_small = max(pbs)  # any B <= max observed pbucket must fail
-    if too_small >= 1:
-        with _pytest.raises(ValueError, match="bucket counts differ"):
+
+    before = files()
+    assert any(f.endswith(".parquet") for f, _ in before)
+    for restart in (index_buckets, 8 if index_buckets is None else None):
+        with pytest.raises(ValueError, match="no _mfs_index_meta.json"):
             dedup_ingest_stream(
                 sdf, out_path=out, index_path=idx,
-                checkpoint=str(tmp_path / "ck3"),
-                index_buckets=too_small, available_now=True,
+                checkpoint=str(tmp_path / "ck2"),
+                index_buckets=restart, available_now=True,
             )
+        assert not os.path.exists(marker), "failed start must not stamp"
+        assert files() == before, "failed start touched the index"

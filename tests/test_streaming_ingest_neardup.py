@@ -237,7 +237,7 @@ def test_index_meta_pins_layout_choices(spark, tmp_path):
         near_dedup_ingest_stream(
             sdf, out_path=out, index_path=idx,
             checkpoint=str(tmp_path / "ck3"),
-            threshold=0.5, hash_fn="xxhash64_expr", available_now=True,
+            threshold=0.5, hash_fn="portable", available_now=True,
         )
     # ...and so is flipping index_buckets
     with _pytest.raises(ValueError, match="different layout"):
