@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from my_feast_spark.operators.similarity import train_ivf_centroids
+from my_feast_spark.sources.generations import committed, publish
 from my_feast_spark.sources.readers import spread_partitions
 
 
@@ -196,8 +197,8 @@ def query_luts(codebooks, vecs, *, normalize: bool = True):
 def _adc_dist(m: int, kc: int, codes_col: str):
     """The ADC fold expression: dist = sum_j ``__lut[j*k + codes[j]]``
     (element_at is 1-based), summed LEFT-TO-RIGHT so an oracle can
-    replay the exact double-fold order. Unrolled over the STATIC m
-    (r17, guide §4.1): the sequence/transform/aggregate HOF chain is
+    replay the exact double-fold order. Unrolled over the STATIC m:
+    the sequence/transform/aggregate HOF chain is
     CodegenFallback — interpreted once per (corpus row x query), the
     hottest expression of the ADC scan — while this flat Add tree is
     the identical left-to-right double fold (seed 0.0) compiled by
@@ -513,58 +514,49 @@ def ivfpq_build(
 
 def write_ivfpq_index(enc: DataFrame, model: dict, path: str) -> None:
     """Persist the IVFADC index CELL-PARTITIONED with an append
-    generation axis: ``path/cells`` holds the (corpus_id, codes) rows
-    under ``append_id=N/cell=K`` partition directories (the initial
-    build is generation 0; :func:`ivfpq_append` adds generations — the
-    ingest-family idempotent-overwrite protocol), and
-    ``path/cells/_model`` the quantizer state as a single JSON row, so
-    codes and quantizers move together. The cell layout is the
+    generation axis: ``path/cells`` is a generation root
+    (``sources.generations``) whose ``append_id=N/cell=K`` directories
+    hold the (corpus_id, codes) rows — the build is generation 0 and
+    :func:`ivfpq_append` publishes the later ones — and
+    ``path/cells/_model`` holds the quantizer state as a single JSON
+    row, so codes and quantizers move together. The cell layout is the
     point: a probe batch touching ``p`` distinct cells reads
     ``p/num_cells`` of the index via directory-level partition pruning
     REGARDLESS of how many generations exist (the cell filter prunes
     inside every generation) — the serving-tier analogue of the
-    streaming dedup index's pbucket layout."""
+    streaming dedup index's pbucket layout.
+
+    A (re)build REPLACES every generation (appends encoded with the OLD
+    quantizers must never meet the new model) without destroying the
+    serving index first: it publishes generation 0, codes and model,
+    into a fresh staging root and swaps that in with delete + rename; a
+    crash between the two is healed by the read path (``_cells_root``).
+    """
     import json
     import os
     import uuid as _uuid
 
     spark = enc.sparkSession
     cells_root = os.path.join(path, "cells")
-    # A (re)build REPLACES the whole index — every prior generation, not
-    # just the partitions present in this build (the session's DYNAMIC
-    # partition-overwrite mode would only replace append_id=0 and leave
-    # ivfpq_append generations, encoded with the OLD quantizers, to be
-    # unioned against the new model — silent result corruption). And it
-    # must not DESTROY the serving index before the replacement exists
-    # (a delete-then-write rebuild that crashes mid-write would leave
-    # nothing to serve). So: stage the complete new layout —
-    # codes AND the quantizer state, under one root so they can never
-    # be observed mismatched — then swap with delete+rename; the
-    # no-index window is two metadata ops, and a crash inside it is
-    # healed by the read path (a committed staging root is renamed into
-    # place on the next read/append).
     jvm = spark.sparkContext._jvm
     hp = jvm.org.apache.hadoop.fs.Path(cells_root)
     fs = hp.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
     staging = os.path.join(path, f"cells.staging-{_uuid.uuid4().hex[:8]}")
-    (
-        enc.withColumn("append_id", F.lit(0))
-        .repartition("cell")
-        .write.mode("overwrite")
-        .partitionBy("append_id", "cell")
-        .parquet(staging)
-    )
-    spark.createDataFrame(
-        [(json.dumps(model),)], ["model_json"]
-    ).coalesce(1).write.mode("overwrite").json(
-        os.path.join(staging, "_model")
-    )
-    _mark_generation_committed(spark, staging, 0)
+
+    def write(gen_dir: str) -> None:
+        enc.repartition("cell").write.partitionBy("cell").parquet(gen_dir)
+        spark.createDataFrame(
+            [(json.dumps(model),)], ["model_json"]
+        ).coalesce(1).write.mode("overwrite").json(
+            os.path.join(staging, "_model")
+        )
+
+    publish(staging, "append_id", 0, write)
     if fs.exists(hp):
         fs.delete(hp, True)
     if not fs.rename(jvm.org.apache.hadoop.fs.Path(staging), hp):
         # single-writer is the contract, but a concurrent READER's
-        # _heal_staged_index can legitimately win this rename inside
+        # _cells_root can legitimately win this rename inside
         # the delete->rename window (it saw no cells root and renamed
         # OUR completed staging into place). The index landed either
         # way — only fail when no cells root exists afterwards.
@@ -590,54 +582,36 @@ def write_ivfpq_index(enc: DataFrame, model: dict, path: str) -> None:
             fs.delete(st.getPath(), True)
 
 
-#: explicit per-generation commit marker: the session's DYNAMIC
-#: partition-overwrite mode skips Hadoop's _SUCCESS for partitioned
-#: writes, so generation visibility needs its own marker
-_GEN_MARKER = "_GEN_COMMITTED"
-
 #: crashed-staging cleanup grace: a cells.staging-* directory younger
 #: than this may belong to a live concurrent build and is left alone
 _STAGING_GRACE_SECONDS = 900.0
 
 
-def _mark_generation_committed(spark, cells_root: str, gen: int) -> None:
-    sc = spark.sparkContext
-    jvm = sc._jvm
-    mp = jvm.org.apache.hadoop.fs.Path(
-        f"{cells_root}/append_id={gen}/{_GEN_MARKER}"
-    )
-    fs = mp.getFileSystem(sc._jsc.hadoopConfiguration())
-    fs.create(mp, True).close()
-
-
-def _heal_staged_index(jvm, fs, path: str) -> bool:
-    """Finish a rebuild that crashed between delete and rename: if the
-    cells root is missing but a COMPLETE staged build exists (its
-    generation-0 marker present), rename the newest one into place.
-    Returns True when a cells root exists afterwards."""
+def _cells_root(spark, path: str) -> str:
+    """``path/cells``; when it is missing (a rebuild crashed between
+    delete and rename) the newest staged build with generation 0
+    committed is renamed into place first. FileNotFoundError if none."""
     import os
 
-    pp = jvm.org.apache.hadoop.fs.Path(path)
-    if not fs.exists(pp):
-        return False
-    best = None
-    for st in fs.listStatus(pp):
-        name = st.getPath().getName()
-        if not name.startswith("cells.staging-"):
-            continue
-        marker = jvm.org.apache.hadoop.fs.Path(
-            st.getPath(), f"append_id=0/{_GEN_MARKER}"
+    Path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    cells_root = os.path.join(path, "cells")
+    dest = Path(cells_root)
+    fs = dest.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    if not fs.exists(dest) and fs.exists(Path(path)):
+        staged = [
+            st for st in fs.listStatus(Path(path))
+            if st.getPath().getName().startswith("cells.staging-")
+            and [n for n, _ in committed(str(st.getPath()), "append_id")]
+            == [0]
+        ]
+        if staged:  # a concurrent healer may win the rename: fine
+            newest = max(staged, key=lambda st: st.getModificationTime())
+            fs.rename(newest.getPath(), dest)
+    if not fs.exists(dest):
+        raise FileNotFoundError(
+            f"no index at {path}; build one with write_ivfpq_index first"
         )
-        if fs.exists(marker) and (
-            best is None
-            or st.getModificationTime() > best.getModificationTime()
-        ):
-            best = st
-    dest = jvm.org.apache.hadoop.fs.Path(os.path.join(path, "cells"))
-    if best is None:
-        return fs.exists(dest)
-    # a concurrent healer may win the rename — either way the root exists
-    return fs.rename(best.getPath(), dest) or fs.exists(dest)
+    return cells_root
 
 
 def _read_model(spark, path: str) -> dict:
@@ -652,35 +626,15 @@ def _read_model(spark, path: str) -> dict:
 
 def read_ivfpq_index(spark, path: str):
     """Load ``(enc, model)`` written by :func:`write_ivfpq_index` (+ any
-    :func:`ivfpq_append` generations) — ``enc`` scans the partitioned
-    layout, so downstream probe filters prune cell directories."""
-    import os
-
+    :func:`ivfpq_append` generations) — ``enc`` scans the committed
+    generations with ``basePath``, so downstream probe filters prune
+    cell directories. A torn append (no commit marker) never serves."""
     import numpy as np
 
-    # committed generations only: a torn append (crash mid-write, no
-    # _GEN_COMMITTED marker) must not serve half its vectors
-    sc = spark.sparkContext
-    jvm = sc._jvm
-    cells_root = os.path.join(path, "cells")
-    hp = jvm.org.apache.hadoop.fs.Path(cells_root)
-    fs = hp.getFileSystem(sc._jsc.hadoopConfiguration())
-    if not fs.exists(hp):
-        # a rebuild that crashed between delete and rename left a
-        # complete staged build next door — finish its swap
-        if not _heal_staged_index(jvm, fs, path):
-            raise FileNotFoundError(f"no index at {path}")
-    gen_dirs = [
-        os.path.join(cells_root, st.getPath().getName())
-        for st in fs.listStatus(hp)
-        if st.getPath().getName().startswith("append_id=")
-        and fs.exists(
-            jvm.org.apache.hadoop.fs.Path(st.getPath(), _GEN_MARKER)
-        )
-    ]
+    cells_root = _cells_root(spark, path)
+    gen_dirs = [p for _, p in committed(cells_root, "append_id")]
     if not gen_dirs:
-        # a build that crashed before _GEN_COMMITTED, or a root this
-        # writer did not lay out: serving it would expose parquet no
+        # no committed generation: serving it would expose parquet no
         # commit marker vouches for
         raise FileNotFoundError(
             f"no committed generations under {cells_root} — torn build "
@@ -708,10 +662,9 @@ def ivfpq_append(
 ) -> dict:
     """Append new vectors to a persisted IVFADC index WITHOUT
     retraining: encode them with the index's frozen quantizer state
-    (one Arrow pass) and write a fresh ``append_id=N`` generation under
-    ``path/cells`` — the index-tier analogue of the dedup ingests'
-    idempotent per-batch partitions (a replayed append with the same
-    generation id overwrites its own directory, never duplicates).
+    (one Arrow pass) and publish a fresh ``append_id=N`` generation
+    under ``path/cells`` (``sources.generations.publish``) — the
+    index-tier analogue of the dedup ingests' per-batch generations.
 
     Frozen quantizers are the IVF contract: cell centroids and PQ
     codebooks must not move under an existing index or every persisted
@@ -723,42 +676,28 @@ def ivfpq_append(
     rebuild trigger (rebuild = ivfpq_build + write_ivfpq_index, which
     replaces every generation).
 
-    Idempotent replay needs a STABLE generation id: the
-    auto-assigned id is derived from a directory listing, so a retry
-    after a crash-between-commit-and-ack would land a SECOND generation
-    with the same vectors. Orchestrated callers (foreachBatch, workflow
-    retries) must pass ``append_id`` — the write then overwrites its own
-    generation exactly like the dedup ingests' ``batch_id=N`` protocol.
-    Torn generations (no ``_GEN_COMMITTED`` marker: the session's
-    dynamic partition-overwrite mode skips ``_SUCCESS``) are ignored by
-    :func:`read_ivfpq_index` and reclaimed by the next same-id retry.
+    Idempotent replay needs a STABLE generation id: the auto-assigned
+    id is 1 + the highest committed id, so a retry after a
+    crash-between-commit-and-ack would land a SECOND generation with
+    the same vectors. Orchestrated callers (foreachBatch, workflow
+    retries) must pass ``append_id``: a retry then replaces its whole
+    generation — every cell, not only the cells it writes again. A torn
+    append (crash before its commit marker) never serves, and the next
+    append with its id (the retry, or the next auto-assigned append)
+    overwrites it.
 
     Returns ``{"append_id", "rows", "cells_touched", "max_cell_rows"}``.
     """
-    import os
-
     import numpy as np
 
-    jvm = spark.sparkContext._jvm
-    cells_root = os.path.join(path, "cells")
-    hp = jvm.org.apache.hadoop.fs.Path(cells_root)
-    fs = hp.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    if not fs.exists(hp) and not _heal_staged_index(jvm, fs, path):
-        raise FileNotFoundError(
-            f"no index at {path}; build one with write_ivfpq_index first"
-        )
+    cells_root = _cells_root(spark, path)
     if append_id is not None:
         next_id = append_id
         if next_id < 1:
             raise ValueError("append_id must be >= 1 (0 is the build)")
     else:
         next_id = 1 + max(
-            (
-                int(st.getPath().getName().split("=", 1)[1])
-                for st in fs.listStatus(hp)
-                if st.getPath().getName().startswith("append_id=")
-            ),
-            default=0,
+            (n for n, _ in committed(cells_root, "append_id")), default=0
         )
 
     model = _read_model(spark, path)
@@ -774,11 +713,10 @@ def ivfpq_append(
         residual=bool(model["residual"]),
         deterministic=deterministic,
     )
-    gen_dir = os.path.join(cells_root, f"append_id={next_id}")
-    enc.repartition("cell").write.mode("overwrite").partitionBy(
-        "cell"
-    ).parquet(gen_dir)
-    _mark_generation_committed(spark, cells_root, next_id)
+    gen_dir = publish(
+        cells_root, "append_id", next_id,
+        enc.repartition("cell").write.partitionBy("cell").parquet,
+    )
 
     per_cell = (
         spark.read.parquet(gen_dir)

@@ -37,6 +37,12 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from my_feast_spark.functions.scalar import floor_round
+from my_feast_spark.sources.generations import (
+    committed,
+    fold,
+    heal,
+    publish,
+)
 
 _memory_table_ids = itertools.count()
 
@@ -52,19 +58,6 @@ _INDEX_DATASETS = {
     "neardup_minhash": ("sigs", "bands"),
     "embedding_lsh": ("vecs", "buckets"),
 }
-
-
-def _index_datasets(fs, root) -> list:
-    """Hadoop paths of the known index datasets present under the index
-    root ``root`` — empty for an exact-ingest index or a missing root."""
-    if not fs.exists(root):
-        return []
-    known = {d for ds in _INDEX_DATASETS.values() for d in ds}
-    return [
-        st.getPath()
-        for st in fs.listStatus(root)
-        if st.isDirectory() and st.getPath().getName() in known
-    ]
 
 
 def _ensure_index_meta(spark: SparkSession, index_path: str, meta: dict):
@@ -446,9 +439,6 @@ class _IndexBatch:
         self.index_buckets = index_buckets
         self.live: list[DataFrame] = []
 
-    def _own(self, root: str) -> str:
-        return os.path.join(root, f"batch_id={self.batch_id}")
-
     def _pbucket(self, *cols: str) -> Column:
         return F.pmod(F.xxhash64(*cols), F.lit(self.index_buckets))
 
@@ -458,13 +448,18 @@ class _IndexBatch:
         self.live.append(df)
         return df
 
-    def seen(self, path: str, probe: DataFrame, *cols: str) -> DataFrame:
-        """The index dataset at ``path`` without this batch's own
-        generation; bucketed, pruned to the pbuckets that ``probe``'s
-        ``cols`` hash into (one small job)."""
-        seen = self.spark.read.parquet(path).filter(
-            F.col("batch_id") != self.batch_id
-        )
+    def seen(
+        self, path: str, probe: DataFrame, *cols: str
+    ) -> DataFrame | None:
+        """The committed generations of the index dataset at ``path``
+        but this batch's own (None when there are none); bucketed,
+        pruned to the pbuckets ``probe``'s ``cols`` hash into."""
+        gens = [
+            p for n, p in committed(path, "batch_id") if n != self.batch_id
+        ]
+        if not gens:
+            return None
+        seen = self.spark.read.option("basePath", path).parquet(*gens)
         if self.index_buckets:
             pbs = [
                 r.pb
@@ -477,21 +472,19 @@ class _IndexBatch:
 
     def write_output(self, accepted: DataFrame) -> DataFrame:
         """Overwrite this batch's output directory; returns it read back."""
-        out = self._own(self.out_path)
+        out = os.path.join(self.out_path, f"batch_id={self.batch_id}")
         accepted.write.mode("overwrite").parquet(out)
         return self.spark.read.parquet(out)
 
     def write_index(self, path: str, rows: DataFrame, *cols: str) -> None:
-        """Overwrite this batch's generation of the index dataset at
+        """Publish this batch's generation of the index dataset at
         ``path``; bucketed, partitioned by the pbucket of ``cols``."""
-        writer = rows.write.mode("overwrite")
+        writer = rows.write
         if self.index_buckets:
             writer = rows.withColumn(
                 "pbucket", self._pbucket(*cols)
-            ).repartition("pbucket").write.mode("overwrite").partitionBy(
-                "pbucket"
-            )
-        writer.parquet(self._own(path))
+            ).repartition("pbucket").write.partitionBy("pbucket")
+        publish(path, "batch_id", self.batch_id, writer.parquet)
 
 
 def _start_dedup_ingest(
@@ -518,18 +511,20 @@ def _start_dedup_ingest(
     an int >= 1, else ValueError. ``meta`` plus ``index_buckets`` is then
     pinned in the index root's marker (:func:`_ensure_index_meta`), so a
     restart with another layout fails at start, before any batch runs.
+    Each index dataset is then healed (``sources.generations.heal``),
+    which raises ValueError on a root this engine did not lay out.
 
     Crash replay: ``foreachBatch`` is at-least-once, so a crash between
     the sink writes and the streaming commit replays the batch under the
     same batch id. Three rules make the replay exactly-once:
 
-      * every write overwrites the batch's own ``batch_id=N`` directory
-        (the output and each index dataset), so a replay rewrites
-        instead of appending;
-      * every index read excludes generation ``N`` itself
-        (``batch_id != N``), so a replay never dedups against its own
-        earlier rows and overwrites its output with nothing; compacted
-        generations have negative ids and never match the guard;
+      * the output overwrites the batch's own ``batch_id=N`` directory
+        and each index dataset publishes generation ``N`` (clear,
+        write, then mark), so a replay rewrites instead of appending;
+      * every index read takes the committed generations except ``N``
+        itself, so a replay never dedups against its own earlier rows
+        and overwrites its output with nothing; compacted generations
+        have negative ids and never match the guard;
       * index rows derive from the WRITTEN output, so a replay
         regenerates identical index partitions.
 
@@ -564,6 +559,8 @@ def _start_dedup_ingest(
     dirs = [
         os.path.join(index_path, d) for d in _INDEX_DATASETS[meta["kind"]]
     ] or [index_path]
+    for d in dirs:
+        heal(d, "batch_id")
 
     def ingest_batch(batch_df: DataFrame, batch_id: int) -> None:
         from my_feast_spark.operators.graph import release_checkpoint
@@ -618,10 +615,12 @@ def _candidate_verify(
             ]),
         ).select(F.col("a.doc").alias("dom"), F.col("b.doc").alias("doc"))
         own = payloads = signed.select("doc", payload)
-        if _fs_nonempty(ix.spark, keys_dir):
+        seen_keys = ix.seen(keys_dir, rows, *keys)
+        if seen_keys is None:
+            cand = cand.distinct()
+        else:
             cand = cand.union(
-                ix.seen(keys_dir, rows, *keys)
-                .select(F.col("doc").alias("dom"), *keys)
+                seen_keys.select(F.col("doc").alias("dom"), *keys)
                 .join(rows, keys)
                 .select("dom", "doc")
             ).distinct()
@@ -629,11 +628,11 @@ def _candidate_verify(
                 # only the dominators' payloads are read: pin the
                 # (batch-sized) candidates and prune to their pbuckets
                 cand = ix.pin(cand)
-            payloads = payloads.union(
-                ix.seen(payload_dir, cand, "dom").select("doc", payload)
-            )
-        else:
-            cand = cand.distinct()
+            seen_payloads = ix.seen(payload_dir, cand, "dom")
+            if seen_payloads is not None:
+                payloads = payloads.union(
+                    seen_payloads.select("doc", payload)
+                )
         dominated = (
             cand
             .join(payloads.select(F.col("doc").alias("dom"),
@@ -696,8 +695,8 @@ def dedup_ingest_stream(
             .filter(F.col("__rn") == 1)
             .drop("__rn")
         )
-        if _fs_nonempty(ix.spark, index_dir):
-            seen = ix.seen(index_dir, fresh, "fingerprint")
+        seen = ix.seen(index_dir, fresh, "fingerprint")
+        if seen is not None:
             fresh = fresh.join(
                 seen.select("fingerprint"), "fingerprint", "left_anti"
             )
@@ -919,81 +918,40 @@ def embedding_dedup_ingest_stream(
 def compact_index(
     spark: SparkSession, index_dir: str, *, exclude_from: int | None = None
 ) -> dict:
-    """Consolidate an ingest index's per-batch partitions into ONE
-    generation directory — the maintenance op for the one unbounded
-    cost the streaming ingests carry: every micro-batch appends a
-    ``batch_id=N`` directory forever, so while the DATA each batch
-    reads stays pruned (pbucket partition filters), the directory
-    LISTING per batch and the small-file count grow linearly with
-    stream lifetime (~175k dirs/year at a 3-minute trigger).
+    """Fold an ingest index's per-batch generations into ONE — the
+    maintenance op for the one cost that grows with stream LIFETIME:
+    pruned reads stay batch-sized, but the listing per batch and the
+    small-file count grow with one ``batch_id=N`` generation per batch
+    (~175k dirs/year at a 3-minute trigger).
 
-    Mechanics: the rows of EVERY mergeable generation — live
-    non-negative batch dirs AND previously-compacted negative ones —
-    are rewritten (dropDuplicates — set semantics hold for all three
-    ingest index kinds) into a FRESH generation
-    ``batch_id = min(mergeable ∪ {0}) - 1``, strictly below every id
-    that exists; the source directories are then deleted. The fresh
-    negative generation id keeps every ingest invariant intact:
+    It is the set fold of ``sources.generations.fold``: every committed
+    generation (live batches AND earlier folds) is merged with
+    dropDuplicates — set semantics hold for the three ingest index
+    kinds, the HLL/KMV sketches and the SCD2 event log — into a fresh
+    negative generation, keeping the ``pbucket`` (ingest) or ``__kb``
+    (SCD2 log) partitioning so pruning survives. Reads are exact at
+    every crash point; the next fold or stream start heals. The replay
+    guard ``batch_id != current`` never matches a folded generation.
 
-      * the replay guard ``batch_id != current`` never matches a
-        compacted generation (live ids are non-negative);
-      * the target NEVER pre-exists, so the consolidated write is never
-        an overwrite of a directory it also reads — and, crucially, the
-        merge input always INCLUDES every earlier compacted generation,
-        so no interruption point can strand rows in a directory the
-        next run replaces without reading (were the target an existing
-        generation, a crash after deleting every live source would
-        leave only negative generations, and the next run would
-        overwrite the newest superset with an older subset);
-      * a crash ANYWHERE between the consolidated write and the last
-        source delete leaves rows duplicated across generations —
-        harmless to the dedup semantics (anti-joins and candidate
-        generation are set-shaped) and fully healed by re-running
-        compact_index, which merges the leftover generations (superset
-        included) into the next fresh id. Healing is idempotent in
-        content; generation ids decrease by one per run (64-bit — no
-        practical exhaustion).
+    Run it between micro-batches (one writer per dataset) on each index
+    dataset — the exact ingest's ``index_path``; ``bands/`` + ``sigs/``
+    (MinHash); ``buckets/`` + ``vecs/`` (embedding); see
+    :func:`compact_ingest_indexes`. ``exclude_from`` (the ingests'
+    ``compact_every``) leaves every generation ``>= exclude_from``
+    alone: folding the CURRENT batch would defeat the replay guard.
 
-    Run it from a maintenance schedule (e.g. every k-th batch or daily)
-    against each index dataset — the exact ingest's ``index_path``
-    itself; ``bands/`` + ``sigs/`` for the MinHash ingest; ``buckets/``
-    + ``vecs/`` for the embedding ingest (see
-    :func:`compact_ingest_indexes`). Concurrency: schedule it BETWEEN
-    micro-batches (e.g. from the same foreachBatch driver every k
-    batches) — it rewrites history while a live batch may be appending
-    its own new ``batch_id=N``, which compaction never touches (ids >
-    the observed high-water are excluded), but two compactors racing
-    the same dataset would double-delete.
-
-    ``exclude_from`` (the in-stream auto-compaction path — the ingests'
-    ``compact_every``) leaves every generation with ``batch_id >=
-    exclude_from`` untouched: folding the CURRENT batch's rows into a
-    negative generation would defeat the crash-replay guard
-    (``batch_id != current`` no longer excludes them, so a replayed
-    batch would anti-join against its own output and destroy it).
-
-    Returns stats: ``{"generations_before", "files_before",
-    "generation", "rows", "files_after"}``; a no-op (0 or 1 mergeable
-    generation) returns early with ``generation=None``.
+    Returns ``{"generations_before", "files_before", "generation",
+    "rows", "files_after"}``; ``generation`` is None when fewer than
+    two generations were mergeable.
     """
     sc = spark.sparkContext
-    jvm = sc._jvm
-    root = jvm.org.apache.hadoop.fs.Path(index_dir)
+    root = sc._jvm.org.apache.hadoop.fs.Path(index_dir)
     fs = root.getFileSystem(sc._jsc.hadoopConfiguration())
-    if not fs.exists(root):
-        return {"generations_before": 0, "files_before": 0,
-                "generation": None, "rows": 0, "files_after": 0}
-
-    def _gen_ids():
-        ids = []
-        for st in fs.listStatus(root):
-            name = st.getPath().getName()
-            if name.startswith("batch_id="):
-                ids.append(int(name.split("=", 1)[1]))
-        return ids
 
     def _count_files():
         n = 0
+        if not fs.exists(root):
+            return n
         it = fs.listFiles(root, True)
         while it.hasNext():
             f = it.next()
@@ -1001,48 +959,32 @@ def compact_index(
                 n += 1
         return n
 
-    ids = _gen_ids()
+    live = [n for n, _ in committed(index_dir, "batch_id")]
     files_before = _count_files()
-    mergeable = [
-        i for i in ids if exclude_from is None or i < exclude_from
-    ]
-    if len(mergeable) <= 1:
-        return {"generations_before": len(ids),
-                "files_before": files_before, "generation": None,
-                "rows": 0, "files_after": files_before}
-    # Fresh target strictly below every existing generation: the write
-    # never overwrites a directory it reads, and the merge input is ALL
-    # mergeable generations — including an earlier compaction's output —
-    # so no crash/restart interleaving can drop index rows.
-    target = min(mergeable + [0]) - 1
-    sources = mergeable
+    rows = 0
 
-    df = spark.read.parquet(index_dir)
-    merged = df.filter(
-        F.col("batch_id").isin(sources)
-    ).drop("batch_id").dropDuplicates()
-    out = os.path.join(index_dir, f"batch_id={target}")
-    # preserve whichever bucket partitioning the dataset carries so
-    # partition pruning keeps working after compaction: "pbucket" for
-    # the ingest indexes, "__kb" for the streaming-SCD2 event log
-    part_col = next(
-        (c for c in ("pbucket", "__kb") if c in merged.columns), None
-    )
-    if part_col:
-        merged.repartition(part_col).write.mode("overwrite").partitionBy(
-            part_col
-        ).parquet(out)
-    else:
-        merged.coalesce(1).write.mode("overwrite").parquet(out)
-    rows = spark.read.parquet(out).count()
-    for i in sources:
-        fs.delete(
-            jvm.org.apache.hadoop.fs.Path(
-                os.path.join(index_dir, f"batch_id={i}")
-            ),
-            True,
+    def merge(out: str, sources: list) -> None:
+        nonlocal rows
+        merged = (
+            spark.read.option("basePath", index_dir).parquet(*sources)
+            .drop("batch_id").dropDuplicates()
         )
-    return {"generations_before": len(ids), "files_before": files_before,
+        part_col = next(
+            (c for c in ("pbucket", "__kb") if c in merged.columns), None
+        )
+        if part_col:
+            merged = merged.repartition(part_col)
+            merged.write.partitionBy(part_col).parquet(out)
+        else:
+            merged.coalesce(1).write.parquet(out)
+        rows = spark.read.parquet(out).count()
+
+    target = fold(
+        index_dir, "batch_id",
+        [n for n in live if exclude_from is None or n < exclude_from],
+        merge,
+    )
+    return {"generations_before": len(live), "files_before": files_before,
             "generation": target, "rows": rows,
             "files_after": _count_files()}
 
@@ -1050,13 +992,14 @@ def compact_index(
 def compact_ingest_indexes(spark: SparkSession, index_path: str) -> dict:
     """Compact every index dataset under an ingest's ``index_path``:
     the known sub-datasets (``bands``/``sigs`` — MinHash ingest;
-    ``buckets``/``vecs`` — embedding ingest) when present, else the
-    path itself (exact ingest). Returns {dataset: compact_index stats}.
+    ``buckets``/``vecs`` — embedding ingest) holding generations, else
+    the path itself (exact ingest). Returns {dataset: compact_index
+    stats}.
     """
-    sc = spark.sparkContext
-    root = sc._jvm.org.apache.hadoop.fs.Path(index_path)
-    fs = root.getFileSystem(sc._jsc.hadoopConfiguration())
-    subs = [p.getName() for p in _index_datasets(fs, root)]
+    subs = [
+        d for ds in _INDEX_DATASETS.values() for d in ds
+        if committed(os.path.join(index_path, d), "batch_id")
+    ]
     if not subs:
         return {".": compact_index(spark, index_path)}
     return {

@@ -12,32 +12,33 @@ split an existing interval and shift every later boundary for its key
 unit of work is "rebuild the touched buckets from the log". Per batch
 that costs (touched buckets / total buckets) of the log scan, pruned by
 partition, not the whole corpus; `n_buckets` trades recompute
-granularity against small-file count. The log appends one
-``batch_id=N`` directory per micro-batch; pass ``compact_every=k`` to
-fold history into one generation every k-th batch in-stream (the same
-``compact_index`` maintenance the dedup ingests run — generation and
-file counts stay FLAT over stream lifetime), or run
-``compact_index(spark, events_path)`` from an offline schedule; the
-maintenance loop is oblivious to compaction because it reads the
-directory, not batch ids, and the recompute is invariant under the
-compactor's exact-duplicate-row collapse (identical events produce
-identical intervals).
+granularity against small-file count. The log is a generation root
+(``sources.generations``): each micro-batch publishes one
+``batch_id=N`` generation; pass ``compact_every=k`` to fold history
+into one generation every k-th batch in-stream (the same
+``compact_index`` set fold the dedup ingests run — generation and file
+counts stay FLAT over stream lifetime), or run
+``compact_index(spark, events_path)`` from an offline schedule. The
+maintenance loop is oblivious to compaction because it reads every
+committed generation, not batch ids, and the recompute is invariant
+under the fold's exact-duplicate-row collapse (identical events
+produce identical intervals).
 
 Crash safety mirrors ``dedup_ingest_stream``: the event-log append
-writes to an idempotent ``batch_id=N`` subdirectory (a replay rewrites
-the same files), and the interval overwrite is deterministic from the
-log, so replaying a batch converges to the same table.
+publishes generation ``batch_id=N`` (a replay rewrites it whole), and
+the interval overwrite is deterministic from the log, so replaying a
+batch converges to the same table. The stream start heals the log.
 """
 
 from __future__ import annotations
 
-import os
 from typing import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from my_feast_spark.operators.aggregations import scd2_intervals
+from my_feast_spark.sources.generations import committed, heal, publish
 from my_feast_spark.streaming.ingest import (
     _start_foreach_batch,
     compact_index,
@@ -74,26 +75,28 @@ def scd2_maintain_stream(
     ``compact_every=k`` runs ``compact_index`` on the event log every
     k-th batch from the foreachBatch thread (never racing a live
     batch), folding all PRIOR generations into one — the current
-    batch's directory is left alone so a crash-replay still rewrites
+    batch's generation is left alone so a crash-replay still rewrites
     it idempotently. Without it the log gains one directory per
     micro-batch forever (module docstring).
     """
     spark = sdf.sparkSession
     kb = F.pmod(F.xxhash64(*keys), F.lit(n_buckets)).alias(BUCKET_COL)
+    heal(events_path, "batch_id")
 
     def maintain(batch_df: DataFrame, batch_id: int) -> None:
         b = batch_df.withColumn(BUCKET_COL, kb)
         # idempotent per-batch log append, bucket-partitioned so the
         # recompute below prunes to touched buckets at the file level
-        b.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(
-            os.path.join(events_path, f"batch_id={batch_id}")
+        publish(
+            events_path, "batch_id", batch_id,
+            b.write.mode("overwrite").partitionBy(BUCKET_COL).parquet,
         )
         touched = [r[BUCKET_COL] for r in b.select(BUCKET_COL).distinct().collect()]
         if not touched:
             return
-        log = spark.read.parquet(events_path).filter(
-            F.col(BUCKET_COL).isin(touched)
-        )
+        log = spark.read.option("basePath", events_path).parquet(
+            *[p for _, p in committed(events_path, "batch_id")]
+        ).filter(F.col(BUCKET_COL).isin(touched))
         ivals = scd2_intervals(
             log, list(keys), ts_col, state_col, tie_breakers=list(tie_breakers)
         ).withColumn(BUCKET_COL, kb)

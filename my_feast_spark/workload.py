@@ -5485,16 +5485,18 @@ def q_compaction_replay(spark, sf_dir):
     dedup ingest (streaming/ingest.py::dedup_ingest_stream) drains the
     documents table as three micro-batches (doc_id % 3, one shared
     checkpoint) with in-stream auto-compaction, then a CRASHED
-    maintenance cycle is simulated — a consolidated superset generation
-    is written and the remaining live generation deleted, the exact
-    interruption the round-10 verdict flagged as data-losing — and
-    compact_index heals it. The query raises unless exactly one
-    generation remains, and returns the accepted corpus (winner per
+    maintenance cycle is simulated — a fold commits its superset
+    generation and deletes one of its sources, then dies before
+    deleting the rest, so an absorbed generation lingers next to the
+    fold — and compact_index heals it. The query raises unless exactly
+    one generation remains, and returns the accepted corpus (winner per
     fingerprint in (batch, id) order) stamped with the healed index
     cardinality, so the CORRECTNESS row pins both the ingest dedup
     semantics and the lossless-compaction invariant."""
-    import shutil
+    import contextlib
+    from unittest import mock
 
+    from my_feast_spark.sources import generations
     from my_feast_spark.streaming.ingest import (
         compact_index,
         dedup_ingest_stream,
@@ -5520,30 +5522,29 @@ def q_compaction_replay(spark, sf_dir):
         )
         if not q.awaitTermination(300):
             q.stop()
-    # simulate the interrupted cycle: consolidated superset written to a
-    # fresh negative generation, then every live source deleted, crash
-    # before deleting the older compacted generation — only negative
-    # generations survive (the exact round-10 data-loss corner)
-    gens = [
-        int(d.split("=", 1)[1])
-        for d in os.listdir(idx) if d.startswith("batch_id=")
-    ]
-    merged = spark.read.parquet(idx).drop("batch_id").dropDuplicates()
-    merged.repartition("pbucket").write.mode("overwrite").partitionBy(
-        "pbucket"
-    ).parquet(os.path.join(idx, f"batch_id={min(gens) - 1}"))
-    for g in gens:
-        if g >= 0:
-            shutil.rmtree(os.path.join(idx, f"batch_id={g}"))
-    stats = compact_index(spark, idx)
-    survivors = [
-        d for d in os.listdir(idx) if d.startswith("batch_id=")
-    ]
-    if len(survivors) != 1 or stats["generation"] is None:
+
+    # the interrupted cycle: the fold commits its marker, deletes one
+    # source and dies
+    deleted = []
+
+    def crash_after_first_delete(fs, path):
+        if deleted:
+            raise InterruptedError("simulated crash mid-fold")
+        deleted.append(path)
+        fs.delete(path, True)
+
+    with contextlib.suppress(InterruptedError), mock.patch.object(
+        generations, "_remove", crash_after_first_delete
+    ):
+        compact_index(spark, idx)
+    compact_index(spark, idx)
+    survivors = [d for d in os.listdir(idx) if d.startswith("batch_id=")]
+    gens = generations.committed(idx, "batch_id")
+    if len(deleted) != 1 or len(survivors) != 1 or len(gens) != 1:
         raise RuntimeError(
             f"compaction did not converge to one generation: {survivors}"
         )
-    n_idx = spark.read.parquet(idx).count()
+    n_idx = spark.read.parquet(gens[0][1]).count()
     return (
         spark.read.parquet(out)
         .select("doc_id", F.col("batch_id").cast("int").alias("batch_id"))

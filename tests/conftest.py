@@ -27,3 +27,42 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+class SimulatedCrash(Exception):
+    """Raised where a test kills a generation publish or fold mid-way."""
+
+
+@pytest.fixture
+def generation_crash():
+    """``with generation_crash(step, k) as done:`` lets the generation
+    store (``sources/generations.py``) run ``step`` — ``"_mark"``, the
+    commit-marker write, or ``"_remove"``, a generation delete — ``k``
+    times, then raises :class:`SimulatedCrash` at the next call, as a
+    process dying there would; ``done`` lists the generation
+    directories the ``k`` calls touched. The block must reach that
+    call."""
+    import contextlib
+
+    from my_feast_spark.sources import generations
+
+    @contextlib.contextmanager
+    def crash(step, k):
+        real = getattr(generations, step)
+        done = []
+
+        def injected(*args, **kwargs):
+            if len(done) == k:
+                raise SimulatedCrash(f"crash after {k} x {step}")
+            target = args[2] if step == "_mark" else args[1].getName()
+            done.append(str(target).rsplit("/", 1)[-1])
+            return real(*args, **kwargs)
+
+        setattr(generations, step, injected)
+        try:
+            with pytest.raises(SimulatedCrash):
+                yield done
+        finally:
+            setattr(generations, step, real)
+
+    return crash

@@ -8,6 +8,7 @@ import os
 
 from pyspark.sql import Row, functions as F
 
+from my_feast_spark.sources.generations import committed, fold, publish
 from my_feast_spark.streaming.ingest import (
     compact_index,
     compact_ingest_indexes,
@@ -15,15 +16,18 @@ from my_feast_spark.streaming.ingest import (
 )
 
 
-def _write_batch(spark, idx, batch_id, fps, pbuckets=4):
+def _rows(spark, fps, pbuckets=4):
     df = spark.createDataFrame([(f,) for f in fps], "fingerprint string")
-    (
-        df.withColumn("pbucket", F.pmod(F.xxhash64("fingerprint"),
-                                        F.lit(pbuckets)))
-        .repartition("pbucket")
-        .write.mode("overwrite")
-        .partitionBy("pbucket")
-        .parquet(os.path.join(idx, f"batch_id={batch_id}"))
+    return df.withColumn(
+        "pbucket", F.pmod(F.xxhash64("fingerprint"), F.lit(pbuckets))
+    ).repartition("pbucket")
+
+
+def _write_batch(spark, idx, batch_id, fps, pbuckets=4):
+    publish(
+        idx, "batch_id", batch_id,
+        _rows(spark, fps, pbuckets).write.mode("overwrite")
+        .partitionBy("pbucket").parquet,
     )
 
 
@@ -31,6 +35,16 @@ def _gens(idx):
     return sorted(
         n for n in os.listdir(idx) if n.startswith("batch_id=")
     )
+
+
+def _read(spark, idx):
+    """The fingerprints of every committed generation."""
+    return {
+        r.fingerprint
+        for r in spark.read.option("basePath", idx).parquet(
+            *[p for _, p in committed(idx, "batch_id")]
+        ).collect()
+    }
 
 
 def _file_count(idx):
@@ -41,8 +55,8 @@ def _file_count(idx):
 
 
 def test_compaction_bounds_generations_over_twenty_batches(spark, tmp_path):
-    """The growth scenario the r8 verdict flagged: one batch_id=N dir
-    per micro-batch forever. Compacting every 5 batches keeps the
+    """One batch_id=N generation per micro-batch would grow forever.
+    Compacting every 5 batches keeps the
     generation count (directory-listing cost) and file count FLAT
     instead of linear in batches."""
     idx = str(tmp_path / "idx")
@@ -93,67 +107,73 @@ def test_compaction_is_idempotent_and_noop_safe(spark, tmp_path):
     assert got == {"a", "b", "c"}
 
 
-def test_compaction_heals_interrupted_cycle(spark, tmp_path):
-    """Crash between the consolidated write and the source deletes
-    leaves the rows duplicated across generations — a re-run merges and
-    dedups them into a fresh generation strictly below every survivor."""
+def test_compaction_heals_interrupted_cycle(
+    spark, tmp_path, generation_crash
+):
+    """A crash after the fold's commit marker, before its source
+    deletes, leaves the absorbed sources on disk: reads skip them (no
+    row counted twice), and a re-run deletes them, leaving the one
+    folded generation."""
     idx = str(tmp_path / "idx")
     _write_batch(spark, idx, 0, {"a", "b"})
     _write_batch(spark, idx, 1, {"b", "c"})
-    # simulate the interrupted cycle: consolidated gen written, sources
-    # still present
-    merged = spark.read.parquet(idx).drop("batch_id").dropDuplicates()
-    merged.write.mode("overwrite").partitionBy("pbucket").parquet(
-        os.path.join(idx, "batch_id=-1")
-    )
+    with generation_crash("_remove", 0):
+        compact_index(spark, idx)
     assert len(_gens(idx)) == 3
+    assert [n for n, _ in committed(idx, "batch_id")] == [-1]
     healed = compact_index(spark, idx)
-    assert healed["generation"] == -2
-    assert len(_gens(idx)) == 1
-    rows = spark.read.parquet(idx).collect()
+    assert healed["generation"] is None  # one generation: nothing to fold
+    assert _gens(idx) == ["batch_id=-1"]
+    rows = spark.read.parquet(os.path.join(idx, "batch_id=-1")).collect()
     assert len(rows) == len({r.fingerprint for r in rows}) == 3
 
 
-def test_compaction_heals_crash_after_partial_source_deletes(spark, tmp_path):
-    """The round-10 judge-confirmed data-loss corner, variant 1: a crash
-    mid-delete leaves the consolidated superset generation plus only
-    SOME of its sources. Rows whose only other home was an
-    already-deleted source must survive the healing re-run (the old
-    scheme rebuilt the target from the surviving sources only)."""
+def test_compaction_heals_crash_after_partial_source_deletes(
+    spark, tmp_path, generation_crash
+):
+    """A crash mid-delete leaves the folded superset generation plus
+    only SOME of its sources. Rows whose only other home was an
+    already-deleted source survive in the fold, before and after the
+    healing re-run."""
     idx = str(tmp_path / "idx")
-    _write_batch(spark, idx, 0, {"only-in-0"})
+    _write_batch(spark, idx, 0, {"a"})
     _write_batch(spark, idx, 1, {"b"})
-    _write_batch(spark, idx, 2, {"c"})
-    # crashed cycle: superset written to -1, then batch 0 deleted, then
-    # crash before deleting batches 1 and 2
-    merged = spark.read.parquet(idx).drop("batch_id").dropDuplicates()
-    merged.write.mode("overwrite").partitionBy("pbucket").parquet(
-        os.path.join(idx, "batch_id=-1")
-    )
-    import shutil
-
-    shutil.rmtree(os.path.join(idx, "batch_id=0"))
-    assert _gens(idx) == ["batch_id=-1", "batch_id=1", "batch_id=2"]
+    _write_batch(spark, idx, 2, {"only-in-2"})
+    # the fold deletes its sources highest id first: batch 2 goes, then
+    # the crash
+    with generation_crash("_remove", 1) as deleted:
+        compact_index(spark, idx)
+    assert deleted == ["batch_id=2"]
+    assert _gens(idx) == ["batch_id=-1", "batch_id=0", "batch_id=1"]
+    assert _read(spark, idx) == {"a", "b", "only-in-2"}
     healed = compact_index(spark, idx)
-    assert healed["generation"] == -2
-    got = {r.fingerprint for r in spark.read.parquet(idx).collect()}
-    assert got == {"only-in-0", "b", "c"}  # 'only-in-0' must not vanish
+    assert healed["generation"] is None
+    assert _gens(idx) == ["batch_id=-1"]
+    assert _read(spark, idx) == {"a", "b", "only-in-2"}
 
 
 def test_compaction_all_negative_generations_lossless(spark, tmp_path):
-    """The round-10 judge-confirmed data-loss corner, variant 2: a crash
-    after deleting ALL live sources leaves only negative generations.
-    The old ``target = min(mergeable)`` scheme replaced the newest
-    superset generation with only the older generations' rows; the
-    fresh-target scheme must keep the union."""
+    """When only negative (folded) generations remain, the next fold's
+    target is fresh — below every id present — and takes the union:
+    a target that reused an existing id would replace the newest
+    superset with an older subset."""
     idx = str(tmp_path / "idx")
-    _write_batch(spark, idx, -1, {"a", "b", "newest-superset-only"})
-    _write_batch(spark, idx, -2, {"a"})  # older compacted gen (subset)
+
+    def merge(out, sources):
+        spark.read.option("basePath", idx).parquet(*sources).drop(
+            "batch_id"
+        ).dropDuplicates().write.partitionBy("pbucket").parquet(out)
+
+    _write_batch(spark, idx, 0, {"a"})
+    _write_batch(spark, idx, 1, {"a"})
+    assert fold(idx, "batch_id", [0, 1], merge) == -1  # older subset
+    _write_batch(spark, idx, 2, {"a", "b"})
+    _write_batch(spark, idx, 3, {"newest-superset-only"})
+    assert fold(idx, "batch_id", [2, 3], merge) == -2  # newest superset
     healed = compact_index(spark, idx)
     assert healed["generation"] == -3
     assert _gens(idx) == ["batch_id=-3"]
-    got = {r.fingerprint for r in spark.read.parquet(idx).collect()}
-    assert got == {"a", "b", "newest-superset-only"}
+    assert _read(spark, idx) == {"a", "b", "newest-superset-only"}
 
 
 def test_compacted_index_keeps_ingest_correct(spark, tmp_path):

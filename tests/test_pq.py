@@ -406,11 +406,12 @@ def test_ivfpq_append_extends_index_without_retraining(spark, emb, tmp_path):
     }
     assert q.collect()[0]["query_id"] in got_ids
 
-    # crash replay: rewriting generation 1 with the same rows is a
-    # same-directory overwrite, never a duplication
+    # crash replay: publishing generation 1 again with the same rows
+    # replaces it, never duplicates
     gen1 = os.path.join(path, "cells", "append_id=1")
     before = spark.read.parquet(gen1).count()
     from my_feast_spark.operators.pq import _encode_with_quantizers
+    from my_feast_spark.sources.generations import publish
     from my_feast_spark.sources.readers import spread_partitions
 
     c = spread_partitions(newbies).select(
@@ -419,12 +420,15 @@ def test_ivfpq_append_extends_index_without_retraining(spark, emb, tmp_path):
             "cv"
         ),
     )
-    _encode_with_quantizers(
-        c, model2["centroids"], model2["codebooks"],
-        residual=True, deterministic=True,
-    ).repartition("cell").write.mode("overwrite").partitionBy(
-        "cell"
-    ).parquet(gen1)
+    publish(
+        os.path.join(path, "cells"), "append_id", 1,
+        _encode_with_quantizers(
+            c, model2["centroids"], model2["codebooks"],
+            residual=True, deterministic=True,
+        ).repartition("cell").write.mode("overwrite").partitionBy(
+            "cell"
+        ).parquet,
+    )
     assert spark.read.parquet(gen1).count() == before
     assert read_ivfpq_index(spark, path)[0].count() == (
         corpus.count() + newbies.count()
@@ -457,10 +461,11 @@ def test_ivfpq_append_extends_index_without_retraining(spark, emb, tmp_path):
 def test_ivfpq_append_stable_id_replay_and_torn_generation(
     spark, emb, tmp_path
 ):
-    """Review-caught: auto-assigned generation ids are not
-    replay-idempotent (a retry after crash-between-commit-and-ack lands
-    the same vectors twice); a caller-supplied append_id overwrites its
-    own generation, and a torn generation (no _SUCCESS) never serves."""
+    """Auto-assigned generation ids are not replay-idempotent (a retry
+    after crash-between-commit-and-ack lands the same vectors twice); a
+    caller-supplied append_id overwrites its own generation, and a torn
+    generation (no commit marker) never serves and is overwritten by the
+    next auto-assigned append."""
     import os
 
     from my_feast_spark.operators.pq import (
@@ -469,6 +474,7 @@ def test_ivfpq_append_stable_id_replay_and_torn_generation(
         read_ivfpq_index,
         write_ivfpq_index,
     )
+    from my_feast_spark.sources.generations import publish
 
     corpus = emb.where(F.col("vec_id") % 2 == 0).select(
         F.col("vec_id").alias("corpus_id"), "embedding"
@@ -488,31 +494,75 @@ def test_ivfpq_append_stable_id_replay_and_torn_generation(
     enc2, _ = read_ivfpq_index(spark, path)
     assert enc2.count() == corpus.count() + newbies.count()
 
-    # a torn generation must not serve: plant data without _SUCCESS
-    torn = os.path.join(path, "cells", "append_id=9", "cell=0")
-    newbies.limit(3).selectExpr(
-        "corpus_id", "array(1, 2) AS codes"
-    ).write.parquet(torn)
-    os.remove(os.path.join(path, "cells", "append_id=9", "_SUCCESS")) \
-        if os.path.exists(
-            os.path.join(path, "cells", "append_id=9", "_SUCCESS")
-        ) else None
+    # a torn generation must not serve: an append that crashed after
+    # its data write, before its commit marker, at the next auto id
+    def torn_write(gen_dir):
+        newbies.limit(3).selectExpr(
+            "corpus_id", "array(1, 2) AS codes"
+        ).write.parquet(os.path.join(gen_dir, "cell=0"))
+        raise RuntimeError("crash before the commit marker")
+
+    with pytest.raises(RuntimeError, match="crash before"):
+        publish(os.path.join(path, "cells"), "append_id", 8, torn_write)
+    assert os.path.isdir(os.path.join(path, "cells", "append_id=8"))
     enc3, _ = read_ivfpq_index(spark, path)
     assert enc3.count() == corpus.count() + newbies.count()
+    # the next auto-assigned append takes the torn id and replaces it
+    stats = ivfpq_append(spark, path, newbies.limit(4))
+    assert stats["append_id"] == 8 and stats["rows"] == 4
+    enc4, _ = read_ivfpq_index(spark, path)
+    assert enc4.count() == corpus.count() + newbies.count() + 4
 
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="append_id must be >= 1"):
+    with pytest.raises(ValueError, match="append_id must be >= 1"):
         ivfpq_append(spark, path, newbies, append_id=0)
 
 
+def test_ivfpq_append_retry_replaces_every_cell(spark, emb, tmp_path):
+    """A same-id retry replaces its WHOLE generation: under the
+    session's dynamic partition-overwrite mode a plain overwrite of
+    ``append_id=N`` replaces only the cell directories the retry
+    writes, and the first attempt's rows in every other cell would keep
+    serving."""
+    from my_feast_spark.operators.pq import (
+        ivfpq_append,
+        ivfpq_build,
+        read_ivfpq_index,
+        write_ivfpq_index,
+    )
+
+    corpus = emb.where(F.col("vec_id") % 2 == 0).select(
+        F.col("vec_id").alias("corpus_id"), "embedding"
+    )
+    newbies = emb.where(F.col("vec_id") % 2 == 1).select(
+        F.col("vec_id").alias("corpus_id"), "embedding"
+    )
+    enc, model = ivfpq_build(
+        corpus, residual=True, m=M, k_codes=K, num_centroids=8
+    )
+    path = str(tmp_path / "idx")
+    write_ivfpq_index(enc, model, path)
+
+    first = ivfpq_append(spark, path, newbies, append_id=7)
+    # 5 rows reach at most 5 cells: the first attempt has rows in cells
+    # the retry does not write
+    assert first["cells_touched"] > 5
+    retry_rows = newbies.orderBy("corpus_id").limit(5)
+    retry = ivfpq_append(spark, path, retry_rows, append_id=7)
+
+    enc2, _ = read_ivfpq_index(spark, path)
+    served = enc2.join(corpus, "corpus_id", "left_anti")
+    assert sorted(r.corpus_id for r in served.collect()) == sorted(
+        r.corpus_id for r in retry_rows.collect()
+    )
+    assert retry["rows"] == 5
+
+
 def test_ivfpq_rebuild_replaces_every_generation(spark, emb, tmp_path):
-    """Advisor-caught: the session runs partitionOverwriteMode=dynamic
-    (session.py), under which write_ivfpq_index's partitioned overwrite
-    would only replace append_id=0 — prior append generations (encoded
-    with the OLD quantizers) would survive and be unioned against the
-    new model. A rebuild must wipe the cells root: old generations AND
-    stale cell=K dirs from a previous larger build are gone."""
+    """A rebuild replaces the whole cells root: prior append
+    generations (encoded with the OLD quantizers) must never be unioned
+    against the new model, and stale cell=K dirs from a previous larger
+    build are gone too (the session's dynamic partition-overwrite mode
+    would keep both under a plain partitioned overwrite)."""
     import os
 
     from my_feast_spark.operators.pq import (
@@ -565,35 +615,48 @@ def test_ivfpq_rebuild_replaces_every_generation(spark, emb, tmp_path):
 
 
 def test_ivfpq_torn_initial_build_refuses_to_serve(spark, emb, tmp_path):
-    """Advisor-caught: a build that crashed before _GEN_COMMITTED left a
-    generation layout with zero committed generations — the old
-    `not gen_dirs -> read root` fallback served the half-written data.
-    Now it raises."""
+    """A cells root whose generation 0 crashed before its commit marker
+    has zero committed generations: the reader raises instead of
+    serving the half-written data. A cells root in a layout without the
+    generation root marker raises too, and is left as it was."""
     import os
 
     from my_feast_spark.operators.pq import read_ivfpq_index
+    from my_feast_spark.sources.generations import publish
 
     path = str(tmp_path / "idx")
-    # plant a torn initial build: append_id=0 data, no _GEN_COMMITTED,
-    # and a model dir (written after the cells in write_ivfpq_index, but
-    # a crash between the parquet write and the marker leaves exactly
-    # this when retrying a rebuild over an existing model)
-    emb.limit(3).selectExpr(
-        "vec_id AS corpus_id", "0 AS cell", "array(1, 2) AS codes"
-    ).write.parquet(os.path.join(path, "cells", "append_id=0"))
-    spark.createDataFrame(
-        [('{"centroids": [], "codebooks": [], "m": 1, "k_codes": 1, '
-          '"residual": true}',)],
-        ["model_json"],
-    ).coalesce(1).write.json(os.path.join(path, "model"))
 
+    def torn_write(gen_dir):
+        emb.limit(3).selectExpr(
+            "vec_id AS corpus_id", "array(1, 2) AS codes"
+        ).write.parquet(os.path.join(gen_dir, "cell=0"))
+        raise RuntimeError("crash before the commit marker")
+
+    with pytest.raises(RuntimeError, match="crash before"):
+        publish(os.path.join(path, "cells"), "append_id", 0, torn_write)
     with pytest.raises(FileNotFoundError, match="torn build"):
         read_ivfpq_index(spark, path)
 
+    # committed-looking generations without the root marker
+    old = str(tmp_path / "old_idx")
+    gen0 = os.path.join(old, "cells", "append_id=0")
+    emb.limit(3).selectExpr(
+        "vec_id AS corpus_id", "array(1, 2) AS codes"
+    ).write.parquet(os.path.join(gen0, "cell=0"))
+    open(os.path.join(gen0, "_GEN_COMMITTED"), "w").close()
+    before = sorted(
+        os.path.join(d, f) for d, _, fs in os.walk(old) for f in fs
+    )
+    with pytest.raises(ValueError, match="no _GENERATIONS root marker"):
+        read_ivfpq_index(spark, old)
+    assert sorted(
+        os.path.join(d, f) for d, _, fs in os.walk(old) for f in fs
+    ) == before
+
 
 def test_rebuild_stages_then_swaps_and_heals(spark, emb, tmp_path):
-    """Review-caught: a rebuild must not destroy the serving index
-    before its replacement exists. The new layout (codes + quantizer
+    """A rebuild must not destroy the serving index before its
+    replacement exists. The new layout (codes + quantizer
     state under one staged root) swaps in two metadata ops; a failed
     staging write leaves the old index serving, and a crash between
     delete and rename is healed by the read path."""

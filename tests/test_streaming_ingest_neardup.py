@@ -210,7 +210,7 @@ def test_bucketed_replay_is_idempotent(spark, tmp_path):
 
 
 def test_index_meta_pins_layout_choices(spark, tmp_path):
-    """Review-caught: hash family / banding / pbucket count are
+    """Hash family / banding / pbucket count are
     per-stream-lifetime choices invisible in the stored rows — a
     resumed stream with a different config must fail at START, not
     silently stop colliding with the existing index."""

@@ -96,12 +96,11 @@ def test_replay_converges(spark, tmp_path):
 
 @pytest.mark.slow  # 20-batch growth-bound probe (54s) — slow tier, see pytest.ini
 def test_compact_every_bounds_log_growth_over_twenty_batches(spark, tmp_path):
-    """Round-12 verdict #6: the event log gained one batch_id=N dir per
-    micro-batch forever — the growth pattern the r8 verdict flagged for
-    the dedup indexes. compact_every=5 folds history in-stream: the
-    generation count stays FLAT (one compacted gen + batches since the
-    last fold), and the maintained table still equals the batch rebuild
-    after every fold."""
+    """Without compaction the event log gains one batch_id=N generation
+    per micro-batch forever, like the dedup indexes. compact_every=5
+    folds history in-stream: the generation count stays FLAT (one
+    compacted gen + batches since the last fold), and the maintained
+    table still equals the batch rebuild after every fold."""
     in_dir = str(tmp_path / "in")
     ev, iv, ckpt = (str(tmp_path / d) for d in ("events", "intervals", "ck"))
     os.makedirs(in_dir)

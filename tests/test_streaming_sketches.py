@@ -64,8 +64,8 @@ def test_stream_equals_batch(spark, tmp_path):
 
 
 def test_generation_layout_and_replay_idempotence(spark, tmp_path):
-    """Each batch owns a batch_id=N dir; rewriting one (the crash
-    replay) leaves the maintained sketch unchanged."""
+    """Each batch owns a batch_id=N generation; publishing it again
+    (the crash replay) leaves the maintained sketch unchanged."""
     tmp = str(tmp_path)
     parts = [_mk(spark, 0, 400), _mk(spark, 300, 800)]
     sk = _run_batches(spark, tmp, parts, tag="replay")
@@ -77,12 +77,16 @@ def test_generation_layout_and_replay_idempotence(spark, tmp_path):
         (r["g"], r["bucket"], r["rho"])
         for r in read_hll_sketch(spark, sk, group_cols=["g"]).collect()
     }
-    # simulate the at-least-once replay of batch 1: same rows, same dir
+    # simulate the at-least-once replay of batch 1: same rows, same id
     from my_feast_spark.operators.sketches import hll_registers
+    from my_feast_spark.sources.generations import publish
 
-    hll_registers(
-        parts[1].select("g", "v"), "v", p=P, group_by=["g"]
-    ).write.mode("overwrite").parquet(os.path.join(sk, "batch_id=1"))
+    publish(
+        sk, "batch_id", 1,
+        hll_registers(
+            parts[1].select("g", "v"), "v", p=P, group_by=["g"]
+        ).write.mode("overwrite").parquet,
+    )
     after = {
         (r["g"], r["bucket"], r["rho"])
         for r in read_hll_sketch(spark, sk, group_cols=["g"]).collect()
@@ -185,12 +189,14 @@ def test_cms_stream_equals_batch(spark, tmp_path):
     assert est["t5"] >= exact["t5"] and est["t11"] >= exact["t11"]
 
 
-def test_cms_compaction_is_exact_and_crash_safe(spark, tmp_path):
-    """Fold mid-stream, then plant BOTH crash states — a torn fold
-    (parquet committed, no manifest) and a lingering manifest-named
-    source — and assert reads stay exact through all of it and
-    compact_cms heals both."""
-    import json
+def test_cms_compaction_is_exact_and_crash_safe(
+    spark, tmp_path, generation_crash
+):
+    """Fold mid-stream, then put the sketch in BOTH crash states of a
+    fold — torn before its commit marker, and committed with its
+    absorbed sources still on disk — and assert reads stay exact
+    through all of it and heal / compact_cms clean both up."""
+    from my_feast_spark.sources.generations import committed, heal
 
     tmp = str(tmp_path)
     parts = [_vals(spark, i * 300, (i + 1) * 300) for i in range(6)]
@@ -201,36 +207,33 @@ def test_cms_compaction_is_exact_and_crash_safe(spark, tmp_path):
     gens = sorted(d for d in os.listdir(sk_c) if d.startswith("batch_id="))
     assert any(g.startswith("batch_id=-") for g in gens)
     assert len(gens) < 6
+    live = [n for n, _ in committed(sk_c, "batch_id")]
 
-    # crash state 1: torn fold — committed parquet at a negative id,
-    # no manifest, sources untouched
-    torn = os.path.join(sk_c, "batch_id=-99")
-    cms_build(_vals(spark, 0, 50), "v", d=D, w=W).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(torn)
+    # crash state 1: torn fold — its counters written at a fresh
+    # negative id, no commit marker, sources untouched
+    with generation_crash("_mark", 0):
+        compact_cms(spark, sk_c)
+    torn = min(
+        int(g.split("=")[1]) for g in os.listdir(sk_c)
+        if g.startswith("batch_id=")
+    )
+    assert torn < min(live)
     assert _counters(read_cms_sketch(spark, sk_c)) == want  # invisible
-    compact_cms(spark, sk_c)
-    assert not os.path.exists(torn)  # garbage-collected
+    assert heal(sk_c, "batch_id") == [torn]  # garbage-collected
+    assert not os.path.exists(os.path.join(sk_c, f"batch_id={torn}"))
     assert _counters(read_cms_sketch(spark, sk_c)) == want
 
-    # crash state 2: a fold's source delete never ran — recreate a
-    # source the newest manifest names
-    manifests = [
-        os.path.join(sk_c, g, "_folded_ids.json")
-        for g in os.listdir(sk_c)
-        if g.startswith("batch_id=-")
-        and os.path.exists(os.path.join(sk_c, g, "_folded_ids.json"))
-    ]
-    assert manifests
-    absorbed = json.load(open(manifests[0]))
-    ghost_id = absorbed[0]
-    ghost = os.path.join(sk_c, f"batch_id={ghost_id}")
-    cms_build(_vals(spark, 0, 77), "v", d=D, w=W).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(ghost)
+    # crash state 2: the fold committed, none of its source deletes ran
+    with generation_crash("_remove", 0):
+        compact_cms(spark, sk_c)
+    assert all(
+        os.path.exists(os.path.join(sk_c, f"batch_id={n}")) for n in live
+    )
     assert _counters(read_cms_sketch(spark, sk_c)) == want  # excluded
-    compact_cms(spark, sk_c)
-    assert not os.path.exists(ghost)
+    assert compact_cms(spark, sk_c)["generation"] is None
+    assert [d for d in os.listdir(sk_c) if d.startswith("batch_id=")] == [
+        f"batch_id={torn}"
+    ]
     assert _counters(read_cms_sketch(spark, sk_c)) == want
 
 
