@@ -93,12 +93,10 @@ def main() -> None:
     def timed(name, thunk):
         # min-of-2, but only where a second run can change the story:
         # sub-0.75s queries are overhead-dominated and a re-run would
-        # just double the bench wall time for noise, and 5s+ queries
-        # are long enough that scheduler jitter is relatively small —
-        # re-running them is what pushed the full bench past a 10-min
-        # capture window once the round-9 queries landed. The thunk
-        # returns the result DataFrame so owned caches release between
-        # runs.
+        # just double the bench wall time for noise. Rows of 5s or more
+        # get their second sample too, so one stall cannot stand as a
+        # heavy row's time. The thunk returns the result DataFrame so
+        # owned caches release between runs.
         runs = []
         for _ in range(2):
             t0 = time.monotonic()
@@ -106,7 +104,7 @@ def main() -> None:
             runs.append(round(time.monotonic() - t0, 3))
             if df is not None:
                 _release(df)
-            if runs[0] < 0.75 or runs[0] >= 5.0:
+            if runs[0] < 0.75:
                 break
         timings[name] = min(runs)
         spread[name] = runs

@@ -10,14 +10,20 @@ Parity surface with the reference's notebook usage:
     fs.materialize(start, end, views)                    # M6
     fs.get_online_features(entity_rows, features)        # M7
 
-The online store is a latest-per-key Parquet snapshot per feature view
-(replacing the reference's Redis, fs_online/feature_store.yaml:6-8):
-materialize = window top-1 over the interval + dynamic overwrite;
-get_online_features = per view, one scan of the snapshot filtered by the
-requested keys, folded into the plan as literals of the snapshot's key
-types (and pruned to their hash buckets on a bucketed snapshot), one
-``collect``, and the rows assembled on the driver. Swappable for a real
-KV store without touching callers.
+The online store (replacing the reference's Redis,
+fs_online/feature_store.yaml:6-8) is one generation root per view,
+``<repo>/online/<view>``, key ``gen`` (``sources/generations.py``):
+
+* each generation holds at most one row per entity, under
+  ``__pbucket=pmod(xxhash64(keys), n)`` when n > 0, and a meta file
+  recording n and its Spark schema;
+* an entity's online row is its committed row with the greatest
+  (event ts, created ts, gen);
+* ``materialize`` folds every committed generation into a new base
+  holding only the window's rows (a full replace); streamed deltas
+  take the base's layout (``streaming/online.py``);
+* only the generation commit renames or deletes, so at every crash
+  point a lookup serves each key's pre- or post-write row.
 """
 
 from __future__ import annotations
@@ -29,6 +35,7 @@ from typing import Iterable, Mapping, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from my_feast_spark.core.model import Entity, FeatureView
 from my_feast_spark.core.registry import Registry
@@ -39,72 +46,45 @@ from my_feast_spark.plans.retrieval import (
     parse_feature_refs,
 )
 from my_feast_spark.session import apply_runtime_confs
+from my_feast_spark.sources import generations
 
 
-def heal_snapshot(path: str) -> None:
-    """Finish a crashed snapshot swap: the swap renames the live dir to
-    ``path__old`` before renaming staging in, so a crash between the
-    two leaves the data at ``__old`` with ``path`` missing — restore
-    it. Every snapshot READER calls this first, so the crash window
-    costs one failed request at most, never a lost store."""
-    old = f"{path}__old"
-    if not os.path.exists(path) and os.path.exists(old):
-        try:
-            os.rename(old, path)
-        except OSError:
-            # exists-then-rename is a TOCTOU: a concurrent healer may
-            # have renamed ``__old`` away first (FileNotFoundError), or
-            # the writer's second swap rename may have landed ``path``
-            # between our check and the rename (ENOTEMPTY/EEXIST on
-            # platforms where rename-onto-nonempty-dir fails). Either
-            # way a live copy now exists at ``path`` — losing the race
-            # IS success — unless neither path survives, which means
-            # the race partner also failed: re-raise so the crash is
-            # loud, never a silently-missing store.
-            if not os.path.exists(path) and not os.path.exists(old):
-                raise
+ONLINE_KEY = "gen"
+_ONLINE_META = "_mfs_online_meta.json"  # {"buckets": n, "schema": ...}
+_LOOKUP_ATTEMPTS = 4  # while folds keep replacing the listed generations
 
 
-def swap_snapshot(tmp: str, path: str) -> None:
-    """Replace the snapshot at ``path`` with the fully-written ``tmp``
-    via two renames (same filesystem — staging dirs are siblings).
+def _write_online(df: DataFrame, gdir: str, join_keys: Sequence[str],
+                  buckets: int, schema) -> None:
+    """Write ``df`` (at most one row per entity, columns of ``schema``)
+    as the online generation ``gdir``, ``__pbucket``-partitioned when
+    ``buckets``, then its meta."""
+    writer = df.write
+    if buckets:
+        pbucket = FeatureStore._pbucket(join_keys, buckets)
+        writer = df.withColumn("__pbucket", pbucket).repartition(
+            "__pbucket"
+        ).write.partitionBy("__pbucket")
+    writer.parquet(gdir)
+    generations.write_json(
+        f"{gdir}/{_ONLINE_META}",
+        {"buckets": buckets, "schema": schema.jsonValue()},
+    )
 
-    NOT one atomic op (directories cannot be os.replace'd), but every
-    crash window is safe: before the first rename both copies exist;
-    between the renames the data lives at ``path__old`` and
-    `heal_snapshot` restores it; after the second rename only the
-    leftover ``__old`` needs sweeping. The rmtree+move it replaces had
-    a window with NO live copy, and a partially-failed rmtree made
-    shutil.move NEST the staging dir inside the live path."""
-    import shutil
 
-    heal_snapshot(path)
-    old = f"{path}__old"
-    shutil.rmtree(old, ignore_errors=True)
-    if os.path.exists(path):
-        os.rename(path, old)
-    # a concurrent reader's heal_snapshot can race the gap between the
-    # two renames: it sees path missing + __old present and renames the
-    # old copy BACK to path, making our rename(tmp, path) fail
-    # (ENOTEMPTY). Re-evict and retry — bounded, because each retry
-    # re-moves the healed copy to __old and at most one healer can win
-    # per gap; if path keeps reappearing past the bound something else
-    # is writing it and failing loudly is correct.
-    for attempt in range(5):
-        try:
-            os.rename(tmp, path)
-            break
-        except OSError:
-            if not os.path.exists(path):
-                raise  # not the heal race — genuine rename failure
-            shutil.rmtree(old, ignore_errors=True)
-            os.rename(path, old)
-    else:
-        raise OSError(
-            f"snapshot swap at {path!r} kept losing to concurrent "
-            "healers after 5 attempts"
-        )
-    shutil.rmtree(old, ignore_errors=True)
+def _online_layout(gens: list) -> tuple[int, T.StructType]:
+    """The bucket count and schema the committed generations ``gens``
+    share; RuntimeError when a meta is missing or they differ."""
+    try:
+        metas = generations.read_json([f"{p}/{_ONLINE_META}" for _, p in gens])
+    except Exception as e:
+        raise RuntimeError(
+            f"an online generation of {gens} has no readable "
+            f"{_ONLINE_META} — re-materialize the view"
+        ) from e
+    if any(m != metas[0] for m in metas):
+        raise RuntimeError(f"online generations {gens} differ in layout")
+    return metas[0]["buckets"], T.StructType.fromJson(metas[0]["schema"])
 
 
 class FeatureStore:
@@ -127,6 +107,7 @@ class FeatureStore:
         )
         self.registry = Registry(registry_path, project)
         self._spark = spark
+        self._online_reads: dict = {}  # view -> (gens, rows, buckets, schema)
 
     @property
     def spark(self) -> SparkSession:
@@ -218,15 +199,13 @@ class FeatureStore:
 
     # --- materialization + online store (M6, M7) ----------------------------
     def _online_path(self, view_name: str) -> str:
-        return os.path.join(self.repo_path, "online", view_name)
+        return f"{self.repo_path.rstrip('/')}/online/{view_name}"
 
     def _online_buckets(self) -> int:
-        """``online_store.buckets`` from feature_store.yaml (0 = flat
-        layout, the default). With N > 0 the snapshot is written under
-        ``__pbucket=hash(keys) % N`` partition directories and every
-        lookup prunes to the requested keys' buckets — at 100M+
-        entities a point lookup then reads a handful of directories
-        instead of scanning the whole snapshot."""
+        """``online_store.buckets`` from feature_store.yaml (0 = flat,
+        the default): a new base is written under N ``__pbucket=``
+        directories, so a point lookup at 100M+ entities reads a
+        handful of them instead of the whole store."""
         if not self.config:
             return 0
         return int(self.config.online_store.get("buckets", 0) or 0)
@@ -235,36 +214,56 @@ class FeatureStore:
     def _pbucket(join_keys: Sequence[str], buckets: int):
         return F.pmod(F.xxhash64(*join_keys), F.lit(buckets))
 
-    # The layout is SELF-DESCRIBING: the bucket count used at write time
-    # rides in an underscore-prefixed sidecar (ignored by parquet scans)
-    # inside the snapshot directory, so lookups never trust a config
-    # value that may have changed since materialization — a mismatched
-    # modulus would silently prune AWAY the requested keys' buckets.
-    _ONLINE_META = "_mfs_online_meta.json"
+    def _online_columns(self, view_name: str):
+        """``(join keys, order, feature names)`` of a view's online rows;
+        ``order`` is (event ts, created ts if the source has one)."""
+        fv = self.get_feature_view(view_name)
+        entity = self.registry.get_entity
+        join_keys = [k for e in fv.entities for k in entity(e).join_keys]
+        created = fv.source.created_timestamp_column
+        order = [fv.source.timestamp_field] + ([created] if created else [])
+        return join_keys, order, fv.feature_names()
 
-    @classmethod
-    def _write_online_meta(cls, path: str, buckets: int) -> None:
-        import json
+    def _online_committed(self, view_name: str) -> list:
+        gens = generations.committed(self._online_path(view_name), ONLINE_KEY)
+        if not gens:
+            raise RuntimeError(
+                f"feature view {view_name!r} has no online snapshot — "
+                "call materialize(start, end, [view]) first"
+            )
+        return gens
 
-        with open(os.path.join(path, cls._ONLINE_META), "w") as fh:
-            json.dump({"buckets": int(buckets)}, fh)
+    def _online_read(self, view_name: str, gens: list):
+        """``(rows, buckets, schema)``: the committed generations ``gens``
+        of the view's online store, read with their layout's schema. A
+        committed generation never changes, so the frame (and the file
+        listing it holds) is reused until the view's ``gens`` change."""
+        held = self._online_reads.get(view_name)
+        if held is None or held[0] != gens:
+            buckets, schema = _online_layout(gens)
+            rows = generations.read(
+                self.spark, self._online_path(view_name), ONLINE_KEY, schema,
+                gens=gens,
+            )
+            held = self._online_reads[view_name] = gens, rows, buckets, schema
+        return held[1:]
 
-    @classmethod
-    def _read_online_buckets(cls, path: str) -> int:
-        import json
-
-        meta = os.path.join(path, cls._ONLINE_META)
-        if not os.path.exists(meta):
-            return 0
-        with open(meta) as fh:
-            return int(json.load(fh).get("buckets", 0) or 0)
+    def _online_latest(self, view_name: str, gens: list):
+        """Like ``_online_read``, with one row per entity: its latest."""
+        join_keys, order, _feats = self._online_columns(view_name)
+        rows, buckets, schema = self._online_read(view_name, gens)
+        latest = latest_per_key(
+            rows, join_keys, order[:1], tie_breakers=order[1:] + [ONLINE_KEY]
+        )
+        return latest.select(*schema.fieldNames()), buckets, schema
 
     def materialize(
         self, start, end, feature_views: Sequence[str],
         *, as_of_version: int | dict | None = None,
     ) -> None:
         """Latest feature row per entity with event ts in [start, end] →
-        online snapshot table (the reference's fs.materialize,
+        a new base replacing the view's whole online store, in the
+        configured layout (the reference's fs.materialize,
         chicago_taxi_trips_hourly_gold.ipynb:473-479).
 
         ``as_of_version`` (int, or dict view-name -> int) materializes
@@ -274,12 +273,10 @@ class FeatureStore:
         from my_feast_spark.core.model import check_as_of_views, resolve_as_of
 
         check_as_of_views(as_of_version, feature_views)
+        buckets = self._online_buckets()
         for view_name in feature_views:
-            fv = self.get_feature_view(view_name)
-            join_keys: list[str] = []
-            for ent in fv.entities:
-                join_keys.extend(self.registry.get_entity(ent).join_keys)
-            src = fv.source
+            src = self.get_feature_view(view_name).source
+            join_keys, order, feats = self._online_columns(view_name)
             df = src.load(
                 self.spark,
                 version=resolve_as_of(as_of_version, view_name),
@@ -287,41 +284,17 @@ class FeatureStore:
                 (F.col(src.timestamp_field) >= F.lit(start))
                 & (F.col(src.timestamp_field) <= F.lit(end))
             )
-            order = [src.timestamp_field]
-            ties = [src.created_timestamp_column] if src.created_timestamp_column else []
-            snap = latest_per_key(df, join_keys, order, tie_breakers=ties)
-            # snapshot layout is shared with streaming materialization
-            # (streaming/online.py merge_batch): created column included so
-            # batch and streaming merges never diverge on schema
-            keep = join_keys + [src.timestamp_field] + ties + fv.feature_names()
-            out = snap.select(*keep)
-            buckets = self._online_buckets()
+            out = latest_per_key(
+                df, join_keys, order[:1], tie_breakers=order[1:]
+            ).select(*join_keys, *order, *feats)
             path = self._online_path(view_name)
-            # Batch materialize is a FULL snapshot replace. The bucketed
-            # write must NOT go straight to `path`: the session runs with
-            # partitionOverwriteMode=dynamic (session.py), under which a
-            # partitionBy("__pbucket") overwrite only replaces buckets
-            # present in the new snapshot — stale entity rows would
-            # survive in untouched buckets, and a changed
-            # online_store.buckets would leave old-modulus directories
-            # next to a sidecar recording the new count. Write snapshot +
-            # sidecar to a staging dir, then the crash-safe rename swap
-            # (swap_snapshot — every window leaves a recoverable copy).
-            import shutil
-
-            tmp = f"{path}__staging_materialize"
-            shutil.rmtree(tmp, ignore_errors=True)
-            writer = out.write.mode("overwrite")
-            if buckets:
-                writer = out.withColumn(
-                    "__pbucket", self._pbucket(join_keys, buckets)
-                ).repartition("__pbucket").write.mode(
-                    "overwrite"
-                ).partitionBy("__pbucket")
-            writer.parquet(tmp)
-            if buckets:
-                self._write_online_meta(tmp, buckets)
-            swap_snapshot(tmp, path)
+            generations.fold(
+                path, ONLINE_KEY,
+                [n for n, _ in generations.committed(path, ONLINE_KEY)],
+                lambda gdir, _sources: _write_online(
+                    out, gdir, join_keys, buckets, out.schema
+                ),
+            )
             self.registry.record_materialization(view_name, start, end)
 
     def get_online_features(
@@ -335,40 +308,32 @@ class FeatureStore:
         order. Columns: the view's join keys, the entity rows' other
         columns sorted, then each view's features (a later view's join
         keys move to the front); ``None`` where a row lacks a key or the
-        snapshot has no row for it.
+        store has no row for it.
 
-        Each view costs one filtered snapshot scan and one ``collect``.
-        The request's distinct keys are folded into the plan as literals
-        cast to the snapshot's key types: ``key IN (...)``, an OR of ANDs
-        for composite keys, and on a bucketed snapshot ``__pbucket IN
-        (pmod(xxhash64(<key literals>), n), ...)``, the hash
-        ``materialize`` wrote, which constant folding turns into a
-        partition filter. The hits are assembled into rows on the driver.
-        An empty request runs no Spark job."""
+        Each view costs one scan of its committed generations with the
+        request's distinct keys folded in as literals of the stored key
+        types (``key IN (...)``, an OR of ANDs for composite keys, and
+        ``__pbucket IN (pmod(xxhash64(<literals>), n), ...)`` on a
+        bucketed layout: a partition filter), one ``collect``, and the
+        per-key reduction on the driver. An empty request runs no Spark
+        job."""
         refs = parse_feature_refs(features)
         views = []
         for view_name, feat_names in refs.items():
-            fv = self.get_feature_view(view_name)
-            join_keys = []
-            for ent in fv.entities:
-                join_keys.extend(self.registry.get_entity(ent).join_keys)
-            path = self._online_path(view_name)
-            heal_snapshot(path)  # finish a crashed materialize swap
-            if not os.path.exists(path):
-                raise RuntimeError(
-                    f"feature view {view_name!r} has no online snapshot — "
-                    "call materialize(start, end, [view]) first"
-                )
-            views.append((view_name, join_keys, feat_names, path))
+            join_keys, order, _feats = self._online_columns(view_name)
+            gens = self._online_committed(view_name)
+            views.append((view_name, join_keys, order, feat_names, gens))
         rows = [dict(r) for r in entity_rows]
         cols = sorted({c for r in rows for c in r})
         out = {c: [r.get(c) for r in rows] for c in cols}
-        for view_name, join_keys, feat_names, path in views:
+        for view_name, join_keys, order, feat_names, gens in views:
             cols = join_keys + [c for c in cols if c not in join_keys] + feat_names
             for k in join_keys:
                 out.setdefault(k, [None] * len(rows))
             keys = [tuple(r.get(k) for k in join_keys) for r in rows]
-            hits = self._online_hits(view_name, path, join_keys, feat_names, keys)
+            hits = self._online_hits(
+                view_name, gens, join_keys, order, feat_names, keys
+            )
             for i, f in enumerate(feat_names):
                 # a name already taken by an entity column or an earlier
                 # view's feature keeps its first value
@@ -376,53 +341,66 @@ class FeatureStore:
         return {c: out[c] for c in cols}
 
     def _online_hits(
-        self, view_name: str, path: str, join_keys: list[str],
-        feat_names: list[str], keys: list[tuple],
+        self, view_name: str, gens: list, join_keys: list[str],
+        order: list[str], feat_names: list[str], keys: list[tuple],
     ) -> list:
         """The feature tuple for each key tuple of ``keys`` (``None`` for
-        a miss or a key with a ``None`` part), from one pruned scan of the
-        view's snapshot run under the job description
-        ``get_online_features:<view>``. Hits match their keys by Python
-        equality, so a key value must have the Python type the key
-        column collects as (``str`` for STRING, ``int`` for INT64)."""
+        a miss or a key with a ``None`` part), from one pruned scan of
+        ``gens`` under the job description ``get_online_features:<view>``
+        (rerun on the new list if a fold replaced ``gens`` meanwhile).
+        Hits match keys by Python equality: a key value must have the
+        type its column collects as (``str``, ``int``)."""
         wanted = list(dict.fromkeys(t for t in keys if None not in t))
         if not wanted:
             return [None] * len(keys)
-        spark = self.spark
-        sc = spark.sparkContext
+        sc = self.spark.sparkContext
         prev = sc.getLocalProperty("spark.job.description")
         sc.setJobDescription(f"get_online_features:{view_name}")
         try:
-            snap = spark.read.parquet(path)
-            types = [snap.schema[k].dataType for k in join_keys]
-            lits = [
-                [F.lit(v).try_cast(t) for v, t in zip(key, types)]
-                for key in wanted
-            ]
-            if len(join_keys) == 1:
-                pred = F.col(join_keys[0]).isin([lit for lit, in lits])
-            else:
-                pred = reduce(operator.or_, (
-                    reduce(operator.and_, (
-                        F.col(k) == lit for k, lit in zip(join_keys, key)))
-                    for key in lits
-                ))
-            if "__pbucket" in snap.columns:
-                n_buckets = self._read_online_buckets(path)
-                if not n_buckets:
-                    raise RuntimeError(
-                        f"online snapshot at {path!r} is bucketed but its "
-                        f"{self._ONLINE_META} sidecar is missing — "
-                        "re-materialize the view"
+            for attempt in range(_LOOKUP_ATTEMPTS):
+                try:
+                    hits = self._online_scan(
+                        view_name, gens, join_keys, order, feat_names, wanted
                     )
-                pred &= F.col("__pbucket").isin(
-                    [self._pbucket(key, n_buckets) for key in lits]
-                )
-            n = len(join_keys)
-            found = {
-                tuple(r[:n]): tuple(r[n:])
-                for r in snap.filter(pred).select(*join_keys, *feat_names).collect()
-            }
+                    break
+                except Exception:
+                    listed, gens = gens, self._online_committed(view_name)
+                    if gens == listed or attempt + 1 == _LOOKUP_ATTEMPTS:
+                        raise
         finally:
             sc.setJobDescription(prev)
+        n, m = len(join_keys), len(join_keys) + len(order) + 1
+
+        def rank(r):  # (event ts, created ts, gen); None ranks lowest
+            return [(v is not None, v) for v in r[n:m]]
+
+        found = {}
+        for r in sorted(hits, key=rank):  # each key's latest comes last
+            found[tuple(r[:n])] = tuple(r[m:])
         return [found.get(key) for key in keys]
+
+    def _online_scan(self, view_name, gens, join_keys, order, feat_names,
+                     wanted):
+        """The rows (keys, order, gen, features) of the generations
+        ``gens`` that match a key tuple of ``wanted``."""
+        snap, buckets, schema = self._online_read(view_name, gens)
+        types = [schema[k].dataType for k in join_keys]
+        lits = [
+            [F.lit(v).try_cast(t) for v, t in zip(key, types)]
+            for key in wanted
+        ]
+        if len(join_keys) == 1:
+            pred = F.col(join_keys[0]).isin([lit for lit, in lits])
+        else:
+            pred = reduce(operator.or_, (
+                reduce(operator.and_, (
+                    F.col(k) == lit for k, lit in zip(join_keys, key)))
+                for key in lits
+            ))
+        if buckets:
+            pred &= F.col("__pbucket").isin(
+                [self._pbucket(key, buckets) for key in lits]
+            )
+        return snap.filter(pred).select(
+            *join_keys, *order, ONLINE_KEY, *feat_names
+        ).collect()

@@ -47,7 +47,12 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from my_feast_spark.operators.similarity import train_ivf_centroids
-from my_feast_spark.sources.generations import committed, publish
+from my_feast_spark.sources.generations import (
+    committed,
+    next_id,
+    publish,
+    read,
+)
 from my_feast_spark.sources.readers import spread_partitions
 
 
@@ -632,15 +637,14 @@ def read_ivfpq_index(spark, path: str):
     import numpy as np
 
     cells_root = _cells_root(spark, path)
-    gen_dirs = [p for _, p in committed(cells_root, "append_id")]
-    if not gen_dirs:
+    enc_raw = read(spark, cells_root, "append_id")
+    if enc_raw is None:
         # no committed generation: serving it would expose parquet no
         # commit marker vouches for
         raise FileNotFoundError(
             f"no committed generations under {cells_root} — torn build "
             "or unknown layout; rerun write_ivfpq_index"
         )
-    enc_raw = spark.read.option("basePath", cells_root).parquet(*gen_dirs)
     enc = enc_raw.select(
         "corpus_id", F.col("cell").cast("int").alias("cell"), "codes"
     )
@@ -677,28 +681,24 @@ def ivfpq_append(
     replaces every generation).
 
     Idempotent replay needs a STABLE generation id: the auto-assigned
-    id is 1 + the highest committed id, so a retry after a
-    crash-between-commit-and-ack would land a SECOND generation with
-    the same vectors. Orchestrated callers (foreachBatch, workflow
-    retries) must pass ``append_id``: a retry then replaces its whole
-    generation — every cell, not only the cells it writes again. A torn
-    append (crash before its commit marker) never serves, and the next
-    append with its id (the retry, or the next auto-assigned append)
-    overwrites it.
+    id is ``sources.generations.next_id`` (1 + the highest committed
+    id), so a retry after a crash-between-commit-and-ack would land a
+    SECOND generation with the same vectors. Orchestrated callers
+    (foreachBatch, workflow retries) must pass ``append_id``: a retry
+    then replaces its whole generation — every cell, not only the cells
+    it writes again. A torn append (crash before its commit marker)
+    never serves, and the next append with its id (the retry, or the
+    next auto-assigned append) overwrites it.
 
     Returns ``{"append_id", "rows", "cells_touched", "max_cell_rows"}``.
     """
     import numpy as np
 
     cells_root = _cells_root(spark, path)
-    if append_id is not None:
-        next_id = append_id
-        if next_id < 1:
-            raise ValueError("append_id must be >= 1 (0 is the build)")
-    else:
-        next_id = 1 + max(
-            (n for n, _ in committed(cells_root, "append_id")), default=0
-        )
+    if append_id is None:
+        append_id = next_id(cells_root, "append_id")
+    elif append_id < 1:
+        raise ValueError("append_id must be >= 1 (0 is the build)")
 
     model = _read_model(spark, path)
     centroids = np.asarray(model["centroids"], dtype=np.float64)
@@ -714,7 +714,7 @@ def ivfpq_append(
         deterministic=deterministic,
     )
     gen_dir = publish(
-        cells_root, "append_id", next_id,
+        cells_root, "append_id", append_id,
         enc.repartition("cell").write.partitionBy("cell").parquet,
     )
 
@@ -725,7 +725,7 @@ def ivfpq_append(
         .collect()
     )
     return {
-        "append_id": next_id,
+        "append_id": append_id,
         "rows": int(sum(r["n"] for r in per_cell)),
         "cells_touched": len(per_cell),
         "max_cell_rows": int(max((r["n"] for r in per_cell), default=0)),

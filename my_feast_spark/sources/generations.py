@@ -1,7 +1,7 @@
 """Numbered generations under one root: the commit rule of every store
 that publishes ``<key>=N`` directories (the dedup ingest indexes, the
-HLL/KMV/CMS stream sketches, the streaming-SCD2 event log and the
-IVF-PQ cells). Only this module knows the layout::
+HLL/KMV/CMS stream sketches, the streaming-SCD2 event log, the IVF-PQ
+cells and the online store). Only this module knows the layout::
 
     <root>/_GENERATIONS             root marker, precedes every generation
     <root>/<key>=N/...              generation N's data
@@ -11,11 +11,13 @@ IVF-PQ cells). Only this module knows the layout::
 A generation is visible only when its directory holds the marker.
 Callers publish ids >= 0; only a fold writes a negative id, below every
 id present, and its marker names the ids it absorbs before any of them
-is deleted. Readers skip unmarked and absorbed generations, so every
-crash point reads exact, and heal deletes what a crash left. A root
-holding ``<key>=*`` directories but no root marker was not written
-under this rule: every function raises ValueError on it and deletes
-nothing. Heals log each deletion at WARNING on ``my_feast_spark``.
+is deleted. Files a caller writes into a generation before its marker
+(``write_json``) commit with it. Readers skip unmarked and absorbed
+generations, so every crash point reads exact, and heal deletes what a
+crash left. A root holding ``<key>=*`` directories but no root marker
+was not written under this rule: every function raises ValueError on
+it and deletes nothing. Heals log each deletion at WARNING on
+``my_feast_spark``.
 
 Contract: one writer per root; a folded id is never published again
 (publish raises).
@@ -68,17 +70,30 @@ def _gen_dir(root: str, key: str, n: int) -> str:
     return f"{root.rstrip('/')}/{key}={n}"
 
 
-def _mark(jc, fs, gdir: str, absorbs: list[int]) -> None:
-    """Commit generation ``gdir`` (the single commit path): its marker,
-    listing ``absorbs``, appears whole (hidden temp + rename)."""
-    tmp = jc.Path(gdir, f".{GEN_MARKER}.tmp")
+def _put(jc, fs, path, data: bytes) -> None:
+    """Write ``data`` to ``path`` whole: a hidden temp, then a rename."""
+    tmp = jc.Path(path.getParent(), f".{path.getName()}.tmp")
     out = fs.create(tmp, True)
     try:
-        out.write(bytearray(json.dumps(absorbs).encode("utf-8")))
+        out.write(bytearray(data))
     finally:
         out.close()
-    if not fs.rename(tmp, jc.Path(gdir, GEN_MARKER)):
-        raise RuntimeError(f"could not commit generation {gdir!r}")
+    if not fs.rename(tmp, path):
+        raise RuntimeError(f"could not write {path.toString()!r}")
+
+
+def _get(fs, path) -> bytes:
+    stream = fs.open(path)
+    try:
+        return bytes(stream.readAllBytes())
+    finally:
+        stream.close()
+
+
+def _mark(jc, fs, gdir: str, absorbs: list[int]) -> None:
+    """Commit generation ``gdir`` (the single commit path): its marker,
+    listing ``absorbs``, appears whole."""
+    _put(jc, fs, jc.Path(gdir, GEN_MARKER), json.dumps(absorbs).encode())
 
 
 def _remove(fs, path) -> None:
@@ -114,13 +129,10 @@ def _scan(jc, fs, rp, root: str, key: str):
         int(m.group(1)) for name in _names(jc, fs, rp, markers)
         if (m := gen.fullmatch(name.split("/", 1)[0]))
     }
-    absorbs = {}
-    for n in (n for n in marked if n < 0):
-        stream = fs.open(jc.Path(_gen_dir(root, key, n), GEN_MARKER))
-        try:
-            absorbs[n] = json.loads(bytes(stream.readAllBytes()))
-        finally:
-            stream.close()
+    absorbs = {
+        n: json.loads(_get(fs, jc.Path(_gen_dir(root, key, n), GEN_MARKER)))
+        for n in marked if n < 0
+    }
     return dirs, marked, absorbs
 
 
@@ -142,12 +154,53 @@ def _heal(jc, fs, rp, root: str, key: str):
     return dirs.difference(gone), marked - absorbed.keys() - set(gone), gone
 
 
+def _ensure_root(jc, fs, rp) -> None:
+    if not fs.exists(jc.Path(rp, ROOT_MARKER)):
+        fs.mkdirs(rp)
+        fs.create(jc.Path(rp, ROOT_MARKER), True).close()
+
+
 def committed(root: str, key: str) -> list[tuple[int, str]]:
     """The committed ``(id, path)`` generations of ``root``, ascending;
     empty when the root does not exist."""
     _dirs, marked, absorbs = _scan(*_hadoop(root), root, key)
     gone = {n for ids in absorbs.values() for n in ids}
     return [(n, _gen_dir(root, key, n)) for n in sorted(marked - gone)]
+
+
+def next_id(root: str, key: str) -> int:
+    """1 + the largest id a committed generation or a fold marker names,
+    at least 0: never an absorbed id, and a torn (unmarked) generation's
+    id, so publishing it replaces the torn one."""
+    _dirs, marked, absorbs = _scan(*_hadoop(root), root, key)
+    return 1 + max(marked.union({-1}, *absorbs.values()))
+
+
+def read(spark, root: str, key: str, schema=None, *, gens=None):
+    """The committed generations (or ``gens``, a ``committed`` list) as
+    one frame with ``key`` a column, None when there are none; explicit
+    paths plus ``basePath``, so partition columns prune. ``schema`` (the
+    data columns) skips inference."""
+    paths = [p for _, p in (committed(root, key) if gens is None else gens)]
+    if not paths:
+        return None
+    reader = spark.read.option("basePath", root)
+    if schema is not None:
+        reader = reader.schema(schema)
+    return reader.parquet(*paths)
+
+
+def write_json(path: str, obj) -> None:
+    """Write ``obj`` as JSON to ``path`` whole (e.g. a generation's meta,
+    before its marker)."""
+    jc, fs, rp = _hadoop(path)
+    _put(jc, fs, rp, json.dumps(obj).encode())
+
+
+def read_json(paths: list[str]) -> list:
+    """The JSON documents at ``paths`` (one or more, one FileSystem)."""
+    jc, fs, _rp = _hadoop(paths[0])
+    return [json.loads(_get(fs, jc.Path(p))) for p in paths]
 
 
 def publish(root: str, key: str, n: int, write: Callable[[str], None]) -> str:
@@ -163,9 +216,7 @@ def publish(root: str, key: str, n: int, write: Callable[[str], None]) -> str:
     _dirs, _marked, absorbs = _scan(jc, fs, rp, root, key)
     if any(n in ids for ids in absorbs.values()):
         raise ValueError(f"{key}={n} of {root!r} was folded already")
-    if not fs.exists(jc.Path(rp, ROOT_MARKER)):
-        fs.mkdirs(rp)
-        fs.create(jc.Path(rp, ROOT_MARKER), True).close()
+    _ensure_root(jc, fs, rp)
     gdir = _gen_dir(root, key, n)
     fs.delete(jc.Path(gdir, GEN_MARKER), False)
     fs.delete(jc.Path(gdir), True)
@@ -175,17 +226,16 @@ def publish(root: str, key: str, n: int, write: Callable[[str], None]) -> str:
 
 
 def fold(root: str, key: str, ids: Iterable[int],
-         write: Callable[[str, list[str]], None]) -> int | None:
-    """Merge the committed generations among ``ids``: heal, call
+         write: Callable[[str, list[str]], None]) -> int:
+    """Merge the committed generations among ``ids`` (none or one is
+    fine: the write then starts a new base): heal, call
     ``write(target_dir, source_dirs)`` (the merge is the caller's) at
     ``min(ids present ∪ {0}) - 1``, commit a marker listing the sources,
-    then delete them. Returns the new id, or None (nothing written)
-    when fewer than two of ``ids`` are committed."""
+    then delete them. Returns the new id."""
     jc, fs, rp = _hadoop(root)
     dirs, live, _gone = _heal(jc, fs, rp, root, key)
     sources = sorted(set(ids) & live)
-    if len(sources) < 2:
-        return None
+    _ensure_root(jc, fs, rp)
     target = min(dirs | {0}) - 1
     tdir = _gen_dir(root, key, target)
     write(tdir, [_gen_dir(root, key, n) for n in sources])

@@ -43,12 +43,15 @@ untouched).
 from __future__ import annotations
 
 import json
+import logging
 import uuid
 
 from pyspark.sql import SparkSession
 
 _STAGING = ".mfs_compact"
 _MARKER = "_COMMIT.json"
+
+_log = logging.getLogger("my_feast_spark")
 
 
 def _list_leaves(fs, jvm, root_path) -> dict[str, list]:
@@ -69,35 +72,38 @@ def _list_leaves(fs, jvm, root_path) -> dict[str, list]:
 
 
 def _heal_leaf(fs, jvm, leaf: str) -> str | None:
-    """Finish or abort an interrupted compaction of one leaf.
+    """Finish or abort an interrupted compaction of one leaf, logging
+    the outcome at WARNING on ``my_feast_spark``.
 
     Returns "finished", "aborted", or None (no staging present)."""
     staging = jvm.org.apache.hadoop.fs.Path(leaf, _STAGING)
     if not fs.exists(staging):
         return None
     marker = jvm.org.apache.hadoop.fs.Path(staging, _MARKER)
-    if not fs.exists(marker):
-        # never committed: originals are intact and authoritative
+    originals = None  # no marker: never committed, originals authoritative
+    if fs.exists(marker):
+        stream = fs.open(marker)
+        try:
+            raw = bytes(stream.readAllBytes())
+        finally:
+            stream.close()
+        try:
+            originals = set(json.loads(raw.decode("utf-8"))["originals"])
+        except (ValueError, KeyError):
+            # Partial/corrupt marker ⇒ the commit point was never
+            # reached: markers are renamed into place atomically (below),
+            # so originals are intact and authoritative. Abort instead
+            # of wedging the leaf on JSONDecodeError.
+            pass
+    if originals is None:
+        _log.warning("heal %s: aborting a compaction, no valid %s", leaf,
+                     _MARKER)
         fs.delete(staging, True)
         return "aborted"
-    stream = fs.open(marker)
-    try:
-        raw = bytes(
-            jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
-        )
-    finally:
-        stream.close()
-    try:
-        originals = set(json.loads(raw.decode("utf-8"))["originals"])
-    except (ValueError, KeyError):
-        # Partial/corrupt marker ⇒ the commit point was never reached:
-        # markers are renamed into place atomically (below), and in the
-        # pre-rename protocol originals were only deleted AFTER the
-        # marker stream closed successfully — so originals are intact
-        # and authoritative either way. Abort instead of wedging the
-        # leaf on JSONDecodeError.
-        fs.delete(staging, True)
-        return "aborted"
+    _log.warning(
+        "heal %s: finishing a committed compaction of %d files",
+        leaf, len(originals),
+    )
     for name in originals:
         fs.delete(jvm.org.apache.hadoop.fs.Path(leaf, name), False)
     for st in fs.listStatus(staging):

@@ -42,6 +42,7 @@ from my_feast_spark.sources.generations import (
     fold,
     heal,
     publish,
+    read,
 )
 
 _memory_table_ids = itertools.count()
@@ -60,7 +61,8 @@ _INDEX_DATASETS = {
 }
 
 
-def _ensure_index_meta(spark: SparkSession, index_path: str, meta: dict):
+def _ensure_index_meta(spark: SparkSession, index_path: str, meta: dict,
+                       before_stamp: Callable[[], None]):
     """Pin an index's per-stream-lifetime layout choices (hash family,
     banding config, pbucket count) in a root marker and validate them
     on every stream (re)start. The choices are invisible in the stored
@@ -75,7 +77,8 @@ def _ensure_index_meta(spark: SparkSession, index_path: str, meta: dict):
     idempotent across restarts. Because the marker precedes all data,
     an index root that holds data but no marker was not laid out by
     this driver: its layout is unknown, so the start raises ValueError
-    and writes no marker."""
+    and writes no marker; ``before_stamp`` may refuse the first
+    stamp."""
     import json as _json
 
     sc = spark.sparkContext
@@ -108,6 +111,7 @@ def _ensure_index_meta(spark: SparkSession, index_path: str, meta: dict):
             f"index at {index_path!r} holds data but no {_INDEX_META} "
             "marker, so its layout is unknown; rebuild the index"
         )
+    before_stamp()
     fs.mkdirs(jvm.org.apache.hadoop.fs.Path(index_path))
     tmp = jvm.org.apache.hadoop.fs.Path(
         f"{index_path}/.{_INDEX_META}.tmp"
@@ -120,26 +124,46 @@ def _ensure_index_meta(spark: SparkSession, index_path: str, meta: dict):
     if not fs.rename(tmp, mp):
         # a concurrent starter won the rename: validate against theirs
         fs.delete(tmp, False)
-        _ensure_index_meta(spark, index_path, meta)
+        _ensure_index_meta(spark, index_path, meta, before_stamp)
 
 
-def _fs_nonempty(spark: SparkSession, path: str) -> bool:
-    """True when ``path`` exists and holds at least one non-hidden
-    entry, probed through Spark's Hadoop FileSystem — so ``s3a://``,
-    ``hdfs://`` and ``file://`` index locations all answer correctly.
+def _refuse_fresh_checkpoint(spark: SparkSession, checkpoint: str,
+                             out_path: str, dirs: Sequence[str]) -> None:
+    """ValueError when ``checkpoint`` has no ``offsets/`` entry but an
+    index dataset of ``dirs`` holds committed generations or
+    ``out_path`` holds ``batch_id=N`` directories: the run's batch ids
+    would restart at 0 and overwrite them."""
+    if any(n.isdigit() for n in _fs_names(spark, f"{checkpoint}/offsets")):
+        return
+    held = [d for d in dirs if committed(d, "batch_id")] + [out_path] * any(
+        n.startswith("batch_id=") for n in _fs_names(spark, out_path)
+    )
+    if held:
+        raise ValueError(
+            f"checkpoint {checkpoint!r} has no offsets but {held} hold "
+            "batches: its batch ids would restart at 0 and overwrite "
+            "them; restart on the original checkpoint"
+        )
+
+
+def _fs_names(spark: SparkSession, path: str) -> list[str]:
+    """The entry names under ``path`` (none when it does not exist),
+    listed through Spark's Hadoop FileSystem — so ``s3a://``,
+    ``hdfs://`` and ``file://`` locations all answer correctly.
     (``os.path`` sees only the driver's local filesystem: for a cloud
-    ``index_path`` it is always False, silently disabling cross-batch
+    ``index_path`` it would see nothing, silently disabling cross-batch
     dedup instead of erroring.)"""
     sc = spark.sparkContext
     hpath = sc._jvm.org.apache.hadoop.fs.Path(path)
     fs = hpath.getFileSystem(sc._jsc.hadoopConfiguration())
     if not fs.exists(hpath):
-        return False
-    for status in fs.listStatus(hpath):
-        name = status.getPath().getName()
-        if not name.startswith((".", "_")):
-            return True
-    return False
+        return []
+    return [st.getPath().getName() for st in fs.listStatus(hpath)]
+
+
+def _fs_nonempty(spark: SparkSession, path: str) -> bool:
+    """True when ``path`` holds at least one non-hidden entry."""
+    return any(not n.startswith((".", "_")) for n in _fs_names(spark, path))
 
 
 def read_event_stream(
@@ -454,12 +478,11 @@ class _IndexBatch:
         """The committed generations of the index dataset at ``path``
         but this batch's own (None when there are none); bucketed,
         pruned to the pbuckets ``probe``'s ``cols`` hash into."""
-        gens = [
-            p for n, p in committed(path, "batch_id") if n != self.batch_id
-        ]
-        if not gens:
+        seen = read(self.spark, path, "batch_id", gens=[
+            g for g in committed(path, "batch_id") if g[0] != self.batch_id
+        ])
+        if seen is None:
             return None
-        seen = self.spark.read.option("basePath", path).parquet(*gens)
         if self.index_buckets:
             pbs = [
                 r.pb
@@ -510,7 +533,9 @@ def _start_dedup_ingest(
     Start: ``index_buckets`` and ``compact_every`` must each be None or
     an int >= 1, else ValueError. ``meta`` plus ``index_buckets`` is then
     pinned in the index root's marker (:func:`_ensure_index_meta`), so a
-    restart with another layout fails at start, before any batch runs.
+    restart with another layout fails at start, before any batch runs,
+    and so does a fresh checkpoint over roots that hold batches
+    (:func:`_refuse_fresh_checkpoint`), before any write.
     Each index dataset is then healed (``sources.generations.heal``),
     which raises ValueError on a root this engine did not lay out.
 
@@ -553,12 +578,16 @@ def _start_dedup_ingest(
         if value is not None and not (isinstance(value, int) and value >= 1):
             raise ValueError(f"{name} must be None or >= 1, got {value!r}")
     spark = sdf.sparkSession
-    _ensure_index_meta(
-        spark, index_path, {**meta, "index_buckets": index_buckets}
-    )
     dirs = [
         os.path.join(index_path, d) for d in _INDEX_DATASETS[meta["kind"]]
     ] or [index_path]
+    refuse = functools.partial(
+        _refuse_fresh_checkpoint, spark, checkpoint, out_path, dirs
+    )
+    _ensure_index_meta(
+        spark, index_path, {**meta, "index_buckets": index_buckets}, refuse
+    )
+    refuse()
     for d in dirs:
         heal(d, "batch_id")
 
@@ -979,11 +1008,9 @@ def compact_index(
             merged.coalesce(1).write.parquet(out)
         rows = spark.read.parquet(out).count()
 
-    target = fold(
-        index_dir, "batch_id",
-        [n for n in live if exclude_from is None or n < exclude_from],
-        merge,
-    )
+    ids = [n for n in live if exclude_from is None or n < exclude_from]
+    heal(index_dir, "batch_id")  # a crashed fold, even with nothing to merge
+    target = fold(index_dir, "batch_id", ids, merge) if len(ids) > 1 else None
     return {"generations_before": len(live), "files_before": files_before,
             "generation": target, "rows": rows,
             "files_after": _count_files()}

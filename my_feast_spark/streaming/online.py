@@ -3,16 +3,22 @@
 The reference materializes in batch (`fs.materialize(start, end)`,
 chicago_taxi_trips_hourly_gold.ipynb:473-479) — between runs the online
 store is stale by up to the scheduling interval. This module closes that
-gap Spark-natively: a ``foreachBatch`` sink merges each micro-batch's
-latest-per-entity rows into the online snapshot, so online lookups track
-the stream at micro-batch latency.
+gap Spark-natively: a ``foreachBatch`` sink publishes each micro-batch's
+latest-per-entity rows into the view's online store, so online lookups
+track the stream at micro-batch latency.
 
-Scale notes: per micro-batch work is (batch latest-per-key) ⋈ (current
-snapshot) — both keyed by entity, one small shuffle; the snapshot is
-latest-per-entity so it stays O(|entities|) regardless of stream volume.
-At very high entity cardinality, swap the parquet snapshot rewrite for a
-Delta/Hudi MERGE or a KV store — callers only see ``FeatureStore.
-get_online_features`` either way.
+Invariants, over the generation root ``core/store.py`` lays out:
+
+* a micro-batch publishes its latest row per entity as one delta at
+  ``generations.next_id`` and reads or rewrites no committed
+  generation: its cost is the batch's, never the store's;
+* a delta takes the layout (bucket count, schema) of the committed
+  generations, the configured count and its own schema on an empty
+  root, so one scan with one schema reads them all;
+* a replay replaces its own torn delta or publishes an identical
+  duplicate, which lookups collapse;
+* ``FOLD_DELTAS`` committed deltas fold with the base into a new base,
+  so a lookup reads at most ``FOLD_DELTAS`` + 1 generations.
 """
 
 from __future__ import annotations
@@ -20,9 +26,24 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from my_feast_spark.core.store import FeatureStore
+from my_feast_spark.core.store import (
+    ONLINE_KEY,
+    FeatureStore,
+    _online_layout,
+    _write_online,
+)
 from my_feast_spark.operators.aggregations import latest_per_key
+from my_feast_spark.sources.generations import (
+    committed,
+    fold,
+    heal,
+    next_id,
+    publish,
+)
 from my_feast_spark.streaming.ingest import _start_foreach_batch
+
+#: committed deltas that make a merge fold them into a new base
+FOLD_DELTAS = 8
 
 
 def materialize_stream(
@@ -38,138 +59,54 @@ def materialize_stream(
 
     ``stream_df`` must carry the view's join keys, timestamp field, and
     feature columns (i.e., the gold-shaped stream). Returns the started
-    StreamingQuery; stop it to pause materialization. The merge keeps,
-    per entity, the row with the greatest (event ts, created ts).
+    StreamingQuery; stop it to pause materialization. Lookups keep, per
+    entity, the row with the greatest (event ts, created ts). The start
+    heals the view's online root.
     """
-    fv = fs.get_feature_view(view_name)
-    join_keys: list[str] = []
-    for ent in fv.entities:
-        join_keys.extend(fs.registry.get_entity(ent).join_keys)
-    src = fv.source
-    ties = [src.created_timestamp_column] if src.created_timestamp_column else []
-    keep = join_keys + [src.timestamp_field] + ties + fv.feature_names()
-    path = fs._online_path(view_name)
-    # The merge below checks snapshot existence and swaps directories with
-    # local-filesystem calls (os.path.exists / shutil.move). On a
-    # non-local URI those would report "absent" every batch and silently
-    # degrade the merge to an overwrite losing all other entities — the
-    # exact data-loss mode the explicit existence check exists to prevent.
-    # Fail loudly instead; a remote online store belongs behind a real
-    # KV/Delta sink (module docstring).
-    if "://" in path and not path.startswith("file://"):
-        raise ValueError(
-            f"materialize_stream requires a local online-store path, got "
-            f"{path!r}; use a KV/Delta-backed online store for remote URIs"
-        )
-    spark = fs.spark
+    heal(fs._online_path(view_name), ONLINE_KEY)
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        import os
-
-        from my_feast_spark.core.store import heal_snapshot
-
-        heal_snapshot(path)  # finish a crashed swap before reading
-        fresh = latest_per_key(
-            batch_df.select(*keep), join_keys, [src.timestamp_field],
-            tie_breakers=ties,
-        )
-        # Bucketed snapshot: merge ONLY the buckets this batch touches —
-        # per-batch cost becomes O(entities in touched buckets), not
-        # O(|store|). The merged rows are eagerly materialized
-        # (localCheckpoint) BEFORE the dynamic-partition overwrite so the
-        # write never overwrites directories its own plan still reads;
-        # a crash between bucket writes leaves a partially-applied batch,
-        # which the foreachBatch replay re-merges idempotently
-        # (latest_per_key of already-applied rows is a no-op).
-        if os.path.exists(path) and fs._read_online_buckets(path):
-            n_buckets = fs._read_online_buckets(path)
-            pb = fs._pbucket(join_keys, n_buckets)
-            fresh_b = fresh.withColumn("__pbucket", pb)
-            touched = [
-                r.pb for r in
-                fresh_b.select(F.col("__pbucket").alias("pb"))
-                .distinct().collect()
-            ]
-            current = (
-                spark.read.parquet(path)
-                .filter(F.col("__pbucket").isin(touched))
-            )
-            for c in keep:
-                if c not in current.columns:
-                    current = current.withColumn(
-                        c, F.lit(None).cast(fresh.schema[c].dataType)
-                    )
-            merged = latest_per_key(
-                current.select(*keep).unionByName(fresh),
-                join_keys, [src.timestamp_field], tie_breakers=ties,
-            ).withColumn("__pbucket", pb).localCheckpoint()
-            try:
-                # partitionOverwriteMode=dynamic (session.py): only the
-                # partitions PRESENT in `merged` — the touched buckets —
-                # are replaced; every other bucket directory (and the
-                # layout sidecar) stays in place
-                merged.repartition("__pbucket").write.mode(
-                    "overwrite"
-                ).partitionBy("__pbucket").parquet(path)
-            finally:
-                from my_feast_spark.operators.graph import (
-                    release_checkpoint,
-                )
-
-                release_checkpoint(merged)
-            return
-        # Existence is checked EXPLICITLY: a bare except here once treated
-        # any read/select error as "first batch" and silently rewrote the
-        # snapshot with only the current micro-batch's entities. Real read
-        # errors now propagate and fail the batch (retryable).
-        if os.path.exists(path):
-            current = spark.read.parquet(path)
-            # batch materialize (store.py) may have written a snapshot
-            # without the created column (pre-unification layout): align
-            # instead of discarding everything it holds
-            for c in keep:
-                if c not in current.columns:
-                    current = current.withColumn(
-                        c, F.lit(None).cast(fresh.schema[c].dataType)
-                    )
-            current = current.select(*keep)
-        else:  # first batch: no snapshot yet
-            current = None
-        if current is not None:
-            merged = latest_per_key(
-                current.unionByName(fresh), join_keys, [src.timestamp_field],
-                tie_breakers=ties,
-            )
-        else:
-            merged = fresh
-        # write-to-temp then the crash-safe rename swap (core/store.py::
-        # swap_snapshot — never a window without a recoverable copy, and
-        # never overwrite the path still being read by this plan: cache
-        # eviction mid-write would corrupt it). The bucketed layout (and
-        # its self-describing sidecar — see
-        # FeatureStore._read_online_buckets) is preserved across merges:
-        # an existing snapshot's bucket count wins, else the configured
-        # one applies from the first batch.
-        from my_feast_spark.core.store import swap_snapshot
-
-        buckets = (
-            fs._read_online_buckets(path)
-            if os.path.exists(path) else fs._online_buckets()
-        )
-        tmp = f"{path}__staging_{batch_id}"
-        writer = merged.write.mode("overwrite")
-        if buckets:
-            writer = merged.withColumn(
-                "__pbucket", fs._pbucket(join_keys, buckets)
-            ).repartition("__pbucket").write.mode(
-                "overwrite"
-            ).partitionBy("__pbucket")
-        writer.parquet(tmp)
-        if buckets:
-            fs._write_online_meta(tmp, buckets)
-        swap_snapshot(tmp, path)
+        _merge(fs, view_name, batch_df)
 
     return _start_foreach_batch(
         stream_df, merge_batch, checkpoint,
         available_now=available_now, trigger_interval=trigger_interval,
+    )
+
+
+def _merge(fs: FeatureStore, view_name: str, batch_df: DataFrame) -> None:
+    """Publish ``batch_df``'s latest row per entity as a delta of the
+    view's online store; fold once ``FOLD_DELTAS`` deltas are
+    committed."""
+    join_keys, order, feats = fs._online_columns(view_name)
+    path = fs._online_path(view_name)
+    fresh = latest_per_key(
+        batch_df.select(*join_keys, *order, *feats),
+        join_keys, order[:1], tie_breakers=order[1:],
+    )
+    gens = committed(path, ONLINE_KEY)
+    if gens:
+        buckets, schema = _online_layout(gens)
+        fresh = fresh.select(*(F.col(f.name).cast(f.dataType) for f in schema))
+    else:
+        buckets, schema = fs._online_buckets(), fresh.schema
+    publish(
+        path, ONLINE_KEY, next_id(path, ONLINE_KEY),
+        lambda gdir: _write_online(fresh, gdir, join_keys, buckets, schema),
+    )
+    if sum(n >= 0 for n, _ in gens) + 1 >= FOLD_DELTAS:
+        _fold(fs, view_name)
+
+
+def _fold(fs: FeatureStore, view_name: str) -> int:
+    """Fold every committed generation of the view's online store into
+    a new base in the same layout; returns its id."""
+    join_keys, _order, _feats = fs._online_columns(view_name)
+    gens = fs._online_committed(view_name)
+    latest, buckets, schema = fs._online_latest(view_name, gens)
+    return fold(
+        fs._online_path(view_name), ONLINE_KEY, [n for n, _ in gens],
+        lambda gdir, _sources: _write_online(
+            latest, gdir, join_keys, buckets, schema
+        ),
     )

@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from my_feast_spark.operators.aggregations import scd2_intervals
-from my_feast_spark.sources.generations import committed, heal, publish
+from my_feast_spark.sources.generations import heal, publish, read
 from my_feast_spark.streaming.ingest import (
     _start_foreach_batch,
     compact_index,
@@ -94,9 +94,9 @@ def scd2_maintain_stream(
         touched = [r[BUCKET_COL] for r in b.select(BUCKET_COL).distinct().collect()]
         if not touched:
             return
-        log = spark.read.option("basePath", events_path).parquet(
-            *[p for _, p in committed(events_path, "batch_id")]
-        ).filter(F.col(BUCKET_COL).isin(touched))
+        log = read(spark, events_path, "batch_id").filter(
+            F.col(BUCKET_COL).isin(touched)
+        )
         ivals = scd2_intervals(
             log, list(keys), ts_col, state_col, tie_breakers=list(tie_breakers)
         ).withColumn(BUCKET_COL, kb)

@@ -39,7 +39,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from my_feast_spark.operators.sketches import hll_estimate, hll_registers
-from my_feast_spark.sources.generations import committed, fold, heal, publish
+from my_feast_spark.sources.generations import (
+    committed,
+    fold,
+    heal,
+    publish,
+    read,
+)
 from my_feast_spark.streaming.ingest import (
     _start_foreach_batch,
     compact_index,
@@ -73,10 +79,10 @@ def _start_sketch(sdf, sketch_path, checkpoint, sketch, compact, *,
 
 def _read_generations(spark: SparkSession, sketch_path: str) -> DataFrame:
     """Every committed generation under ``sketch_path``, one frame."""
-    gens = [p for _, p in committed(sketch_path, "batch_id")]
-    if not gens:
+    df = read(spark, sketch_path, "batch_id")
+    if df is None:
         raise FileNotFoundError(f"no sketch generations under {sketch_path}")
-    return spark.read.option("basePath", sketch_path).parquet(*gens)
+    return df
 
 
 def hll_ingest_stream(
@@ -246,6 +252,9 @@ def compact_cms(
             .coalesce(1).write.mode("overwrite").parquet(out)
         )
 
-    target = fold(sketch_path, "batch_id", ids, merge)
+    heal(sketch_path, "batch_id")  # a crashed fold, even with nothing to merge
+    target = None
+    if len(ids) > 1:
+        target = fold(sketch_path, "batch_id", ids, merge)
     return {"generation": target,
             "folded": 0 if target is None else len(ids)}

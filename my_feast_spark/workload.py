@@ -5807,24 +5807,18 @@ GROUP BY 1
 
 def q_materialize_stream(spark, sf_dir):
     """Streaming online-store materialization adjudicated end-to-end
-    (streaming/online.py::materialize_stream — the foreachBatch merge
-    that keeps get_online_features fresh at micro-batch latency,
-    closing the reference's batch-materialize staleness gap,
-    chicago_taxi_trips_hourly_gold.ipynb:473-479): a batch materialize
-    establishes the BUCKETED snapshot layout (8 __pbucket partitions +
-    self-describing sidecar) from the first third of the bounded
-    events window, then two streaming rounds merge the remaining
-    micro-batches — the first round REPLAYS the already-materialized
-    batch too (fresh checkpoint), pinning merge idempotency, and the
-    event_id%3 split interleaves times so merges see rows OLDER than
-    already-materialized state, which must never regress
-    latest-per-entity. The query raises unless the bucketed layout
-    (sidecar + partition dirs) survives every merge; the contract is
-    equality with the one-shot batch latest-per-key over the whole
-    window — exactly the oracle. Scale shape: per micro-batch the
-    merge touches only the buckets the batch's entities hash into
-    (dynamic partition overwrite), so per-batch cost is O(entities in
-    touched buckets), never O(|store|)."""
+    (streaming/online.py::materialize_stream, closing the reference's
+    batch-materialize staleness gap,
+    chicago_taxi_trips_hourly_gold.ipynb:473-479). Invariants pinned: a
+    batch materialize writes the base in the BUCKETED layout (8
+    __pbucket partitions, recorded in its meta) from the first third of
+    the events window; two streaming rounds publish the rest as deltas,
+    the first REPLAYING the materialized rows too (fresh checkpoint:
+    the duplicate collapses); the event_id%3 split makes deltas carry
+    rows OLDER than the base, which never regress latest-per-entity.
+    It raises unless every committed generation records 8 buckets and
+    holds __pbucket directories. The result, the online rows, equals
+    the one-shot batch latest-per-key over the window — the oracle."""
     from my_feast_spark.core import (
         Entity,
         Feature,
@@ -5897,25 +5891,23 @@ def q_materialize_stream(spark, sf_dir):
         from my_feast_spark.operators.graph import release_checkpoint
 
         release_checkpoint(ev)
-    path = fs._online_path("user_latest")
-    buckets = FeatureStore._read_online_buckets(path)
-    bucket_dirs = sorted(
-        d for d in os.listdir(path) if d.startswith("__pbucket=")
-    )
-    if buckets != 8 or not 0 < len(bucket_dirs) <= 8:
+    gens = fs._online_committed("user_latest")
+    snap, buckets, _schema = fs._online_latest("user_latest", gens)
+    flat = [
+        p for _, p in gens
+        if not any(d.startswith("__pbucket=") for d in os.listdir(p))
+    ]
+    if buckets != 8 or flat:
         raise RuntimeError(
-            f"streaming merge lost the bucketed layout: sidecar says "
-            f"{buckets} buckets, dirs={bucket_dirs}"
+            f"streaming merge lost the bucketed layout: generations "
+            f"record {buckets} buckets, unbucketed: {flat}"
         )
-    return (
-        spark.read.parquet(path)
-        .select(
-            "user_id",
-            F.col("ts").cast("timestamp_ntz").alias("feature_ts"),
-            "event_type",
-            F.round("value", 2).alias("value"),
-            F.lit(int(buckets)).cast("long").alias("layout_buckets"),
-        )
+    return snap.select(
+        "user_id",
+        F.col("ts").cast("timestamp_ntz").alias("feature_ts"),
+        "event_type",
+        F.round("value", 2).alias("value"),
+        F.lit(int(buckets)).cast("long").alias("layout_buckets"),
     )
 
 

@@ -33,6 +33,16 @@ class SimulatedCrash(Exception):
     """Raised where a test kills a generation publish or fold mid-way."""
 
 
+def lose_commit(checkpoint, batch_id):
+    """Delete a stream checkpoint's commit entry for ``batch_id``, the
+    state a crash between a batch's sink writes and its commit leaves:
+    a restart on ``checkpoint`` runs that batch again."""
+    for name in (str(batch_id), f".{batch_id}.crc"):
+        path = os.path.join(checkpoint, "commits", name)
+        if os.path.exists(path):
+            os.remove(path)
+
+
 @pytest.fixture
 def generation_crash():
     """``with generation_crash(step, k) as done:`` lets the generation

@@ -14,6 +14,8 @@ import pytest
 from pyspark.sql import Row
 
 from my_feast_spark.core import Entity, Feature, FeatureStore, FeatureView, FileSource
+from my_feast_spark.core.store import _ONLINE_META, _online_layout
+from my_feast_spark.sources.generations import committed
 
 TS = dt.datetime
 
@@ -280,9 +282,10 @@ def test_pit_strategy_from_yaml_config(spark, tmp_path):
 
 
 def test_bucketed_online_store_lookup_prunes_and_matches(spark, tmp_path):
-    """online_store.buckets: materialize writes a __pbucket-partitioned,
-    self-describing snapshot; lookups prune to the requested keys'
-    buckets and return the same vectors as the flat layout."""
+    """online_store.buckets: materialize writes a __pbucket-partitioned
+    base generation whose meta records the bucket count; lookups prune
+    to the requested keys' buckets and return the same vectors as the
+    flat layout."""
     import os
 
     feats = spark.createDataFrame([
@@ -318,10 +321,10 @@ def test_bucketed_online_store_lookup_prunes_and_matches(spark, tmp_path):
     flat = build("repo_flat", "")
     bucketed = build("repo_buck", "online_store:\n  buckets: 4\n")
 
-    snap_dir = bucketed._online_path("v")
-    parts = [d for d in os.listdir(snap_dir) if d.startswith("__pbucket=")]
-    assert parts, "bucketed snapshot must use __pbucket partition dirs"
-    assert bucketed._read_online_buckets(snap_dir) == 4
+    (_, gdir), = committed(bucketed._online_path("v"), "gen")
+    parts = [d for d in os.listdir(gdir) if d.startswith("__pbucket=")]
+    assert parts, "bucketed generation must use __pbucket partition dirs"
+    assert _online_layout(committed(bucketed._online_path("v"), "gen"))[0] == 4
 
     rows = [{"driver_id": "d3"}, {"driver_id": "d7"}, {"driver_id": "nope"}]
     want = flat.get_online_features(rows, ["v:avg_fare"])
@@ -329,20 +332,21 @@ def test_bucketed_online_store_lookup_prunes_and_matches(spark, tmp_path):
     assert got == want
     assert got["avg_fare"] == [3.0, 7.0, None]
 
-    # missing sidecar on a bucketed layout must fail loudly, never
-    # silently mis-prune
-    os.remove(os.path.join(snap_dir, bucketed._ONLINE_META))
-    with pytest.raises(RuntimeError, match="sidecar"):
-        bucketed.get_online_features(rows, ["v:avg_fare"])
+    # a generation without its meta must fail loudly, never silently
+    # mis-prune (a store that has not read this listing yet)
+    os.remove(os.path.join(gdir, _ONLINE_META))
+    with pytest.raises(RuntimeError, match=_ONLINE_META):
+        FeatureStore(bucketed.repo_path, spark=spark).get_online_features(
+            rows, ["v:avg_fare"]
+        )
 
 
 def test_bucketed_rematerialize_is_full_replace(spark, tmp_path):
-    """Batch materialize of a bucketed snapshot must be a FULL replace:
-    under the session's dynamic partitionOverwriteMode, a naive
-    partitionBy overwrite would only replace buckets present in the new
-    snapshot, leaving stale entity rows alive in untouched buckets —
-    and a changed online_store.buckets would leave old-modulus dirs next
-    to a sidecar recording the new count."""
+    """Batch materialize of a bucketed store must be a FULL replace: no
+    stale entity row survives in a bucket the new window does not
+    touch, and a changed online_store.buckets leaves one committed
+    generation on disk, in the new modulus, and no old-modulus
+    directory beside it."""
     import os
 
     gold = str(tmp_path / "gold_r")
@@ -388,9 +392,14 @@ def test_bucketed_rematerialize_is_full_replace(spark, tmp_path):
     fs2 = FeatureStore(str(repo), spark=spark)
     fs2.materialize(TS(2024, 1, 1), TS(2024, 1, 6), ["v"])
     snap_dir = fs2._online_path("v")
-    assert fs2._read_online_buckets(snap_dir) == 2
+    gens = committed(snap_dir, "gen")
+    assert _online_layout(gens)[0] == 2
+    (_, gdir), = gens
+    assert [d for d in os.listdir(snap_dir) if d.startswith("gen=")] == [
+        os.path.basename(gdir)
+    ]
     parts = sorted(
-        int(d.split("=")[1]) for d in os.listdir(snap_dir)
+        int(d.split("=")[1]) for d in os.listdir(gdir)
         if d.startswith("__pbucket=")
     )
     assert all(p in (0, 1) for p in parts), parts
@@ -425,71 +434,6 @@ def test_registry_concurrent_writer_conflict(tmp_path):
     a.reload()
     a.apply([Entity(name="e4", value_type="STRING", join_keys=["k4"])])
     a.apply([Entity(name="e5", value_type="STRING", join_keys=["k5"])])
-
-
-def test_snapshot_swap_crash_windows(tmp_path):
-    """swap_snapshot: every crash window leaves a recoverable copy, and
-    heal_snapshot restores the mid-swap state — the rmtree+move it
-    replaced had a window with NO live snapshot."""
-    import os
-
-    from my_feast_spark.core.store import heal_snapshot, swap_snapshot
-
-    def mkdir_with(tag, name):
-        d = tmp_path / name
-        d.mkdir()
-        (d / "data").write_text(tag)
-        return str(d)
-
-    # normal swap: v2 replaces v1, __old swept
-    path = mkdir_with("v1", "snap")
-    tmp = mkdir_with("v2", "snap__staging_1")
-    swap_snapshot(tmp, path)
-    assert (tmp_path / "snap" / "data").read_text() == "v2"
-    assert not os.path.exists(f"{path}__old")
-
-    # crash window: live dir already renamed to __old, staging not yet
-    # in — heal restores the last snapshot
-    os.rename(path, f"{path}__old")
-    heal_snapshot(path)
-    assert (tmp_path / "snap" / "data").read_text() == "v2"
-
-    # and a fresh swap through the healed state still lands v3
-    tmp3 = mkdir_with("v3", "snap__staging_2")
-    os.rename(path, f"{path}__old")  # crashed state again
-    swap_snapshot(tmp3, path)
-    assert (tmp_path / "snap" / "data").read_text() == "v3"
-    assert not os.path.exists(f"{path}__old")
-
-
-def test_online_lookup_heals_crashed_materialize_swap(spark, tmp_path):
-    """get_online_features restores a snapshot stranded at __old by a
-    crashed swap instead of raising 'no online snapshot'."""
-    import os
-
-    gold = str(tmp_path / "gold_heal")
-    spark.createDataFrame([
-        Row(driver_id="d1", event_timestamp=TS(2024, 1, 1, 10),
-            created=TS(2024, 1, 1, 10), avg_fare=10.0)
-    ]).write.parquet(gold)
-    repo = tmp_path / "repo_heal"
-    repo.mkdir()
-    (repo / "feature_store.yaml").write_text("project: p\nprovider: local\n")
-    fs = FeatureStore(str(repo), spark=spark)
-    fs.apply([
-        Entity(name="driver", value_type="STRING", join_keys=["driver_id"]),
-        FeatureView(
-            name="v", entities=["driver"],
-            features=[Feature("avg_fare", "FLOAT")],
-            source=FileSource(path=gold, timestamp_field="event_timestamp",
-                              created_timestamp_column="created"),
-        ),
-    ])
-    fs.materialize(TS(2024, 1, 1), TS(2024, 1, 2), ["v"])
-    snap = fs._online_path("v")
-    os.rename(snap, f"{snap}__old")  # the mid-swap crash state
-    got = fs.get_online_features([{"driver_id": "d1"}], ["v:avg_fare"])
-    assert got["avg_fare"] == [10.0]
 
 
 def test_retrieval_job_releases_pinned_checkpoints(store, spark, tmp_path):
@@ -528,75 +472,6 @@ def test_retrieval_job_releases_pinned_checkpoints(store, spark, tmp_path):
     job2.to_spark_df().collect()
     assert n_pinned() == base
     job2.release()
-
-
-def test_heal_snapshot_tolerates_concurrent_healer(tmp_path):
-    """Round-12 review: heal_snapshot's exists-then-rename is a TOCTOU —
-    when a concurrent healer (or the writer's second swap rename) wins
-    the race, the loser's os.rename raises even though a live copy
-    exists. Losing the race must be success; only a genuinely missing
-    snapshot may raise."""
-    import os
-    from unittest import mock
-
-    from my_feast_spark.core.store import heal_snapshot, swap_snapshot
-
-    def mkdir_with(tag, name):
-        d = tmp_path / name
-        d.mkdir()
-        (d / "data").write_text(tag)
-        return str(d)
-
-    # race 1: another healer renames __old -> path between our exists
-    # check and our rename (FileNotFoundError on __old)
-    path = mkdir_with("v1", "snap")
-    os.rename(path, f"{path}__old")
-    real_rename = os.rename
-
-    def racing_rename(src, dst):
-        if src.endswith("__old"):
-            real_rename(src, dst)  # the other healer wins first...
-            real_rename(src, dst)  # ...then our own call raises
-        else:
-            real_rename(src, dst)
-
-    with mock.patch("os.rename", side_effect=racing_rename):
-        heal_snapshot(path)  # must swallow the loss — a live copy exists
-    assert (tmp_path / "snap" / "data").read_text() == "v1"
-
-    # race 2: a reader heals between swap_snapshot's two renames — the
-    # swap must re-evict and still land the new version
-    tmp2 = mkdir_with("v2", "snap__staging_1")
-    healed = {"done": False}
-
-    def heal_mid_swap(src, dst):
-        real_rename(src, dst)
-        if dst.endswith("__old") and not healed["done"]:
-            healed["done"] = True
-            real_rename(dst, path)  # the racing reader's heal
-
-    with mock.patch("os.rename", side_effect=heal_mid_swap):
-        swap_snapshot(tmp2, path)
-    assert (tmp_path / "snap" / "data").read_text() == "v2"
-    assert not os.path.exists(f"{path}__old")
-
-    # genuinely missing snapshot (no path, no __old): heal must raise,
-    # never return with nothing live
-    missing = str(tmp_path / "gone")
-    os.makedirs(f"{missing}__old")
-
-    def vanish(src, dst):
-        import shutil
-        shutil.rmtree(src)
-        raise FileNotFoundError(src)
-
-    with mock.patch("os.rename", side_effect=vanish):
-        try:
-            heal_snapshot(missing)
-            raised = False
-        except FileNotFoundError:
-            raised = True
-    assert raised
 
 
 def test_versioned_source_time_travel_retrieval(spark, tmp_path):

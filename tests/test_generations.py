@@ -1,10 +1,13 @@
 """The generation commit (sources/generations.py) every ``<key>=N``
-store shares: one crash matrix of store x crash point, the heal log,
-and the rule that a root this engine did not lay out fails loudly and
-is left as it was."""
+store shares: one crash matrix of store x crash point (the online
+store's rows read every entity through ``get_online_features``, so a
+lookup at each crash point serves the pre- or post-write value, never
+None), the heal log, and the rule that a root this engine did not lay
+out fails loudly and is left as it was."""
 
 from __future__ import annotations
 
+import datetime as dt
 import json
 import logging
 import os
@@ -117,7 +120,66 @@ class _AppendStore:
         return sorted(tuple(r) for r in enc.collect())
 
 
-STORES = {"set": _SetStore, "sum": _SumStore, "append": _AppendStore}
+class _OnlineStore:
+    """The online store of a feature view: generation n is a streamed
+    micro-batch's delta (``streaming.online._merge``), the fold is the
+    stream's delta fold; the read is a lookup of every entity."""
+
+    key = "gen"
+    keys = [f"k{i}" for i in range(5)] + ["shared"]
+
+    def __init__(self, spark, path):
+        from my_feast_spark.core import (
+            Entity, Feature, FeatureStore, FeatureView, FileSource,
+        )
+
+        self.spark, self.src = spark, os.path.join(path, "src")
+        self.fs = FeatureStore(os.path.join(path, "repo"), spark=spark)
+        self.fs.apply([
+            Entity(name="e", value_type="STRING", join_keys=["k"]),
+            FeatureView(
+                name="v", entities=["e"], features=[Feature("x", "DOUBLE")],
+                source=FileSource(path=self.src, timestamp_field="ts",
+                                  created_timestamp_column="created"),
+            ),
+        ])
+        self.root = self.fs._online_path("v")
+
+    def publish(self, n):
+        """Entities k<n>, k<n+1> and "shared" at hour n, value n."""
+        from my_feast_spark.streaming.online import _merge
+
+        ts = dt.datetime(2024, 1, 1, n)
+        rows = self.spark.createDataFrame(
+            [(k, ts, ts, float(n)) for k in (f"k{n}", f"k{n + 1}", "shared")],
+            "k string, ts timestamp, created timestamp, x double",
+        )
+        rows.write.mode("append").parquet(self.src)
+        _merge(self.fs, "v", rows)
+
+    def fold(self):
+        from my_feast_spark.streaming.online import _fold
+
+        _fold(self.fs, "v")
+
+    def read(self):
+        return self.fs.get_online_features(
+            [{"k": k} for k in self.keys], ["v:x"]
+        )["x"]
+
+
+class _MaterializeStore(_OnlineStore):
+    """The online store with batch ``materialize`` as the fold: a full
+    replace from the source, which holds every published row."""
+
+    def fold(self):
+        self.fs.materialize(
+            dt.datetime(2024, 1, 1), dt.datetime(2024, 1, 2), ["v"]
+        )
+
+
+STORES = {"set": _SetStore, "sum": _SumStore, "append": _AppendStore,
+          "online": _OnlineStore, "materialize": _MaterializeStore}
 
 #: crash point -> (generation-store step that dies, calls it completes)
 CRASH = {
@@ -129,9 +191,11 @@ CRASH = {
 
 CASES = [
     (store, point)
-    for store in ("set", "sum")
+    for store in ("set", "sum", "online")
     for point in CRASH
-] + [("append", "publish_before_marker")]
+] + [("append", "publish_before_marker")] + [
+    ("materialize", point) for point in CRASH if point.startswith("fold")
+]
 
 
 def _on_disk(root, key):
@@ -153,6 +217,7 @@ def test_crash_matrix(spark, tmp_path, generation_crash, store, point):
     for n in range(4):
         twin.publish(n)
     want = twin.read()
+    assert None not in want
     for n in range(3):
         st.publish(n)
     step, k = CRASH[point]

@@ -6,6 +6,7 @@ window of the commit protocol heals deterministically."""
 from __future__ import annotations
 
 import json
+import logging
 import os
 
 from pyspark.sql import Row, functions as F
@@ -83,9 +84,17 @@ def test_under_threshold_leaves_untouched(spark, tmp_path):
     assert _data_files(path) == before
 
 
-def test_heal_aborts_uncommitted_staging(spark, tmp_path):
+def _heal_logs(caplog):
+    return [
+        r.getMessage() for r in caplog.records
+        if r.name == "my_feast_spark" and r.levelno == logging.WARNING
+    ]
+
+
+def test_heal_aborts_uncommitted_staging(spark, tmp_path, caplog):
     """Crash BEFORE the commit marker: originals are authoritative —
-    staging is dropped, nothing lost, nothing duplicated."""
+    staging is dropped, nothing lost, nothing duplicated. The abort is
+    one WARNING record naming the leaf."""
     path = str(tmp_path / "t3")
     _fragmented_table(spark, path)
     want = _content(spark, path)
@@ -96,16 +105,20 @@ def test_heal_aborts_uncommitted_staging(spark, tmp_path):
     spark.createDataFrame([Row(v=-1)]).coalesce(1).write.mode(
         "overwrite"
     ).parquet(os.path.join(staging, "job-dead"))
-    stats = compact_table(spark, path, min_files=2)
+    with caplog.at_level(logging.WARNING, logger="my_feast_spark"):
+        stats = compact_table(spark, path, min_files=2)
     assert stats["healed_aborted"] == 1
+    (msg,) = _heal_logs(caplog)
+    assert leaf in msg and "aborting a compaction" in msg
     assert not os.path.exists(staging)
     assert _content(spark, path) == want
 
 
-def test_heal_finishes_committed_staging(spark, tmp_path):
+def test_heal_finishes_committed_staging(spark, tmp_path, caplog):
     """Crash AFTER the commit marker, mid-delete: the staged files are
     authoritative — remaining originals named in the marker are
-    deleted, staged files surface, content is exactly the rewrite."""
+    deleted, staged files surface, content is exactly the rewrite. The
+    finish is one WARNING record naming the leaf."""
     path = str(tmp_path / "t4")
     _fragmented_table(spark, path)
     want = _content(spark, path)
@@ -129,8 +142,11 @@ def test_heal_finishes_committed_staging(spark, tmp_path):
     # simulate the mid-delete crash: one original already gone
     os.remove(os.path.join(leaf, originals[0]))
 
-    stats = compact_table(spark, path, min_files=2)
+    with caplog.at_level(logging.WARNING, logger="my_feast_spark"):
+        stats = compact_table(spark, path, min_files=2)
     assert stats["healed_finished"] == 1
+    (msg,) = _heal_logs(caplog)
+    assert leaf in msg and "finishing a committed compaction" in msg
     assert not os.path.exists(staging)
     assert _content(spark, path) == want
     assert len(_data_files(path)["day=2024-01-02"]) == 1

@@ -1,8 +1,9 @@
-"""get_online_features as one pruned snapshot scan per view.
+"""get_online_features as one pruned scan of the committed generations
+per view.
 
-Parity with the broadcast-join lookup it replaced (kept below as
-``_join_lookup``, the reference), the cost of its plan (jobs, files
-read), its job labels, and the empty request.
+Parity with a broadcast-join lookup (kept below as ``_join_lookup``,
+the reference), the cost of its plan (jobs, files read), its job
+labels, and the empty request.
 """
 
 from __future__ import annotations
@@ -16,14 +17,18 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from my_feast_spark.core import Entity, Feature, FeatureStore, FeatureView, FileSource
-from my_feast_spark.core.store import heal_snapshot
+from my_feast_spark.core.store import _online_layout
+from my_feast_spark.operators.aggregations import latest_per_key
+from my_feast_spark.sources import generations
 
 TS = dt.datetime
 
 
 def _join_lookup(fs, entity_rows, features):
     """The lookup as a broadcast join of a keys DataFrame against each
-    view's snapshot, ordered by row: the reference for the parity tests."""
+    view's latest row per key over its committed generations (by event
+    ts, then generation), ordered by row: the reference for the parity
+    tests."""
     from my_feast_spark.plans.retrieval import parse_feature_refs
 
     refs = parse_feature_refs(features)
@@ -37,19 +42,10 @@ def _join_lookup(fs, entity_rows, features):
         join_keys = []
         for ent in fv.entities:
             join_keys.extend(fs.registry.get_entity(ent).join_keys)
-        path = fs._online_path(view_name)
-        heal_snapshot(path)
-        snap = spark.read.parquet(path)
-        n_buckets = fs._read_online_buckets(path)
-        if "__pbucket" in snap.columns:
-            pbs = sorted(
-                r.pb
-                for r in keys_df.select(
-                    fs._pbucket(join_keys, n_buckets).alias("pb")
-                ).distinct().collect()
-            )
-            snap = snap.filter(F.col("__pbucket").isin(pbs))
-        snap = snap.select(*join_keys, *feat_names)
+        snap = latest_per_key(
+            generations.read(spark, fs._online_path(view_name), "gen"),
+            join_keys, [fv.source.timestamp_field], tie_breakers=["gen"],
+        ).select(*join_keys, *feat_names)
         out = out.join(F.broadcast(snap), on=join_keys, how="left")
     rows = out.orderBy("__row_order").drop("__row_order").collect()
     cols = [c for c in out.columns if c != "__row_order"]
@@ -107,7 +103,8 @@ def store(request, spark, tmp_path):
     ])
     fs.materialize(TS(2024, 1, 1), TS(2024, 1, 2), list(sources))
     for name in sources:
-        assert fs._read_online_buckets(fs._online_path(name)) == buckets
+        gens = generations.committed(fs._online_path(name), "gen")
+        assert _online_layout(gens)[0] == buckets
     return fs
 
 
@@ -235,10 +232,10 @@ class _JobLog:
     ids=["string", "int64", "composite"],
 )
 def test_bucketed_lookup_cost(store, spark, rows, view, keys):
-    """A bucketed single-view lookup runs at most 2 Spark jobs (the
-    snapshot's schema inference and the scan) and reads one file per
-    distinct bucket of the requested keys."""
-    snap = spark.read.parquet(store._online_path(view))
+    """A bucketed single-view lookup runs 1 Spark job (the scan: the
+    schema comes from the generation's meta, so nothing is inferred)
+    and reads one file per distinct bucket of the requested keys."""
+    snap = generations.read(spark, store._online_path(view), "gen")
     buckets = {
         r.pb for r in snap.where(F.struct(*keys).isin(
             [F.struct(*(F.lit(row[k]).cast(snap.schema[k].dataType).alias(k)
@@ -251,7 +248,7 @@ def test_bucketed_lookup_cost(store, spark, rows, view, keys):
     with _JobLog(spark) as log:
         got = store.get_online_features(rows, [f"{view}:{feature}"])
     assert None not in got[feature]
-    assert len(log.job_ids) <= 2
+    assert len(log.job_ids) == 1
     assert log.files_read() == len(buckets)
     assert set(log.descriptions()) == {f"get_online_features:{view}"}
 

@@ -11,15 +11,17 @@ import os
 from pyspark.sql import Row
 
 from my_feast_spark.streaming.ingest import dedup_ingest_stream
+from tests.conftest import lose_commit
 
 
-def _run_available(spark, in_dir, out, idx, ckpt):
+def _run_available(spark, in_dir, out, idx, ckpt, **kw):
     sdf = spark.readStream.schema("doc_id long, text string").parquet(in_dir)
     q = dedup_ingest_stream(
         sdf, out_path=out, index_path=idx, checkpoint=ckpt,
-        available_now=True,
+        available_now=True, **kw,
     )
     assert q.awaitTermination(120)
+    return q
 
 
 def test_dedup_ingest_drops_recrawled_content(spark, tmp_path):
@@ -60,25 +62,64 @@ def test_batch_replay_does_not_destroy_output(spark, tmp_path):
     """Crash-replay shape: if a batch's sinks were written but the
     streaming commit was lost, the batch replays — it must NOT
     anti-join against its own fingerprints (that would overwrite its
-    output with an empty dataset). Simulated by re-running the same
-    input with a FRESH checkpoint, so batch 0 is processed again."""
+    output with an empty dataset). Simulated by deleting the batch's
+    commit entry and restarting on the same checkpoint, so batch 0 is
+    processed again."""
 
     in_dir = str(tmp_path / "incoming")
     out = str(tmp_path / "corpus")
     idx = str(tmp_path / "fp_index")
+    ckpt = str(tmp_path / "ckpt1")
     os.makedirs(in_dir)
     spark.createDataFrame([
         Row(doc_id=1, text="alpha beta"),
         Row(doc_id=2, text="gamma delta"),
     ]).coalesce(1).write.mode("append").parquet(in_dir)
 
-    _run_available(spark, in_dir, out, idx, str(tmp_path / "ckpt1"))
+    _run_available(spark, in_dir, out, idx, ckpt)
     assert {r.doc_id for r in spark.read.parquet(out).collect()} == {1, 2}
 
-    # replay: same input, fresh checkpoint -> batch_id 0 again
-    _run_available(spark, in_dir, out, idx, str(tmp_path / "ckpt2"))
+    # replay: the commit of batch 0 is lost, the restart runs it again
+    lose_commit(ckpt, 0)
+    q = _run_available(spark, in_dir, out, idx, ckpt)
+    assert q.lastProgress["batchId"] == 0
     got = {r.doc_id for r in spark.read.parquet(out).collect()}
     assert got == {1, 2}, f"replay destroyed the batch output: {got}"
+
+
+def test_fresh_checkpoint_over_written_roots_fails_at_start(spark, tmp_path):
+    """A fresh checkpoint numbers its batches from 0 again, so a start
+    on one over output and index roots that already hold batches would
+    overwrite the old outputs: it raises at start and changes no
+    file."""
+    in_dir = str(tmp_path / "incoming")
+    out = str(tmp_path / "corpus")
+    idx = str(tmp_path / "fp_index")
+    os.makedirs(in_dir)
+    for b in range(4):
+        spark.createDataFrame([
+            Row(doc_id=10 * b + i, text=f"batch {b} text {i}")
+            for i in range(2)
+        ]).coalesce(1).write.mode("append").parquet(in_dir)
+        _run_available(spark, in_dir, out, idx, str(tmp_path / "ckpt"),
+                       compact_every=2)
+
+    def files():
+        return sorted(
+            (os.path.relpath(os.path.join(d, f), str(tmp_path)),
+             os.path.getsize(os.path.join(d, f)),
+             os.path.getmtime(os.path.join(d, f)))
+            for root in (out, idx)
+            for d, _, fs in os.walk(root) for f in fs
+        )
+
+    before = files()
+    assert len({f.split(os.sep)[1] for f, _, _ in before
+                if f.startswith("corpus" + os.sep + "batch_id=")}) == 4
+    with pytest.raises(ValueError, match="has no offsets"):
+        _run_available(spark, in_dir, out, idx, str(tmp_path / "ckpt_new"),
+                       compact_every=2)
+    assert files() == before
 
 
 def test_fs_nonempty_probes_through_hadoop(spark, tmp_path):

@@ -12,6 +12,7 @@ import os
 from pyspark.sql import Row, functions as F
 
 from my_feast_spark.streaming.ingest import embedding_dedup_ingest_stream
+from tests.conftest import lose_commit
 
 DIM = 8
 BASE = [1.0, 0.2, -0.5, 0.8, 0.1, -0.3, 0.6, -0.1]
@@ -122,7 +123,8 @@ def test_replay_is_idempotent(spark, tmp_path):
         Row(doc_id=2, embedding=OTHER),
     ])
     _run(spark, in_dir, out, idx, str(tmp_path / "ck1"))
-    _run(spark, in_dir, out, idx, str(tmp_path / "ck2"))  # fresh ckpt: replay
+    lose_commit(str(tmp_path / "ck1"), 0)  # the restart replays batch 0
+    _run(spark, in_dir, out, idx, str(tmp_path / "ck1"))
     rows = spark.read.parquet(out).collect()
     assert {r.doc_id for r in rows} == {1, 2}
     assert len(rows) == 2, "replay double-appended"

@@ -12,6 +12,7 @@ import os
 from pyspark.sql import Row, functions as F
 
 from my_feast_spark.streaming.ingest import near_dedup_ingest_stream
+from tests.conftest import lose_commit
 
 #: near-identical long texts: ~20 shared tokens, one token differs ->
 #: 3-gram Jaccard (and its signature estimate) well above 0.5
@@ -80,8 +81,9 @@ def test_replay_is_idempotent(spark, tmp_path):
     ]).coalesce(1).write.mode("append").parquet(in_dir)
 
     _run(spark, in_dir, out, idx, str(tmp_path / "ckpt1"))
-    # replay: same input, fresh checkpoint -> batch 0 again
-    _run(spark, in_dir, out, idx, str(tmp_path / "ckpt2"))
+    # replay: batch 0's commit is lost, the restart runs it again
+    lose_commit(str(tmp_path / "ckpt1"), 0)
+    _run(spark, in_dir, out, idx, str(tmp_path / "ckpt1"))
     rows = spark.read.parquet(out).collect()
     assert {r.doc_id for r in rows} == {1, 2}
     assert len(rows) == 2, "replay double-appended"
@@ -203,7 +205,8 @@ def test_bucketed_replay_is_idempotent(spark, tmp_path):
         Row(doc_id=2, text=OTHER),
     ]).coalesce(1).write.mode("append").parquet(in_dir)
     _run_bucketed(spark, in_dir, out, idx, str(tmp_path / "ck1"))
-    _run_bucketed(spark, in_dir, out, idx, str(tmp_path / "ck2"))
+    lose_commit(str(tmp_path / "ck1"), 0)  # the restart replays batch 0
+    _run_bucketed(spark, in_dir, out, idx, str(tmp_path / "ck1"))
     rows = spark.read.parquet(out).collect()
     assert {r.doc_id for r in rows} == {1, 2}
     assert len(rows) == 2, "replay double-appended"
@@ -227,7 +230,7 @@ def test_index_meta_pins_layout_choices(spark, tmp_path):
     assert os.path.exists(os.path.join(idx, "_mfs_index_meta.json"))
 
     # same config resumes fine
-    _run(spark, in_dir, out, idx, str(tmp_path / "ck2"))
+    _run(spark, in_dir, out, idx, str(tmp_path / "ck1"))
 
     # a different hash family against the same index is loud
     sdf = spark.readStream.schema("doc_id long, text string").parquet(
