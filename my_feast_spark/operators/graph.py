@@ -6,25 +6,20 @@ are all variants of one another, so it can keep one canonical doc per
 cluster. (Pairwise keep-one is wrong under transitivity: keep(a of a-b),
 keep(b of b-c) can drop nothing from {a,b,c}.)
 
-Implementation is iterative min-label propagation on the symmetrized
-edge list: every vertex starts labeled with its own id and repeatedly
-takes the min of its neighbors' labels until a fixpoint — O(component
-diameter) rounds, each one join + one groupBy (both shuffles keyed on
-vertex id, so AQE coalesces/skew-splits them), with ``localCheckpoint``
-truncating the plan between rounds (an iterative loop otherwise builds
-an exponentially deep lineage). Driver involvement is one convergence
-count per round — the classic Spark iterative-algorithm shape.
-
-Near-dup graphs are overwhelmingly tiny components (pairs/triangles of
-variants), so diameters are small and the loop converges in a handful
-of rounds. For adversarially long chains or power-law hubs,
-``method="star"`` switches to the large-star/small-star algorithm
+One algorithm, two execution sites. The edge list is canonicalized
+(hi, lo), self-loops dropped, deduplicated and materialized; a graph at
+or under ``_DRIVER_CC_MAX_EDGES`` edges resolves in a driver-side
+union-find (the near-dup case: a handful of edges out of a huge
+corpus), and a larger one runs the large-star/small-star algorithm
 (Kiveris et al., "Connected Components in MapReduce and Beyond":
 alternating star contractions, O(log^2 n) rounds worst case, ~log n in
-practice) — same agg+join building blocks per round, diameter-free
-round count. Either method RAISES if the round budget runs out: a
-non-converged label set silently merges/splits clusters, and a wrong
-dedup clustering is worse than a failed job.
+practice). Each star round is one groupBy + one join keyed on the star
+center, with ``localCheckpoint`` truncating the plan between rounds (an
+iterative loop otherwise builds an exponentially deep lineage); the
+round count does not depend on the component diameter, so long chains
+converge as fast as pairs. The loop RAISES if the round budget runs
+out: a non-converged label set silently merges/splits clusters, and a
+wrong dedup clustering is worse than a failed job.
 """
 
 from __future__ import annotations
@@ -33,7 +28,7 @@ import math
 
 from pyspark.sql import DataFrame, functions as F
 
-#: target edges per partition inside the propagation loop — the edge
+#: target edges per partition inside the iterative loops — the edge
 #: graph is orders of magnitude smaller than the corpus that produced
 #: it, so the loop re-partitions to match ITS size, not the corpus scan
 #: parallelism (at 32 default partitions, a few-hundred-edge graph pays
@@ -69,6 +64,14 @@ def release_checkpoint(df: DataFrame) -> bool:
     return True
 
 
+#: edge-count bound for the driver union-find: 1M edges is a few tens
+#: of MB on the driver and resolves in milliseconds, where the
+#: distributed loop pays several scheduler round-trips per round. The
+#: threshold is checked against the MATERIALIZED edge count, so a
+#: billion-edge graph at corpus scale always takes the distributed path.
+_DRIVER_CC_MAX_EDGES = 1_000_000
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "id_a",
@@ -77,113 +80,45 @@ def connected_components(
     max_iter: int = 25,
     out_id: str = "id",
     out_label: str = "cluster_id",
-    method: str = "label",
-    driver_max_edges: int | None = None,
 ) -> DataFrame:
     """(vertex, component) for every vertex appearing in ``edges``;
     the component id is the minimum vertex id in the component.
 
-    ``method="label"`` (default): min-label propagation — O(component
-    diameter) rounds, the right choice for near-dup graphs (tiny, dense
-    components). ``method="star"``: alternating large-star/small-star
-    contractions — round count grows with log of component size, not
-    diameter, for adversarially long chains / huge components.
-
-    Raises RuntimeError if ``max_iter`` rounds don't reach the fixpoint:
-    non-converged labels silently split clusters (each vertex would keep
-    a label only ``rounds`` hops toward the true minimum), and a wrong
-    dedup clustering is worse than a failed job.
-
-    ``driver_max_edges`` (default ``_DRIVER_CC_MAX_EDGES``): when the
-    MATERIALIZED edge count — canonicalized (hi, lo), self-loops
-    dropped, deduplicated; the same definition under both methods — is
-    at or below this bound, both methods short-circuit to a driver-side
+    The edges are canonicalized (hi, lo), self-loops dropped,
+    deduplicated and materialized first. When that edge count is at or
+    below ``_DRIVER_CC_MAX_EDGES`` the components come from a driver
     union-find — the near-dup pair graph is typically a handful of
     edges out of a huge corpus, and one distributed round costs more
-    scheduler latency than the whole resolution. Pass 0 to force the
-    distributed path.
+    scheduler latency than the whole resolution. Larger graphs run the
+    two-phase large-star/small-star loop: alternate large-star (hook
+    every larger neighbor to the neighborhood minimum) and small-star
+    (hook a node and its smaller neighbors to their minimum) until the
+    edge set is a union of disjoint stars centered at component minima.
+    The round count scales with log(component size), not diameter.
+    Edges stay canonical and deduplicated, are checkpointed per round,
+    and the fixpoint test compares an exact multiset checksum (count +
+    decimal sums + hash sum).
+
+    Raises RuntimeError if ``max_iter`` rounds don't reach the fixpoint:
+    a non-converged edge set leaves vertices hooked to a non-minimum
+    center, which silently splits clusters, and a wrong dedup
+    clustering is worse than a failed job.
 
     Block ownership: every intermediate ``localCheckpoint`` (edges,
-    per-round labels) is released before returning. On the distributed
-    path the RESULT still depends on the final round's checkpoint; that
-    frame is handed back as ``result._owned_checkpoints`` so a caller
-    that materializes the labels elsewhere can ``release_checkpoint``
-    it (the curation pipeline does). The driver union-find path returns
-    plain driver rows and pins nothing.
+    per-round star edges) is released before returning. On the
+    distributed path the RESULT still depends on the final round's
+    checkpoint; that frame is handed back as
+    ``result._owned_checkpoints`` so a caller that materializes the
+    labels elsewhere can ``release_checkpoint`` it (the curation
+    pipeline does). The driver union-find path returns plain driver
+    rows and pins nothing.
     """
-    if driver_max_edges is None:
-        driver_max_edges = _DRIVER_CC_MAX_EDGES
-    if method == "label":
-        return _cc_min_label(
-            edges, src, dst, max_iter, out_id, out_label, driver_max_edges
-        )
-    if method == "star":
-        return _cc_two_phase_star(
-            edges, src, dst, max_iter, out_id, out_label, driver_max_edges
-        )
-    raise ValueError(f"unknown connected-components method: {method!r}")
-
-
-#: edge-count bound for the driver union-find shortcut: 1M edges is a
-#: few tens of MB on the driver and resolves in milliseconds, where the
-#: distributed loop pays several scheduler round-trips per round. The
-#: threshold is checked against the MATERIALIZED edge count, so a
-#: billion-edge graph at corpus scale always takes the distributed path.
-_DRIVER_CC_MAX_EDGES = 1_000_000
-
-
-def _loop_partitions(spark, n_edges: int) -> int:
-    default_p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return max(1, min(default_p, math.ceil(n_edges / _EDGES_PER_PARTITION)))
-
-
-def _cc_driver_union_find(sym, spark, out_id, out_label) -> DataFrame:
-    """Union-find over a driver-collected edge list — the bounded
-    driver-side step for SMALL materialized pair graphs (the near-dup
-    case: a handful of edges out of a huge corpus), where even one
-    distributed round costs more in scheduler latency than the whole
-    resolution. Components get their minimum vertex id as the label,
-    identical to the distributed methods."""
-    parent: dict = {}
-
-    def find(x):
-        r = x
-        while parent[r] != r:
-            r = parent[r]
-        while parent[x] != r:  # path compression
-            parent[x], x = r, parent[x]
-        return r
-
-    for row in sym.collect():
-        a, b = row[0], row[1]
-        parent.setdefault(a, a)
-        parent.setdefault(b, b)
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            # union by MIN so the root is the component minimum
-            lo, hi = (ra, rb) if ra < rb else (rb, ra)
-            parent[hi] = lo
-    rows = [(x, find(x)) for x in parent]
-    # Label type = the COMMON type of both endpoints (coalesce forces
-    # Catalyst's least-common-type resolution): labels propagate across
-    # src and dst, so deriving both fields from the src column alone
-    # could overflow the narrower type on mixed-width id columns.
-    common = F.coalesce(F.col("a"), F.col("b"))
-    schema = sym.select(
-        common.alias(out_id), common.alias(out_label)
-    ).schema
-    return spark.createDataFrame(rows, schema)
-
-
-def _cc_min_label(
-    edges, src, dst, max_iter, out_id, out_label, driver_max_edges=0
-) -> DataFrame:
     spark = edges.sparkSession
     # `live` tracks every checkpoint this call has pinned and not yet
-    # released: the PREVIOUS round's labels are released as soon as the
-    # next round's are materialized (peak pinned state = edges + sym +
-    # two label generations, independent of round count), and any
-    # exception releases whatever is still live before propagating.
+    # released: a round's inputs are released as soon as its output is
+    # materialized (peak pinned state = two edge generations,
+    # independent of round count), and any exception releases whatever
+    # is still live before propagating.
     live: list[DataFrame] = []
 
     def _pin(df):
@@ -196,12 +131,10 @@ def _cc_min_label(
         live.remove(df)
 
     try:
-        # Canonicalize (hi, lo), drop self-loops, deduplicate BEFORE
-        # symmetrizing: duplicate input edges would otherwise both
-        # inflate the loop's join fan-out and make the driver-shortcut
-        # threshold mean something different here than under
-        # method="star" (both methods compare the same deduplicated
-        # edge count).
+        # Canonicalize (hi, lo), drop self-loops, deduplicate: the
+        # driver bound is compared against this deduplicated count, and
+        # duplicate input edges would only inflate every round's join
+        # fan-out.
         e = _pin(
             edges.select(
                 F.greatest(F.col(src), F.col(dst)).alias("hi"),
@@ -211,112 +144,15 @@ def _cc_min_label(
             .distinct()
         )
         n_edges = e.count()
-        sym = e.select(F.col("hi").alias("a"), F.col("lo").alias("b")).union(
-            e.select(F.col("lo").alias("a"), F.col("hi").alias("b"))
-        )
-        if n_edges <= driver_max_edges:
+        if n_edges <= _DRIVER_CC_MAX_EDGES:
+            sym = e.select(F.col("hi").alias("a"), F.col("lo").alias("b"))
             out = _cc_driver_union_find(sym, spark, out_id, out_label)
             # union-find already collected the edges; the result is
             # plain driver rows — nothing pinned outlives this call
             _release(e)
             return out
-        # Size loop parallelism to the materialized edge count, capped
-        # at the session default.
-        default_p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        loop_p = _loop_partitions(spark, 2 * n_edges)
-        if loop_p < default_p:
-            sym = _pin(sym.repartition(loop_p, "b"))
-        labels = _pin(
-            sym.select(F.col("a").alias("id")).distinct()
-            .withColumn("label", F.col("id"))
-        )
-        # Convergence check: per-vertex labels are monotonically
-        # non-increasing, so the EXACT label sum (decimal — no long
-        # overflow at any vertex count) strictly decreases until the
-        # fixpoint; an unchanged sum means no label moved. One tiny
-        # aggregate per round instead of a labels-vs-labels join+count.
-        label_sum = F.sum(F.col("label").cast("decimal(38,0)"))
-        prev_sum = labels.agg(label_sum).collect()[0][0]
-        for _ in range(max_iter):
-            neighbor_labels = sym.join(
-                labels.withColumnRenamed("id", "b"), "b"
-            ).select(F.col("a").alias("id"), "label")
-            new_labels = _pin(  # eager: also truncates lineage per round
-                labels.union(neighbor_labels)
-                .repartition(loop_p, "id")
-                .groupBy("id")
-                .agg(F.min("label").alias("label"))
-            )
-            new_sum = new_labels.agg(label_sum).collect()[0][0]
-            _release(labels)  # previous round's blocks die here
-            labels = new_labels
-            if new_sum == prev_sum:
-                # the result depends ONLY on the final round's
-                # checkpoint — release the rest; the kept one is handed
-                # to the caller via _owned_checkpoints
-                for c in [c for c in live if c is not labels]:
-                    _release(c)
-                out = labels.select(
-                    F.col("id").alias(out_id), F.col("label").alias(out_label)
-                )
-                out._owned_checkpoints = [labels]
-                return out
-            prev_sum = new_sum
-        raise RuntimeError(
-            f"connected_components(method='label') did not converge in "
-            f"{max_iter} rounds — the graph has a component with diameter "
-            f"> {max_iter}; rerun with method='star' (diameter-free round "
-            f"count) or a larger max_iter"
-        )
-    except BaseException:
-        for c in list(live):
-            release_checkpoint(c)
-        raise
-
-
-def _cc_two_phase_star(
-    edges, src, dst, max_iter, out_id, out_label, driver_max_edges=0
-) -> DataFrame:
-    """Kiveris et al. two-phase: alternate large-star (hook every
-    larger neighbor to the neighborhood minimum) and small-star (hook a
-    node and its smaller neighbors to their minimum) until the edge set
-    is a union of disjoint stars centered at component minima.
-
-    Each phase is one groupBy + one join keyed on the star center —
-    identical shuffle shape to a min-label round — but the round count
-    scales with log(component size) instead of diameter. Edges are kept
-    canonical (hi > lo), deduplicated, and checkpointed per round; the
-    fixpoint test compares an exact multiset checksum (count + decimal
-    sums + hash sum), two tiny aggregates per round.
-    """
-    spark = edges.sparkSession
-    # per-round release discipline + exception safety: see _cc_min_label
-    live: list[DataFrame] = []
-
-    def _pin(df):
-        out = df.localCheckpoint()
-        live.append(out)
-        return out
-
-    def _release(df):
-        release_checkpoint(df)
-        live.remove(df)
-
-    try:
-        e = _pin(
-            edges.select(
-                F.greatest(F.col(src), F.col(dst)).alias("hi"),
-                F.least(F.col(src), F.col(dst)).alias("lo"),
-            )
-            .filter(F.col("hi") != F.col("lo"))
-            .distinct()
-        )
-        n_edges = e.count()
-        if n_edges <= driver_max_edges:
-            sym = e.select(F.col("hi").alias("a"), F.col("lo").alias("b"))
-            out = _cc_driver_union_find(sym, spark, out_id, out_label)
-            _release(e)
-            return out
+        # size loop parallelism to the materialized edge count, capped
+        # at the session default
         loop_p = _loop_partitions(spark, n_edges)
 
         def checksum(df):
@@ -389,16 +225,57 @@ def _cc_two_phase_star(
                 return out
             prev = cur
         raise RuntimeError(
-            f"connected_components(method='star') did not converge in "
-            f"{max_iter} rounds — raise max_iter (round count is "
-            f"logarithmic in component size; this indicates a pathological "
-            f"or adversarial graph)"
+            f"connected_components did not converge in {max_iter} rounds "
+            f"— raise max_iter (round count is logarithmic in component "
+            f"size; this indicates a pathological or adversarial graph)"
         )
-
     except BaseException:
         for c in list(live):
             release_checkpoint(c)
         raise
+
+
+def _loop_partitions(spark, n_edges: int) -> int:
+    default_p = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    return max(1, min(default_p, math.ceil(n_edges / _EDGES_PER_PARTITION)))
+
+
+def _cc_driver_union_find(sym, spark, out_id, out_label) -> DataFrame:
+    """Union-find over a driver-collected edge list — the bounded
+    driver-side step for SMALL materialized pair graphs (the near-dup
+    case: a handful of edges out of a huge corpus), where even one
+    distributed round costs more in scheduler latency than the whole
+    resolution. Components get their minimum vertex id as the label,
+    identical to the star loop."""
+    parent: dict = {}
+
+    def find(x):
+        r = x
+        while parent[r] != r:
+            r = parent[r]
+        while parent[x] != r:  # path compression
+            parent[x], x = r, parent[x]
+        return r
+
+    for row in sym.collect():
+        a, b = row[0], row[1]
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            # union by MIN so the root is the component minimum
+            lo, hi = (ra, rb) if ra < rb else (rb, ra)
+            parent[hi] = lo
+    rows = [(x, find(x)) for x in parent]
+    # Label type = the COMMON type of both endpoints (coalesce forces
+    # Catalyst's least-common-type resolution): labels propagate across
+    # src and dst, so deriving both fields from the src column alone
+    # could overflow the narrower type on mixed-width id columns.
+    common = F.coalesce(F.col("a"), F.col("b"))
+    schema = sym.select(
+        common.alias(out_id), common.alias(out_label)
+    ).schema
+    return spark.createDataFrame(rows, schema)
 
 
 def pagerank_fixedpoint(

@@ -92,8 +92,13 @@ def _list_versions(fs, root: str) -> list[int]:
 
 
 def _manifest(fs, root: str, v: int) -> dict:
-    with fs.open_input_stream(f"{root}/{_VLOG}/{v}.json") as f:
-        return json.loads(f.read().decode("utf-8"))
+    # driver side only (planning and schema): the import never runs
+    # in a worker
+    from my_feast_spark.sources.versioned import _check_manifest
+
+    where = f"{root}/{_VLOG}/{v}.json"
+    with fs.open_input_stream(where) as f:
+        return _check_manifest(json.loads(f.read().decode("utf-8")), where)
 
 
 def _parquet_files(fs, root: str, commit_dir: str) -> list[str]:
@@ -119,8 +124,8 @@ def _hive_values(file_path: str, commit_dir: str) -> dict:
     file (hive-partitioned commits carry those columns in the PATH,
     not the file) — URL-unescaped the way Spark wrote them (a value
     containing ``:`` lands as ``%3A``), with the NULL sentinel mapped
-    back to None (review-caught: serving the raw segment diverged from
-    the batch reader and crashed non-string casts)."""
+    back to None, so a value reads the same as through the batch
+    reader and a non-string partition column casts cleanly."""
     from urllib.parse import unquote
 
     rel = file_path.split(f"{commit_dir}/", 1)[-1]
@@ -184,11 +189,11 @@ class _ChangesStreamReader(DataSourceStreamReader):
         canonical = {
             f["name"] for f in json.loads(self._schema_json)["fields"]
         }
-        # manifests read LAZILY along the parent walk (review-caught:
-        # an eager range prefetch read the already-consumed v_old
-        # manifest too, so a vacuum that dropped only the consumed
-        # prefix falsely killed a fully servable stream — sidecar
-        # commits never need their parent's manifest)
+        # manifests are read LAZILY along the parent walk — the commits
+        # in (v_old, v_new] plus an append's parent, for its dirs — so
+        # a vacuum that dropped the consumed prefix fails the stream
+        # only where an append needs a dropped parent; a sidecar commit
+        # never reads its parent's manifest
         manifests: dict[int, dict] = {}
 
         def _m(vv: int) -> dict:
@@ -217,7 +222,7 @@ class _ChangesStreamReader(DataSourceStreamReader):
                     "cannot serve it; re-seed from a snapshot"
                 )
             extra = [
-                f["name"] for f in m.get("schema", {}).get("fields", [])
+                f["name"] for f in m["schema"]["fields"]
                 if f["name"] not in canonical
             ]
             if extra:
@@ -345,11 +350,6 @@ class VersionedChangesDataSource(DataSource):
         if not versions:
             raise FileNotFoundError(f"no committed versions under {root}")
         m = _manifest(fs, p, versions[-1])
-        if "schema" not in m:
-            raise ValueError(
-                f"{root} predates the schema contract — commit once "
-                "to adopt it before streaming its changes"
-            )
         fields = _T.StructType.fromJson(m["schema"]).fields
         clash = [f.name for f in fields
                  if f.name in ("_change_type", "_commit_version")]

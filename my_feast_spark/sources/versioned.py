@@ -47,11 +47,14 @@ all compose (they are per-directory artifacts).
 from __future__ import annotations
 
 import json
+import logging
 import re
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as _T
+
+_log = logging.getLogger("my_feast_spark")
 
 #: committed-manifest file names: {N}.json exactly
 _MANIFEST_RE = re.compile(r"^\d+\.json$")
@@ -195,17 +198,6 @@ def _schema_merge(parent_schema, new_schema, merge_schema: bool):
     )
 
 
-def _parent_schema(spark, path: str, pm: dict):
-    """The parent version's table schema: from its manifest when
-    recorded, else inferred from its data directories (legacy tables
-    adopt the schema contract on their next commit)."""
-    from pyspark.sql.types import StructType
-
-    if "schema" in pm:
-        return StructType.fromJson(pm["schema"])
-    return spark.read.parquet(*[f"{path}/{d}" for d in pm["dirs"]]).schema
-
-
 def _fs(spark: SparkSession, path: str):
     sc = spark.sparkContext
     jvm = sc._jvm
@@ -217,13 +209,33 @@ def _hpath(jvm, *parts: str):
     return jvm.org.apache.hadoop.fs.Path("/".join(parts))
 
 
+#: fields every committed manifest carries: the table schema at that
+#: version (reads plan with it) and the publish time (TIMESTAMP AS OF)
+_REQUIRED_FIELDS = ("schema", "committed_at")
+
+
+def _check_manifest(m: dict, where: str) -> dict:
+    """``m`` if it carries every required field, else a ValueError
+    naming the manifest and the missing field: the log has one format,
+    and a manifest written without a schema or publish time is never
+    read by inference."""
+    for field in _REQUIRED_FIELDS:
+        if field not in m:
+            raise ValueError(
+                f"manifest {where} has no {field!r} field — it was not "
+                "written by this version of the commit log"
+            )
+    return m
+
+
 def _read_manifest(jvm, fs, path: str, version: int) -> dict:
     mp = _hpath(jvm, path, _VLOG, f"{version}.json")
     stream = fs.open(mp)
     try:
-        return json.loads(bytes(stream.readAllBytes()).decode("utf-8"))
+        m = json.loads(bytes(stream.readAllBytes()).decode("utf-8"))
     finally:
         stream.close()
+    return _check_manifest(m, f"{path}/{_VLOG}/{version}.json")
 
 
 def list_versions(spark: SparkSession, path: str) -> list[int]:
@@ -265,15 +277,15 @@ def write_version(
     the loser re-reads the new parent and retries) and against crashes
     at any point (an unpublished manifest leaves the commit invisible).
 
-    ``expected_parent`` makes the commit CONTENT-DEPENDENT (review-
-    caught): a df computed FROM version P (an upsert, a checkpoint)
-    must not silently publish over a table that moved past P — the
-    blind retry would commit stale content and erase the concurrent
-    commit's rows. With ``expected_parent=P`` the publish succeeds only
-    while P is still the latest; otherwise the staged data directory is
-    cleaned up and :class:`VersionConflictError` raised for the caller
-    to re-read and recompute. Plain appends/overwrites (content not
-    derived from a prior read) keep the silent retry.
+    ``expected_parent`` makes the commit CONTENT-DEPENDENT: a df
+    computed FROM version P (an upsert, a checkpoint) must not silently
+    publish over a table that moved past P — the blind retry would
+    commit stale content and erase the concurrent commit's rows. With
+    ``expected_parent=P`` the publish succeeds only while P is still
+    the latest; otherwise the staged data directory is cleaned up and
+    :class:`VersionConflictError` raised for the caller to re-read and
+    recompute. Plain appends/overwrites (content not derived from a
+    prior read) keep the silent retry.
 
     ``txn=(app_id, txn_version)`` makes an APPEND idempotent under
     replay (Delta's txnAppId/txnVersion lever, for
@@ -299,8 +311,7 @@ def write_version(
     old versions keep theirs — time travel returns each version's own
     shape); a same-name different-type column is always a loud
     :class:`SchemaEvolutionError`. An overwrite resets the schema to
-    the new contents'. Legacy manifests without a recorded schema keep
-    inference and adopt the contract on their next commit.
+    the new contents'.
 
     ``partition_by`` writes this commit's data directory hive-
     partitioned (the reference's dominant ``created=`` date layout,
@@ -346,8 +357,8 @@ def write_version(
         # checkpoint must not silently flatten a date-partitioned
         # table, and a plain append (e.g. a versioned ingest stream's
         # batch) must not wedge against the layout check below just
-        # because an operator partitioned the table mid-stream
-        # (review-caught). An explicit MISMATCHED layout still raises.
+        # because an operator partitioned the table mid-stream. An
+        # explicit MISMATCHED layout still raises.
         _spark = df.sparkSession
         _versions = list_versions(_spark, path)
         if _versions:
@@ -423,7 +434,7 @@ def write_version(
             # lives in this loop)
             try:
                 table_schema = _schema_merge(
-                    _parent_schema(spark, path, pm),
+                    _T.StructType.fromJson(pm["schema"]),
                     df.schema, merge_schema,
                 )
             except SchemaEvolutionError:
@@ -490,17 +501,10 @@ def version_at_timestamp(
     the highest committed version whose publish time is <= ``ts`` (a
     datetime, or epoch seconds). Publish times live IN the manifests
     (``committed_at``, stamped at the atomic rename) — never file
-    mtimes, which copies and restores perturb. A manifest from before
-    this field existed inherits the maximum ``committed_at`` seen so
-    far in version order (versions commit sequentially, so a commit
-    can never precede its parent): a mixed-version writer fleet — a
-    legacy writer publishing AFTER stamped versions exist — can then
-    never make its commit sort before earlier stamped ones, which
-    would resolve TIMESTAMP AS OF to a version committed after the
-    requested instant (advice-caught). An all-legacy prefix inherits
-    epoch 0 (always <= ts), the old behavior. Raises when every
-    retained commit is newer than ``ts`` (the asked-for state
-    predates retained history)."""
+    mtimes, which copies and restores perturb; a manifest without the
+    stamp raises ValueError rather than sorting at an invented time.
+    Raises when every retained commit is newer than ``ts`` (the
+    asked-for state predates retained history)."""
     import datetime as _dt
 
     if isinstance(ts, _dt.datetime):
@@ -511,12 +515,8 @@ def version_at_timestamp(
     if not versions:
         raise FileNotFoundError(f"no committed versions under {path}")
     best = None
-    high_water = 0.0
     for v in versions:
-        at = _read_manifest(jvm, fs, path, v).get("committed_at")
-        at = high_water if at is None else float(at)
-        high_water = max(high_water, at)
-        if at <= ts:
+        if float(_read_manifest(jvm, fs, path, v)["committed_at"]) <= ts:
             best = v
     if best is None:
         raise ValueError(
@@ -539,17 +539,10 @@ def _scan_manifest_dirs(
     to every branch, and ``checkpoint_if_due`` bounds the branch
     count."""
     dirs = m["dirs"] if dirs is None else dirs
-    schema = None
-    if "schema" in m:
-        from pyspark.sql.types import StructType
-
-        schema = StructType.fromJson(m["schema"])
+    schema = _T.StructType.fromJson(m["schema"])
 
     def _one(paths):
-        reader = spark.read
-        if schema is not None:
-            reader = reader.schema(schema)
-        return reader.parquet(*paths)
+        return spark.read.schema(schema).parquet(*paths)
 
     if m.get("partition_by") and len(dirs) > 1:
         out = None
@@ -574,8 +567,7 @@ def read_version(
     an evolved table would nondeterministically drop or gain the newer
     columns depending on which file wins; the recorded schema makes
     every read deterministic and serves NULLs from pre-evolution
-    directories. Legacy manifests without a recorded schema fall back
-    to inference.
+    directories.
 
     ``as_of_timestamp`` (datetime or epoch seconds; mutually exclusive
     with ``version``) resolves through :func:`version_at_timestamp` —
@@ -630,12 +622,8 @@ def read_version_with_skipping(
     # plan every per-directory scan with the version's recorded schema:
     # a predicate on a merge_schema-added column then resolves against
     # pre-evolution directories (as all-NULL, matching nothing) instead
-    # of failing analysis (review-caught)
-    schema = None
-    if "schema" in m:
-        from pyspark.sql.types import StructType
-
-        schema = StructType.fromJson(m["schema"])
+    # of failing analysis
+    schema = _T.StructType.fromJson(m["schema"])
     out = None
     report = {"files_total": 0, "files_read": 0, "files_skipped": 0}
     for d in m["dirs"]:
@@ -708,7 +696,7 @@ def upsert_version(
     raises :class:`VersionConflictError` instead of silently erasing
     the concurrent commit's rows — callers retry the whole merge.
 
-    ``change_feed`` (default on — Delta's CDF lever, round 16):
+    ``change_feed`` (default on — Delta's CDF lever):
     the merge already computes exactly which keys it touches, so the
     commit also persists an increment-sized change sidecar — one row
     per incoming key with ``op`` ('insert' when the key was absent
@@ -721,7 +709,7 @@ def upsert_version(
     batch against that increment-sized relation — both joins keep the
     small side broadcastable); pass ``False`` to skip it, which sends
     diffs over this commit back to the snapshot join. The batch's OWN
-    lineage is evaluated exactly once per commit (r17): the sidecar is
+    lineage is evaluated exactly once per commit: the sidecar is
     staged first and the overwrite's batch side is read back from its
     post images, so a composed merge plan never runs twice and the
     committed rows are bit-identical to what the change feed records.
@@ -754,7 +742,7 @@ def upsert_version(
             optimized_write_split_rows=optimized_write_split_rows,
         )
     # preimage lookup, staged so BOTH joins keep their small side
-    # on the broadcastable right (review-caught: a left-outer join
+    # on the broadcastable right (a left-outer join
     # can only broadcast its right side, and putting the full
     # parent there would shuffle the table per upsert): first
     # restrict the parent to the incoming keys (left-semi, the
@@ -780,11 +768,10 @@ def upsert_version(
         )
     )
     # Stage the sidecar FIRST, then rebuild the commit's batch side
-    # FROM the staged parquet (r17, guide §1.2 "don't compute things
-    # twice"): the sidecar job is the ONLY evaluation of the incoming
-    # batch's lineage — previously the overwrite's union re-ran it in
-    # full (a composed merge plan pays twice), and the parent was the
-    # only shared input. The post-image read-back is increment-sized,
+    # FROM the staged parquet: the sidecar job is the ONLY evaluation
+    # of the incoming batch's lineage (the overwrite's union would
+    # otherwise re-run it in full — a composed merge plan would pay
+    # twice). The post-image read-back is increment-sized,
     # costs no extra job, and guarantees the committed batch rows are
     # bit-identical to the sidecar's recorded post images (the change
     # feed can never drift from the table it describes). The parent is
@@ -850,10 +837,9 @@ def restore_version(
             "mode": "restore",
             "restored_from": version,
             "dirs": list(src["dirs"]),
+            "schema": src["schema"],
             "committed_at": _time.time(),
         }
-        if "schema" in src:
-            manifest["schema"] = src["schema"]
         if "partition_by" in src:
             manifest["partition_by"] = src["partition_by"]
         txn_map = dict(
@@ -1055,7 +1041,7 @@ def diff_versions(
     ``prefer_manifest_delta=False`` forces the snapshot join (e.g. for
     a table whose appends deliberately duplicate keys).
 
-    Round 16 extends increment-only diffs ACROSS keyed rewrites:
+    Increment-only diffs also compose ACROSS keyed rewrites:
     ``upsert_version``/``delete_version`` commits that carry a change
     sidecar (``change_feed=True``, the default) and ``checkpoint``
     commits (content-preserving, zero changes) compose via
@@ -1071,10 +1057,9 @@ def diff_versions(
         jvm, fs = _fs(spark, path)
         versions = list_versions(spark, path)
         if v_old in versions and v_new in versions and v_old <= v_new:
-            # ONE chain walk serves both increment paths (review-caught:
-            # the former separate append-only walker re-read the same
-            # manifests _chain_change_plan reads — 2x driver I/O per
-            # mixed-chain diff at object-store GET latency)
+            # ONE chain walk serves both increment paths: each manifest
+            # in the range is read once per diff (driver I/O at
+            # object-store GET latency)
             plan = _chain_change_plan(jvm, fs, path, v_old, v_new)
             if plan is not None:
                 if not any(
@@ -1102,7 +1087,7 @@ def diff_versions(
                         .select(*keys)
                         .withColumn("change", F.lit("added"))
                     )
-                # mixed chain (round 16): appends + change-feed
+                # mixed chain: appends + change-feed
                 # upserts/deletes + checkpoints compose from their
                 # increments — sidecars and added dirs only, never a
                 # snapshot scan
@@ -1253,7 +1238,7 @@ def read_changes(
             f"since_version {since_version} > until_version {until_version}"
         )
     head = _read_manifest(jvm, fs, path, until_version)
-    schema = _parent_schema(spark, path, head)
+    schema = _T.StructType.fromJson(head["schema"])
     clash = [c for c in _CDF_COLS if c in schema.fieldNames()]
     if clash:
         raise ValueError(
@@ -1417,9 +1402,9 @@ def apply_changes_version(
         # net is one row per key by construction; no distinct needed
         touched = net.select(*keys)
         # a batch netting to ONLY no-op deletes (keys the target never
-        # had) must not publish a content-identical commit (review-
-        # caught, probe-confirmed): nothing to upsert and no delete
-        # that matches the target -> None, like an empty net
+        # had) must not publish a content-identical commit: nothing to
+        # upsert and no delete that matches the target -> None, like an
+        # empty net
         if upserts.isEmpty() and (
             net.where(F.col("_change_type") == "delete")
             .join(current, keys, "left_semi").isEmpty()
@@ -1567,7 +1552,7 @@ def checkpoint_version(
         _carry_txn=True,
         # content-preserving by construction: mark it so diff_versions'
         # chain composer treats the commit as zero changes instead of
-        # falling back to the two-snapshot join (round 16)
+        # falling back to the two-snapshot join
         _manifest_extra={"op": "checkpoint"},
     )
 
@@ -1618,7 +1603,7 @@ def vacuum(
     (written, never published) is removed once it is old enough.
 
     ``grace_seconds`` is the in-flight-commit guard (Delta's VACUUM
-    retention window, review-caught): a concurrent ``write_version``
+    retention window): a concurrent ``write_version``
     writes its data directory BEFORE publishing its manifest, so a
     vacuum racing it would see an unreferenced directory and delete a
     commit about to become (or just become) visible. Directories whose
@@ -1644,10 +1629,12 @@ def vacuum(
     cutoff_ms = (_time.time() - grace_seconds) * 1000.0
     vdir = _hpath(jvm, path, _VLOG)
     for st in fs.listStatus(vdir):
-        if (
-            st.getPath().getName().startswith(".tmp-")
-            and st.getModificationTime() < cutoff_ms
-        ):
+        name = st.getPath().getName()
+        if name.startswith(".tmp-") and st.getModificationTime() < cutoff_ms:
+            _log.warning(
+                "vacuum %s: deleting %s/%s, a torn commit's unpublished "
+                "manifest", path, _VLOG, name,
+            )
             fs.delete(st.getPath(), False)
     removed_dirs = 0
     droot = _hpath(jvm, path, _DATA)

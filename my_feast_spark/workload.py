@@ -1324,9 +1324,10 @@ SQL_MINHASH_DUP_PAIRS = _LazySQL(_sql_minhash_dup_pairs)
 
 def q_dedup_clusters(spark, sf_dir):
     """Transitive near-dup clusters over the MinHash-LSH pair graph —
-    connected components by iterative min-label propagation
-    (operators/graph.py), so curation can keep ONE canonical doc per
-    variant group instead of making unsound pairwise keep decisions.
+    connected components by driver union-find, or large-star/small-star
+    contraction past the driver bound (operators/graph.py), so curation
+    can keep ONE canonical doc per variant group instead of making
+    unsound pairwise keep decisions.
     The oracle recomputes the same components with a recursive CTE over
     the identical portable-hash pair SQL: a fully hash-matched check for
     an inherently iterative algorithm."""

@@ -318,8 +318,9 @@ def test_connected_components_golden(spark):
 
 
 def test_connected_components_long_chain_converges(spark):
-    """A 12-vertex path needs ~diameter rounds of min-label propagation —
-    must converge (not hit max_iter) and label everything with vertex 0."""
+    """A 12-vertex path resolves in the driver union-find (or, past the
+    driver bound, in diameter-free star rounds) — must converge (not hit
+    max_iter) and label everything with vertex 0."""
     from pyspark.sql import Row
 
     from my_feast_spark.operators.graph import connected_components

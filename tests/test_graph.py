@@ -1,11 +1,11 @@
-"""Connected components: driver union-find shortcut, min-label loop,
-and two-phase star contraction.
+"""Connected components: driver union-find shortcut and two-phase star
+contraction.
 
-The near-dup workload defaults route tiny materialized pair graphs to a
-driver-side union-find (bounded, deterministic); the distributed paths
-are forced here with driver_max_edges=0. Non-convergence must RAISE,
-never silently return partial labels (a wrong clustering merges/splits
-dedup groups undetectably).
+Tiny materialized pair graphs resolve in a driver-side union-find
+(bounded, deterministic); the distributed star loop is forced here by
+patching the driver bound ``_DRIVER_CC_MAX_EDGES`` to 0. Non-convergence
+must RAISE, never silently return partial labels (a wrong clustering
+merges/splits dedup groups undetectably).
 """
 
 from __future__ import annotations
@@ -13,6 +13,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import Row
 
+from my_feast_spark.operators import graph
 from my_feast_spark.operators.graph import connected_components
 
 MIXED = [(1, 2), (2, 3), (3, 1), (10, 11), (20, 21), (21, 22),
@@ -27,44 +28,66 @@ def _labels(df):
     return {r.id: r.cluster_id for r in df.collect()}
 
 
-def test_all_three_paths_agree_on_mixed_components(spark):
+def _force_star(monkeypatch):
+    """Route every graph, however small, to the distributed star loop."""
+    monkeypatch.setattr(graph, "_DRIVER_CC_MAX_EDGES", 0)
+
+
+def _both_paths(monkeypatch):
+    """Yield once under the default bound (driver union-find), then
+    once with the bound patched to 0 (forced star)."""
+    yield "union-find"
+    _force_star(monkeypatch)
+    yield "star"
+
+
+def test_union_find_and_star_agree_on_mixed_components(spark, monkeypatch):
     e = _edges(spark, MIXED)
     fast = _labels(connected_components(e))  # driver union-find (default)
-    lab = _labels(connected_components(e, method="label", driver_max_edges=0))
-    star = _labels(connected_components(e, method="star", driver_max_edges=0))
-    assert fast == lab == star
+    _force_star(monkeypatch)
+    star = _labels(connected_components(e))
+    assert fast == star
     assert fast[3] == 1 and fast[24] == 20 and fast[40] == 5
 
 
-def test_long_chain_label_method_raises_star_converges(spark):
-    # 60-vertex chain: diameter 59 > default max_iter=25 rounds of
-    # 1-hop label propagation — must raise, not return partial labels
+def test_long_chain_star_converges_and_exhausted_budget_raises(
+    spark, monkeypatch
+):
+    # 60-vertex chain: diameter 59 > default max_iter=25, yet the star
+    # loop's round count is diameter-free — it converges within budget
     chain = [(i, i + 1) for i in range(59)]
     e = _edges(spark, chain)
-    with pytest.raises(RuntimeError, match="method='star'"):
-        connected_components(e, method="label", driver_max_edges=0)
-    star = _labels(connected_components(e, method="star", driver_max_edges=0))
+    # the driver shortcut resolves the same chain instantly
+    fast = _labels(connected_components(e))
+    _force_star(monkeypatch)
+    star = _labels(connected_components(e))
     assert set(star.values()) == {0}
     assert len(star) == 60
-    # the driver shortcut resolves the same chain instantly
-    assert _labels(connected_components(e)) == star
+    assert fast == star
+    # a budget too small for the fixpoint must raise, not return
+    # partial labels
+    with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
+        connected_components(e, max_iter=1)
 
 
-def test_label_method_converges_within_budget_on_chain(spark):
-    chain = [(i, i + 1) for i in range(10)]
-    lab = _labels(
-        connected_components(_edges(spark, chain), method="label",
-                             driver_max_edges=0)
-    )
-    assert set(lab.values()) == {0} and len(lab) == 11
+def test_default_call_on_long_chain_past_driver_bound_converges(
+    spark, monkeypatch
+):
+    # above the driver bound the DEFAULT call must still label a chain
+    # whose diameter exceeds max_iter: the distributed path's round
+    # count may not depend on the diameter
+    _force_star(monkeypatch)
+    chain = [(i, i + 1) for i in range(59)]
+    out = connected_components(_edges(spark, chain))
+    try:
+        labels = _labels(out)
+    finally:
+        for c in getattr(out, "_owned_checkpoints", ()):
+            graph.release_checkpoint(c)
+    assert labels == {i: 0 for i in range(60)}
 
 
-def test_unknown_method_rejected(spark):
-    with pytest.raises(ValueError):
-        connected_components(_edges(spark, [(1, 2)]), method="nope")
-
-
-def test_mixed_width_id_columns_widen_label_type(spark):
+def test_mixed_width_id_columns_widen_label_type(spark, monkeypatch):
     # src INT, dst BIGINT: labels propagate across both endpoints, so
     # the output schema must take the COMMON (wider) type — deriving it
     # from the src column alone would overflow int on a long-only label
@@ -78,38 +101,38 @@ def test_mixed_width_id_columns_widen_label_type(spark):
         StructField("id_b", LongType()),
     ])
     e = spark.createDataFrame([(1, big), (2, big + 1), (1, 2)], schema)
-    for kwargs in ({}, {"method": "label", "driver_max_edges": 0},
-                   {"method": "star", "driver_max_edges": 0}):
-        out = connected_components(e, **kwargs)
+    for path in _both_paths(monkeypatch):
+        out = connected_components(e)
         types = {f.name: f.dataType for f in out.schema.fields}
-        assert isinstance(types["id"], LongType), kwargs
-        assert isinstance(types["cluster_id"], LongType), kwargs
+        assert isinstance(types["id"], LongType), path
+        assert isinstance(types["cluster_id"], LongType), path
         labels = _labels(out)
-        assert labels == {1: 1, 2: 1, big: 1, big + 1: 1}, kwargs
+        assert labels == {1: 1, 2: 1, big: 1, big + 1: 1}, path
 
 
-def test_duplicate_edges_do_not_change_shortcut_threshold(spark):
+def test_duplicate_edges_do_not_change_shortcut_threshold(
+    spark, monkeypatch
+):
     # 3 distinct edges repeated 4x each: the deduplicated count (3) is
-    # what both methods compare against driver_max_edges — a bound of 3
-    # must take the driver shortcut (identical labels either way)
+    # what the driver bound is compared against — a bound of 3 must
+    # take the driver shortcut, which pins nothing
+    monkeypatch.setattr(graph, "_DRIVER_CC_MAX_EDGES", 3)
     pairs = [(1, 2), (2, 3), (10, 11)] * 4
-    e = _edges(spark, pairs)
-    lab = _labels(connected_components(e, method="label", driver_max_edges=3))
-    star = _labels(connected_components(e, method="star", driver_max_edges=3))
-    assert lab == star == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
+    out = connected_components(_edges(spark, pairs))
+    assert not getattr(out, "_owned_checkpoints", None)
+    assert _labels(out) == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
 
 
-def test_empty_edge_set_yields_empty_labels(spark):
+def test_empty_edge_set_yields_empty_labels(spark, monkeypatch):
     e = spark.createDataFrame([], "id_a long, id_b long")
-    for kwargs in ({}, {"method": "label", "driver_max_edges": 0},
-                   {"method": "star", "driver_max_edges": 0}):
-        assert connected_components(e, **kwargs).count() == 0, kwargs
+    for path in _both_paths(monkeypatch):
+        assert connected_components(e).count() == 0, path
 
 
-def test_connected_components_releases_checkpoints(spark):
+def test_connected_components_releases_checkpoints(spark, monkeypatch):
     """Repeated CC calls must not accumulate pinned blocks: the driver
     union-find path pins nothing; the forced-distributed path pins
-    exactly the final-round labels checkpoint, which it hands back via
+    exactly the final-round edge checkpoint, which it hands back via
     _owned_checkpoints for the caller to release."""
     from my_feast_spark.operators.graph import release_checkpoint
 
@@ -127,19 +150,17 @@ def test_connected_components_releases_checkpoints(spark):
     # GC'd RDDs concurrently, so `pinned()` can shrink below base
     assert pinned() - base == set(), "driver-path CC leaked pinned RDDs"
 
-    for method in ("label", "star"):  # forced distributed path
-        out = connected_components(
-            edges, "id_a", "id_b", method=method, driver_max_edges=0
-        )
-        out.collect()
-        ck = getattr(out, "_owned_checkpoints", None)
-        assert ck, "distributed CC must hand back its result checkpoint"
-        assert len(pinned() - base) == 1, (
-            f"{method}: exactly the result checkpoint should stay pinned"
-        )
-        for c in ck:
-            assert release_checkpoint(c)
-        assert pinned() - base == set(), f"{method}: release left pinned RDDs"
+    _force_star(monkeypatch)  # forced distributed path
+    out = connected_components(edges, "id_a", "id_b")
+    out.collect()
+    ck = getattr(out, "_owned_checkpoints", None)
+    assert ck, "distributed CC must hand back its result checkpoint"
+    assert len(pinned() - base) == 1, (
+        "exactly the result checkpoint should stay pinned"
+    )
+    for c in ck:
+        assert release_checkpoint(c)
+    assert pinned() - base == set(), "release left pinned RDDs"
 
 
 def test_curate_releases_checkpoints_and_caches(spark):

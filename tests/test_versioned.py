@@ -64,16 +64,41 @@ def test_torn_commit_is_invisible_and_vacuumed(spark, tmp_path):
     assert not os.path.exists(f"{path}/data/vdeadbeef0000")
 
 
+def test_vacuum_logs_each_stale_temp_manifest(spark, tmp_path, caplog):
+    """A crashed commit's unpublished ``.tmp-`` manifest is deleted by
+    vacuum once past the grace window, with one WARNING record on the
+    ``my_feast_spark`` logger naming the table and the file."""
+    import logging
+
+    path = str(tmp_path / "t")
+    write_version(_df(spark, 0, 10, "a"), path)
+    stale = os.path.join(path, "_vlog", ".tmp-1-deadbeef")
+    with open(stale, "w") as fh:
+        json.dump({"version": 1}, fh)
+    old = os.path.getmtime(stale) - 3600
+    os.utime(stale, (old, old))
+    caplog.clear()
+    with caplog.at_level(logging.WARNING, logger="my_feast_spark"):
+        vacuum(spark, path, keep_last=1, grace_seconds=0)
+    assert not os.path.exists(stale)
+    (rec,) = [r for r in caplog.records if r.name == "my_feast_spark"]
+    assert rec.levelno == logging.WARNING
+    msg = rec.getMessage()
+    assert path in msg and ".tmp-1-deadbeef" in msg
+    assert read_version(spark, path).count() == 10
+
+
 def test_version_number_race_is_rename_arbitrated(spark, tmp_path):
     """If another writer publishes N first, the loser's rename fails
     and it retries at N+1 with the winner as parent — simulate by
     pre-claiming the next version id mid-protocol."""
     path = str(tmp_path / "t")
     write_version(_df(spark, 0, 10, "a"), path)  # v0
-    # another writer claims v1 out from under us
+    # another writer claims v1 out from under us (a same-format
+    # manifest: v0's, re-stamped as an append on top of it)
     winner = {
+        **json.load(open(f"{path}/_vlog/0.json")),
         "version": 1, "parent": 0, "mode": "append",
-        "dirs": json.load(open(f"{path}/_vlog/0.json"))["dirs"],
     }
     with open(f"{path}/_vlog/1.json", "w") as fh:
         json.dump(winner, fh)
@@ -635,14 +660,25 @@ def test_timestamp_as_of_resolution(spark, tmp_path):
         V.read_version(spark, path, 0, as_of_timestamp=t_mid)
 
 
-def test_timestamp_as_of_legacy_manifest_inherits_high_water(
-    spark, tmp_path
-):
-    """Advice-caught mixed-version-writer case: a manifest WITHOUT
-    committed_at (legacy writer) publishing after stamped versions must
-    not sort as epoch 0 — it inherits the running max stamp, so a
-    TIMESTAMP AS OF before the first stamped commit raises instead of
-    resolving to the later legacy version."""
+def _strip_manifest_field(path, version, field):
+    """Rewrite a committed manifest out-of-band without ``field``; drop
+    Hadoop LocalFS's checksum sidecar, stale after the edit."""
+    mpath = os.path.join(path, "_vlog", f"{version}.json")
+    with open(mpath) as f:
+        m = json.load(f)
+    del m[field]
+    with open(mpath, "w") as f:
+        json.dump(m, f)
+    crc = os.path.join(path, "_vlog", f".{version}.json.crc")
+    if os.path.exists(crc):
+        os.remove(crc)
+
+
+def test_timestamp_as_of_stamp_stripped_manifest_raises(spark, tmp_path):
+    """A manifest WITHOUT committed_at has no publish time to resolve
+    TIMESTAMP AS OF against: the log has one format, so resolution
+    raises a ValueError naming the manifest and the field instead of
+    sorting the commit at an invented time."""
     import time
 
     from my_feast_spark.sources import versioned as V
@@ -653,34 +689,31 @@ def test_timestamp_as_of_legacy_manifest_inherits_high_water(
     V.write_version(
         spark.createDataFrame([(2, 20)], ["k", "v"]), path, mode="append"
     )
-    def _strip_stamp(version):
-        # rewrite the manifest out-of-band (a legacy writer's shape);
-        # drop Hadoop LocalFS's checksum sidecar, stale after the edit
-        mpath = os.path.join(path, "_vlog", f"{version}.json")
-        with open(mpath) as f:
-            m = json.load(f)
-        del m["committed_at"]
-        with open(mpath, "w") as f:
-            json.dump(m, f)
-        crc = os.path.join(path, "_vlog", f".{version}.json.crc")
-        if os.path.exists(crc):
-            os.remove(crc)
+    _strip_manifest_field(path, 1, "committed_at")
 
-    # strip v1's stamp: the commit now looks like a pre-field writer's
-    _strip_stamp(1)
+    for ts in (t_before, time.time() + 1):
+        with pytest.raises(ValueError, match="committed_at") as exc:
+            V.version_at_timestamp(spark, path, ts)
+        assert os.path.join("_vlog", "1.json") in str(exc.value)
 
-    # pre-fix: v1 sorted as epoch 0, so a ts BEFORE v0 resolved to v1 —
-    # a version committed after the requested instant
-    with pytest.raises(ValueError, match="oldest retained commit"):
-        V.version_at_timestamp(spark, path, t_before)
-    # the legacy commit inherits its parent's stamp, so it is still
-    # reachable for any ts at/after that stamp
-    assert V.version_at_timestamp(spark, path, time.time() + 1) == 1
 
-    # an ALL-legacy table keeps the old behavior: epoch-0 prefix, any
-    # non-negative ts resolves to the latest
-    _strip_stamp(0)
-    assert V.version_at_timestamp(spark, path, t_before) == 1
+def test_read_version_schema_stripped_manifest_raises(spark, tmp_path):
+    """A manifest WITHOUT a recorded schema is never read by footer
+    inference: read_version raises a ValueError naming the manifest and
+    the field, and the untouched version still reads."""
+    from my_feast_spark.sources import versioned as V
+
+    path = str(tmp_path / "t")
+    V.write_version(spark.createDataFrame([(1, 10)], ["k", "v"]), path)
+    V.write_version(
+        spark.createDataFrame([(2, 20)], ["k", "v"]), path, mode="append"
+    )
+    _strip_manifest_field(path, 1, "schema")
+
+    with pytest.raises(ValueError, match="'schema'") as exc:
+        V.read_version(spark, path)
+    assert os.path.join("_vlog", "1.json") in str(exc.value)
+    assert V.read_version(spark, path, 0).count() == 1
 
 
 def test_diff_versions_append_chain_is_manifest_arithmetic(
