@@ -26,6 +26,7 @@ from __future__ import annotations
 
 import math
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 #: target edges per partition inside the iterative loops — the edge
@@ -266,7 +267,7 @@ def _cc_driver_union_find(sym, spark, out_id, out_label) -> DataFrame:
             # union by MIN so the root is the component minimum
             lo, hi = (ra, rb) if ra < rb else (rb, ra)
             parent[hi] = lo
-    rows = [(x, find(x)) for x in parent]
+    ids = list(parent)
     # Label type = the COMMON type of both endpoints (coalesce forces
     # Catalyst's least-common-type resolution): labels propagate across
     # src and dst, so deriving both fields from the src column alone
@@ -275,7 +276,14 @@ def _cc_driver_union_find(sym, spark, out_id, out_label) -> DataFrame:
     schema = sym.select(
         common.alias(out_id), common.alias(out_label)
     ).schema
-    return spark.createDataFrame(rows, schema)
+    # an Arrow table is decoded in the JVM; a list of tuples would
+    # become a pickled Python RDD, and every job over the labels would
+    # start Python workers to read it back
+    table = pa.table({
+        out_id: pa.array(ids),
+        out_label: pa.array([find(x) for x in ids]),
+    })
+    return spark.createDataFrame(table, schema)
 
 
 def pagerank_fixedpoint(

@@ -15,10 +15,13 @@ SF_DIR_ORACLE = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.
 
 @pytest.fixture(scope="session")
 def spark():
+    # 8 task slots keep concurrent tasks racing; 4 shuffle partitions
+    # still split every shuffle while halving the per-partition tasks
+    # and files that dominate a test's tiny jobs
     s = get_session(
         app_name="my_feast_spark-tests",
         master="local[8]",
-        shuffle_partitions=8,
+        shuffle_partitions=4,
     )
     yield s
     s.stop()
