@@ -39,6 +39,7 @@ from pyspark.sql import types as T
 
 from my_feast_spark.core.model import Entity, FeatureView
 from my_feast_spark.core.registry import Registry
+from my_feast_spark.obs import op_scope
 from my_feast_spark.operators.aggregations import latest_per_key
 from my_feast_spark.plans.retrieval import (
     RetrievalJob,
@@ -353,10 +354,7 @@ class FeatureStore:
         wanted = list(dict.fromkeys(t for t in keys if None not in t))
         if not wanted:
             return [None] * len(keys)
-        sc = self.spark.sparkContext
-        prev = sc.getLocalProperty("spark.job.description")
-        sc.setJobDescription(f"get_online_features:{view_name}")
-        try:
+        with op_scope(self.spark, f"get_online_features:{view_name}"):
             for attempt in range(_LOOKUP_ATTEMPTS):
                 try:
                     hits = self._online_scan(
@@ -367,8 +365,6 @@ class FeatureStore:
                     listed, gens = gens, self._online_committed(view_name)
                     if gens == listed or attempt + 1 == _LOOKUP_ATTEMPTS:
                         raise
-        finally:
-            sc.setJobDescription(prev)
         n, m = len(join_keys), len(join_keys) + len(order) + 1
 
         def rank(r):  # (event ts, created ts, gen); None ranks lowest

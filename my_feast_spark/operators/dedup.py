@@ -26,6 +26,7 @@ layouts.
 
 from __future__ import annotations
 
+import functools
 import random as _random
 from typing import Callable
 
@@ -370,19 +371,15 @@ def _with_shingles(df, id_col, text_col, n, tokens_col=None):
     array a single time and fan it out to several shingle consumers.
 
     The token array is bound through ``let`` before the shingle HOF
-    touches it (r16 optimization): the previous ``withColumn("__toks",
-    split(...))`` projection was collapsed INTO the transform lambda by
-    the optimizer, so the interpreted ``concat_ws(__toks[i], ...)``
-    re-ran the full regex tokenization per shingle element — an
-    O(tokens^2) interpreted-split blow-up (thread-dump-caught: the one
-    scan task sat in ``StringSplit.nullSafeEval`` under
-    ``ConcatWs.eval``). Binding through the 1-element ``transform``
-    hands the lambda a NamedLambdaVariable (a slot read), restoring the
-    O(tokens) pass — measured 12.3s -> 1.7s for the bare
-    shingle+explode count at sf0.1, and the speedup propagates to every
-    shingle consumer (minhash/simhash/jaccard LSH, cms/kmv sketches,
-    lsh_recall, decontamination, curation, streaming near-dup).
-    Shingle VALUES are bit-identical (exceptAll-verified both ways).
+    touches it. A ``withColumn("__toks", split(...))`` projection would
+    be collapsed INTO the transform lambda by the optimizer, so the
+    interpreted ``concat_ws(__toks[i], ...)`` would re-run the full
+    regex tokenization per shingle element: O(tokens^2) interpreted
+    splits, the scan task sitting in ``StringSplit.nullSafeEval`` under
+    ``ConcatWs.eval``. Through the 1-element ``transform`` the lambda
+    reads a NamedLambdaVariable (a slot read), so tokenization is one
+    O(tokens) pass per row (bare shingle+explode count at sf0.1: 1.7s
+    against 12.3s for the collapsed form).
     """
     base = spread_partitions(df)
     if tokens_col is not None:
@@ -409,23 +406,21 @@ def _shingles_of(t: Column, n: int) -> Column:
     past the array, so the short-row branch must short-circuit here,
     not only in a pre-filter).
 
-    CAPTURE-FREE inner lambda (r16): grams come from ``transform`` over
+    CAPTURE-FREE inner lambda: grams come from ``transform`` over
     ``arrays_zip`` of the n shifted slices of ``t``, so the transform's
-    lambda body references ONLY its own variable — never the outer
-    ``let`` binding. The earlier ``sequence + element_at(t, i+j)`` form
-    put the outer lambda variable inside the inner lambda body, and
-    that nested-capture expression, once CollapseProject inlined it
-    into a pandas-UDF argument above an Exchange (exactly the
-    minhash-signature fan-out: spread_partitions → shingles → CW/
-    splitmix UDF), defeated ExtractPythonUDFs — the raw PythonUDF was
-    left inside a Project and every evaluation died with
-    INTERNAL_ERROR "Cannot evaluate expression: sigs(...)"
-    (caught by the streaming_neardup_ingest oracle-parity test; the
-    batch pair queries masked it because their persisted shingle
-    relation is a collapse barrier). Slices of a lambda variable are
-    slot reads — the tokenize-once property that motivated ``let``
-    is preserved. Gram VALUES are unchanged: position i still joins
-    tokens i..i+n-1 with single spaces, then array_distinct."""
+    lambda body references ONLY its own variable, never the outer
+    ``let`` binding. A nested-capture body (``sequence + element_at(t,
+    i+j)``) that CollapseProject inlines into a pandas-UDF argument
+    above an Exchange (the minhash-signature fan-out:
+    spread_partitions → shingles → minima UDF) defeats
+    ExtractPythonUDFs: the raw PythonUDF stays inside a Project and
+    every evaluation dies with INTERNAL_ERROR "Cannot evaluate
+    expression: sigs(...)". A persisted shingle relation (the batch
+    pair queries) is a collapse barrier and hides it; the streaming
+    near-dup ingest signs straight from the text, with no barrier.
+    Slices of a lambda variable are slot reads, so tokenization stays
+    once per row. Position i joins tokens i..i+n-1 with single spaces,
+    then array_distinct."""
     width = F.greatest(F.size(t) - F.lit(n - 1), F.lit(0))
     z = F.arrays_zip(
         *[F.slice(t, j + 1, width).alias(f"s{j}") for j in range(n)]
@@ -533,7 +528,7 @@ def minhash_signatures(
 
     ``hash_fn``: "xxhash64" (default; ONE JVM xxhash64 pass per
     shingle + an Arrow-batched seeded-splitmix64 fan-out to all
-    ``num_hashes`` minima, see _signatures_numpy) or "portable" (one
+    ``num_hashes`` minima, see minhash_minima) or "portable" (one
     md5-derived base hash + the Carter-Wegman family
     ``(A_i*base + B_i) % MINHASH_P`` — exactly reproducible in DuckDB,
     so the whole LSH pipeline is oracle-checkable; at most 64 hashes).
@@ -613,83 +608,88 @@ def _signature_array_from_shingles(
 ) -> DataFrame:
     """``(doc, __sig)`` with ``__sig[i]`` bit-identical to ``mh_i``."""
     _check_minhash_family(hash_fn, num_hashes)
-    if hash_fn == "xxhash64":
-        return _signatures_numpy(sh, num_hashes)
-    # one md5 per shingle (JVM, bit-exact vs the oracle), then the
-    # Carter-Wegman fan-out in one Arrow batch
-    based = sh.select(
-        "doc", F.transform(F.col("sh"), _portable_base).alias("__base")
+    return sh.select(
+        "doc", minhash_minima(F.col("sh"), num_hashes, hash_fn).alias("__sig")
     )
-    return _cw_signatures_numpy(based, num_hashes)
+
+
+def minhash_minima(sh: Column, num_hashes: int, hash_fn: str) -> Column:
+    """The ``array<long>`` MinHash signature of the shingle array ``sh``
+    (NULL for NULL): one JVM base hash per shingle, then all
+    ``num_hashes`` minima in one Arrow-batched pandas UDF, built once
+    per SparkContext and family (:func:`_minima_udf`).
+
+    ``"xxhash64"``: xxhash64 base, seeded splitmix64 minima. A per-hash
+    expression form would pay num_hashes × num_shingles interpreted
+    lambda evaluations per row (``array_min(transform(...))`` is a
+    CodegenFallback HOF); the numpy fan-out is a handful of uint64 vector
+    ops per row. It pairs with the xxhash64 band-sig path and is NOT
+    oracle-replayable. ``"portable"``: one md5 base per shingle and the
+    Carter-Wegman minima, bit-exact against the SQL oracle."""
+    from pyspark import SparkContext
+
+    udf = _minima_udf(SparkContext._active_spark_context, num_hashes, hash_fn)
+    if hash_fn == "xxhash64":
+        return udf(F.transform(sh, lambda s: F.xxhash64(s)))
+    return udf(F.transform(sh, _portable_base))
 
 
 def _cw_signatures_numpy(based: DataFrame, num_hashes: int) -> DataFrame:
-    """Vectorized Carter-Wegman minima over the pre-hashed ``__base``
-    arrays — bit-identical to the SQL oracle's ``(A_i*base + B_i) %
-    MINHASH_P`` (exact int64 ops: a, x < MINHASH_P = 2^31 - 1, so
-    a*x + b < 2^62 + 2^31 never overflows a signed 64-bit int), one
-    Arrow batch instead of ``num_hashes`` interpreted
-    ``array_min(transform(...))`` passes.
-    Self-contained closure: executors never import this package."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
+    """``(doc, __sig)``: the Carter-Wegman minima of the pre-hashed
+    ``__base`` arrays of ``based``."""
+    from pyspark import SparkContext
 
-    A = np.array(MINHASH_A[:num_hashes], dtype=np.int64)[:, None]
-    B = np.array(MINHASH_B[:num_hashes], dtype=np.int64)[:, None]
-    P = np.int64(MINHASH_P)
-
-    @pandas_udf("array<long>")
-    def sigs(col: pd.Series) -> pd.Series:
-        out = []
-        for b in col:
-            x = np.asarray(b, dtype=np.int64)[None, :]  # (1, n_shingles)
-            out.append(((A * x + B) % P).min(axis=1))
-        return pd.Series(out)
-
+    sigs = _minima_udf(SparkContext._active_spark_context, num_hashes, "portable")
     return based.select("doc", sigs(F.col("__base")).alias("__sig"))
 
 
-def _signatures_numpy(sh: DataFrame, num_hashes: int) -> DataFrame:
-    """Arrow-batched signature fan-out: ONE JVM pass hashes each shingle
-    to int64 (xxhash64), then a vectorized pandas UDF derives all
-    ``num_hashes`` minima per row with a seeded splitmix64 finalizer
-    over the base array. A per-hash expression form would pay
-    num_hashes × num_shingles interpreted lambda evaluations per row
-    (``array_min(transform(...))`` is a CodegenFallback HOF); the numpy
-    fan-out is a handful of uint64 vector ops per row. It pairs with the
-    xxhash64 band-sig path and is NOT oracle-replayable (use
-    ``hash_fn="portable"`` for that).
+@functools.lru_cache(maxsize=8)
+def _minima_udf(sc, num_hashes: int, hash_fn: str):
+    """The minima pandas UDF over a base-hash array (NULL for NULL),
+    one per SparkContext (a UDF holds its context's accumulator), hash
+    count and family.
+
+    ``"portable"``: vectorized ``(A_i*base + B_i) % MINHASH_P``, exact
+    int64 ops (a, x < MINHASH_P = 2^31 - 1, so a*x + b < 2^62 + 2^31
+    never overflows a signed 64-bit int). ``"xxhash64"``: splitmix64
+    over ``base ^ seed_i``.
     Self-contained closure: executors never import this package."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
-    based = sh.select(
-        "doc", F.transform(F.col("sh"), lambda s: F.xxhash64(s)).alias("__base")
-    )
-    seeds = (
-        np.arange(1, num_hashes + 1, dtype=np.uint64)
-        * np.uint64(0x9E3779B97F4A7C15)
-    )
+    if hash_fn == "portable":
+        A = np.array(MINHASH_A[:num_hashes], dtype=np.int64)[:, None]
+        B = np.array(MINHASH_B[:num_hashes], dtype=np.int64)[:, None]
+        P = np.int64(MINHASH_P)
 
-    @pandas_udf("array<long>")
-    def sigs(col: pd.Series) -> pd.Series:
+        def minima(b):
+            x = np.asarray(b, dtype=np.int64)[None, :]  # (1, n_shingles)
+            return ((A * x + B) % P).min(axis=1)
+    else:
+        seeds = (
+            np.arange(1, num_hashes + 1, dtype=np.uint64)
+            * np.uint64(0x9E3779B97F4A7C15)
+        )
         M1 = np.uint64(0xBF58476D1CE4E5B9)
         M2 = np.uint64(0x94D049BB133111EB)
-        out = []
-        with np.errstate(over="ignore"):
-            for b in col:
-                # (num_hashes, n_shingles) splitmix64 over base ^ seed_i
-                x = np.asarray(b, dtype=np.int64).astype(np.uint64)[None, :]
-                x = x ^ seeds[:, None]
-                x ^= x >> np.uint64(30)
-                x *= M1
-                x ^= x >> np.uint64(27)
-                x *= M2
-                x ^= x >> np.uint64(31)
-                out.append(x.min(axis=1).astype(np.int64))
-        return pd.Series(out)
 
-    return based.select("doc", sigs(F.col("__base")).alias("__sig"))
+        def minima(b):
+            # (num_hashes, n_shingles) splitmix64 over base ^ seed_i
+            x = np.asarray(b, dtype=np.int64).astype(np.uint64)[None, :]
+            x = x ^ seeds[:, None]
+            x ^= x >> np.uint64(30)
+            x *= M1
+            x ^= x >> np.uint64(27)
+            x *= M2
+            x ^= x >> np.uint64(31)
+            return x.min(axis=1).astype(np.int64)
+
+    @pandas_udf("array<long>")
+    def sigs(col: pd.Series) -> pd.Series:
+        with np.errstate(over="ignore"):
+            return pd.Series([None if b is None else minima(b) for b in col])
+
+    return sigs
 
 
 def minhash_lsh_dup_pairs(

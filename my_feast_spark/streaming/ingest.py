@@ -25,7 +25,6 @@ from __future__ import annotations
 
 import functools
 import itertools
-import operator
 import os
 import tempfile
 from typing import Callable, Iterable, Mapping, Sequence
@@ -37,6 +36,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from my_feast_spark.functions.scalar import floor_round
+from my_feast_spark.obs import op_scope
 from my_feast_spark.sources.generations import (
     committed,
     fold,
@@ -44,6 +44,7 @@ from my_feast_spark.sources.generations import (
     publish,
     read,
 )
+from my_feast_spark.sources.readers import spread_partitions
 
 _memory_table_ids = itertools.count()
 
@@ -453,51 +454,68 @@ def compaction_due(batch_id: int, compact_every: int | None) -> bool:
 
 class _IndexBatch:
     """One micro-batch's reads and writes of its ingest's output and
-    index datasets (``dirs``, in write and compaction order)."""
+    index datasets (``dirs``, in write and compaction order). Every
+    Spark job it starts runs under the job description
+    ``ingest:<kind>:<phase>`` (:func:`my_feast_spark.obs.op_scope`)."""
 
-    def __init__(self, spark, out_path, dirs, batch_id, index_buckets):
+    def __init__(self, spark, kind, out_path, dirs, batch_id, index_buckets,
+                 parts):
         self.spark = spark
+        self.kind = kind
         self.out_path = out_path
         self.dirs = dirs
         self.batch_id = batch_id
         self.index_buckets = index_buckets
+        self.parts = parts  # the batch's own partition count
         self.live: list[DataFrame] = []
+
+    def phase(self, name: str):
+        """Label the jobs of the block ``ingest:<kind>:<name>``."""
+        return op_scope(self.spark, f"ingest:{self.kind}:{name}")
 
     def _pbucket(self, *cols: str) -> Column:
         return F.pmod(F.xxhash64(*cols), F.lit(self.index_buckets))
 
-    def pin(self, df: DataFrame) -> DataFrame:
-        """``localCheckpoint`` ``df`` until the batch ends."""
-        df = df.localCheckpoint()
+    def pin(self, df: DataFrame, phase: str) -> DataFrame:
+        """``localCheckpoint`` ``df`` (jobs labelled ``phase``) until the
+        batch ends."""
+        with self.phase(phase):
+            df = df.localCheckpoint()
         self.live.append(df)
         return df
 
     def seen(
-        self, path: str, probe: DataFrame, *cols: str
+        self, path: str, schema: T.StructType, probe: DataFrame, *cols: str
     ) -> DataFrame | None:
         """The committed generations of the index dataset at ``path``
-        but this batch's own (None when there are none); bucketed,
-        pruned to the pbuckets ``probe``'s ``cols`` hash into."""
-        seen = read(self.spark, path, "batch_id", gens=[
-            g for g in committed(path, "batch_id") if g[0] != self.batch_id
-        ])
-        if seen is None:
-            return None
-        if self.index_buckets:
-            pbs = [
-                r.pb
-                for r in probe.select(self._pbucket(*cols).alias("pb"))
-                .distinct()
-                .collect()
-            ]
-            seen = seen.filter(F.col("pbucket").isin(pbs))
-        return seen
+        but this batch's own (None when there are none), read with its
+        data columns ``schema`` (no inference job); bucketed, pruned to
+        the pbuckets ``probe``'s ``cols`` hash into, collected in one
+        plain job from ``probe`` (a pinned frame)."""
+        with self.phase("probe"):
+            seen = read(self.spark, path, "batch_id", schema, gens=[
+                g for g in committed(path, "batch_id")
+                if g[0] != self.batch_id
+            ])
+            if seen is None or not self.index_buckets:
+                return seen
+            rows = probe.select(self._pbucket(*cols)).collect()
+        return seen.filter(F.col("pbucket").isin(sorted({r[0] for r in rows})))
 
-    def write_output(self, accepted: DataFrame) -> DataFrame:
-        """Overwrite this batch's output directory; returns it read back."""
+    def write_output(self, accepted: DataFrame, *cols: str) -> DataFrame:
+        """Pin ``accepted`` in at most as many partitions as the batch
+        has, then overwrite this batch's output directory with the pin's
+        ``cols`` (all columns when none). Returns the pin: index rows
+        derive from it, so they are exactly the written rows, and a
+        partitioned index write from it lands at most that many files
+        per pbucket."""
+        acc = self.pin(accepted.coalesce(max(self.parts, 1)), "candidates")
         out = os.path.join(self.out_path, f"batch_id={self.batch_id}")
-        accepted.write.mode("overwrite").parquet(out)
-        return self.spark.read.parquet(out)
+        with self.phase("write_output"):
+            acc.select(*(cols or acc.columns)).write.mode("overwrite").parquet(
+                out
+            )
+        return acc
 
     def write_index(self, path: str, rows: DataFrame, *cols: str) -> None:
         """Publish this batch's generation of the index dataset at
@@ -506,8 +524,9 @@ class _IndexBatch:
         if self.index_buckets:
             writer = rows.withColumn(
                 "pbucket", self._pbucket(*cols)
-            ).repartition("pbucket").write.partitionBy("pbucket")
-        publish(path, "batch_id", self.batch_id, writer.parquet)
+            ).write.partitionBy("pbucket")
+        with self.phase("write_index"):
+            publish(path, "batch_id", self.batch_id, writer.parquet)
 
 
 def _start_dedup_ingest(
@@ -550,8 +569,11 @@ def _start_dedup_ingest(
         itself, so a replay never dedups against its own earlier rows
         and overwrites its output with nothing; compacted generations
         have negative ids and never match the guard;
-      * index rows derive from the WRITTEN output, so a replay
-        regenerates identical index partitions.
+      * the accepted rows are pinned once, carrying their signed
+        columns; the output is that pin's batch columns and the index
+        rows derive from the same pin, so the index holds exactly the
+        written rows and a replay regenerates identical index
+        partitions.
 
     ``index_buckets``: unset, every batch reads the full accumulated
     index, so per-batch cost grows with the corpus. With
@@ -570,7 +592,9 @@ def _start_dedup_ingest(
     whose directory must stay separate for the replay guard. Listing
     cost and small-file count then stay bounded over the stream's life.
     Checkpoints ``accept`` pins are released when the batch ends, also
-    when it fails.
+    when it fails. Every job of a batch is labelled
+    ``ingest:<kind>:sign|candidates|probe|write_output|write_index|compact``
+    (``kind`` is ``meta["kind"]``).
     """
     for name, value in (
         ("index_buckets", index_buckets), ("compact_every", compact_every)
@@ -594,12 +618,16 @@ def _start_dedup_ingest(
     def ingest_batch(batch_df: DataFrame, batch_id: int) -> None:
         from my_feast_spark.operators.graph import release_checkpoint
 
-        ix = _IndexBatch(spark, out_path, dirs, batch_id, index_buckets)
+        ix = _IndexBatch(
+            spark, meta["kind"], out_path, dirs, batch_id, index_buckets,
+            batch_df.rdd.getNumPartitions(),
+        )
         try:
             accept(batch_df, ix)
             if compaction_due(batch_id, compact_every):
-                for d in dirs:
-                    compact_index(spark, d, exclude_from=batch_id)
+                with ix.phase("compact"):
+                    for d in dirs:
+                        compact_index(spark, d, exclude_from=batch_id)
         finally:
             for frame in ix.live:
                 release_checkpoint(frame)
@@ -613,69 +641,79 @@ def _start_dedup_ingest(
 def _candidate_verify(
     *,
     id_col: str,
-    sign: Callable[[DataFrame], DataFrame],
+    sign: Sequence[Column],
     key_rows: Callable[[DataFrame], DataFrame],
     keys: Sequence[str],
     payload: str,
     similar: Callable[[Column, Column], Column],
 ):
-    """The ``accept`` rule of the near-dup ingests, from a per-kind spec:
-    ``sign`` turns a batch into ``(doc, payload, ...)`` rows (pinned for
-    the batch), ``key_rows`` turns those into ``(doc, *keys)`` collision
-    rows, and ``similar(dominator payload, doc payload)`` is the verify
-    predicate. A doc drops when it verifies against an accepted doc
-    sharing a key, or against a lower-id doc of its own batch. The index
-    datasets are (payload, key rows), each pbucketed by its ``doc`` /
-    ``keys`` columns."""
+    """The ``accept`` rule of the near-dup ingests, from a per-kind spec
+    whose expressions are built once per stream: ``sign`` are the
+    columns (``payload`` among them, NULL for a doc that cannot be
+    signed) computed over a batch's rows, spread to cluster parallelism
+    first; ``key_rows`` turns signed rows into ``(doc, payload, *keys)``
+    collision rows; ``similar(dominator payload, doc payload)`` is the
+    verify predicate. A doc drops when it verifies against an accepted doc sharing a key,
+    or against a lower-id doc of its own batch. The index datasets are
+    (payload, key rows), each pbucketed by its ``doc`` / ``keys``
+    columns.
+
+    Jobs: the signed pin (the batch's own columns as ``__row`` plus
+    ``doc`` and ``sign``) feeds every later step; collision rows carry
+    the batch's payload, so the in-batch verify needs no payload join;
+    the accepted rows are one pin (verify and broadcast anti-join) from
+    which the output and both index datasets are written."""
     keys = list(keys)
     a_p, b_p = f"a_{payload}", f"b_{payload}"
+    signed_only = F.col(payload).isNotNull()
+    doc = F.col(id_col).alias("doc")
+    dom_side = [F.col("doc").alias("dom"), F.col(payload).alias(a_p), *keys]
+    doc_side = ["doc", F.col(payload).alias(b_p), *keys]
+    seen_dom = [F.col("doc").alias("dom"), *keys]
+    seen_payload = [F.col("doc").alias("dom"), F.col(payload).alias(a_p)]
+    verified = similar(F.col(a_p), F.col(b_p))
+    in_batch = (F.col("dom") < F.col("doc")) & verified
 
     def accept(batch_df: DataFrame, ix: _IndexBatch) -> None:
         payload_dir, keys_dir = ix.dirs
-        signed = ix.pin(sign(batch_df))
-        rows = key_rows(signed)
-        # in-batch candidates: same key, lower id dominates
-        a, b = rows.alias("a"), rows.alias("b")
-        cand = a.join(
-            b,
-            functools.reduce(operator.and_, [
-                *(F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys),
-                F.col("a.doc") < F.col("b.doc"),
-            ]),
-        ).select(F.col("a.doc").alias("dom"), F.col("b.doc").alias("doc"))
-        own = payloads = signed.select("doc", payload)
-        seen_keys = ix.seen(keys_dir, rows, *keys)
-        if seen_keys is None:
-            cand = cand.distinct()
-        else:
-            cand = cand.union(
-                seen_keys.select(F.col("doc").alias("dom"), *keys)
-                .join(rows, keys)
-                .select("dom", "doc")
-            ).distinct()
+        cols = [id_col, *(c for c in batch_df.columns if c != id_col)]
+        signed = ix.pin(spread_partitions(batch_df).select(
+            F.struct(*cols).alias("__row"), doc, *sign
+        ), "sign")
+        rows = key_rows(signed.filter(signed_only))
+        fields = {f.name: f for f in rows.schema.fields}
+        docs = F.broadcast(rows.select(*doc_side))
+        dominated = (
+            rows.select(*dom_side).join(docs, keys).filter(in_batch)
+            .select("doc")
+        )
+        seen_keys = ix.seen(
+            keys_dir, T.StructType([fields[c] for c in ("doc", *keys)]),
+            rows, *keys,
+        )
+        if seen_keys is not None:
+            cand = seen_keys.select(*seen_dom).join(docs, keys).select(
+                "dom", "doc", b_p
+            )
             if ix.index_buckets:
                 # only the dominators' payloads are read: pin the
                 # (batch-sized) candidates and prune to their pbuckets
-                cand = ix.pin(cand)
-            seen_payloads = ix.seen(payload_dir, cand, "dom")
+                cand = ix.pin(cand, "candidates")
+            seen_payloads = ix.seen(
+                payload_dir, T.StructType([fields["doc"], fields[payload]]),
+                cand, "dom",
+            )
             if seen_payloads is not None:
-                payloads = payloads.union(
-                    seen_payloads.select("doc", payload)
+                dominated = dominated.union(
+                    cand.join(seen_payloads.select(*seen_payload), "dom")
+                    .filter(verified).select("doc")
                 )
-        dominated = (
-            cand
-            .join(payloads.select(F.col("doc").alias("dom"),
-                                  F.col(payload).alias(a_p)), "dom")
-            .join(signed.select("doc", F.col(payload).alias(b_p)), "doc")
-            .filter(similar(F.col(a_p), F.col(b_p)))
-            .select(F.col("doc").alias(id_col))
-            .distinct()
-        )
         acc = ix.write_output(
-            batch_df.join(dominated, id_col, "left_anti")
-        ).select(F.col(id_col).alias("doc"))
-        ix.write_index(payload_dir, own.join(acc, "doc", "left_semi"), "doc")
-        ix.write_index(keys_dir, rows.join(acc, "doc", "left_semi"), *keys)
+            signed.join(F.broadcast(dominated), "doc", "left_anti"), "__row.*"
+        )
+        own = acc.filter(signed_only)
+        ix.write_index(payload_dir, own.select("doc", payload), "doc")
+        ix.write_index(keys_dir, key_rows(own).select("doc", *keys), *keys)
 
     return accept
 
@@ -711,26 +749,26 @@ def dedup_ingest_stream(
     """
     from my_feast_spark.functions.text import doc_fingerprint
 
+    fp = doc_fingerprint(F.col(text_col)).alias("fingerprint")
+    # in-batch dedup: deterministic min-id winner per fingerprint
+    rn = F.row_number().over(Window.partitionBy("fingerprint").orderBy(id_col))
+    first = F.col("__rn") == 1
+    fp_schema = T.StructType([T.StructField("fingerprint", T.StringType())])
+
     def accept(batch_df: DataFrame, ix: _IndexBatch) -> None:
         (index_dir,) = ix.dirs
-        fp = batch_df.select(
-            F.col(id_col), F.col(text_col),
-            doc_fingerprint(F.col(text_col)).alias("fingerprint"),
+        fresh = ix.pin(
+            batch_df.select(id_col, text_col, fp)
+            .withColumn("__rn", rn).filter(first).drop("__rn"),
+            "sign",
         )
-        # in-batch dedup: deterministic min-id winner per fingerprint
-        w = Window.partitionBy("fingerprint").orderBy(id_col)
-        fresh = (
-            fp.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-        seen = ix.seen(index_dir, fresh, "fingerprint")
+        seen = ix.seen(index_dir, fp_schema, fresh, "fingerprint")
         if seen is not None:
             fresh = fresh.join(
                 seen.select("fingerprint"), "fingerprint", "left_anti"
             )
-        written = ix.write_output(fresh)
-        ix.write_index(index_dir, written.select("fingerprint"), "fingerprint")
+        acc = ix.write_output(fresh)
+        ix.write_index(index_dir, acc.select("fingerprint"), "fingerprint")
 
     return _start_dedup_ingest(
         sdf, accept, meta={"kind": "exact_fingerprint"},
@@ -777,8 +815,9 @@ def near_dedup_ingest_stream(
     partitions them by ``pbucket`` — ``pmod(xxhash64(band, bsig), B)``
     for band rows, ``pmod(xxhash64(doc), B)`` for signatures — and each
     batch reads only the band pbuckets its own band rows hash into and
-    the signature pbuckets of its candidate dominators. Docs per batch x
-    bands rows shuffle, never the text. ``compact_every=k`` compacts
+    the signature pbuckets of its candidate dominators. The candidate
+    joins broadcast the batch's docs x bands rows, never the text, and
+    the index never shuffles. ``compact_every=k`` compacts
     both datasets after every k-th batch. The crash-replay,
     ``index_buckets`` and ``compact_every`` contract is the shared
     ingest driver's (``_start_dedup_ingest``).
@@ -792,37 +831,34 @@ def near_dedup_ingest_stream(
     before the index is pinned.
     Returns the started StreamingQuery.
     """
+    from my_feast_spark.functions.text import let, tokens
     from my_feast_spark.operators.dedup import (
         _check_minhash_family,
-        minhash_signature_array,
+        _shingles_of,
+        minhash_minima,
     )
 
     if num_hashes % bands:
         raise ValueError("num_hashes must be divisible by bands")
     _check_minhash_family(hash_fn, num_hashes)
     r = num_hashes // bands
+    # array-native signatures (NULL below n tokens): the index stores
+    # the array as-is
+    sig = minhash_minima(
+        let(tokens(F.lower(F.col(text_col))), lambda t: _shingles_of(t, n)),
+        num_hashes, hash_fn,
+    ).alias("sig")
+    # band b's bsig is xxhash64 of minhashes b*r .. b*r+r-1: xxhash64
+    # of an array chains its elements exactly as of separate columns.
+    # One higher-order transform costs O(1) py4j round trips to build,
+    # where a struct per band costs ~2k (0.25 s per stream start)
+    band_keys = F.posexplode(F.transform(
+        F.sequence(F.lit(0), F.lit(bands - 1)),
+        lambda b: F.xxhash64(F.slice(F.col("sig"), b * r + 1, F.lit(r))),
+    )).alias("band", "bsig")
 
-    def sign(batch_df: DataFrame) -> DataFrame:
-        # array-native signatures: the index stores the array as-is
-        return minhash_signature_array(
-            batch_df, id_col, text_col, n=n, num_hashes=num_hashes,
-            hash_fn=hash_fn,
-        ).select("doc", F.col("__sig").alias("sig"))
-
-    def band_rows(sig: DataFrame) -> DataFrame:
-        return sig.select(
-            "doc",
-            F.explode(F.array(*[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.xxhash64(*[
-                        F.element_at(F.col("sig"), b * r + j + 1)
-                        for j in range(r)
-                    ]).alias("bsig"),
-                )
-                for b in range(bands)
-            ])).alias("bs"),
-        ).select("doc", "bs.band", "bs.bsig")
+    def band_rows(signed: DataFrame) -> DataFrame:
+        return signed.select("doc", "sig", band_keys)
 
     def similar(a_sig: Column, b_sig: Column) -> Column:
         # one higher-order fold over the pair on purpose: a single
@@ -837,7 +873,7 @@ def near_dedup_ingest_stream(
     return _start_dedup_ingest(
         sdf,
         _candidate_verify(
-            id_col=id_col, sign=sign, key_rows=band_rows,
+            id_col=id_col, sign=[sig], key_rows=band_rows,
             keys=("band", "bsig"), payload="sig", similar=similar,
         ),
         meta={
@@ -902,23 +938,16 @@ def embedding_dedup_ingest_stream(
     planes = [
         _hyperplanes(dim, num_planes, seed + t) for t in range(num_tables)
     ]
+    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
+    norm = F.sqrt(F.aggregate(
+        F.transform(v, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x,
+    ))
+    unit = F.transform(v, lambda x: x / F.greatest(norm, F.lit(1e-12)))
+    sign = [unit.alias("v"), _lsh_buckets_udf(planes)(unit).alias("bks")]
+    buckets = F.posexplode(F.col("bks")).alias("table", "bucket")
 
-    def sign(batch_df: DataFrame) -> DataFrame:
-        v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-        norm = F.sqrt(F.aggregate(
-            F.transform(v, lambda x: x * x), F.lit(0.0),
-            lambda acc, x: acc + x,
-        ))
-        return batch_df.select(
-            F.col(id_col).alias("doc"),
-            F.transform(v, lambda x: x / F.greatest(norm, F.lit(1e-12)))
-            .alias("v"),
-        ).withColumn("bks", _lsh_buckets_udf(planes)(F.col("v")))
-
-    def bucket_rows(base: DataFrame) -> DataFrame:
-        return base.select(
-            "doc", F.posexplode(F.col("bks")).alias("table", "bucket")
-        )
+    def bucket_rows(signed: DataFrame) -> DataFrame:
+        return signed.select("doc", "v", buckets)
 
     def similar(a_v: Column, b_v: Column) -> Column:
         # _dot is a higher-order fold on purpose: a dim-term unrolled

@@ -46,6 +46,32 @@ def lose_commit(checkpoint, batch_id):
             os.remove(path)
 
 
+def assert_index_is_output(out, index_path, datasets, buckets):
+    """Each committed ``batch_id=N`` generation of each dedup index
+    dataset under ``index_path`` holds exactly the doc ids of output
+    directory ``batch_id=N`` and at most ``buckets`` parquet files."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from my_feast_spark.sources.generations import committed
+
+    def ids(paths, col):
+        return {
+            v for p in paths
+            for v in pq.read_table(p, columns=[col]).column(0).to_pylist()
+        }
+
+    for d in datasets:
+        gens = committed(os.path.join(index_path, d), "batch_id")
+        assert gens, f"no committed generation in {d}"
+        for n, gdir in gens:
+            files = glob.glob(f"{gdir}/**/*.parquet", recursive=True)
+            assert len(files) <= buckets, (d, n, len(files))
+            out_files = glob.glob(f"{out}/batch_id={n}/*.parquet")
+            assert ids(files, "doc") == ids(out_files, "doc_id"), (d, n)
+
+
 @pytest.fixture
 def generation_crash():
     """``with generation_crash(step, k) as done:`` lets the generation

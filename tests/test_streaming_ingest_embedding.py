@@ -12,7 +12,7 @@ import os
 from pyspark.sql import Row, functions as F
 
 from my_feast_spark.streaming.ingest import embedding_dedup_ingest_stream
-from tests.conftest import lose_commit
+from tests.conftest import assert_index_is_output, lose_commit
 
 DIM = 8
 BASE = [1.0, 0.2, -0.5, 0.8, 0.1, -0.3, 0.6, -0.1]
@@ -92,6 +92,10 @@ def test_bucketed_layout_matches_flat_and_prunes(spark, tmp_path):
     assert 1 in results["flat"] and 2 in results["flat"]
     assert all(100 + i not in results["flat"] for i in range(4))
 
+    assert_index_is_output(
+        str(tmp_path / "out_buck"), str(tmp_path / "idx_buck"),
+        ("vecs", "buckets"), 8,
+    )
     idx = str(tmp_path / "idx_buck" / "buckets")
 
     def files_read(df):

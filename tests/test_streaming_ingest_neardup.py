@@ -12,7 +12,7 @@ import os
 from pyspark.sql import Row, functions as F
 
 from my_feast_spark.streaming.ingest import near_dedup_ingest_stream
-from tests.conftest import lose_commit
+from tests.conftest import assert_index_is_output, lose_commit
 
 #: near-identical long texts: ~20 shared tokens, one token differs ->
 #: 3-gram Jaccard (and its signature estimate) well above 0.5
@@ -170,6 +170,9 @@ def test_bucketed_index_matches_flat_and_prunes(spark, tmp_path):
         else:
             assert got == expected, "bucketed path changed RESULTS"
 
+    assert_index_is_output(
+        str(tmp_path / "ob"), str(tmp_path / "ib"), ("sigs", "bands"), 8
+    )
     bands_dir = str(tmp_path / "ib" / "bands")
 
     def files_read(df):
@@ -249,3 +252,75 @@ def test_index_meta_pins_layout_choices(spark, tmp_path):
             checkpoint=str(tmp_path / "ck4"),
             threshold=0.5, index_buckets=8, available_now=True,
         )
+
+
+#: the phases an ingest batch labels its jobs with
+PHASES = {"sign", "candidates", "probe", "write_output", "write_index"}
+
+
+def test_bucketed_batch_job_budget_and_labels(spark, tmp_path):
+    """A bucketed batch against a non-empty index runs at most 13 Spark
+    jobs, each labelled ``ingest:neardup_minhash:<phase>``: the signed
+    pin (2), one plain job per pbucket probe (2), the candidate pin (2),
+    the verified accepted pin (4) and one job per write (3). A schema
+    inference, an output read-back or a probe ``distinct`` shows up as
+    an unlabelled or a surplus job."""
+    import random
+
+    rng = random.Random(11)
+    vocab = [f"w{i}" for i in range(5000)]
+
+    def text():
+        return " ".join(rng.choice(vocab) for _ in range(40))
+
+    def near(t):
+        words = t.split()
+        words[7] = "changed"
+        return " ".join(words)
+
+    in_dir = str(tmp_path / "incoming")
+    os.makedirs(in_dir)
+    originals, earlier, next_id = set(), [], 0
+    sc = spark.sparkContext
+    status = sc._jsc.sc().statusStore()
+    for b in range(3):
+        rows, this = [], []
+        for _ in range(8):
+            this.append((next_id, text()))
+            originals.add(next_id)
+            next_id += 1
+        rows += this
+        # an in-batch copy and, after batch 0, a copy of an earlier doc
+        for _, t in [this[0]] + earlier[-1:]:
+            rows.append((next_id, near(t)))
+            next_id += 1
+        earlier += this
+        spark.createDataFrame(rows, "doc_id long, text string").coalesce(
+            1
+        ).write.mode("append").parquet(in_dir)
+        sdf = spark.readStream.schema("doc_id long, text string").parquet(
+            in_dir
+        )
+        q = near_dedup_ingest_stream(
+            sdf, out_path=str(tmp_path / "out"), index_path=str(tmp_path / "i"),
+            checkpoint=str(tmp_path / "ck"), threshold=0.5, index_buckets=8,
+            available_now=True,
+        )
+        assert q.awaitTermination(180)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        labels = [
+            status.job(j).description().getOrElse(None)
+            for j in sc.statusTracker().getJobIdsForGroup(str(q.runId))
+        ]
+        phases = [
+            (d or "").removeprefix("ingest:neardup_minhash:") for d in labels
+        ]
+        assert set(phases) <= PHASES, labels
+        if b:
+            assert len(labels) <= 13, labels
+            assert phases.count("probe") == 2, labels
+            assert phases.count("write_output") == 1, labels
+            assert phases.count("write_index") == 2, labels
+    # every copy dropped, every original accepted
+    got = {r.doc_id for r in spark.read.parquet(str(tmp_path / "out")).collect()}
+    assert got == originals
