@@ -634,15 +634,6 @@ def minhash_minima(sh: Column, num_hashes: int, hash_fn: str) -> Column:
     return udf(F.transform(sh, _portable_base))
 
 
-def _cw_signatures_numpy(based: DataFrame, num_hashes: int) -> DataFrame:
-    """``(doc, __sig)``: the Carter-Wegman minima of the pre-hashed
-    ``__base`` arrays of ``based``."""
-    from pyspark import SparkContext
-
-    sigs = _minima_udf(SparkContext._active_spark_context, num_hashes, "portable")
-    return based.select("doc", sigs(F.col("__base")).alias("__sig"))
-
-
 @functools.lru_cache(maxsize=8)
 def _minima_udf(sc, num_hashes: int, hash_fn: str):
     """The minima pandas UDF over a base-hash array (NULL for NULL),

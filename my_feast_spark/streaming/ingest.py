@@ -506,9 +506,7 @@ class _IndexBatch:
         """Pin ``accepted`` in at most as many partitions as the batch
         has, then overwrite this batch's output directory with the pin's
         ``cols`` (all columns when none). Returns the pin: index rows
-        derive from it, so they are exactly the written rows, and a
-        partitioned index write from it lands at most that many files
-        per pbucket."""
+        derive from it, so they are exactly the written rows."""
         acc = self.pin(accepted.coalesce(max(self.parts, 1)), "candidates")
         out = os.path.join(self.out_path, f"batch_id={self.batch_id}")
         with self.phase("write_output"):
@@ -519,12 +517,15 @@ class _IndexBatch:
 
     def write_index(self, path: str, rows: DataFrame, *cols: str) -> None:
         """Publish this batch's generation of the index dataset at
-        ``path``; bucketed, partitioned by the pbucket of ``cols``."""
+        ``path``; bucketed, partitioned by the pbucket of ``cols``, at
+        most one file per pbucket: rows of a one-partition batch are
+        written as they are, others are shuffled by pbucket first."""
         writer = rows.write
         if self.index_buckets:
-            writer = rows.withColumn(
-                "pbucket", self._pbucket(*cols)
-            ).write.partitionBy("pbucket")
+            rows = rows.withColumn("pbucket", self._pbucket(*cols))
+            if self.parts > 1:
+                rows = rows.repartition("pbucket")
+            writer = rows.write.partitionBy("pbucket")
         with self.phase("write_index"):
             publish(path, "batch_id", self.batch_id, writer.parquet)
 
@@ -651,28 +652,26 @@ def _candidate_verify(
     whose expressions are built once per stream: ``sign`` are the
     columns (``payload`` among them, NULL for a doc that cannot be
     signed) computed over a batch's rows, spread to cluster parallelism
-    first; ``key_rows`` turns signed rows into ``(doc, payload, *keys)``
-    collision rows; ``similar(dominator payload, doc payload)`` is the
-    verify predicate. A doc drops when it verifies against an accepted doc sharing a key,
-    or against a lower-id doc of its own batch. The index datasets are
-    (payload, key rows), each pbucketed by its ``doc`` / ``keys``
-    columns.
+    first; ``key_rows`` turns signed rows into
+    ``(doc, *keys)`` collision rows; ``similar(dominator payload, doc
+    payload)`` is the verify predicate. A doc drops when it verifies
+    against an accepted doc sharing a key, or against a lower-id doc of
+    its own batch. The index datasets are (payload, key rows), each
+    pbucketed by its ``doc`` / ``keys`` columns.
 
     Jobs: the signed pin (the batch's own columns as ``__row`` plus
-    ``doc`` and ``sign``) feeds every later step; collision rows carry
-    the batch's payload, so the in-batch verify needs no payload join;
-    the accepted rows are one pin (verify and broadcast anti-join) from
-    which the output and both index datasets are written."""
+    ``doc`` and ``sign``) feeds every later step. The batch's key rows
+    carry no payload and are the one broadcast both candidate joins
+    (in-batch and against the index) share; payloads join by doc id
+    afterwards, under the planner's choice of strategy. The accepted
+    rows are one pin (verify and broadcast anti-join) from which the
+    output and both index datasets are written."""
     keys = list(keys)
     a_p, b_p = f"a_{payload}", f"b_{payload}"
     signed_only = F.col(payload).isNotNull()
     doc = F.col(id_col).alias("doc")
-    dom_side = [F.col("doc").alias("dom"), F.col(payload).alias(a_p), *keys]
-    doc_side = ["doc", F.col(payload).alias(b_p), *keys]
-    seen_dom = [F.col("doc").alias("dom"), *keys]
-    seen_payload = [F.col("doc").alias("dom"), F.col(payload).alias(a_p)]
+    dom = F.col("doc").alias("dom")
     verified = similar(F.col(a_p), F.col(b_p))
-    in_batch = (F.col("dom") < F.col("doc")) & verified
 
     def accept(batch_df: DataFrame, ix: _IndexBatch) -> None:
         payload_dir, keys_dir = ix.dirs
@@ -680,40 +679,53 @@ def _candidate_verify(
         signed = ix.pin(spread_partitions(batch_df).select(
             F.struct(*cols).alias("__row"), doc, *sign
         ), "sign")
-        rows = key_rows(signed.filter(signed_only))
-        fields = {f.name: f for f in rows.schema.fields}
-        docs = F.broadcast(rows.select(*doc_side))
-        dominated = (
-            rows.select(*dom_side).join(docs, keys).filter(in_batch)
-            .select("doc")
+        # the id filter is the one the in-batch join infers from
+        # ``dom < doc``: with it both joins broadcast the same key rows
+        own = signed.filter(signed_only & F.col("doc").isNotNull())
+        rows = key_rows(own)
+        fields = {f.name: f for f in (*signed.schema, *rows.schema)}
+        batch_keys = F.broadcast(rows)
+        # candidate (dominator, doc, dominator is indexed) triples: a
+        # lower-id doc of the batch, or an accepted doc, sharing a key
+        cand = (
+            rows.select(dom, *keys).join(batch_keys, keys)
+            .filter(F.col("dom") < F.col("doc"))
+            .select("dom", "doc", F.lit(False).alias("indexed"))
         )
+        payloads = own.select(dom, F.col(payload).alias(a_p))
         seen_keys = ix.seen(
             keys_dir, T.StructType([fields[c] for c in ("doc", *keys)]),
             rows, *keys,
         )
         if seen_keys is not None:
-            cand = seen_keys.select(*seen_dom).join(docs, keys).select(
-                "dom", "doc", b_p
+            cand = cand.union(
+                seen_keys.select(dom, *keys).join(batch_keys, keys)
+                .select("dom", "doc", F.lit(True).alias("indexed"))
             )
             if ix.index_buckets:
-                # only the dominators' payloads are read: pin the
-                # (batch-sized) candidates and prune to their pbuckets
+                # only the indexed dominators' payloads are read: pin
+                # the (batch-sized) candidates and prune to their
+                # pbuckets
                 cand = ix.pin(cand, "candidates")
             seen_payloads = ix.seen(
                 payload_dir, T.StructType([fields["doc"], fields[payload]]),
-                cand, "dom",
+                cand.filter("indexed"), "dom",
             )
             if seen_payloads is not None:
-                dominated = dominated.union(
-                    cand.join(seen_payloads.select(*seen_payload), "dom")
-                    .filter(verified).select("doc")
+                payloads = payloads.union(
+                    seen_payloads.select(dom, F.col(payload).alias(a_p))
                 )
+        dominated = (
+            cand.join(payloads, "dom")
+            .join(own.select("doc", F.col(payload).alias(b_p)), "doc")
+            .filter(verified).select("doc")
+        )
         acc = ix.write_output(
             signed.join(F.broadcast(dominated), "doc", "left_anti"), "__row.*"
         )
         own = acc.filter(signed_only)
         ix.write_index(payload_dir, own.select("doc", payload), "doc")
-        ix.write_index(keys_dir, key_rows(own).select("doc", *keys), *keys)
+        ix.write_index(keys_dir, key_rows(own), *keys)
 
     return accept
 
@@ -815,9 +827,9 @@ def near_dedup_ingest_stream(
     partitions them by ``pbucket`` — ``pmod(xxhash64(band, bsig), B)``
     for band rows, ``pmod(xxhash64(doc), B)`` for signatures — and each
     batch reads only the band pbuckets its own band rows hash into and
-    the signature pbuckets of its candidate dominators. The candidate
-    joins broadcast the batch's docs x bands rows, never the text, and
-    the index never shuffles. ``compact_every=k`` compacts
+    the signature pbuckets of its indexed candidate dominators. The
+    candidate joins broadcast the batch's docs x bands key rows, never
+    a signature or the text, and the index never shuffles. ``compact_every=k`` compacts
     both datasets after every k-th batch. The crash-replay,
     ``index_buckets`` and ``compact_every`` contract is the shared
     ingest driver's (``_start_dedup_ingest``).
@@ -858,7 +870,7 @@ def near_dedup_ingest_stream(
     )).alias("band", "bsig")
 
     def band_rows(signed: DataFrame) -> DataFrame:
-        return signed.select("doc", "sig", band_keys)
+        return signed.select("doc", band_keys)
 
     def similar(a_sig: Column, b_sig: Column) -> Column:
         # one higher-order fold over the pair on purpose: a single
@@ -947,7 +959,7 @@ def embedding_dedup_ingest_stream(
     buckets = F.posexplode(F.col("bks")).alias("table", "bucket")
 
     def bucket_rows(signed: DataFrame) -> DataFrame:
-        return signed.select("doc", "v", buckets)
+        return signed.select("doc", buckets)
 
     def similar(a_v: Column, b_v: Column) -> Column:
         # _dot is a higher-order fold on purpose: a dim-term unrolled

@@ -181,7 +181,7 @@ def test_native_queries_have_no_python_udfs(spark):
                  # the portable minhash family fans out through ONE
                  # Arrow batch of exact int64 Carter-Wegman minima —
                  # bit-identical to the expression form, ~64x fewer
-                 # interpreted HOF passes (see _cw_signatures_numpy)
+                 # interpreted HOF passes (see minhash_minima)
                  "minhash_dup_pairs",
                  # lsh_recall runs that same minhash pipeline on its
                  # sample slice — the one Arrow batch is inherited

@@ -62,10 +62,7 @@ def test_carter_wegman_family_is_overflow_free():
 def test_cw_numpy_fanout_matches_expression_form(spark):
     # the Arrow-batched Carter-Wegman fan-out must be BIT-IDENTICAL to
     # the pure-expression form — it feeds the oracle-replayed LSH
-    from my_feast_spark.operators.dedup import (
-        _cw_hasher,
-        _cw_signatures_numpy,
-    )
+    from my_feast_spark.operators.dedup import _cw_hasher, minhash_minima
 
     df = spark.createDataFrame(
         [(i, [s + f" {i}", s]) for i, s in enumerate(SAMPLES)], ["doc", "sh"]
@@ -81,9 +78,14 @@ def test_cw_numpy_fanout_matches_expression_form(spark):
         for i in range(n)
     ]
     expected = {r["doc"]: r for r in based.select("doc", *expr_cols).collect()}
-    # the fan-out returns the array-native (doc, __sig) form since r16;
-    # element i must stay bit-identical to expression column mh_i
-    got = {r["doc"]: r["__sig"] for r in _cw_signatures_numpy(based, n).collect()}
+    # element i of the array-native signature must stay bit-identical
+    # to expression column mh_i
+    got = {
+        r["doc"]: r["sig"]
+        for r in df.select(
+            "doc", minhash_minima(F.col("sh"), n, "portable").alias("sig")
+        ).collect()
+    }
     assert set(got) == set(expected)
     for doc, sig in got.items():
         for i in range(n):

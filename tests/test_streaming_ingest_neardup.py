@@ -134,7 +134,11 @@ def test_bucketed_index_matches_flat_and_prunes(spark, tmp_path):
     os.makedirs(buck_in)
 
     def feed(path, rows):
-        spark.createDataFrame(rows).coalesce(1).write.mode(
+        # the last batch arrives as three files, so it is read in three
+        # partitions: its index generations must still hold at most one
+        # file per pbucket
+        files = 3 if rows is batches[-1] else 1
+        spark.createDataFrame(rows).repartition(files).write.mode(
             "append"
         ).parquet(path)
 
@@ -147,6 +151,13 @@ def test_bucketed_index_matches_flat_and_prunes(spark, tmp_path):
                 text=f"novel {v} content about engine number {i} with "
                      f"unique vocabulary token{i} and nothing shared"),
         ])
+    # batch 11: a near-dup of the base + six novel docs
+    batches.append([Row(doc_id=300, text=BASE.replace("tonight", "now"))] + [
+        Row(doc_id=400 + i,
+            text=f"fresh text {i} on topic number {i} with words "
+                 f"word{i}a word{i}b word{i}c word{i}d only here")
+        for i in range(6)
+    ])
     expected = None
     for run_dir, runner, out, idx, ck in (
         (flat_in, _run, str(tmp_path / "of"), str(tmp_path / "if"), "ckf"),
@@ -167,6 +178,8 @@ def test_bucketed_index_matches_flat_and_prunes(spark, tmp_path):
             assert {1, 2} <= expected
             assert all(200 + i in expected for i in range(len(variants)))
             assert all(100 + i not in expected for i in range(len(variants)))
+            assert 300 not in expected
+            assert all(400 + i in expected for i in range(6))
         else:
             assert got == expected, "bucketed path changed RESULTS"
 
@@ -261,10 +274,12 @@ PHASES = {"sign", "candidates", "probe", "write_output", "write_index"}
 def test_bucketed_batch_job_budget_and_labels(spark, tmp_path):
     """A bucketed batch against a non-empty index runs at most 13 Spark
     jobs, each labelled ``ingest:neardup_minhash:<phase>``: the signed
-    pin (2), one plain job per pbucket probe (2), the candidate pin (2),
-    the verified accepted pin (4) and one job per write (3). A schema
-    inference, an output read-back or a probe ``distinct`` shows up as
-    an unlabelled or a surplus job."""
+    pin (2), one plain job per pbucket probe (2), the candidate pin (the
+    one key-row broadcast and the checkpoint), the verified accepted pin
+    (the two payload joins, the dominated-id broadcast and the
+    checkpoint) and one job per write (3). A schema inference, an output
+    read-back or a probe ``distinct`` shows up as an unlabelled or a
+    surplus job."""
     import random
 
     rng = random.Random(11)
