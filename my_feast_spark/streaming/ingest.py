@@ -652,9 +652,9 @@ def _candidate_verify(
     whose expressions are built once per stream: ``sign`` are the
     columns (``payload`` among them, NULL for a doc that cannot be
     signed) computed over a batch's rows, spread to cluster parallelism
-    first; ``key_rows`` turns signed rows into
-    ``(doc, *keys)`` collision rows; ``similar(dominator payload, doc
-    payload)`` is the verify predicate. A doc drops when it verifies
+    first; ``key_rows`` turns signed rows into ``(doc, *keys)``
+    collision rows; ``similar(dominator payload, doc payload)`` is the
+    verify predicate. A doc drops when it verifies
     against an accepted doc sharing a key, or against a lower-id doc of
     its own batch. The index datasets are (payload, key rows), each
     pbucketed by its ``doc`` / ``keys`` columns.
