@@ -34,10 +34,22 @@ and the created-timestamp tie-break falls out of the sort order for free
 Feature payloads ride in a single struct so NULL feature values do not
 leak older rows' values (per-column LOCF would).
 
+The join is N-sided: several histories on the same join keys (the
+feature views of one retrieval) share that one window. Side i
+contributes rows whose ``__mfs_created{i}`` / ``__mfs_payload{i}`` are
+set and every other side's are NULL; the window orders by (ts,
+is_probe, created_0, payload_0, ..., created_{N-1}, payload_{N-1}) and
+carries one ``last(payload_i, ignorenulls)`` per side. Rows of side j
+never change which row of side i wins: their payload_i is NULL (skipped),
+and among side i's own rows every other side's columns are NULL, so the
+order is exactly side i's (ts, created_i, payload_i). Each side keeps its
+own created column, tie-breaker and TTL, so its result equals a one-side
+join of it alone. :func:`point_in_time_join` is the one-side case.
+
 ``range_join`` (the reference's literal plan: non-equi join + window
 top-1) is kept for small entity dataframes where Catalyst broadcasts the
 probe side — useful when |probes| << |history| and history is huge but
-per-key fan-out is small.
+per-key fan-out is small. It applies its sides one after another.
 
 ``sliced_window`` is the skew-hardened variant of ``union_window``: the
 window partitions by (key, coarse time slice) instead of key alone, so a
@@ -45,13 +57,15 @@ pathologically hot key (millions of rows on ONE key — AQE cannot split a
 window partition the way it splits a skewed join) spreads over
 |slices| tasks. Correctness across slice boundaries comes from
 boundary-carry rows: the latest feature row of every earlier slice is
-pre-reduced per (key, slice) — a relation of at most |keys|×|slices|
-rows — and injected into each probe-bearing slice as its carry-in.
+pre-reduced per (key, slice, side) — a relation of at most
+|keys|×|slices|×|sides| rows — and injected into each probe-bearing slice
+as its carry-in.
 Results are identical to ``union_window`` (asserted by golden + property
 tests); cost is one extra small shuffle of the per-slice-latest relation.
 
 ``auto`` probes the per-key load (one column-pruned pass + a
-metadata-sized shuffle, see ``_choose_strategy``) and picks
+metadata-sized shuffle, see ``_choose_strategy``) over the union of all
+sides, which is exactly the window's load per key, and picks
 union_window below the hot-key threshold, sliced_window with a fitted
 slice width above it — so a 100 TB retrieval with an unknown skew
 profile no longer needs hand-tuning to avoid the one-task window sort.
@@ -67,22 +81,40 @@ key never matches anything (probe rows with a NULL key pass through with
 NULL features; feature rows with a NULL key are dropped) — Spark window
 partitioning would otherwise group NULLs together and diverge from the
 reference's generated SQL.
+
+The plan is built from SQL expression strings, a few wide projections
+per join: every ``Column`` built in Python costs py4j round trips, and
+plan building is a visible share of a retrieval's latency.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
+from dataclasses import dataclass, field
+from functools import reduce
 from typing import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 _TS = "__mfs_ts"
 _IS_PROBE = "__mfs_is_probe"
-_CREATED = "__mfs_created"
-_PAYLOAD = "__mfs_payload"
+_CREATED = "__mfs_created"  # + side index
+_PAYLOAD = "__mfs_payload"  # + side index
 _FEAT_TS = "__mfs_feat_ts"
+_VIEW = "__mfs_view"
+_SLICE = "__slice"
 _ROW_ID = "__mfs_row_id"
+_ROWS_TO_HERE = "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
+
+
+def _q(name: str) -> str:
+    """A column name quoted for a SQL expression string."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _sql_str(s: str) -> str:
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def _ttl_seconds(ttl) -> float | None:
@@ -94,6 +126,50 @@ def _ttl_seconds(ttl) -> float | None:
         return None
     seconds = ttl.total_seconds() if isinstance(ttl, _dt.timedelta) else float(ttl)
     return seconds if seconds > 0 else None
+
+
+@dataclass
+class Side:
+    """One history of an N-side join (one feature view of a retrieval).
+
+    ``df`` holds the join keys, ``event_ts_col``, the optional
+    ``created_ts_col`` and the ``features``; only those columns are read.
+    ``out_names`` maps each feature to its output column, ``casts`` maps
+    a feature to the SQL type it is cast to (declared dtypes), and
+    ``feat_ts_out`` names an output column for the matched row's feature
+    timestamp."""
+
+    df: DataFrame
+    features: Sequence[str]
+    event_ts_col: str = "event_timestamp"
+    created_ts_col: str | None = None
+    ttl: object = None
+    out_names: dict = field(default_factory=dict)
+    casts: dict = field(default_factory=dict)
+    feat_ts_out: str | None = None
+
+    def outputs(self) -> list[str]:
+        outs = [self.out_names.get(f, f) for f in self.features]
+        return outs + ([self.feat_ts_out] if self.feat_ts_out else [])
+
+
+def check_output_names(entity_cols: Sequence[str], outputs: Sequence[str]) -> None:
+    """Raise ``ValueError`` when feature outputs repeat or shadow an
+    entity column — a frame with two equal column names cannot be
+    written. Plan-time, so it fails before any job runs."""
+    seen: set[str] = set()
+    dups = sorted({c for c in outputs if c in seen or seen.add(c)})
+    if dups:
+        raise ValueError(
+            f"feature output columns appear more than once: {dups}; "
+            "pass full_feature_names=True"
+        )
+    collisions = sorted(set(outputs) & set(entity_cols))
+    if collisions:
+        raise ValueError(
+            f"feature output columns collide with entity columns: {collisions}; "
+            "pass full_feature_names=True with a feature_view_name"
+        )
 
 
 def point_in_time_join(
@@ -149,33 +225,65 @@ def point_in_time_join(
     hot_key_rows : ``auto`` only — switch to sliced_window when the
         hottest key carries more than this many feature+probe rows (the
         point where one task's window sort becomes the straggler;
-        default 1M — the r9 probe measured sliced 1.9x faster than
+        default 1M — sliced_window measured 1.9x faster than
         union_window at 2.5M rows on one key).
     """
     entity_ts_col = entity_ts_col or event_ts_col
-    join_keys = list(join_keys)
-    if not join_keys:
-        raise ValueError("point_in_time_join requires at least one join key")
-
     if features is None:
         skip = set(join_keys) | {event_ts_col, created_ts_col}
         features = [c for c in feature_df.columns if c not in skip]
-    features = list(features)
-
     prefix = f"{feature_view_name}__" if (full_feature_names and feature_view_name) else ""
-    out_names = {f: prefix + f for f in features}
-    entity_cols = [c for c in entity_df.columns]
-    collisions = set(out_names.values()) & set(entity_cols)
-    if collisions:
-        raise ValueError(
-            f"feature output columns collide with entity columns: {sorted(collisions)}; "
-            "pass full_feature_names=True with a feature_view_name"
-        )
+    side = Side(
+        feature_df, list(features), event_ts_col, created_ts_col, ttl,
+        out_names={f: prefix + f for f in features},
+        feat_ts_out=prefix + "feature_event_timestamp" if include_feature_ts else None,
+    )
+    entity_cols = entity_df.columns
+    check_output_names(entity_cols, side.outputs())
+    return join_sides(
+        entity_df, entity_cols, [side], join_keys, entity_ts_col,
+        strategy=strategy, slice_interval=slice_interval,
+        hot_key_rows=hot_key_rows,
+    )
+
+
+def join_sides(
+    entity_df: DataFrame,
+    entity_cols: Sequence[str],
+    sides: Sequence[Side],
+    join_keys: Sequence[str],
+    entity_ts_col: str,
+    *,
+    strategy: str = "union_window",
+    slice_interval=_dt.timedelta(days=1),
+    hot_key_rows: int = 1_000_000,
+    probe_df: DataFrame | None = None,
+) -> DataFrame:
+    """As-of join ``entity_df`` against every side in ``sides`` at once,
+    all on ``join_keys`` (module docstring). Returns ``entity_cols`` then
+    each side's outputs, in side order.
+
+    ``probe_df`` is a relation with the same probe keys and timestamps as
+    ``entity_df`` but cheaper to scan (the original entity dataframe when
+    ``entity_df`` already carries earlier joins). The history prune, the
+    ``auto`` probe and its prefilter read it; default ``entity_df``.
+    """
+    join_keys = list(dict.fromkeys(join_keys))
+    if not join_keys:
+        raise ValueError("point_in_time_join requires at least one join key")
+    if strategy not in ("union_window", "sliced_window", "range_join", "auto"):
+        raise ValueError(f"unknown strategy: {strategy!r}")
+    probe_df = entity_df if probe_df is None else probe_df
+    keys = [_q(k) for k in join_keys]
+    key_ok = " AND ".join(f"{k} IS NOT NULL" for k in keys)
+    feats = reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True),
+        [_side_rows(s, i, keys) for i, s in enumerate(sides)],
+    )
 
     if strategy == "auto":
         strategy, slice_interval, prefilter = _choose_strategy(
-            entity_df, feature_df, join_keys, event_ts_col, entity_ts_col,
-            hot_key_rows,
+            probe_df, feats, join_keys, _TS, entity_ts_col, hot_key_rows,
         )
         if prefilter:
             # Small-probe regime (backfill of a few entities against a
@@ -186,37 +294,115 @@ def point_in_time_join(
             # probe-left-preserved, so unprobed keys' history can never
             # reach it; what changes is the shuffle volume — only the
             # matching keys' history moves instead of the whole table.
-            entity_keys = entity_df.select(*join_keys).distinct()
-            feature_df = feature_df.join(
-                F.broadcast(entity_keys), join_keys, "left_semi"
+            feats = feats.join(
+                F.broadcast(probe_df.select(*join_keys).distinct()),
+                join_keys, "left_semi",
             )
+    slice_s = _slice_seconds(slice_interval) if strategy == "sliced_window" else None
+    feats = _prune_history(feats, probe_df, entity_ts_col, key_ok)
 
+    if strategy == "range_join":
+        out = _range_join(entity_df, feats, sides, join_keys, entity_ts_col)
+        return out.selectExpr(*_outputs(entity_cols, sides, entity_ts_col, _q(entity_ts_col)))
+
+    payload_cols = [c for c in entity_cols if c not in join_keys and c != entity_ts_col]
+    probes = entity_df.selectExpr(
+        *keys, f"{_q(entity_ts_col)} AS {_TS}", f"1 AS {_IS_PROBE}",
+        *[_q(c) for c in payload_cols],
+    )
+    probe_ok = probes.filter(key_ok)
+    probe_null = probes.filter(f"NOT ({key_ok})")
+    keep = [*keys, _TS, *[_q(c) for c in payload_cols]]
     if strategy == "union_window":
-        out = _union_window(
-            entity_df, feature_df, join_keys, event_ts_col, entity_ts_col,
-            created_ts_col, _ttl_seconds(ttl), features,
-        )
-    elif strategy == "sliced_window":
-        out = _sliced_window(
-            entity_df, feature_df, join_keys, event_ts_col, entity_ts_col,
-            created_ts_col, _ttl_seconds(ttl), features,
-            _slice_seconds(slice_interval),
-        )
-    elif strategy == "range_join":
-        out = _range_join(
-            entity_df, feature_df, join_keys, event_ts_col, entity_ts_col,
-            created_ts_col, _ttl_seconds(ttl), features,
+        carried = _carry(
+            feats.unionByName(probe_ok, allowMissingColumns=True),
+            sides, keys, keep,
         )
     else:
-        raise ValueError(f"unknown strategy: {strategy!r}")
+        carried = _sliced_carry(feats, probe_ok, sides, keys, keep, slice_s)
+    out = (
+        carried.filter(f"{_IS_PROBE} = 1")
+        .unionByName(probe_null, allowMissingColumns=True)
+    )
+    return out.selectExpr(*_outputs(entity_cols, sides, entity_ts_col, _TS))
 
-    # Unpack payload struct -> named feature columns (cast-free).
-    sel = [F.col(c) for c in entity_cols]
-    for f in features:
-        sel.append(F.col(f"{_PAYLOAD}.{f}").alias(out_names[f]))
-    if include_feature_ts:
-        sel.append(F.col(f"{_PAYLOAD}.{_FEAT_TS}").alias(prefix + "feature_event_timestamp"))
-    return out.select(*sel)
+
+def _side_rows(side: Side, i: int, keys: list[str]) -> DataFrame:
+    """Side i in the union's shape: keys, ts, is_probe 0, created_i,
+    payload_i (the features, cast, plus the feature timestamp), view i.
+    NULL-padded to the other sides' columns by the union."""
+    fields = ", ".join(
+        f"{_sql_str(f)}, "
+        + (f"CAST({_q(f)} AS {side.casts[f]})" if f in side.casts else _q(f))
+        for f in side.features
+    )
+    ts = _q(side.event_ts_col)
+    cols = [*keys, f"{ts} AS {_TS}", f"0 AS {_IS_PROBE}"]
+    if side.created_ts_col:
+        cols.append(f"{_q(side.created_ts_col)} AS {_CREATED}{i}")
+    cols += [
+        f"named_struct({fields}, '{_FEAT_TS}', {ts}) AS {_PAYLOAD}{i}",
+        f"{i} AS {_VIEW}",
+    ]
+    return side.df.selectExpr(*cols)
+
+
+def _order(sides: Sequence[Side], desc: bool = False) -> str:
+    """The window's total order: feature rows sort BEFORE probe rows at
+    equal timestamps (the `<=` boundary is inclusive), then each side's
+    (created, payload). Ascending, "last non-null payload_i" is side i's
+    max event ts, then max created — J2+J3 in one sort. The payload
+    struct is the final tie-breaker: two rows of one side identical in
+    (key, ts, created) but different in value would otherwise resolve by
+    partition order, a different winner per plan, strategy or retry; with
+    it in the order the greatest struct wins everywhere. ``desc`` is the
+    reverse order for a top-1 of feature rows (every strategy shares the
+    rule)."""
+    d = " DESC NULLS LAST" if desc else " ASC NULLS FIRST"
+    order = [_TS + (" DESC" if desc else " ASC")]
+    if not desc:
+        order.append(f"{_IS_PROBE} ASC")
+    for i, s in enumerate(sides):
+        if s.created_ts_col:
+            order.append(f"{_CREATED}{i}{d}")
+        order.append(f"{_PAYLOAD}{i}{d}")
+    return ", ".join(order)
+
+
+def _carry(unioned: DataFrame, sides, partition: list[str], keep: list[str]) -> DataFrame:
+    """Every row with each side's last non-null payload so far in its
+    partition (the LOCF window): on a probe row, that side's as-of match."""
+    w = (
+        f"OVER (PARTITION BY {', '.join(partition)} ORDER BY {_order(sides)} "
+        f"{_ROWS_TO_HERE})"
+    )
+    return unioned.selectExpr(
+        *keep, _IS_PROBE,
+        *[f"last({_PAYLOAD}{i}, true) {w} AS {_PAYLOAD}{i}" for i in range(len(sides))],
+    )
+
+
+def _outputs(entity_cols, sides, entity_ts_col: str, ts: str) -> list[str]:
+    """The final projection: entity columns, then each side's features
+    unpacked from its payload, NULL where the match is older than the
+    side's TTL."""
+    sel = [f"{ts} AS {_q(c)}" if c == entity_ts_col else _q(c) for c in entity_cols]
+    for i, s in enumerate(sides):
+        p = f"{_PAYLOAD}{i}"
+        ttl_s = _ttl_seconds(s.ttl)
+        fresh = (
+            f"{p}.{_FEAT_TS} >= {ts} - INTERVAL {int(ttl_s)} SECOND"
+            if ttl_s is not None else None
+        )
+        fields = [(f, s.out_names.get(f, f)) for f in s.features]
+        if s.feat_ts_out:
+            fields.append((_FEAT_TS, s.feat_ts_out))
+        for f, out in fields:
+            v = f"{p}.{_q(f)}"
+            if fresh:
+                v = f"CASE WHEN {fresh} THEN {v} END"
+            sel.append(f"{v} AS {_q(out)}")
+    return sel
 
 
 #: auto only: pre-filter history by a broadcast semi-join on the probe
@@ -233,7 +419,8 @@ def _choose_strategy(
     pre-filter) from the key distribution.
 
     One aggregation over the key+timestamp projections of BOTH sides
-    (the window's actual partition load is features + probes per key):
+    (the window's actual partition load is features + probes per key;
+    ``feature_df`` is the union of every side of the join):
     per-key row counts with map-side combine, then the hottest key's
     (count, time span) and the global probe-row count — a single
     collected row, never data-sized. On parquet the probe scan is
@@ -243,8 +430,8 @@ def _choose_strategy(
     Decisions, returned as (strategy, slice_interval, prefilter):
 
     * hottest key <= ``hot_key_rows`` → union_window (one shuffle, no
-      carry overhead — the fast path the r9 probes measured 31x over
-      range_join on uniform keys). Above it → sliced_window with
+      carry overhead; measured 31x faster than range_join on uniform
+      keys). Above it → sliced_window with
       ``slice_interval`` fitted so the hottest key spreads over
       ``2 * ceil(max_n / hot_key_rows)`` slices (each slice then holds
       at most ~hot_key_rows / 2 of its rows), clamped to >= 1 second.
@@ -303,39 +490,16 @@ def _choose_strategy(
     ), prefilter
 
 
-def _payload_struct(feature_df, features, event_ts_col):
-    return F.struct(
-        *[F.col(f) for f in features],
-        F.col(event_ts_col).alias(_FEAT_TS),
-    )
-
-
-def _apply_ttl(df: DataFrame, entity_ts_col: str, ttl_s: float | None) -> DataFrame:
-    """NULL the payload when the matched feature is older than the TTL."""
-    if ttl_s is None:
-        return df
-    keep = F.col(f"{_PAYLOAD}.{_FEAT_TS}") >= (
-        F.col(entity_ts_col) - F.expr(f"INTERVAL {int(ttl_s)} SECOND")
-    )
-    return df.withColumn(
-        _PAYLOAD, F.when(keep, F.col(_PAYLOAD)).otherwise(F.lit(None))
-    )
-
-
-def _prune_history(feature_df, entity_df, event_ts_col, entity_ts_col):
-    """The reference's upper-bound optimization (CASE.MD:403): feature
-    rows newer than the newest probe can never match — filter them at the
-    scan. Expressed as a broadcast of the 1-row max-probe-ts aggregate, so
-    it stays in-plan (no driver action) and Catalyst pushes the resulting
-    predicate into the join's input."""
-    max_ts = entity_df.select(
-        F.max(entity_ts_col).alias("__mfs_max_probe_ts")
-    )
-    return (
-        feature_df.join(F.broadcast(max_ts))
-        .filter(F.col(event_ts_col) <= F.col("__mfs_max_probe_ts"))
-        .drop("__mfs_max_probe_ts")
-    )
+def _prune_history(feats, probe_df, entity_ts_col: str, key_ok: str):
+    """Drop feature rows with a NULL key, and — the reference's
+    upper-bound optimization (CASE.MD:403) — rows newer than the newest
+    probe, which can never match. The bound is a scalar subquery over the
+    probes, so it stays in-plan (no driver action) and runs once for the
+    whole union of sides."""
+    newest = probe_df.selectExpr(
+        f"max({_q(entity_ts_col)}) AS __mfs_max_probe_ts"
+    ).scalar()
+    return feats.filter(F.expr(key_ok) & (F.col(_TS) <= newest))
 
 
 def _slice_seconds(slice_interval) -> int:
@@ -353,114 +517,7 @@ def _slice_seconds(slice_interval) -> int:
     return int(s)
 
 
-def _any_null_key(join_keys):
-    cond = F.lit(False)
-    for k in join_keys:
-        cond = cond | F.col(k).isNull()
-    return cond
-
-
-def _split_null_keys(entity_df, feature_df, join_keys):
-    """SQL left-join NULL semantics: NULL-keyed probes bypass the match
-    (NULL features attached later); NULL-keyed feature rows are dropped —
-    Spark's window partitioning would otherwise co-group NULLs and match
-    them against each other, diverging from the reference's SQL."""
-    any_null = _any_null_key(join_keys)
-    return (
-        entity_df.filter(~any_null),
-        entity_df.filter(any_null),
-        feature_df.filter(~any_null),
-    )
-
-
-def _union_sides(
-    entity_df, feature_df, join_keys, event_ts_col, entity_ts_col,
-    created_ts_col, features,
-):
-    """Tagged (feature ∪ probe) relation + the NULL-keyed probe remainder."""
-    entity_ok, entity_null, feature_df = _split_null_keys(
-        entity_df, feature_df, join_keys
-    )
-    feature_df = _prune_history(feature_df, entity_ok, event_ts_col, entity_ts_col)
-    entity_payload_cols = [
-        c for c in entity_df.columns if c not in join_keys and c != entity_ts_col
-    ]
-
-    created = (
-        F.col(created_ts_col) if created_ts_col else F.lit(None).cast("timestamp")
-    )
-    feat_side = feature_df.select(
-        *[F.col(k) for k in join_keys],
-        F.col(event_ts_col).alias(_TS),
-        F.lit(0).alias(_IS_PROBE),
-        created.alias(_CREATED),
-        _payload_struct(feature_df, features, event_ts_col).alias(_PAYLOAD),
-        *[F.lit(None).cast(entity_df.schema[c].dataType).alias(c) for c in entity_payload_cols],
-    )
-
-    def probe_shape(df):
-        return df.select(
-            *[F.col(k) for k in join_keys],
-            F.col(entity_ts_col).alias(_TS),
-            F.lit(1).alias(_IS_PROBE),
-            # match the feature side's created type exactly — numeric
-            # epoch created columns are legal (same contract as _TS)
-            F.lit(None).cast(feat_side.schema[_CREATED].dataType)
-            .alias(_CREATED),
-            F.lit(None).cast(feat_side.schema[_PAYLOAD].dataType).alias(_PAYLOAD),
-            *[F.col(c) for c in entity_payload_cols],
-        )
-
-    return feat_side, probe_shape(entity_ok), probe_shape(entity_null)
-
-
-def _window_order():
-    # Feature rows sort BEFORE probe rows at equal timestamps => the `<=`
-    # boundary is inclusive; (ts asc, created asc) ordering makes "last
-    # non-null payload" = max event_ts then max created — J2+J3 in one sort.
-    # The PAYLOAD struct is the FINAL tie-breaker (Hypothesis-caught):
-    # two feature rows identical in (key, ts, created) but different in
-    # value would otherwise resolve by partition order — a different
-    # winner per plan/strategy/retry, i.e. non-reproducible training
-    # sets. With the payload in the total order the greatest struct
-    # wins everywhere (arbitrary but deterministic; all three
-    # strategies share the rule).
-    return (
-        F.col(_TS).asc(),
-        F.col(_IS_PROBE).asc(),
-        F.col(_CREATED).asc(),
-        F.col(_PAYLOAD).asc_nulls_first(),
-    )
-
-
-def _union_window(
-    entity_df, feature_df, join_keys, event_ts_col, entity_ts_col,
-    created_ts_col, ttl_s, features,
-):
-    feat_side, probe_side, probe_null = _union_sides(
-        entity_df, feature_df, join_keys, event_ts_col, entity_ts_col,
-        created_ts_col, features,
-    )
-    unioned = feat_side.unionByName(probe_side)
-    w = (
-        Window.partitionBy(*join_keys)
-        .orderBy(*_window_order())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    carried = unioned.withColumn(_PAYLOAD, F.last(_PAYLOAD, ignorenulls=True).over(w))
-    probes = (
-        carried.filter(F.col(_IS_PROBE) == 1)
-        .unionByName(probe_null)
-        .withColumnRenamed(_TS, entity_ts_col)
-    )
-    probes = _apply_ttl(probes, entity_ts_col, ttl_s)
-    return probes
-
-
-def _sliced_window(
-    entity_df, feature_df, join_keys, event_ts_col, entity_ts_col,
-    created_ts_col, ttl_s, features, slice_s: int,
-):
+def _sliced_carry(feats, probe_ok, sides, keys, keep, slice_s: int):
     """union_window partitioned by (key, time slice) with boundary-carry.
 
     Window state per task is bounded by rows-per-slice instead of
@@ -468,122 +525,102 @@ def _sliced_window(
     docstring. Three relations meet in the final window:
 
       * in-slice feature rows and probe rows (slice = ts div slice_s);
-      * one carry-in row per probe-bearing (key, slice): the latest
-        feature row from ANY earlier slice, pre-reduced per (key, slice)
-        and selected with a running window over the tiny per-slice-latest
-        relation (|keys|×|slices| rows, NOT data-sized).
+      * one carry-in row per probe-bearing (key, slice): each side's
+        latest feature row from ANY earlier slice, pre-reduced per (key,
+        slice, side) and selected with a running window over the tiny
+        per-slice-latest relation (|keys|×|slices|×|sides| rows, NOT
+        data-sized).
 
-    The carry-in keeps its true feature timestamp (it sorts first within
-    the slice, and TTL still sees the real age)."""
-    feat_side, probe_side, probe_null = _union_sides(
-        entity_df, feature_df, join_keys, event_ts_col, entity_ts_col,
-        created_ts_col, features,
-    )
+    The carry-in's ts is the latest of its payloads' feature timestamps:
+    every one of them is from an earlier slice, so the row sorts before
+    every in-slice row, and TTL reads each payload's own true age."""
     slice_us = int(slice_s) * 1_000_000
-    slice_col = F.floor(
-        F.unix_micros(F.col(_TS).cast("timestamp")) / F.lit(slice_us)
-    ).cast("long")
-    feat_side = feat_side.withColumn("__slice", slice_col)
-    probe_side = probe_side.withColumn("__slice", slice_col)
+    slice_col = (
+        f"CAST(floor(unix_micros(CAST({_TS} AS timestamp)) / {slice_us}) "
+        f"AS BIGINT) AS {_SLICE}"
+    )
+    feats = feats.selectExpr("*", slice_col)
+    probe_ok = probe_ok.selectExpr("*", slice_col)
+    payloads = [f"{_PAYLOAD}{i}" for i in range(len(sides))]
+    part = ", ".join(keys)
 
-    # latest feature row per (key, slice) — the boundary-carry candidates
-    w_latest = Window.partitionBy(*join_keys, "__slice").orderBy(
-        F.col(_TS).desc(), F.col(_CREATED).desc_nulls_last(),
-        F.col(_PAYLOAD).desc_nulls_last(),  # same full-tie rule as
-    )                                       # _window_order()
-    slice_latest = (
-        feat_side.withColumn("__rn", F.row_number().over(w_latest))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-    # Carry-in for probe slice s = latest per-slice-latest row with slice
-    # strictly < s: union NULL-payload marker rows (one per distinct probe
-    # (key, slice)) with the per-slice-latest rows, order markers BEFORE
-    # the same slice's feature row, and take the running last non-null
-    # payload over (unbounded, -1). Both relations are |keys|×|slices|-
-    # sized — one small shuffle, never data-sized.
-    non_key_cols = [
-        c for c in slice_latest.columns if c not in (*join_keys, "__slice")
-    ]
-    markers = probe_side.select(*join_keys, "__slice").distinct().select(
-        *join_keys, "__slice",
-        *[
-            F.lit(None).cast(slice_latest.schema[c].dataType).alias(c)
-            for c in non_key_cols
-        ],
-    ).withColumn("__marker", F.lit(1))
-    tagged = slice_latest.withColumn("__marker", F.lit(0)).unionByName(markers)
-    w_carry = (
-        Window.partitionBy(*join_keys)
-        .orderBy(F.col("__slice").asc(), F.col("__marker").desc())
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    carry_in = (
-        tagged.withColumn(_PAYLOAD, F.last(_PAYLOAD, ignorenulls=True).over(w_carry))
-        .filter((F.col("__marker") == 1) & F.col(_PAYLOAD).isNotNull())
-        # true feature timestamp: sorts before every in-slice row (it is
-        # from an earlier slice) and keeps TTL age exact
-        .withColumn(_TS, F.col(f"{_PAYLOAD}.{_FEAT_TS}"))
-        .withColumn(_IS_PROBE, F.lit(0))
-        .drop("__marker")
-    )
-
-    unioned = (
-        feat_side.unionByName(probe_side)
-        .unionByName(carry_in.select(*feat_side.columns))
-    )
+    # latest feature row per (key, slice, side) — the boundary-carry
+    # candidates, by the window's own total order
+    slice_latest = feats.selectExpr(
+        *keys, _SLICE, *payloads,
+        f"row_number() OVER (PARTITION BY {part}, {_SLICE}, {_VIEW} "
+        f"ORDER BY {_order(sides, desc=True)}) AS __rn",
+    ).filter("__rn = 1")
+    # Carry-in for probe slice s = each side's latest per-slice-latest
+    # row with slice strictly < s: union NULL-payload marker rows (one
+    # per distinct probe (key, slice)) with the per-slice-latest rows,
+    # order markers BEFORE the same slice's feature rows, and take the
+    # running last non-null payload_i over (unbounded, -1). Both
+    # relations are |keys|×|slices|-sized — one small shuffle, never
+    # data-sized.
+    markers = probe_ok.select(*keys, _SLICE).distinct()
+    tagged = slice_latest.selectExpr(*keys, _SLICE, *payloads, "0 AS __marker") \
+        .unionByName(markers.selectExpr("*", "1 AS __marker"), allowMissingColumns=True)
     w = (
-        Window.partitionBy(*join_keys, "__slice")
-        .orderBy(*_window_order())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        f"OVER (PARTITION BY {part} ORDER BY {_SLICE} ASC, __marker DESC "
+        "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)"
     )
-    carried = unioned.withColumn(_PAYLOAD, F.last(_PAYLOAD, ignorenulls=True).over(w))
-    probes = (
-        carried.filter(F.col(_IS_PROBE) == 1)
-        .drop("__slice")
-        .unionByName(probe_null)
-        .withColumnRenamed(_TS, entity_ts_col)
+    feat_ts = [f"{p}.{_FEAT_TS}" for p in payloads]
+    carry_in = (
+        tagged.selectExpr(
+            *keys, _SLICE, "__marker",
+            *[f"last({p}, true) {w} AS {p}" for p in payloads],
+        )
+        .filter(
+            "__marker = 1 AND ("
+            + " OR ".join(f"{p} IS NOT NULL" for p in payloads) + ")"
+        )
+        .selectExpr(
+            *keys, _SLICE,
+            (f"greatest({', '.join(feat_ts)})" if len(feat_ts) > 1 else feat_ts[0])
+            + f" AS {_TS}",
+            f"0 AS {_IS_PROBE}", *payloads,
+        )
     )
-    return _apply_ttl(probes, entity_ts_col, ttl_s)
+    unioned = reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True),
+        [feats, probe_ok, carry_in],
+    )
+    return _carry(unioned, sides, [*keys, _SLICE], keep)
 
 
-def _range_join(
-    entity_df, feature_df, join_keys, event_ts_col, entity_ts_col,
-    created_ts_col, ttl_s, features,
-):
-    """The reference's literal plan: non-equi join + ROW_NUMBER top-1.
+def _range_join(entity_df, feats, sides, join_keys, entity_ts_col):
+    """The reference's literal plan: non-equi join + ROW_NUMBER top-1,
+    one side after another.
 
     Left-preserved via LEFT join; the window then keeps the best candidate
     per original entity row (surrogate monotonic id — the reference's
     CONCAT(keys, ts) row id is only consumed for uniqueness, CASE.MD:345-357).
     """
-    feature_df = _prune_history(feature_df, entity_df, event_ts_col, entity_ts_col)
-    e = entity_df.withColumn(_ROW_ID, F.monotonically_increasing_id())
-    created = (
-        F.col(created_ts_col) if created_ts_col else F.lit(None).cast("timestamp")
-    )
-    f = feature_df.select(
-        *[F.col(k).alias(f"__f_{k}") for k in join_keys],
-        F.col(event_ts_col).alias(_TS),
-        created.alias(_CREATED),
-        _payload_struct(feature_df, features, event_ts_col).alias(_PAYLOAD),
-    )
-    cond = F.lit(True)
-    for k in join_keys:
-        cond = cond & (F.col(f"__f_{k}") == F.col(k))
-    cond = cond & (F.col(_TS) <= F.col(entity_ts_col))
-    if ttl_s is not None:
-        cond = cond & (
-            F.col(_TS) >= F.col(entity_ts_col) - F.expr(f"INTERVAL {int(ttl_s)} SECOND")
+    out = entity_df
+    ets = _q(entity_ts_col)
+    for i, side in enumerate(sides):
+        p = f"{_PAYLOAD}{i}"
+        e = out.withColumn(_ROW_ID, F.monotonically_increasing_id())
+        created = f"{_CREATED}{i}" if side.created_ts_col else "NULL"
+        f = feats.filter(f"{p} IS NOT NULL").selectExpr(
+            *[f"{_q(k)} AS {_q('__f_' + k)}" for k in join_keys],
+            _TS, f"{created} AS {_CREATED}", p,
         )
-    joined = e.join(f, on=cond, how="left")
-    w = Window.partitionBy(_ROW_ID).orderBy(
-        F.col(_TS).desc_nulls_last(), F.col(_CREATED).desc_nulls_last(),
-        F.col(_PAYLOAD).desc_nulls_last(),  # full-tie rule, see
-    )                                       # _window_order()
-    best = (
-        joined.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn", _TS, _CREATED, _ROW_ID, *[f"__f_{k}" for k in join_keys])
-    )
-    return best
+        cond = " AND ".join(
+            [f"{_q('__f_' + k)} = {_q(k)}" for k in join_keys]
+            + [f"{_TS} <= {ets}"]
+        )
+        ttl_s = _ttl_seconds(side.ttl)
+        if ttl_s is not None:
+            cond += f" AND {_TS} >= {ets} - INTERVAL {int(ttl_s)} SECOND"
+        joined = e.join(f, on=F.expr(cond), how="left")
+        best = joined.selectExpr(
+            "*",
+            f"row_number() OVER (PARTITION BY {_ROW_ID} ORDER BY {_TS} DESC "
+            f"NULLS LAST, {_CREATED} DESC NULLS LAST, {p} DESC NULLS LAST) AS __rn",
+        )
+        out = best.filter("__rn = 1").drop(
+            "__rn", _TS, _CREATED, _ROW_ID, *[f"__f_{k}" for k in join_keys]
+        )
+    return out

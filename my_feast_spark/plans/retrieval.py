@@ -7,19 +7,20 @@ entity dedup is unnecessary (the union_window PIT join is linear in probes,
 not quadratic), column pruning happens before the join, and declared
 feature dtypes are cast on the way out (Float32 contract, SURVEY §1.3).
 
-Multi-view shape (the reference's own J5 merge, CASE.MD:486-501): one
-surrogate row id on the entity dataframe, each view's PIT join runs
-against the NARROW ``(row_id, join keys, ts)`` projection of it, and the
-feature payloads are left-joined back on the row id at the end. A naive
-alternative — chaining PIT joins so view k+1's window re-shuffles the
-probe relation with all previously attached payloads — shuffles
-increasingly wide rows V times; the narrow shape keeps every per-view
-window shuffle at probe-key width and makes the V view jobs independent
-(Spark schedules their stages concurrently). The entity relation is
-localCheckpoint-pinned (lazily) so the row id — partition-based and
-therefore only stable within one materialization — is assigned exactly
-once and every branch reads the same blocks; the checkpoint is handed to
-the caller via ``_owned_checkpoints`` per the repo ownership rule.
+Multi-view shape: the requested views are grouped by their join keys,
+and each group is ONE N-side PIT join (``operators/asof_join.py``): the
+rows of every view in the group and the probes go through one shuffle on
+the key, and one window carries one payload per view. The reference
+instead attaches each view's features to a surrogate entity row id and
+left-joins them back, one join per view (CASE.MD:470-501); here there is
+no row id, nothing is pinned and nothing is joined back. Groups on
+different join keys are applied one after another, so group k's window
+also carries the features attached by groups 0..k-1 as probe payload.
+
+The plan is built in a few wide projections of SQL expression strings:
+one per view (its columns, casts inline) plus a fixed handful per group.
+The entity dataframe's column list is fetched once; a view's columns come
+from its declaration, so no feature source's column list is fetched.
 """
 
 from __future__ import annotations
@@ -27,17 +28,17 @@ from __future__ import annotations
 from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from my_feast_spark.core.model import (
     FeatureView,
     check_as_of_views,
     resolve_as_of,
 )
-from my_feast_spark.operators.asof_join import point_in_time_join
-
-#: surrogate probe row id for the multi-view narrow-probe merge
-ROW_ID = "__mfs_probe_row_id"
+from my_feast_spark.operators.asof_join import (
+    Side,
+    check_output_names,
+    join_sides,
+)
 
 
 def parse_feature_refs(features: Sequence[str]) -> dict[str, list[str]]:
@@ -58,25 +59,18 @@ class RetrievalJob:
 
     ``.plan`` exposes the physical plan the way ``.query`` exposed the SQL.
 
-    Lifecycle: a MULTI-view retrieval pins the entity dataframe with a
-    localCheckpoint (module docstring) whose blocks outlive any one
-    action — call :meth:`release` (or use the job as a context manager)
-    once the results are consumed, or a long-lived session accumulates
-    one pinned entity copy per job. Single-view jobs pin nothing;
-    release is always a safe no-op.
+    Lifecycle: the plan is lazy and pins nothing — every view of a
+    retrieval is joined inside the plan itself (module docstring), so no
+    block outlives an action. :meth:`release` and the context-manager
+    form are kept so callers may release every job unconditionally; both
+    do nothing.
     """
 
     def __init__(self, df: DataFrame):
         self._df = df
 
     def release(self) -> None:
-        """Release the checkpoint blocks this job's plan pins
-        (idempotent; no-op for single-view retrievals)."""
-        from my_feast_spark.operators.graph import release_checkpoint
-
-        for c in getattr(self._df, "_owned_checkpoints", ()):
-            release_checkpoint(c)
-        self._df._owned_checkpoints = []
+        """No-op: a retrieval plan holds no pinned blocks."""
 
     def __enter__(self) -> "RetrievalJob":
         return self
@@ -131,9 +125,15 @@ def build_historical_retrieval(
 
     ``feature_views``: resolved views by name; ``entity_join_keys``:
     entity-name -> physical join keys (Entity.join_keys indirection,
-    Untitled.ipynb:260). ``strategy`` passes through to every view's
-    :func:`point_in_time_join` — "auto" probes each view's key
-    distribution (see asof_join) when the skew profile is unknown.
+    Untitled.ipynb:260). ``strategy`` passes through to every key
+    group's N-side join — "auto" probes each group's key distribution
+    once (see asof_join) when the skew profile is unknown.
+
+    Output: the entity columns, then the requested features in request
+    order, grouped by view (:func:`parse_feature_refs`). Feature outputs
+    that repeat (two views exposing one name without
+    ``full_feature_names``) or shadow an entity column raise
+    ``ValueError`` before any source is read.
 
     ``as_of_timestamp`` (datetime or epoch seconds — one wall-clock
     instant is meaningful across every view, unlike version numbers, so
@@ -152,77 +152,51 @@ def build_historical_retrieval(
     if as_of_timestamp is not None and as_of_version is not None:
         raise ValueError("pass as_of_version OR as_of_timestamp, not both")
 
-    def _view_pit(probe, view_name, feat_names):
+    # resolve every view and name every output before any source is read
+    groups: dict[frozenset, tuple[list[str], list]] = {}
+    outputs: list[str] = []
+    for view_name, feat_names in refs.items():
         fv = feature_views[view_name]
-        join_keys: list[str] = []
-        for ent in fv.entities:
-            join_keys.extend(entity_join_keys[ent])
+        keys = list(dict.fromkeys(
+            k for ent in fv.entities for k in entity_join_keys[ent]
+        ))
         declared = {f.name: f for f in fv.features}
         unknown = [f for f in feat_names if f not in declared]
         if unknown:
             raise KeyError(f"view {view_name!r} has no features {unknown}")
+        prefix = f"{view_name}__" if full_feature_names else ""
+        out_names = {f: prefix + f for f in feat_names}
+        outputs.extend(out_names.values())
+        casts = {f: declared[f].spark_type for f in feat_names}
+        groups.setdefault(frozenset(keys), (keys, []))[1].append(
+            (view_name, fv, feat_names, out_names, casts)
+        )
+    entity_cols = entity_df.columns
+    check_output_names(entity_cols, outputs)
 
-        src = fv.source
-        feature_df = src.load(
-            spark,
-            version=resolve_as_of(as_of_version, view_name),
-            as_of_timestamp=as_of_timestamp,
+    out, cols = entity_df, list(entity_cols)
+    for keys, views in groups.values():
+        sides = []
+        for view_name, fv, feat_names, out_names, casts in views:
+            src = fv.source
+            sides.append(Side(
+                src.load(
+                    spark,
+                    version=resolve_as_of(as_of_version, view_name),
+                    as_of_timestamp=as_of_timestamp,
+                ),
+                feat_names,
+                event_ts_col=src.timestamp_field,
+                created_ts_col=src.created_timestamp_column,
+                ttl=fv.ttl,
+                out_names=out_names,
+                casts=casts,
+            ))
+        out = join_sides(
+            out, cols, sides, keys, entity_ts_col,
+            strategy=strategy, probe_df=entity_df,
         )
-        # column pruning before the join: keys + timestamps + requested only
-        keep = (
-            join_keys
-            + [src.timestamp_field]
-            + ([src.created_timestamp_column] if src.created_timestamp_column else [])
-            + feat_names
-        )
-        feature_df = feature_df.select(*keep)
-        # cast to declared dtypes (Float32 contract) before attaching
-        for f in feat_names:
-            feature_df = feature_df.withColumn(
-                f, F.col(f).cast(declared[f].spark_type)
-            )
-        return join_keys, point_in_time_join(
-            probe,
-            feature_df,
-            join_keys,
-            event_ts_col=src.timestamp_field,
-            entity_ts_col=entity_ts_col,
-            created_ts_col=src.created_timestamp_column,
-            ttl=fv.ttl,
-            features=feat_names,
-            feature_view_name=view_name,
-            full_feature_names=full_feature_names,
-            strategy=strategy,
-        )
-
-    if len(refs) <= 1:
-        # single view: the PIT window carries the entity payload through
-        # directly — a row id + join-back would only add a shuffle
-        out = entity_df
-        for view_name, feat_names in refs.items():
-            _keys, out = _view_pit(out, view_name, feat_names)
-        return out
-
-    # multi-view: narrow-probe + payload join-back (module docstring).
-    # The lazy localCheckpoint materializes the id assignment exactly
-    # once, on the job's first action; every per-view probe and the
-    # final join-back then read the same pinned blocks, so the
-    # partition-based id is consistent across plan branches.
-    base = entity_df.withColumn(
-        ROW_ID, F.monotonically_increasing_id()
-    ).localCheckpoint(eager=False)
-    out = base
-    for view_name, feat_names in refs.items():
-        fv = feature_views[view_name]
-        view_keys: list[str] = []
-        for ent in fv.entities:
-            view_keys.extend(entity_join_keys[ent])
-        probe = base.select(
-            ROW_ID, *dict.fromkeys(view_keys), entity_ts_col
-        )
-        _keys, attached = _view_pit(probe, view_name, feat_names)
-        payload = attached.drop(*dict.fromkeys(view_keys), entity_ts_col)
-        out = out.join(payload, on=ROW_ID, how="left")
-    out = out.drop(ROW_ID)
-    out._owned_checkpoints = [base]
+        cols += [c for s in sides for c in s.outputs()]
+    if cols != [*entity_cols, *outputs]:  # groups interleave the request
+        out = out.select(*entity_cols, *outputs)
     return out

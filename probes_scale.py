@@ -23,9 +23,11 @@ remap) and measures:
      variants) stop dominating and the fold-volume ratio
      (nprobe/num_cells = 1/8 here) shows through.
 
-Run: ``python probes_scale.py [sf_dir]`` (default /root/testdata/sf0.1;
-local[32] like bench.py). Prints one JSON line; paste the numbers +
-configs into COVERAGE.md when they change materially.
+Run: ``python probes_scale.py [sf_dir] [--multiview]`` (sf_dir defaults
+to $SPARK_GRAFT_SF_DIR, else the sf0.1 test data; local[$SPARK_GRAFT_CPUS],
+32 by default, like bench.py). Prints one JSON line; paste the numbers +
+configs into COVERAGE.md when they change materially. ``--multiview``
+runs probe 4 (multi-view retrieval shapes) alone.
 """
 
 from __future__ import annotations
@@ -79,8 +81,145 @@ def _replicate(df, id_col, n_copies, n_rows, jitter_ts=None):
     return out
 
 
+def _n_execs(spark) -> int:
+    """SQL executions recorded so far: a mark for :func:`_bytes_since`."""
+    return spark._jsparkSession.sharedState().statusStore() \
+        .executionsList().size()
+
+
+def _bytes_since(spark, mark: int, metric: str) -> float:
+    """Bytes of the SQL metric named ``metric`` ("shuffle bytes
+    written", "spill size") summed over the executions after ``mark``,
+    read from the SQL status store."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList()
+    total = 0.0
+    units = {"B": 1.0, "KiB": 2**10, "MiB": 2**20, "GiB": 2**30,
+             "TiB": 2**40}
+    for i in range(mark, execs.size()):
+        ex = execs.apply(i)
+        names = {}
+        ms = ex.metrics()
+        for j in range(ms.size()):
+            m = ms.apply(j)
+            names[m.accumulatorId()] = m.name()
+        it = store.executionMetrics(ex.executionId()).iterator()
+        while it.hasNext():
+            kv = it.next()
+            if names.get(kv._1()) == metric:
+                head = kv._2().split("\n")[-1].strip()
+                num, unit = head.split(" ")[0], head.split(" ")[1]
+                total += float(num) * units.get(unit.strip("("), 1.0)
+    return total
+
+
+def _shuffle_bytes(spark, mark: int) -> float:
+    return _bytes_since(spark, mark, "shuffle bytes written")
+
+
+def _probe_multiview(spark, ev, n_ev, timed) -> dict:
+    """Probe 4: a two-view retrieval in three shapes. Two wide views (24
+    double features each, REPLICATE_EVENTS copies of the events) against
+    the sf's events as probes:
+
+      * fused (``operators/asof_join.py::join_sides``, what
+        ``plans/retrieval.py`` runs): both views and the probes in ONE
+        window, one payload column per view;
+      * narrow: a row id on a pinned probe base, one window per view over
+        (row_id, key, ts), payloads left-joined back on the row id;
+      * chained: view B's window re-shuffles view A's 24 attached
+        features.
+
+    Every attached feature is summed. Returns the best of two runs of
+    each shape in seconds, and the shuffle and spill MiB one run wrote,
+    summed over its SQL executions from the status store."""
+    from my_feast_spark.operators.asof_join import (
+        Side,
+        join_sides,
+        point_in_time_join,
+    )
+
+    bigw = _replicate(ev, "event_id", REPLICATE_EVENTS, n_ev,
+                      jitter_ts="ts").localCheckpoint()
+    # the views must differ: two identical view plans would let Spark
+    # reuse one view's exchange for the other
+    feat_a = bigw.select(
+        "user_id", "ts",
+        *[(F.col("value") * (i + 1)).alias(f"f{i}") for i in range(24)],
+    )
+    feat_b = bigw.select(
+        "user_id", "ts",
+        *[(F.col("value") + (i + 1)).alias(f"f{i}") for i in range(24)],
+    )
+    probes_mv = ev.select(
+        "event_id", "user_id", F.col("ts").alias("event_timestamp")
+    )
+    fa_names = [f"f{i}" for i in range(24)]
+    views = (("va", feat_a), ("vb", feat_b))
+
+    def _sum(out):
+        # every attached feature is read, as a training-set write would:
+        # a plan that carries only the columns its consumer reads would
+        # otherwise measure column pruning, not its shape
+        total = sum(F.col(f"{tag}__{f}") for tag, _ in views for f in fa_names)
+        return out.select(F.sum(total)).collect() and 1
+
+    def _fused():
+        sides = [
+            Side(feat, fa_names, event_ts_col="ts",
+                 out_names={f: f"{tag}__{f}" for f in fa_names})
+            for tag, feat in views
+        ]
+        return _sum(join_sides(
+            probes_mv, probes_mv.columns, sides, ["user_id"],
+            "event_timestamp",
+        ))
+
+    def _chained():
+        out = probes_mv
+        for tag, feat in views:
+            out = point_in_time_join(
+                out, feat, ["user_id"], event_ts_col="ts",
+                entity_ts_col="event_timestamp", features=fa_names,
+                feature_view_name=tag, full_feature_names=True,
+            )
+        return _sum(out)
+
+    def _narrow():
+        row_id = "__probe_row_id"
+        base = probes_mv.withColumn(
+            row_id, F.monotonically_increasing_id()
+        ).localCheckpoint(eager=False)
+        out = base
+        for tag, feat in views:
+            probe = base.select(row_id, "user_id", "event_timestamp")
+            att = point_in_time_join(
+                probe, feat, ["user_id"], event_ts_col="ts",
+                entity_ts_col="event_timestamp", features=fa_names,
+                feature_view_name=tag, full_feature_names=True,
+            ).drop("user_id", "event_timestamp")
+            out = out.join(att, on=row_id, how="left")
+        n = _sum(out)
+        release_checkpoint(base)
+        return n
+
+    results = {}
+    for name, thunk in (("retrieval_2wide_fused", _fused),
+                        ("retrieval_2wide_narrow", _narrow),
+                        ("retrieval_2wide_chained", _chained)):
+        mark = _n_execs(spark)
+        results[name] = timed(name, thunk, repeats=2)
+        for metric, key in (("shuffle bytes written", "_shuffle_mib"),
+                            ("spill size", "_spill_mib")):
+            mib = _bytes_since(spark, mark, metric) / 2 / 2**20  # per run
+            results[name + key] = round(mib, 1)
+    release_checkpoint(bigw)
+    return results
+
+
 def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else os.environ.get(
+    args = [a for a in sys.argv[1:] if a != "--multiview"]
+    sf_dir = args[0] if args else os.environ.get(
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"
     )
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -96,6 +235,7 @@ def main() -> None:
             best = dt if best is None else min(best, dt)
         results[name] = round(best, 3)
         print(f"# {name}: {results[name]}s ({n} rows)", file=sys.stderr)
+        return results[name]
 
     # ---- probe 1: PIT strategies at 1M events --------------------------
     from my_feast_spark.operators.asof_join import point_in_time_join
@@ -104,6 +244,10 @@ def main() -> None:
         "event_id", "user_id", "ts", "value"
     )
     n_ev = ev.count()
+    if "--multiview" in sys.argv:
+        print(json.dumps(_probe_multiview(spark, ev, n_ev, timed)))
+        spark.stop()
+        return
     big = _replicate(ev, "event_id", REPLICATE_EVENTS, n_ev,
                      jitter_ts="ts").localCheckpoint()
 
@@ -220,92 +364,8 @@ def main() -> None:
     timed("ivfadc_160k_q400_cells32_nprobe4", _ivfadc)
     release_checkpoint(bigv)
 
-    # ---- probe 4: multi-view retrieval — narrow-probe vs chained -------
-    # Two wide views (24 double features each). The narrow shape
-    # (plans/retrieval.py) windows each view against (row_id, key, ts)
-    # and joins payloads back; the chained shape re-shuffles view A's 24
-    # attached features through view B's window. Shuffle bytes written
-    # are summed over each run's SQL executions from the status store.
-    def _shuffle_bytes_since(mark: int) -> float:
-        store = spark._jsparkSession.sharedState().statusStore()
-        execs = store.executionsList()
-        total = 0.0
-        units = {"B": 1.0, "KiB": 2**10, "MiB": 2**20, "GiB": 2**30,
-                 "TiB": 2**40}
-        for i in range(mark, execs.size()):
-            ex = execs.apply(i)
-            names = {}
-            ms = ex.metrics()
-            for j in range(ms.size()):
-                m = ms.apply(j)
-                names[m.accumulatorId()] = m.name()
-            it = store.executionMetrics(ex.executionId()).iterator()
-            while it.hasNext():
-                kv = it.next()
-                if names.get(kv._1()) == "shuffle bytes written":
-                    head = kv._2().split("\n")[-1].strip()
-                    num, unit = head.split(" ")[0], head.split(" ")[1]
-                    total += float(num) * units.get(unit.strip("("), 1.0)
-        return total
-
-    def _n_execs() -> int:
-        return spark._jsparkSession.sharedState().statusStore() \
-            .executionsList().size()
-
-    wide_cols = [
-        (F.col("value") * (i + 1)).alias(f"f{i}") for i in range(24)
-    ]
-    bigw = _replicate(ev, "event_id", REPLICATE_EVENTS, n_ev,
-                      jitter_ts="ts").localCheckpoint()
-    feat_a = bigw.select("user_id", "ts", *wide_cols)
-    feat_b = bigw.select("user_id", "ts", *wide_cols)
-    probes_mv = ev.select(
-        "event_id", "user_id", F.col("ts").alias("event_timestamp")
-    )
-    fa_names = [f"f{i}" for i in range(24)]
-
-    def _chained():
-        out = point_in_time_join(
-            probes_mv, feat_a, ["user_id"], event_ts_col="ts",
-            entity_ts_col="event_timestamp", features=fa_names,
-            feature_view_name="va", full_feature_names=True,
-        )
-        out = point_in_time_join(
-            out, feat_b, ["user_id"], event_ts_col="ts",
-            entity_ts_col="event_timestamp", features=fa_names,
-            feature_view_name="vb", full_feature_names=True,
-        )
-        return out.select(F.sum("va__f0"), F.sum("vb__f0")).collect() and 1
-
-    def _narrow():
-        from my_feast_spark.plans.retrieval import ROW_ID
-
-        base = probes_mv.withColumn(
-            ROW_ID, F.monotonically_increasing_id()
-        ).localCheckpoint(eager=False)
-        out = base
-        for tag, feat in (("va", feat_a), ("vb", feat_b)):
-            probe = base.select(ROW_ID, "user_id", "event_timestamp")
-            att = point_in_time_join(
-                probe, feat, ["user_id"], event_ts_col="ts",
-                entity_ts_col="event_timestamp", features=fa_names,
-                feature_view_name=tag, full_feature_names=True,
-            ).drop("user_id", "event_timestamp")
-            out = out.join(att, on=ROW_ID, how="left")
-        n = out.select(F.sum("va__f0"), F.sum("vb__f0")).collect() and 1
-        release_checkpoint(base)
-        return n
-
-    shuffle_bytes = {}
-    for name, thunk in (("retrieval_2wide_chained", _chained),
-                        ("retrieval_2wide_narrow", _narrow)):
-        mark = _n_execs()
-        timed(name, thunk, repeats=1)  # bytes are per-single-run
-        shuffle_bytes[name + "_shuffle_mib"] = round(
-            _shuffle_bytes_since(mark) / 2**20, 1
-        )
-    results.update(shuffle_bytes)
-    release_checkpoint(bigw)
+    # ---- probe 4: multi-view retrieval — fused vs narrow vs chained ----
+    results.update(_probe_multiview(spark, ev, n_ev, timed))
 
     # ---- probe 5: z-order + file-stats skipping ------------------------
     # 5M rows, two independent 10k-domain keys, 64 files. A selective
@@ -443,21 +503,21 @@ def main() -> None:
     # Catalyst PRUNE the aggregate expressions themselves (the first
     # cut of this probe measured a countDistinct that was optimized
     # away — both legs reported identical tiny shuffles)
-    mark = _n_execs()
+    mark = _n_execs(spark)
     timed("hll_highcard_2m_20x", lambda: len(hll_group_distinct(
         ev20, "u", ["event_type"], p=12,
     ).collect()), repeats=1)
-    results["hll_highcard_shuffle_bytes"] = _shuffle_bytes_since(mark)
-    mark = _n_execs()
+    results["hll_highcard_shuffle_bytes"] = _shuffle_bytes(spark, mark)
+    mark = _n_execs(spark)
     timed("hll_highcard_2m_20x_xxhash", lambda: len(hll_group_distinct(
         ev20, "u", ["event_type"], p=12, hash_fn="xxhash64",
     ).collect()), repeats=1)
-    results["hll_xxhash_shuffle_bytes"] = _shuffle_bytes_since(mark)
-    mark = _n_execs()
+    results["hll_xxhash_shuffle_bytes"] = _shuffle_bytes(spark, mark)
+    mark = _n_execs(spark)
     timed("exact_distinct_highcard_2m_20x", lambda: len(
         ev20.groupBy("event_type").agg(F.countDistinct("u")).collect()
     ), repeats=1)
-    results["exact_highcard_shuffle_bytes"] = _shuffle_bytes_since(mark)
+    results["exact_highcard_shuffle_bytes"] = _shuffle_bytes(spark, mark)
     release_checkpoint(ev20)
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -497,13 +557,13 @@ def main() -> None:
     thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        mark = _n_execs()
+        mark = _n_execs(spark)
         timed("bloom_membership_nobroadcast_20x", _bloom_path, repeats=1)
-        results["bloom_20x_shuffle_bytes"] = _shuffle_bytes_since(mark)
-        mark = _n_execs()
+        results["bloom_20x_shuffle_bytes"] = _shuffle_bytes(spark, mark)
+        mark = _n_execs(spark)
         timed("direct_join_membership_nobroadcast_20x", _direct_path,
               repeats=1)
-        results["direct_20x_shuffle_bytes"] = _shuffle_bytes_since(mark)
+        results["direct_20x_shuffle_bytes"] = _shuffle_bytes(spark, mark)
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
     release_checkpoint(cand20)

@@ -2,6 +2,7 @@
 
 hypothesis generates random feature histories + probe sets; for every case:
   * union_window and range_join strategies agree exactly;
+  * a multi-view retrieval equals chained single-view joins;
   * the matched feature timestamp is <= the probe timestamp (and within
     TTL when one is set);
   * single-key, no-created results equal pandas merge_asof;
@@ -14,7 +15,7 @@ import datetime as dt
 
 import pandas as pd
 import pytest
-from hypothesis import HealthCheck, given, settings, strategies as st
+from hypothesis import HealthCheck, example, given, settings, strategies as st
 
 from my_feast_spark.operators.asof_join import point_in_time_join
 
@@ -140,77 +141,110 @@ def test_matches_pandas_merge_asof(spark, feats, probes):
     assert got == expected
 
 
+#: the multi-view cases: two keys (or NULL) and a 6-hour grid over the
+#: same two days, so (key, ts) ties, created ties and full (key, ts,
+#: created) ties are common in every view and 1-day slices still carry
+nullable_key_strategy = st.one_of(st.none(), st.integers(1, 2))
+grid_ts_strategy = st.integers(0, 8).map(lambda i: T0 + dt.timedelta(hours=6 * i))
+nullable_features_strategy = st.lists(
+    st.tuples(nullable_key_strategy, grid_ts_strategy, st.integers(0, 2),
+              st.floats(0, 100)),
+    min_size=0, max_size=12,
+)
+
+
 @settings(
     max_examples=12, deadline=None,
     suppress_health_check=[HealthCheck.too_slow],
 )
 @given(
-    feats_a=features_strategy,
-    feats_b=features_strategy,
-    probes=probes_strategy,
+    feats_a=nullable_features_strategy,
+    feats_b=nullable_features_strategy,
+    feats_c=nullable_features_strategy,
+    probes=st.lists(
+        st.tuples(nullable_key_strategy, nullable_key_strategy,
+                  grid_ts_strategy),
+        min_size=1, max_size=8,
+    ),
+    ttl_hours=st.sampled_from([None, 6, 24]),
 )
-def test_narrow_multiview_equals_chained(spark, feats_a, feats_b, probes):
-    """The narrow-probe multi-view merge (plans/retrieval.py: row id +
-    per-view PIT on the narrow projection + payload join-back) must
-    return exactly what chaining the two PIT joins returns — including
-    duplicate probe rows, NULL-feature probes, and created-ts
-    tie-breaks."""
+# a (key, ts) tie in each view where the later-created row holds the
+# smaller value (created decides, not the payload), and a full tie
+@example(
+    feats_a=[(1, T0, 0, 50.0), (1, T0, 2, 10.0), (None, T0, 0, 1.0)],
+    feats_b=[(1, T0 + dt.timedelta(hours=6), 1, 70.0),
+             (1, T0 + dt.timedelta(hours=6), 2, 20.0),
+             (2, T0, 0, 3.0), (2, T0, 0, 4.0)],
+    feats_c=[(1, T0, 0, 9.0)],
+    probes=[(1, 1, T0 + dt.timedelta(hours=12)),
+            (1, None, T0 + dt.timedelta(hours=12)),
+            (None, 1, T0 + dt.timedelta(hours=6)),
+            (2, 2, T0 + dt.timedelta(hours=30))],
+    ttl_hours=24,
+)
+def test_fused_multiview_equals_chained(
+    spark, feats_a, feats_b, feats_c, probes, ttl_hours
+):
+    """A multi-view retrieval (plans/retrieval.py) returns exactly what
+    chaining single-view point_in_time_joins returns, under every
+    strategy (the single-view strategies agree, see above). Views va
+    and vb share the join key (one fused window), vc is on another
+    entity (a second key group applied after it); va alone has a TTL.
+    Covers duplicate probe rows, NULL keys on both sides, NULL-feature
+    probes, and created / full ties within each view."""
     import os
     import tempfile
 
     from my_feast_spark.core.model import Feature, FeatureView, FileSource
     from my_feast_spark.plans.retrieval import build_historical_retrieval
 
+    ttl = dt.timedelta(hours=ttl_hours) if ttl_hours else None
     fcols = "key long, fts timestamp, created_h long, val double"
+    cols = ("probe_id", "key", "key2", "event_timestamp",
+            "val_va", "val_vb", "val_vc")
     with tempfile.TemporaryDirectory() as tmp:
         views = {}
         sides = {}
-        for tag, feats in (("va", feats_a), ("vb", feats_b)):
+        for tag, feats, key in (("va", feats_a, "key"), ("vb", feats_b, "key"),
+                                ("vc", feats_c, "key2")):
             fdf = spark.createDataFrame(
                 [(k, t, c, v) for k, t, c, v in feats] or [], schema=fcols
             ).selectExpr(
-                "key", "fts",
+                f"key AS {key}", "fts",
                 "fts + make_interval(0,0,0,0,0,0,created_h) AS created",
                 f"val AS val_{tag}",
             )
             path = os.path.join(tmp, tag)
             fdf.write.parquet(path)
-            sides[tag] = fdf
+            sides[tag] = (spark.read.parquet(path), key)
             views[tag] = FeatureView(
-                name=tag, entities=["k"],
+                name=tag, entities=[key],
                 features=[Feature(f"val_{tag}", "DOUBLE")],
                 source=FileSource(
                     path=path, timestamp_field="fts",
                     created_timestamp_column="created",
                 ),
+                ttl=ttl if tag == "va" else None,
             )
         pdf = spark.createDataFrame(
-            [(k, t, i) for i, (k, t) in enumerate(probes)],
-            schema="key long, event_timestamp timestamp, probe_id long",
+            [(k, k2, t, i) for i, (k, k2, t) in enumerate(probes)],
+            schema="key long, key2 long, event_timestamp timestamp, probe_id long",
         )
-        narrow = build_historical_retrieval(
-            spark, pdf, views, {"k": ["key"]},
-            ["va:val_va", "vb:val_vb"],
-        )
-        got = sorted(
-            (r.probe_id, r.key, r.event_timestamp, r.val_va, r.val_vb)
-            for r in narrow.collect()
-        )
-        for c in getattr(narrow, "_owned_checkpoints", ()):
-            from my_feast_spark.operators.graph import release_checkpoint
-
-            release_checkpoint(c)
-
         chained = pdf
-        for tag in ("va", "vb"):
+        for tag in ("va", "vb", "vc"):
+            fdf, key = sides[tag]
             chained = point_in_time_join(
-                chained, sides[tag], ["key"], event_ts_col="fts",
+                chained, fdf, [key], event_ts_col="fts",
                 entity_ts_col="event_timestamp", created_ts_col="created",
-                features=[f"val_{tag}"],
+                ttl=ttl if tag == "va" else None, features=[f"val_{tag}"],
             )
-        want = sorted(
-            (r.probe_id, r.key, r.event_timestamp, r.val_va, r.val_vb)
-            for r in chained.collect()
-        )
-        assert got == want
-        assert len(got) == len(probes)  # left-preserving, no fan-out
+        want = sorted(tuple(r[c] for c in cols) for r in chained.collect())
+        assert len(want) == len(probes)  # left-preserving, no fan-out
+        for strategy in ("union_window", "sliced_window", "range_join", "auto"):
+            fused = build_historical_retrieval(
+                spark, pdf, views, {"key": ["key"], "key2": ["key2"]},
+                ["va:val_va", "vc:val_vc", "vb:val_vb"], strategy=strategy,
+            )
+            assert fused.columns[-3:] == ["val_va", "val_vc", "val_vb"]
+            got = sorted(tuple(r[c] for c in cols) for r in fused.collect())
+            assert got == want, strategy

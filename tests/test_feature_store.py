@@ -148,6 +148,50 @@ def test_multi_view_retrieval_merge(store, spark, tmp_path):
     assert rows["d2"].rating is None                    # ...but no ratings
 
 
+def test_multi_view_two_key_groups(store, spark, tmp_path):
+    """Views on different entities form separate key groups, joined one
+    after another: the rider view's window carries the driver features
+    attached before it. Output columns follow the request; each view
+    keeps its own TTL and tie-breaks; a NULL rider key matches nothing."""
+    from my_feast_spark.core import Entity, Feature, FeatureView, FileSource
+
+    spark.createDataFrame([
+        Row(rider_id=7, event_timestamp=TS(2024, 1, 1, 9), score=1.0),
+        Row(rider_id=7, event_timestamp=TS(2024, 1, 1, 12), score=2.0),
+        Row(rider_id=8, event_timestamp=TS(2023, 12, 1, 9), score=5.0),
+    ]).write.parquet(str(tmp_path / "riders"))
+    store.apply([
+        Entity(name="rider", value_type="INT64", join_keys=["rider_id"]),
+        FeatureView(
+            name="rider_scores", entities=["rider"],
+            features=[Feature("score", "DOUBLE")],
+            source=FileSource(path=str(tmp_path / "riders"),
+                              timestamp_field="event_timestamp"),
+            ttl=dt.timedelta(days=2),
+        ),
+    ])
+    probes = spark.createDataFrame([
+        Row(driver_id="d1", rider_id=7, event_timestamp=TS(2024, 1, 1, 11)),
+        Row(driver_id="d2", rider_id=8, event_timestamp=TS(2024, 1, 1, 13)),
+        Row(driver_id="d1", rider_id=None, event_timestamp=TS(2024, 1, 1, 13)),
+    ], schema="driver_id string, rider_id long, event_timestamp timestamp")
+    out = store.get_historical_features(
+        probes,
+        ["driver_hourly:avg_fare", "rider_scores:score", "driver_hourly:trips"],
+    ).to_spark_df()
+    assert out.columns == ["driver_id", "rider_id", "event_timestamp",
+                           "avg_fare", "trips", "score"]
+    got = sorted(
+        (r.driver_id, r.rider_id, r.avg_fare, r.trips, r.score)
+        for r in out.fillna(-1.0, ["score"]).fillna(-1, ["rider_id"]).collect()
+    )
+    assert got == [
+        ("d1", -1, pytest.approx(99.0), 4, -1.0),  # NULL rider key
+        ("d1", 7, pytest.approx(10.0), 2, 1.0),
+        ("d2", 8, pytest.approx(7.0), 1, -1.0),    # rider row past TTL
+    ]
+
+
 def test_historical_retrieval_accepts_pandas_entity_df(store):
     import pandas as pd
 
@@ -436,10 +480,11 @@ def test_registry_concurrent_writer_conflict(tmp_path):
     a.apply([Entity(name="e5", value_type="STRING", join_keys=["k5"])])
 
 
-def test_retrieval_job_releases_pinned_checkpoints(store, spark, tmp_path):
-    """Multi-view retrieval pins the entity base (narrow-probe shape);
-    RetrievalJob.release() / the context-manager form must free the
-    blocks so repeated calls don't accumulate pinned copies."""
+def test_retrieval_job_pins_nothing(store, spark, tmp_path):
+    """A multi-view retrieval joins every view inside one lazy plan: the
+    job pins no block before, during or after its action, and
+    RetrievalJob.release() / the context-manager form stay safe no-ops
+    (callers release every job unconditionally)."""
     ratings = spark.createDataFrame([
         Row(driver_id="d1", event_timestamp=TS(2024, 1, 1, 11), rating=4.5),
     ])
@@ -463,11 +508,12 @@ def test_retrieval_job_releases_pinned_checkpoints(store, spark, tmp_path):
     with store.get_historical_features(
         probes, ["driver_hourly:avg_fare", "driver_ratings2:rating"]
     ) as job:
+        assert n_pinned() == base
         rows = job.to_spark_df().collect()
         assert rows[0].rating == 4.5
-        assert n_pinned() > base  # the narrow base is pinned mid-job
-    assert n_pinned() == base     # ...and released on exit
-    # single-view jobs pin nothing; release is a safe no-op
+        assert n_pinned() == base  # nothing pinned mid-job
+    assert n_pinned() == base
+    job.release()  # idempotent
     job2 = store.get_historical_features(probes, ["driver_hourly:avg_fare"])
     job2.to_spark_df().collect()
     assert n_pinned() == base

@@ -595,19 +595,14 @@ def test_domain_pagerank_plan_shape(spark):
     assert "Scan ExistingRDD" in plan
 
 
-def test_multi_view_retrieval_windows_are_narrow(spark, tmp_path):
-    """Multi-view retrieval (plans/retrieval.py): each view's PIT window
-    must shuffle ONLY the narrow (row_id, keys, ts, tag, created,
-    payload) relation — never another view's payload or the entity
-    dataframe's own payload columns. A chained shape would re-shuffle
-    view A's attached features through view B's window; the narrow-probe
-    + join-back shape keeps every window input at probe-key width."""
+def _two_view_store(spark, tmp_path):
+    """Two one-feature views on ``user``, plus a 20-row entity frame read
+    from parquet (so every RDD scan in a plan is a pinned block)."""
     import datetime as dt
 
     from pyspark.sql import Row
 
     from my_feast_spark.core.model import Feature, FeatureView, FileSource
-    from my_feast_spark.plans.retrieval import build_historical_retrieval
 
     TS = dt.datetime
     rows_a = [Row(user_id=i, ts=TS(2024, 1, 1, 10), fa=float(i))
@@ -626,49 +621,132 @@ def test_multi_view_retrieval_windows_are_narrow(spark, tmp_path):
             source=FileSource(path=str(tmp_path / "b"), timestamp_field="ts"),
         ),
     }
-    ent = spark.createDataFrame([
+    spark.createDataFrame([
         Row(user_id=i, event_timestamp=TS(2024, 1, 1, 12),
             entity_payload=f"p{i}")
         for i in range(20)
-    ])
+    ]).write.parquet(str(tmp_path / "ent"))
+    return views, spark.read.parquet(str(tmp_path / "ent"))
+
+
+def test_multi_view_retrieval_is_one_window(spark, tmp_path):
+    """Multi-view retrieval (plans/retrieval.py) on one join key is ONE
+    PIT window: both views' rows and the probes go through one hash
+    exchange on the key, and one Window carries a payload per view. No
+    row id, no pinned base (no RDD scan), no join back."""
+    import re
+
+    from my_feast_spark.plans.retrieval import build_historical_retrieval
+
+    views, ent = _two_view_store(spark, tmp_path)
     out = build_historical_retrieval(
         spark, ent, views, {"user": ["user_id"]}, ["va:fa", "vb:fb"]
     )
+    plan = _formatted(out)  # before any action: the initial plan only
     got = {r.user_id: (r.fa, r.fb, r.entity_payload) for r in out.collect()}
     assert got[3] == (3.0, -3.0, "p3")
+    assert out.columns == ["user_id", "event_timestamp", "entity_payload",
+                           "fa", "fb"]
 
-    plan = _formatted(out)
-    import re
+    windows = re.findall(r"\) Window\nInput \[\d+\]: \[([^\]]*)\]", plan)
+    payload_windows = [
+        {c.strip().split("#")[0] for c in inp.split(",")}
+        for inp in windows if "__mfs_payload" in inp
+    ]
+    assert len(payload_windows) == 1, windows
+    assert {"__mfs_payload0", "__mfs_payload1"} <= payload_windows[0]
+    # the one hash exchange on the key feeds that window; nothing else
+    # is hash-partitioned
+    exchanges = re.findall(r"Arguments: hashpartitioning\(([^)]*)\)", plan)
+    assert len(exchanges) == 1, exchanges
+    assert exchanges[0].split("#")[0] == "user_id"
+    assert "Scan ExistingRDD" not in plan
+    assert "Join" not in plan
 
-    # every LOCF window's input must be exactly the narrow internal
-    # column set — entity payloads and feature names never appear
-    windows = re.findall(
-        r"\) Window\nInput \[\d+\]: \[([^\]]*)\]", plan
+
+def test_multi_view_retrieval_write_job_budget(spark, tmp_path):
+    """Writing a two-view retrieval runs at most 4 Spark jobs: the
+    newest-probe bound, the window's shuffle (one per side read, at
+    most), and the write. A per-view window with a row-id join-back ran
+    10."""
+    from my_feast_spark.plans.retrieval import build_historical_retrieval
+
+    views, ent = _two_view_store(spark, tmp_path)
+    out = build_historical_retrieval(
+        spark, ent, views, {"user": ["user_id"]}, ["va:fa", "vb:fb"]
     )
-    payload_windows = 0
-    allowed = {
-        "user_id", "__mfs_ts", "__mfs_is_probe", "__mfs_created",
-        "__mfs_probe_row_id", "__mfs_payload",
+    sc = spark.sparkContext
+    sc.setJobGroup("mfs-retrieval-budget", "two-view retrieval write")
+    try:
+        out.write.parquet(str(tmp_path / "out"))
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("mfs-retrieval-budget")
+    assert 1 <= len(jobs) <= 4, len(jobs)
+    assert spark.read.parquet(str(tmp_path / "out")).count() == 20
+
+
+def test_multi_view_duplicate_outputs_raise(spark, tmp_path):
+    """Two views exposing one feature name without full_feature_names,
+    or a feature named like an entity column, raise ValueError naming
+    the columns at plan build, before any job runs; full_feature_names
+    resolves both."""
+    import datetime as dt
+
+    from pyspark.sql import Row
+
+    from my_feast_spark.core.model import Feature, FeatureView, FileSource
+    from my_feast_spark.plans.retrieval import build_historical_retrieval
+
+    TS = dt.datetime
+    for tag in ("a", "b"):
+        spark.createDataFrame([
+            Row(user_id=1, ts=TS(2024, 1, 1, 10), f=1.0, entity_payload=2.0)
+        ]).write.parquet(str(tmp_path / tag))
+    views = {
+        tag: FeatureView(
+            name=tag, entities=["user"],
+            features=[Feature("f", "DOUBLE"),
+                      Feature("entity_payload", "DOUBLE")],
+            source=FileSource(path=str(tmp_path / tag), timestamp_field="ts"),
+        )
+        for tag in ("a", "b")
     }
-    for inp in windows:
-        cols = {c.strip().split("#")[0] for c in inp.split(",")}
-        if "__mfs_payload" not in cols:
-            continue  # unrelated window (none expected, but be precise)
-        payload_windows += 1
-        assert cols <= allowed, f"window shuffles wide columns: {cols}"
-    assert payload_windows >= 2  # both views' windows were checked
-    assert "entity_payload" not in " ".join(windows)
-    _release_owned(out)
+    ent = spark.createDataFrame(
+        [Row(user_id=1, event_timestamp=TS(2024, 1, 1, 12), entity_payload="p")]
+    )
+    keys = {"user": ["user_id"]}
+    sc = spark.sparkContext
+    sc.setJobGroup("mfs-dup-outputs", "duplicate outputs")
+    try:
+        with pytest.raises(ValueError, match=r"\['f'\]"):
+            build_historical_retrieval(spark, ent, views, keys, ["a:f", "b:f"])
+        with pytest.raises(ValueError, match=r"\['entity_payload'\]"):
+            build_historical_retrieval(
+                spark, ent, views, keys, ["a:f", "b:entity_payload"]
+            )
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert sc.statusTracker().getJobIdsForGroup("mfs-dup-outputs") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    out = build_historical_retrieval(
+        spark, ent, views, keys, ["a:f", "b:f", "b:entity_payload"],
+        full_feature_names=True,
+    )
+    assert out.columns == ["user_id", "event_timestamp", "entity_payload",
+                           "a__f", "b__f", "b__entity_payload"]
+    assert out.collect()[0]["b__entity_payload"] == 2.0
 
 
-def test_auto_strategy_probes_once_per_view(spark, tmp_path, monkeypatch):
+def test_auto_strategy_probes_once_per_key_group(spark, tmp_path, monkeypatch):
     """strategy="auto" on a multi-view retrieval: the key-distribution
     probe (asof_join._choose_strategy, one collected row per call) runs
-    EXACTLY once per view — never per plan branch or per action. The
-    probe side it scans is the localCheckpoint-pinned narrow base, so
-    the V probes cost V column-pruned feature-table passes plus V reads
-    of the pinned probe blocks (COVERAGE round-12 note has the measured
-    overhead)."""
+    EXACTLY once per join-key group, over the union of that group's
+    views (the fused window's load per key) — never per view, plan
+    branch or action."""
     import datetime as dt
 
     from pyspark.sql import Row
@@ -679,18 +757,19 @@ def test_auto_strategy_probes_once_per_view(spark, tmp_path, monkeypatch):
 
     TS = dt.datetime
     views = {}
-    for tag in ("va", "vb", "vc"):
-        rows = [Row(user_id=i, ts=TS(2024, 1, 1, 10), **{f"f_{tag}": 1.0})
+    for tag, key in (("va", "user_id"), ("vb", "user_id"), ("vc", "user_id"),
+                     ("vd", "item_id")):
+        rows = [Row(**{key: i}, ts=TS(2024, 1, 1, 10), **{f"f_{tag}": 1.0})
                 for i in range(10)]
         spark.createDataFrame(rows).write.parquet(str(tmp_path / tag))
         views[tag] = FeatureView(
-            name=tag, entities=["user"],
+            name=tag, entities=["item" if key == "item_id" else "user"],
             features=[Feature(f"f_{tag}", "DOUBLE")],
             source=FileSource(path=str(tmp_path / tag),
                               timestamp_field="ts"),
         )
     ent = spark.createDataFrame(
-        [Row(user_id=i, event_timestamp=TS(2024, 1, 1, 12))
+        [Row(user_id=i, item_id=i, event_timestamp=TS(2024, 1, 1, 12))
          for i in range(10)]
     )
 
@@ -702,15 +781,23 @@ def test_auto_strategy_probes_once_per_view(spark, tmp_path, monkeypatch):
         return real(*a, **kw)
 
     monkeypatch.setattr(aj, "_choose_strategy", counting)
+    keys = {"user": ["user_id"], "item": ["item_id"]}
     out = build_historical_retrieval(
-        spark, ent, views, {"user": ["user_id"]},
-        ["va:f_va", "vb:f_vb", "vc:f_vc"], strategy="auto",
+        spark, ent, views, keys, ["va:f_va", "vb:f_vb", "vc:f_vc"],
+        strategy="auto",
     )
-    assert len(calls) == 3  # plan build: one probe per view
+    assert len(calls) == 1  # plan build: one probe for the one key group
     assert out.count() == 10
     out.collect()
-    assert len(calls) == 3  # actions never re-probe
-    _release_owned(out)
+    assert len(calls) == 1  # actions never re-probe
+    calls.clear()
+    out = build_historical_retrieval(
+        spark, ent, views, keys, ["va:f_va", "vd:f_vd", "vb:f_vb"],
+        strategy="auto",
+    )
+    assert len(calls) == 2  # two key groups
+    assert {tuple(r) for r in out.select("f_va", "f_vd", "f_vb").collect()} \
+        == {(1.0, 1.0, 1.0)}
 
 
 def test_read_changes_plan_is_union_of_scans(spark, tmp_path):
