@@ -46,11 +46,18 @@ import math
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import types as T
 
 from my_feast_spark.functions.scalar import floor_round
 from my_feast_spark.functions.text import let, tokens
 from my_feast_spark.operators.dedup import _MASK63, portable_hash64
 from my_feast_spark.operators.sampling import RESOLUTION, sample_bucket
+from my_feast_spark.sources.generations import (
+    committed,
+    fold,
+    read_base_json,
+    write_json,
+)
 
 
 @dataclass
@@ -179,15 +186,15 @@ def dsir_gram_events(
     ``explode_outer``, so gram-less docs keep one NULL-bucket row (the
     weigh pass needs them; count consumers filter the NULLs out).
 
-    Compute-once sharing hook (r16 optimization): the tokenize + hash
-    pass over a corpus is the dominant DSIR cost with the portable md5
-    family, and the naive composition pays it twice for the raw corpus
-    (once inside ``fit_dsir``'s count aggregate, once inside
-    ``dsir_logweights``) plus once for the target slice. Materialize
-    this relation once (persist), pass it to ``fit_dsir(raw_events=…,
-    target_events=…)`` and ``dsir_logweights(events_df=…)``, and every
-    consumer reduces to an aggregate/join over the cached rows —
-    bit-identical outputs, one gram pass. The caller owns the cache.
+    The compute-once sharing hook: the tokenize + hash pass over a
+    corpus is the dominant DSIR cost with the portable md5 family, and
+    fitting then weighing the raw corpus runs it twice (once inside
+    ``fit_dsir``'s count aggregate, once inside ``dsir_logweights``).
+    Materialize this relation once (persist), pass it to
+    ``fit_dsir(raw_events=…, target_events=…)`` and
+    ``dsir_logweights(events_df=…)``, and every consumer reduces to an
+    aggregate/join over the cached rows — bit-identical outputs, one
+    gram pass. The caller owns the cache.
     """
     return df.select(
         F.col(id_col),
@@ -295,43 +302,53 @@ def fit_dsir(
     )
 
 
-def write_dsir_model(model: DSIRModel, path: str) -> None:
-    """Persist the fitted model: ``path/ratio`` holds the ≤B-row
-    (bucket, lr) relation as parquet, ``path/meta`` the three scalars as
-    a single JSON row. A 100 TB pipeline fits ONCE on a target/raw
-    snapshot and reuses the frozen ratios across every ingest batch —
-    the same fit-once/serve-many shape as ``pq.write_ivfpq_index``.
-    Writing does not release the trainer's cache; the caller still owns
-    ``model.ratio._owned_caches``."""
-    import json
-    import os
+#: the generation key of a model path and its fold's meta file
+_KEY = "fit"
+_MODEL = "_model.json"
 
-    model.ratio.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(path, "ratio")
-    )
-    spark = model.ratio.sparkSession
+
+def write_dsir_model(model: DSIRModel, path: str) -> None:
+    """Persist the fitted model as one fold of the generation root
+    ``path`` (``sources.generations``): the fold directory holds the
+    ≤B-row (bucket, lr) relation as parquet and a ``_model.json`` with
+    the three scalars, the hash family and the ratio schema, committed
+    under one marker, so a read sees one whole fit or the previous one.
+    A 100 TB pipeline fits ONCE on a target/raw snapshot and reuses the
+    frozen ratios across every ingest batch — the same fit-once/
+    serve-many shape as ``pq.write_ivfpq_index``. Writing does not
+    release the trainer's cache; the caller still owns
+    ``model.ratio._owned_caches``."""
     meta = {
         "default_lr": model.default_lr,
         "k": model.k,
         "num_buckets": model.num_buckets,
         "hash_fn": model.hash_fn,
+        "schema": model.ratio.schema.jsonValue(),
     }
-    spark.createDataFrame([(json.dumps(meta),)], ["meta_json"]).coalesce(
-        1
-    ).write.mode("overwrite").json(os.path.join(path, "meta"))
+
+    def write(gen_dir: str, _sources: list[str]) -> None:
+        model.ratio.coalesce(1).write.parquet(gen_dir)
+        write_json(f"{gen_dir}/{_MODEL}", meta)
+
+    fold(path, _KEY, [n for n, _ in committed(path, _KEY)], write)
 
 
 def read_dsir_model(spark, path: str) -> DSIRModel:
-    """Load a model written by :func:`write_dsir_model`. The ratio
-    relation is a plain parquet scan (no cache to own — broadcast at
-    weigh time either way), so ``_owned_caches`` is empty."""
-    import json
-    import os
-
-    meta = json.loads(
-        spark.read.json(os.path.join(path, "meta")).collect()[0]["meta_json"]
-    )
-    ratio = spark.read.parquet(os.path.join(path, "ratio"))
+    """Load a model written by :func:`write_dsir_model` with no Spark
+    job. The ratio relation is a plain parquet scan of the latest fit
+    (no cache to own — broadcast at weigh time either way), so
+    ``_owned_caches`` is empty. FileNotFoundError when ``path`` holds
+    no committed fit."""
+    gens, meta = read_base_json(path, _KEY, _MODEL)
+    if not gens:
+        raise FileNotFoundError(
+            f"no committed DSIR model under {path!r} (nothing written, "
+            "a torn write, or the older ratio/ + meta/ layout); rebuild "
+            "it with write_dsir_model"
+        )
+    ratio = spark.read.schema(
+        T.StructType.fromJson(meta["schema"])
+    ).parquet(gens[0][1])
     ratio._owned_caches = []
     return DSIRModel(
         ratio=ratio,

@@ -45,13 +45,17 @@ import pandas as pd  # module-level: pandas_udf type hints resolve here
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from my_feast_spark.operators.similarity import train_ivf_centroids
 from my_feast_spark.sources.generations import (
     committed,
+    fold,
     next_id,
     publish,
     read,
+    read_base_json,
+    write_json,
 )
 from my_feast_spark.sources.readers import spread_partitions
 
@@ -517,138 +521,72 @@ def ivfpq_build(
     return enc, model
 
 
+#: the generation key of ``path/cells`` and its fold's model file
+_KEY = "append_id"
+_MODEL = "_model.json"
+
+
 def write_ivfpq_index(enc: DataFrame, model: dict, path: str) -> None:
     """Persist the IVFADC index CELL-PARTITIONED with an append
     generation axis: ``path/cells`` is a generation root
     (``sources.generations``) whose ``append_id=N/cell=K`` directories
-    hold the (corpus_id, codes) rows — the build is generation 0 and
-    :func:`ivfpq_append` publishes the later ones — and
-    ``path/cells/_model`` holds the quantizer state as a single JSON
-    row, so codes and quantizers move together. The cell layout is the
-    point: a probe batch touching ``p`` distinct cells reads
-    ``p/num_cells`` of the index via directory-level partition pruning
-    REGARDLESS of how many generations exist (the cell filter prunes
-    inside every generation) — the serving-tier analogue of the
-    streaming dedup index's pbucket layout.
+    hold the (corpus_id, codes) rows. The build is a fold (id -1 on a
+    fresh root) whose ``_model.json`` holds the quantizer state and the
+    rows' schema; :func:`ivfpq_append` publishes generations 0, 1, ...
+    encoded with that state. The cell layout is the point: a probe
+    batch touching ``p`` distinct cells reads ``p/num_cells`` of the
+    index via directory-level partition pruning REGARDLESS of how many
+    generations exist (the cell filter prunes inside every generation)
+    — the serving-tier analogue of the streaming dedup index's pbucket
+    layout.
 
-    A (re)build REPLACES every generation (appends encoded with the OLD
-    quantizers must never meet the new model) without destroying the
-    serving index first: it publishes generation 0, codes and model,
-    into a fresh staging root and swaps that in with delete + rename; a
-    crash between the two is healed by the read path (``_cells_root``).
-    """
-    import json
-    import os
-    import uuid as _uuid
+    A (re)build folds EVERY committed generation into the new one
+    (appends encoded with the OLD quantizers must never meet the new
+    model): codes and model commit under one marker, so readers see the
+    old index until then and the new one after, and the absorbed ids
+    are never published again (a late retry of such an append raises
+    ValueError)."""
+    root = f"{path.rstrip('/')}/cells"
+    meta = {
+        "model": model,
+        "schema": enc.drop("cell").schema.jsonValue(),
+    }
 
-    spark = enc.sparkSession
-    cells_root = os.path.join(path, "cells")
-    jvm = spark.sparkContext._jvm
-    hp = jvm.org.apache.hadoop.fs.Path(cells_root)
-    fs = hp.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    staging = os.path.join(path, f"cells.staging-{_uuid.uuid4().hex[:8]}")
-
-    def write(gen_dir: str) -> None:
+    def write(gen_dir: str, _sources: list[str]) -> None:
         enc.repartition("cell").write.partitionBy("cell").parquet(gen_dir)
-        spark.createDataFrame(
-            [(json.dumps(model),)], ["model_json"]
-        ).coalesce(1).write.mode("overwrite").json(
-            os.path.join(staging, "_model")
-        )
+        write_json(f"{gen_dir}/{_MODEL}", meta)
 
-    publish(staging, "append_id", 0, write)
-    if fs.exists(hp):
-        fs.delete(hp, True)
-    if not fs.rename(jvm.org.apache.hadoop.fs.Path(staging), hp):
-        # single-writer is the contract, but a concurrent READER's
-        # _cells_root can legitimately win this rename inside
-        # the delete->rename window (it saw no cells root and renamed
-        # OUR completed staging into place). The index landed either
-        # way — only fail when no cells root exists afterwards.
-        if not fs.exists(hp):
-            raise RuntimeError(
-                f"failed to swap staged index {staging!r} into "
-                f"{cells_root!r}"
-            )
-    # best-effort cleanup of crashed stagings — scoped to directories
-    # older than the grace window, so a concurrent build's in-flight
-    # staging can never be deleted out from under it (the same guard
-    # vacuum() uses for in-flight commits)
-    import time as _time
-
-    cutoff_ms = (_time.time() - _STAGING_GRACE_SECONDS) * 1000.0
-    pp = jvm.org.apache.hadoop.fs.Path(path)
-    for st in fs.listStatus(pp):
-        name = st.getPath().getName()
-        if (
-            name.startswith("cells.staging-")
-            and st.getModificationTime() < cutoff_ms
-        ):
-            fs.delete(st.getPath(), True)
+    fold(root, _KEY, [n for n, _ in committed(root, _KEY)], write)
 
 
-#: crashed-staging cleanup grace: a cells.staging-* directory younger
-#: than this may belong to a live concurrent build and is left alone
-_STAGING_GRACE_SECONDS = 900.0
-
-
-def _cells_root(spark, path: str) -> str:
-    """``path/cells``; when it is missing (a rebuild crashed between
-    delete and rename) the newest staged build with generation 0
-    committed is renamed into place first. FileNotFoundError if none."""
-    import os
-
-    Path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
-    cells_root = os.path.join(path, "cells")
-    dest = Path(cells_root)
-    fs = dest.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    if not fs.exists(dest) and fs.exists(Path(path)):
-        staged = [
-            st for st in fs.listStatus(Path(path))
-            if st.getPath().getName().startswith("cells.staging-")
-            and [n for n, _ in committed(str(st.getPath()), "append_id")]
-            == [0]
-        ]
-        if staged:  # a concurrent healer may win the rename: fine
-            newest = max(staged, key=lambda st: st.getModificationTime())
-            fs.rename(newest.getPath(), dest)
-    if not fs.exists(dest):
+def _read_index(path: str):
+    """``(cells root, committed generations, _model.json document)`` of
+    the index at ``path``; FileNotFoundError when nothing is
+    committed."""
+    root = f"{path.rstrip('/')}/cells"
+    gens, meta = read_base_json(root, _KEY, _MODEL)
+    if not gens:
         raise FileNotFoundError(
-            f"no index at {path}; build one with write_ivfpq_index first"
+            f"no index at {path!r}: no committed generations under "
+            f"{root!r} (nothing written, a torn build or an unknown "
+            "layout); build one with write_ivfpq_index"
         )
-    return cells_root
-
-
-def _read_model(spark, path: str) -> dict:
-    """Quantizer state from ``path/cells/_model``, inside the cells root
-    so it moves atomically with the codes."""
-    import json
-    import os
-
-    row = spark.read.json(os.path.join(path, "cells", "_model")).collect()[0]
-    return json.loads(row.model_json)
+    return root, gens, meta
 
 
 def read_ivfpq_index(spark, path: str):
     """Load ``(enc, model)`` written by :func:`write_ivfpq_index` (+ any
-    :func:`ivfpq_append` generations) — ``enc`` scans the committed
-    generations with ``basePath``, so downstream probe filters prune
-    cell directories. A torn append (no commit marker) never serves."""
+    :func:`ivfpq_append` generations) with no Spark job — ``enc`` scans
+    the committed generations with ``basePath`` and the stored schema,
+    so downstream probe filters prune cell directories. A torn append
+    (no commit marker) never serves."""
     import numpy as np
 
-    cells_root = _cells_root(spark, path)
-    enc_raw = read(spark, cells_root, "append_id")
-    if enc_raw is None:
-        # no committed generation: serving it would expose parquet no
-        # commit marker vouches for
-        raise FileNotFoundError(
-            f"no committed generations under {cells_root} — torn build "
-            "or unknown layout; rerun write_ivfpq_index"
-        )
-    enc = enc_raw.select(
-        "corpus_id", F.col("cell").cast("int").alias("cell"), "codes"
-    )
-    model = _read_model(spark, path)
+    root, gens, meta = _read_index(path)
+    enc = read(
+        spark, root, _KEY, T.StructType.fromJson(meta["schema"]), gens=gens
+    ).select("corpus_id", F.col("cell").cast("int").alias("cell"), "codes")
+    model = meta["model"]
     model["centroids"] = np.asarray(model["centroids"], dtype=np.float64)
     model["codebooks"] = np.asarray(model["codebooks"], dtype=np.float64)
     return enc, model
@@ -678,29 +616,31 @@ def ivfpq_append(
     fraction. The returned stats make that observable per append:
     ``cells_touched`` / ``max_cell_rows`` against an even split is the
     rebuild trigger (rebuild = ivfpq_build + write_ivfpq_index, which
-    replaces every generation).
+    folds every generation into one).
 
-    Idempotent replay needs a STABLE generation id: the auto-assigned
-    id is ``sources.generations.next_id`` (1 + the highest committed
-    id), so a retry after a crash-between-commit-and-ack would land a
-    SECOND generation with the same vectors. Orchestrated callers
-    (foreachBatch, workflow retries) must pass ``append_id``: a retry
-    then replaces its whole generation — every cell, not only the cells
-    it writes again. A torn append (crash before its commit marker)
-    never serves, and the next append with its id (the retry, or the
-    next auto-assigned append) overwrites it.
+    The quantizer state comes from the ``_model.json`` of the lowest
+    committed generation, the latest build. Idempotent replay needs a
+    STABLE generation id: the auto-assigned id is
+    ``sources.generations.next_id`` (1 + the highest id committed or
+    absorbed, so 0 right after the first build), and a retry after a
+    crash-between-commit-and-ack would land a SECOND generation with
+    the same vectors. Orchestrated callers (foreachBatch, workflow
+    retries) must pass ``append_id`` (>= 0): a retry then replaces its
+    whole generation — every cell, not only the cells it writes again —
+    and a retry of an id a rebuild has absorbed raises ValueError. A
+    torn append (crash before its commit marker) never serves, and the
+    next append with its id (the retry, or the next auto-assigned
+    append) overwrites it.
 
     Returns ``{"append_id", "rows", "cells_touched", "max_cell_rows"}``.
     """
     import numpy as np
 
-    cells_root = _cells_root(spark, path)
+    cells_root, _gens, meta = _read_index(path)
     if append_id is None:
-        append_id = next_id(cells_root, "append_id")
-    elif append_id < 1:
-        raise ValueError("append_id must be >= 1 (0 is the build)")
+        append_id = next_id(cells_root, _KEY)
 
-    model = _read_model(spark, path)
+    model = meta["model"]
     centroids = np.asarray(model["centroids"], dtype=np.float64)
     cb = np.asarray(model["codebooks"], dtype=np.float64)
 
@@ -714,7 +654,7 @@ def ivfpq_append(
         deterministic=deterministic,
     )
     gen_dir = publish(
-        cells_root, "append_id", append_id,
+        cells_root, _KEY, append_id,
         enc.repartition("cell").write.partitionBy("cell").parquet,
     )
 

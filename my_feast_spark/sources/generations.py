@@ -1,7 +1,8 @@
 """Numbered generations under one root: the commit rule of every store
 that publishes ``<key>=N`` directories (the dedup ingest indexes, the
 HLL/KMV/CMS stream sketches, the streaming-SCD2 event log, the IVF-PQ
-cells and the online store). Only this module knows the layout::
+cells with their rebuilds, the DSIR models and the online store). Only
+this module knows the layout::
 
     <root>/_GENERATIONS             root marker, precedes every generation
     <root>/<key>=N/...              generation N's data
@@ -12,7 +13,9 @@ A generation is visible only when its directory holds the marker.
 Callers publish ids >= 0; only a fold writes a negative id, below every
 id present, and its marker names the ids it absorbs before any of them
 is deleted. Files a caller writes into a generation before its marker
-(``write_json``) commit with it. Readers skip unmarked and absorbed
+(``write_json``) commit with it, so a store that replaces itself
+whole folds every committed generation into one that carries its model
+file (``read_base_json``). Readers skip unmarked and absorbed
 generations, so every crash point reads exact, and heal deletes what a
 crash left. A root holding ``<key>=*`` directories but no root marker
 was not written under this rule: every function raises ValueError on
@@ -71,7 +74,9 @@ def _gen_dir(root: str, key: str, n: int) -> str:
 
 
 def _put(jc, fs, path, data: bytes) -> None:
-    """Write ``data`` to ``path`` whole: a hidden temp, then a rename."""
+    """Write ``data`` to ``path`` whole: a hidden temp, then a rename.
+    RuntimeError, the temp deleted, when the rename is refused (on the
+    local filesystem: ``path`` exists)."""
     tmp = jc.Path(path.getParent(), f".{path.getName()}.tmp")
     out = fs.create(tmp, True)
     try:
@@ -79,6 +84,7 @@ def _put(jc, fs, path, data: bytes) -> None:
     finally:
         out.close()
     if not fs.rename(tmp, path):
+        fs.delete(tmp, False)
         raise RuntimeError(f"could not write {path.toString()!r}")
 
 
@@ -201,6 +207,25 @@ def read_json(paths: list[str]) -> list:
     """The JSON documents at ``paths`` (one or more, one FileSystem)."""
     jc, fs, _rp = _hadoop(paths[0])
     return [json.loads(_get(fs, jc.Path(p))) for p in paths]
+
+
+def read_base_json(root: str, key: str, name: str):
+    """``(committed(root, key), doc)``: ``doc`` is the JSON file
+    ``name`` of the lowest committed generation, the latest fold of a
+    store that rewrites itself as one fold (None when nothing is
+    committed). ValueError naming the file, deleting nothing, when that
+    generation lacks it: the root predates the file, so rebuild it."""
+    gens = committed(root, key)
+    if not gens:
+        return gens, None
+    jc, fs, _rp = _hadoop(root)
+    path = jc.Path(gens[0][1], name)
+    if not fs.exists(path):
+        raise ValueError(
+            f"{path.toString()!r} does not exist: {root!r} was written "
+            f"in a layout without {name}; rebuild it"
+        )
+    return gens, json.loads(_get(fs, path))
 
 
 def publish(root: str, key: str, n: int, write: Callable[[str], None]) -> str:

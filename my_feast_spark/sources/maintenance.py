@@ -42,11 +42,12 @@ untouched).
 
 from __future__ import annotations
 
-import json
 import logging
 import uuid
 
 from pyspark.sql import SparkSession
+
+from my_feast_spark.sources.generations import read_json, write_json
 
 _STAGING = ".mfs_compact"
 _MARKER = "_COMMIT.json"
@@ -82,18 +83,14 @@ def _heal_leaf(fs, jvm, leaf: str) -> str | None:
     marker = jvm.org.apache.hadoop.fs.Path(staging, _MARKER)
     originals = None  # no marker: never committed, originals authoritative
     if fs.exists(marker):
-        stream = fs.open(marker)
         try:
-            raw = bytes(stream.readAllBytes())
-        finally:
-            stream.close()
-        try:
-            originals = set(json.loads(raw.decode("utf-8"))["originals"])
+            (doc,) = read_json([marker.toString()])
+            originals = set(doc["originals"])
         except (ValueError, KeyError):
             # Partial/corrupt marker ⇒ the commit point was never
-            # reached: markers are renamed into place atomically (below),
-            # so originals are intact and authoritative. Abort instead
-            # of wedging the leaf on JSONDecodeError.
+            # reached: markers are written whole (below), so originals
+            # are intact and authoritative. Abort instead of wedging
+            # the leaf on JSONDecodeError.
             pass
     if originals is None:
         _log.warning("heal %s: aborting a compaction, no valid %s", leaf,
@@ -196,23 +193,14 @@ def compact_table(
             fs.rename(st.getPath(), jvm.org.apache.hadoop.fs.Path(staging, name))
             staged.append(name)
         fs.delete(work, True)
-        # The marker is the commit point, so its CREATION must be atomic:
-        # write to a dot-prefixed temp name (ignored by the heal scan)
-        # and rename into place. A crash mid-write leaves only the temp —
-        # _heal_leaf sees "no marker" and aborts cleanly instead of
-        # choking on a truncated JSON document.
-        marker = jvm.org.apache.hadoop.fs.Path(staging, _MARKER)
-        marker_tmp = jvm.org.apache.hadoop.fs.Path(
-            staging, f".{_MARKER}.tmp"
+        # The marker is the commit point, so it appears whole (a
+        # dot-prefixed temp, ignored by the heal scan, then a rename): a
+        # crash mid-write leaves only the temp — _heal_leaf sees "no
+        # marker" and aborts cleanly.
+        write_json(
+            jvm.org.apache.hadoop.fs.Path(staging, _MARKER).toString(),
+            {"originals": originals},
         )
-        out = fs.create(marker_tmp, True)
-        try:
-            out.write(bytearray(json.dumps(
-                {"originals": originals}
-            ).encode("utf-8")))
-        finally:
-            out.close()
-        fs.rename(marker_tmp, marker)
         # commit point passed: delete originals, surface staged files
         for name in originals:
             fs.delete(jvm.org.apache.hadoop.fs.Path(leaf, name), False)

@@ -43,6 +43,8 @@ from my_feast_spark.sources.generations import (
     heal,
     publish,
     read,
+    read_json,
+    write_json,
 )
 from my_feast_spark.sources.readers import spread_partitions
 
@@ -74,26 +76,15 @@ def _ensure_index_meta(spark: SparkSession, index_path: str, meta: dict,
     duplicate is missed with no error. A mismatch fails the stream
     START, loudly, naming the key.
 
-    Written atomically (hidden temp + rename) BEFORE the first batch;
+    Written whole (``generations.write_json``) BEFORE the first batch;
     idempotent across restarts. Because the marker precedes all data,
     an index root that holds data but no marker was not laid out by
     this driver: its layout is unknown, so the start raises ValueError
     and writes no marker; ``before_stamp`` may refuse the first
     stamp."""
-    import json as _json
-
-    sc = spark.sparkContext
-    jvm = sc._jvm
-    mp = jvm.org.apache.hadoop.fs.Path(f"{index_path}/{_INDEX_META}")
-    fs = mp.getFileSystem(sc._jsc.hadoopConfiguration())
-    if fs.exists(mp):
-        stream = fs.open(mp)
-        try:
-            stored = _json.loads(
-                bytes(stream.readAllBytes()).decode("utf-8")
-            )
-        finally:
-            stream.close()
+    mp = f"{index_path}/{_INDEX_META}"
+    if _INDEX_META in _fs_names(spark, index_path):
+        (stored,) = read_json([mp])
         bad = {
             k: (stored.get(k), v)
             for k, v in meta.items()
@@ -113,18 +104,12 @@ def _ensure_index_meta(spark: SparkSession, index_path: str, meta: dict,
             "marker, so its layout is unknown; rebuild the index"
         )
     before_stamp()
-    fs.mkdirs(jvm.org.apache.hadoop.fs.Path(index_path))
-    tmp = jvm.org.apache.hadoop.fs.Path(
-        f"{index_path}/.{_INDEX_META}.tmp"
-    )
-    out = fs.create(tmp, True)
     try:
-        out.write(bytearray(_json.dumps(meta).encode("utf-8")))
-    finally:
-        out.close()
-    if not fs.rename(tmp, mp):
+        write_json(mp, meta)
+    except RuntimeError:
+        if _INDEX_META not in _fs_names(spark, index_path):
+            raise
         # a concurrent starter won the rename: validate against theirs
-        fs.delete(tmp, False)
         _ensure_index_meta(spark, index_path, meta, before_stamp)
 
 

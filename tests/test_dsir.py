@@ -335,7 +335,7 @@ def test_hash_family_round_trips_through_persistence(spark, corpora,
 
 
 def test_shared_gram_events_path_is_bit_identical(spark, corpora):
-    """r16 optimization hook: one dsir_gram_events relation shared by
+    """The compute-once hook: one dsir_gram_events relation shared by
     both fit count tables and the weigh pass must reproduce the direct
     path bit-for-bit (model scalars, ratio rows, weights, and the
     resampled set)."""
@@ -391,3 +391,57 @@ def test_shared_gram_events_path_is_bit_identical(spark, corpora):
     assert sorted(x["doc_id"] for x in d_sel) == sorted(
         x["doc_id"] for x in d_sel2
     )
+
+
+def test_torn_model_write_keeps_the_previous_fit(spark, corpora, tmp_path,
+                                                 generation_crash):
+    """A model write that dies after its ratio rows, before its commit,
+    leaves the previous model whole: its own ratios with its own
+    scalars, never the new ratios next to the old ``num_buckets``."""
+    from my_feast_spark.operators.dsir import read_dsir_model, write_dsir_model
+
+    t, r = corpora
+    path = str(tmp_path / "dsir")
+    a = fit_dsir(t, r, num_buckets=B, k=K)
+    write_dsir_model(a, path)
+    want = sorted(map(tuple, a.ratio.collect()))
+    _release(a)
+    b = fit_dsir(t, r, num_buckets=2 * B, k=K)
+    assert sorted(map(tuple, b.ratio.collect())) != want
+    with generation_crash("_mark", 0):
+        write_dsir_model(b, path)
+    _release(b)
+    got = read_dsir_model(spark, path)
+    assert (got.num_buckets, got.default_lr) == (B, a.default_lr)
+    assert sorted(map(tuple, got.ratio.collect())) == want
+
+
+def test_old_model_layout_fails_loudly(spark, corpora, tmp_path):
+    """A model path holding ``ratio/`` and ``meta/`` Spark datasets but
+    no committed generation (the layout before a write became one fold)
+    is refused with an error naming the path and asking for a rebuild,
+    and no file changes."""
+    import json
+    import os
+
+    from my_feast_spark.operators.dsir import read_dsir_model
+
+    t, r = corpora
+    model = fit_dsir(t, r, num_buckets=B, k=K)
+    path = str(tmp_path / "old")
+    model.ratio.coalesce(1).write.parquet(os.path.join(path, "ratio"))
+    meta = {"default_lr": model.default_lr, "k": model.k,
+            "num_buckets": model.num_buckets, "hash_fn": model.hash_fn}
+    spark.createDataFrame([(json.dumps(meta),)], ["meta_json"]).coalesce(
+        1
+    ).write.json(os.path.join(path, "meta"))
+    _release(model)
+    before = sorted(
+        os.path.join(d, f) for d, _, fs in os.walk(path) for f in fs
+    )
+    with pytest.raises(FileNotFoundError, match="rebuild") as err:
+        read_dsir_model(spark, path)
+    assert path in str(err.value)
+    assert sorted(
+        os.path.join(d, f) for d, _, fs in os.walk(path) for f in fs
+    ) == before

@@ -2,8 +2,10 @@
 store shares: one crash matrix of store x crash point (the online
 store's rows read every entity through ``get_online_features``, so a
 lookup at each crash point serves the pre- or post-write value, never
-None), the heal log, and the rule that a root this engine did not lay
-out fails loudly and is left as it was."""
+None; an IVF-PQ rebuild serves every published vector under the old
+or the new quantizers), the heal log, model reads that start no job,
+and the rule that a root this engine did not lay out fails loudly and
+is left as it was."""
 
 from __future__ import annotations
 
@@ -11,6 +13,7 @@ import datetime as dt
 import json
 import logging
 import os
+import uuid
 
 import pytest
 from pyspark.sql import Row
@@ -81,8 +84,8 @@ class _SumStore(_SetStore):
 
 
 class _AppendStore:
-    """An append-only store: IVF-PQ generations (build = 0, then
-    ``ivfpq_append``), never folded."""
+    """An append-only store: IVF-PQ generations (the build, a fold at
+    -1, then ``ivfpq_append`` at n), never folded again."""
 
     key = "append_id"
 
@@ -118,6 +121,32 @@ class _AppendStore:
 
         enc, _ = read_ivfpq_index(self.spark, self.path)
         return sorted(tuple(r) for r in enc.collect())
+
+
+class _RebuildStore(_AppendStore):
+    """IVF-PQ with the rebuild as the fold: ``write_ivfpq_index`` over
+    every vector published so far. A rebuild re-encodes every vector,
+    so the read is the served ids plus the centroid count."""
+
+    def publish(self, n):
+        super().publish(n)
+        self.top = n
+
+    def fold(self):
+        from my_feast_spark.operators.pq import ivfpq_build, write_ivfpq_index
+
+        corpus = self._vectors(0)
+        for n in range(1, self.top + 1):
+            corpus = corpus.unionByName(self._vectors(n))
+        enc, model = ivfpq_build(corpus, m=2, k_codes=4, num_centroids=4)
+        write_ivfpq_index(enc, model, self.path)
+
+    def read(self):
+        from my_feast_spark.operators.pq import read_ivfpq_index
+
+        enc, model = read_ivfpq_index(self.spark, self.path)
+        ids = sorted(r.corpus_id for r in enc.select("corpus_id").collect())
+        return ids, len(model["centroids"])
 
 
 class _OnlineStore:
@@ -179,7 +208,8 @@ class _MaterializeStore(_OnlineStore):
 
 
 STORES = {"set": _SetStore, "sum": _SumStore, "append": _AppendStore,
-          "online": _OnlineStore, "materialize": _MaterializeStore}
+          "rebuild": _RebuildStore, "online": _OnlineStore,
+          "materialize": _MaterializeStore}
 
 #: crash point -> (generation-store step that dies, calls it completes)
 CRASH = {
@@ -194,7 +224,9 @@ CASES = [
     for store in ("set", "sum", "online")
     for point in CRASH
 ] + [("append", "publish_before_marker")] + [
-    ("materialize", point) for point in CRASH if point.startswith("fold")
+    (store, point)
+    for store in ("rebuild", "materialize")
+    for point in CRASH if point.startswith("fold")
 ]
 
 
@@ -249,6 +281,50 @@ def test_crash_matrix(spark, tmp_path, generation_crash, store, point):
     assert _on_disk(st.root, st.key) == [
         n for n, _ in committed(st.root, st.key)
     ]
+
+
+def _jobs(spark, fn) -> int:
+    """The Spark jobs ``fn()`` starts, read from the status tracker
+    under a fresh job group."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_model_reads_start_no_job(spark, tmp_path):
+    """A persisted model's read takes its scalars from the fold's
+    ``_model.json`` and scans its rows with the stored schema, so
+    ``read_ivfpq_index`` and ``read_dsir_model`` start no Spark job."""
+    from my_feast_spark.operators.dsir import (
+        fit_dsir,
+        read_dsir_model,
+        write_dsir_model,
+    )
+    from my_feast_spark.operators.pq import read_ivfpq_index
+
+    ivf = _AppendStore(spark, str(tmp_path / "ivf"))
+    ivf.publish(0)
+    ivf.publish(1)
+    assert _jobs(spark, lambda: read_ivfpq_index(spark, ivf.path)) == 0
+
+    docs = spark.createDataFrame(
+        [(0, "the quick brown fox"), (1, "spam spam fox")],
+        "doc_id long, text string",
+    )
+    model = fit_dsir(docs.limit(1), docs, num_buckets=64)
+    write_dsir_model(model, str(tmp_path / "dsir"))
+    for c in model.ratio._owned_caches:
+        c.unpersist(blocking=True)
+    assert _jobs(
+        spark, lambda: read_dsir_model(spark, str(tmp_path / "dsir"))
+    ) == 0
 
 
 def test_heal_logs_each_deletion(spark, tmp_path, generation_crash, caplog):

@@ -379,7 +379,7 @@ def test_ivfpq_append_extends_index_without_retraining(spark, emb, tmp_path):
     write_ivfpq_index(enc, model, path)
 
     stats = ivfpq_append(spark, path, newbies)
-    assert stats["append_id"] == 1
+    assert stats["append_id"] == 0  # the build is fold -1
     assert stats["rows"] == newbies.count()
     assert 1 <= stats["cells_touched"] <= 8
     assert stats["max_cell_rows"] >= stats["rows"] // 8
@@ -406,10 +406,10 @@ def test_ivfpq_append_extends_index_without_retraining(spark, emb, tmp_path):
     }
     assert q.collect()[0]["query_id"] in got_ids
 
-    # crash replay: publishing generation 1 again with the same rows
+    # crash replay: publishing generation 0 again with the same rows
     # replaces it, never duplicates
-    gen1 = os.path.join(path, "cells", "append_id=1")
-    before = spark.read.parquet(gen1).count()
+    gen0 = os.path.join(path, "cells", "append_id=0")
+    before = spark.read.parquet(gen0).count()
     from my_feast_spark.operators.pq import _encode_with_quantizers
     from my_feast_spark.sources.generations import publish
     from my_feast_spark.sources.readers import spread_partitions
@@ -421,7 +421,7 @@ def test_ivfpq_append_extends_index_without_retraining(spark, emb, tmp_path):
         ),
     )
     publish(
-        os.path.join(path, "cells"), "append_id", 1,
+        os.path.join(path, "cells"), "append_id", 0,
         _encode_with_quantizers(
             c, model2["centroids"], model2["codebooks"],
             residual=True, deterministic=True,
@@ -429,7 +429,7 @@ def test_ivfpq_append_extends_index_without_retraining(spark, emb, tmp_path):
             "cell"
         ).parquet,
     )
-    assert spark.read.parquet(gen1).count() == before
+    assert spark.read.parquet(gen0).count() == before
     assert read_ivfpq_index(spark, path)[0].count() == (
         corpus.count() + newbies.count()
     )
@@ -446,13 +446,13 @@ def test_ivfpq_append_extends_index_without_retraining(spark, emb, tmp_path):
         }
 
     every = files_read(enc2)
-    assert any("append_id=1" in f for f in every)
+    assert any("append_id=0" in f for f in every)
     cmin = enc2.select(F.min("cell")).collect()[0][0]
     one = files_read(enc2.filter(F.col("cell") == cmin))
     assert one and one < every
 
-    # a second append lands generation 2
-    assert ivfpq_append(spark, path, newbies.limit(3))["append_id"] == 2
+    # a second append lands generation 1
+    assert ivfpq_append(spark, path, newbies.limit(3))["append_id"] == 1
 
     with _pytest.raises(FileNotFoundError, match="no index"):
         ivfpq_append(spark, str(tmp_path / "nope"), newbies)
@@ -513,8 +513,8 @@ def test_ivfpq_append_stable_id_replay_and_torn_generation(
     enc4, _ = read_ivfpq_index(spark, path)
     assert enc4.count() == corpus.count() + newbies.count() + 4
 
-    with pytest.raises(ValueError, match="append_id must be >= 1"):
-        ivfpq_append(spark, path, newbies, append_id=0)
+    with pytest.raises(ValueError, match="generation ids >= 0 only"):
+        ivfpq_append(spark, path, newbies, append_id=-1)
 
 
 def test_ivfpq_append_retry_replaces_every_cell(spark, emb, tmp_path):
@@ -558,11 +558,12 @@ def test_ivfpq_append_retry_replaces_every_cell(spark, emb, tmp_path):
 
 
 def test_ivfpq_rebuild_replaces_every_generation(spark, emb, tmp_path):
-    """A rebuild replaces the whole cells root: prior append
-    generations (encoded with the OLD quantizers) must never be unioned
-    against the new model, and stale cell=K dirs from a previous larger
-    build are gone too (the session's dynamic partition-overwrite mode
-    would keep both under a plain partitioned overwrite)."""
+    """A rebuild folds the whole cells root into one generation: prior
+    append generations (encoded with the OLD quantizers) must never be
+    unioned against the new model, and stale cell=K dirs from a
+    previous larger build are gone too (the session's dynamic
+    partition-overwrite mode would keep both under a plain partitioned
+    overwrite)."""
     import os
 
     from my_feast_spark.operators.pq import (
@@ -571,6 +572,7 @@ def test_ivfpq_rebuild_replaces_every_generation(spark, emb, tmp_path):
         read_ivfpq_index,
         write_ivfpq_index,
     )
+    from my_feast_spark.sources.generations import committed
 
     corpus = emb.where(F.col("vec_id") % 2 == 0).select(
         F.col("vec_id").alias("corpus_id"), "embedding"
@@ -598,20 +600,48 @@ def test_ivfpq_rebuild_replaces_every_generation(spark, emb, tmp_path):
     write_ivfpq_index(enc2, model2, path)
 
     cells_root = os.path.join(path, "cells")
-    gens = [
+    (gen,) = committed(cells_root, "append_id")
+    on_disk = [
         d for d in os.listdir(cells_root) if d.startswith("append_id=")
     ]
-    assert gens == ["append_id=0"], f"stale generations survived: {gens}"
+    assert on_disk == [os.path.basename(gen[1])], (
+        f"stale generations survived: {on_disk}"
+    )
     # no stale cell dirs beyond the new build's 4 centroids
-    cells = [
-        d
-        for d in os.listdir(os.path.join(cells_root, "append_id=0"))
-        if d.startswith("cell=")
-    ]
-    assert all(int(c.split("=")[1]) < 4 for c in cells)
+    cells = [d for d in os.listdir(gen[1]) if d.startswith("cell=")]
+    assert cells and all(int(c.split("=")[1]) < 4 for c in cells)
     enc3, model3 = read_ivfpq_index(spark, path)
     assert enc3.count() == full.count()
     assert model3["centroids"].shape[0] == 4
+
+
+def test_ivfpq_stale_append_retry_after_rebuild_raises(spark, emb, tmp_path):
+    """A rebuild absorbs every append id: a late retry of an append the
+    rebuild already re-encoded raises instead of serving its vectors a
+    second time, and the index serves exactly the rebuild's corpus."""
+    from my_feast_spark.operators.pq import (
+        ivfpq_append,
+        ivfpq_build,
+        read_ivfpq_index,
+        write_ivfpq_index,
+    )
+
+    corpus = emb.where(F.col("vec_id") % 2 == 0).select(
+        F.col("vec_id").alias("corpus_id"), "embedding"
+    )
+    newbies = emb.where(F.col("vec_id") % 2 == 1).select(
+        F.col("vec_id").alias("corpus_id"), "embedding"
+    )
+    params = dict(residual=True, m=M, k_codes=K, num_centroids=4)
+    path = str(tmp_path / "idx")
+    write_ivfpq_index(*ivfpq_build(corpus, **params), path)
+    ivfpq_append(spark, path, newbies, append_id=1)
+    full = corpus.unionByName(newbies)
+    write_ivfpq_index(*ivfpq_build(full, **params), path)
+
+    with pytest.raises(ValueError, match="append_id=1 .* was folded"):
+        ivfpq_append(spark, path, newbies, append_id=1)
+    assert read_ivfpq_index(spark, path)[0].count() == full.count()
 
 
 def test_ivfpq_torn_initial_build_refuses_to_serve(spark, emb, tmp_path):
@@ -654,12 +684,12 @@ def test_ivfpq_torn_initial_build_refuses_to_serve(spark, emb, tmp_path):
     ) == before
 
 
-def test_rebuild_stages_then_swaps_and_heals(spark, emb, tmp_path):
+def test_failed_rebuild_keeps_old_index_serving(spark, emb, tmp_path):
     """A rebuild must not destroy the serving index before its
-    replacement exists. The new layout (codes + quantizer
-    state under one staged root) swaps in two metadata ops; a failed
-    staging write leaves the old index serving, and a crash between
-    delete and rename is healed by the read path."""
+    replacement exists: a rebuild whose write fails leaves the old
+    index serving (its fold never commits). A cells root holding only
+    cell=K directories is not a layout the writer produces and is
+    refused."""
     import os
 
     from pyspark.sql import functions as F2
@@ -680,8 +710,7 @@ def test_rebuild_stages_then_swaps_and_heals(spark, emb, tmp_path):
     write_ivfpq_index(enc, model, path)
     n = read_ivfpq_index(spark, path)[0].count()
 
-    # (a) a rebuild whose staging WRITE fails leaves the old index
-    # fully serving
+    # a rebuild whose WRITE fails leaves the old index fully serving
     @udf("int")
     def boom(c):
         raise ValueError("boom")
@@ -696,21 +725,7 @@ def test_rebuild_stages_then_swaps_and_heals(spark, emb, tmp_path):
     )
     assert ivfpq_search(enc2, model2, q, nprobe=4, k=3).count() > 0
 
-    # (b) crash between delete and rename: cells root gone, a complete
-    # staging next door — the read path heals it into place
-    os.rename(
-        os.path.join(path, "cells"),
-        os.path.join(path, "cells.staging-deadbeef"),
-    )
-    enc3, model3 = read_ivfpq_index(spark, path)
-    assert enc3.count() == n
-    assert os.path.isdir(os.path.join(path, "cells"))
-    assert model3["centroids"].shape[0] == 4
-
-    # (c) quantizer state rides INSIDE the swapped root
-    assert os.path.isdir(os.path.join(path, "cells", "_model"))
-
-    # (d) a cells root holding only cell=K directories (no committed
+    # a cells root holding only cell=K directories (no committed
     # append_id= generation) is not a layout the writer produces: the
     # reader refuses it instead of serving unmarked parquet
     flat = str(tmp_path / "flat_idx")
@@ -719,3 +734,53 @@ def test_rebuild_stages_then_swaps_and_heals(spark, emb, tmp_path):
     )
     with pytest.raises(FileNotFoundError, match="no committed generations"):
         read_ivfpq_index(spark, flat)
+
+
+def test_ivfpq_root_without_model_file_fails_loudly(spark, emb, tmp_path):
+    """An index whose base generation holds no _model.json (generation
+    0 plus a ``cells/_model`` Spark JSON dataset, the layout before the
+    build became a fold) is refused by the read and the append with a
+    ValueError naming the path and asking for a rebuild, and no file
+    changes; a rebuild over it serves again."""
+    import json
+    import os
+
+    from my_feast_spark.operators.pq import (
+        ivfpq_append,
+        ivfpq_build,
+        read_ivfpq_index,
+        write_ivfpq_index,
+    )
+    from my_feast_spark.sources.generations import publish
+
+    corpus = emb.select(F.col("vec_id").alias("corpus_id"), "embedding")
+    enc, model = ivfpq_build(
+        corpus, residual=True, m=M, k_codes=K, num_centroids=4
+    )
+    path = str(tmp_path / "idx")
+    cells = os.path.join(path, "cells")
+    publish(
+        cells, "append_id", 0,
+        enc.repartition("cell").write.partitionBy("cell").parquet,
+    )
+    spark.createDataFrame(
+        [(json.dumps(model),)], ["model_json"]
+    ).coalesce(1).write.json(os.path.join(cells, "_model"))
+
+    def files():
+        return sorted(
+            os.path.join(d, f) for d, _, fs in os.walk(path) for f in fs
+        )
+
+    before = files()
+    model_file = os.path.join(cells, "append_id=0", "_model.json")
+    for use in (
+        lambda: read_ivfpq_index(spark, path),
+        lambda: ivfpq_append(spark, path, corpus.limit(3)),
+    ):
+        with pytest.raises(ValueError, match="rebuild") as err:
+            use()
+        assert model_file in str(err.value)
+        assert files() == before
+    write_ivfpq_index(enc, model, path)
+    assert read_ivfpq_index(spark, path)[0].count() == corpus.count()

@@ -146,6 +146,33 @@ def test_fs_nonempty_probes_through_hadoop(spark, tmp_path):
     assert _fs_nonempty(spark, f"file://{real}") is True
 
 
+def test_index_meta_lost_rename_validates_the_winner(spark, tmp_path):
+    """A starter whose marker write loses the rename to a concurrent
+    starter's marker validates against the winner's: the same layout
+    starts, a different one raises, and no temp file is left."""
+    import json
+
+    from my_feast_spark.streaming.ingest import _INDEX_META, _ensure_index_meta
+
+    mine = {"kind": "exact_fingerprint", "index_buckets": None}
+
+    def race(idx, theirs):
+        def plant():  # the winner stamps between the probe and the rename
+            os.makedirs(idx)
+            with open(os.path.join(idx, _INDEX_META), "w") as f:
+                json.dump(theirs, f)
+
+        _ensure_index_meta(spark, idx, mine, plant)
+
+    same = str(tmp_path / "same")
+    race(same, mine)
+    assert os.listdir(same) == [_INDEX_META]
+    other = str(tmp_path / "other")
+    with pytest.raises(ValueError, match="different layout"):
+        race(other, {**mine, "index_buckets": 4})
+    assert os.listdir(other) == [_INDEX_META]
+
+
 @pytest.mark.slow  # flat-vs-bucketed twin-run equivalence probe (26s) — slow tier, see pytest.ini
 def test_bucketed_index_matches_flat_and_prunes(spark, tmp_path):
     """index_buckets changes the fingerprint-index LAYOUT only: the
